@@ -36,6 +36,9 @@ Validation (exact error@frame strings):
   main_data_begin + this frame's main-data capacity: the declared
   main data cannot END within this frame's region (main data may
   point BACK via the reservoir but never forward).
+- part2_overflow@k — a granule-channel's part2_3_length is smaller
+  than the scalefactor bits its scalefac_compress (and scfsi sharing)
+  declares (MPEG-1 only; the LSF slen scheme is not checked).
 
 The stricter encoder-side non-overlap invariant (each frame's data
 consumed exactly once) is deliberately NOT enforced: stuffing gaps
@@ -492,7 +495,9 @@ def encode_sideinfo_stream(
     (granule-1 scalefactors shared with granule 0). ``plant`` =
     (kind, frame_idx) with kind in {mid_reservoir, part23_overflow,
     bad_block_type, bad_table_select, big_values, part2_overflow} —
-    the ledger then carries the exact error@idx string instead."""
+    the ledger then carries the exact error@idx string instead. A
+    mid_reservoir plant raises ValueError where the reservoir already
+    holds ptr_max bytes (no pointer could underflow it)."""
     mono = mode == "mono"
     ngr = 2 if version_id == 3 else 1
     nch = 1 if mono else 2
@@ -514,9 +519,13 @@ def encode_sideinfo_stream(
         mdb = min(avail, ptr_max, h % 120) if reservoir else 0
         plant_here = plant is not None and plant[1] == k
         if plant_here and plant[0] == "mid_reservoir":
-            mdb = min(avail, ptr_max) + 1 + h % 40
-            if mdb > ptr_max:
-                mdb = ptr_max  # only plantable while avail < ptr_max
+            if avail >= ptr_max:
+                # no 9/8-bit pointer can reach past the reservoir here
+                raise ValueError(
+                    f"mid_reservoir@{k}: reservoir holds {avail} bytes, "
+                    f"main_data_begin cannot exceed {ptr_max}"
+                )
+            mdb = min(avail + 1 + h % 40, ptr_max)
             err = f"reservoir_underflow@{k}"
         # choose the frame's total main-data bits
         if plant_here and plant[0] == "part23_overflow":

@@ -3,8 +3,8 @@
 Spark-first design notes (scale: 10^12 rows / 1000 executors):
 - Every check is a boolean Column expression -> single scan, whole-stage
   codegen, zero shuffles for the violation pass.
-- The violations DataFrame is built with array+filter+explode so only
-  failing rows materialize structs; passing rows cost one codegen'd
+- The violations DataFrame is built with array+explode (``_explode``) so
+  only failing rows materialize structs; passing rows cost one codegen'd
   boolean vector each.
 - The per-partition summary aggregates by ``spark_partition_id`` —
   partial aggregation happens map-side; the shuffle carries one row per
@@ -75,6 +75,19 @@ def _schema_location_chain(ptr: str) -> list[str]:
     return units
 
 
+def _explode(
+    df: DataFrame, cols: Sequence, arr: Column | str, alias: str = "_v"
+) -> DataFrame:
+    """``df.select(*cols, explode(arr).alias(alias))`` without the filter
+    Catalyst infers below a non-outer explode: ``size(arr) > 0``, pushed
+    through the projection, carries a full copy of ``arr``'s expression
+    (for ``_violations``, every compiled check and any content UDF), so
+    each row evaluated it twice. An outer explode infers nothing; its
+    empty-array row (NULL position) is dropped above the Generate."""
+    x = df.select(*cols, F.posexplode_outer(arr).alias("_pos", alias))
+    return x.filter(F.col("_pos").isNotNull()).drop("_pos")
+
+
 @dataclass
 class ValidationResult:
     annotated: DataFrame  # input + _valid boolean + _violations array
@@ -83,7 +96,7 @@ class ValidationResult:
     def violations(self, key_cols: Sequence[str]) -> DataFrame:
         """(key..., keyword_path, keyword, column, message) — one row per
         violated constraint per input row. Explode drops clean rows."""
-        v = self.annotated.select(*key_cols, F.explode("_violations").alias("_v"))
+        v = _explode(self.annotated, key_cols, "_violations")
         return v.select(*key_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLS])
 
     def summary(self) -> DataFrame:
@@ -255,14 +268,8 @@ class ValidationResult:
         min/max rather than collect_set samples on purpose: aggregation
         state stays O(1) per group at 10^12 rows (collect_set would buffer
         every distinct key before any cap applied)."""
-        base = self.annotated.select(
-            F.explode("_violations").alias("_v"),
-            *([F.col(key_col).alias("_k")] if key_col else []),
-        )
-        sel = base.select(
-            *[F.col(f"_v.{c}").alias(c) for c in ("keyword_path", "keyword", "column")],
-            *(["_k"] if key_col else []),
-        )
+        keys = [F.col(key_col).alias("_k")] if key_col else []
+        sel = _explode(self.annotated, keys, "_violations").select("*", "_v.*")
         aggs = [F.count(F.lit(1)).alias("violations")]
         if key_col:
             aggs += [
@@ -305,12 +312,7 @@ class ValidationResult:
         from jsonschema_spark.operators.uniqueness import salt_column
 
         grp = ["keyword_path", "keyword", "column"]
-        v = self.annotated.select(*key_cols, F.explode("_violations").alias("_v"))
-        flat = v.select(
-            *[F.col(f"_v.{c}").alias(c) for c in grp],
-            *key_cols,
-            F.col("_v.message").alias("message"),
-        )
+        flat = self.violations(key_cols).select(*grp, *key_cols, "message")
         u = sample_hash(
             F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols]), seed
         )
@@ -351,7 +353,7 @@ class ValidationResult:
         Same plan shape as ``violations()`` — explode of the codegen'd
         violations array, no extra scan, no shuffle."""
         root_id = self.compiled.schema.id
-        v = self.annotated.select(*key_cols, F.explode("_violations").alias("_v"))
+        v = _explode(self.annotated, key_cols, "_violations")
         kw_loc = F.col("_v.keyword_path")
         abs_loc = (
             F.concat(F.lit(root_id), F.lit("#"), kw_loc)
@@ -448,17 +450,12 @@ class ValidationResult:
                     )
         parent_map = F.create_map(*parent_items)
 
-        v = self.annotated.select(
-            *key_cols, F.explode("_violations").alias("_v")
-        ).select(
+        v = _explode(self.annotated, key_cols, "_violations").select(
             *key_cols,
             F.element_at(anc_map, F.col("_v.keyword_path")).alias("_anc"),
         )
-        x = v.select(
-            *key_cols,
-            F.element_at(F.col("_anc"), F.size("_anc")).alias("_du"),
-            F.explode("_anc").alias("unit"),
-        )
+        du = F.element_at(F.col("_anc"), F.size("_anc")).alias("_du")
+        x = _explode(v, [*key_cols, du], "_anc", "unit")
         g = x.groupBy(*key_cols, "unit").agg(
             F.count(F.lit(1)).alias("n_errors_total"),
             F.sum((F.col("unit") == F.col("_du")).cast("long")).alias(
@@ -539,9 +536,7 @@ class ValidationResult:
             ),
             zero_entries,
         )
-        x = self.annotated.select(
-            *key_cols, F.explode(entries).alias("_e")
-        ).select(
+        x = _explode(self.annotated, key_cols, entries, "_e").select(
             *key_cols,
             F.col("_e.u").alias("unit"),
             F.col("_e.w").alias("_w"),

@@ -31,8 +31,8 @@ from pyspark.sql import types as T
 
 from jsonschema_spark.functions.multimodal import encode_y4m
 from jsonschema_spark.sources.clips import (
-    _MATERIALIZE_ROOT,
     _hash,
+    oracle_cache_path,
     publish_once,
 )
 
@@ -95,7 +95,7 @@ def synth_videos(
 
 
 def videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_{_VIDEOS_VER}_{n}")
+    return oracle_cache_path(f"videos_{_VIDEOS_VER}_{n}")
 
 
 def materialized_videos(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
@@ -207,7 +207,7 @@ def synth_mjpeg_videos(
 
 
 def mjpeg_videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_mjpeg_{_MJPEG_VER}_{n}")
+    return oracle_cache_path(f"videos_mjpeg_{_MJPEG_VER}_{n}")
 
 
 def materialized_mjpeg_videos(
@@ -304,7 +304,7 @@ def synth_av_videos(
 
 
 def av_videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_av_{_AV_VER}_{n}")
+    return oracle_cache_path(f"videos_av_{_AV_VER}_{n}")
 
 
 def materialized_av_videos(
@@ -432,7 +432,7 @@ def synth_h264_videos(
 
 
 def h264_videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_h264_{_H264_VER}_{n}")
+    return oracle_cache_path(f"videos_h264_{_H264_VER}_{n}")
 
 
 def materialized_h264_videos(
@@ -551,7 +551,7 @@ def synth_mp4_videos(
 
 
 def mp4_videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_mp4_{_MP4_VER}_{n}")
+    return oracle_cache_path(f"videos_mp4_{_MP4_VER}_{n}")
 
 
 def materialized_mp4_videos(
@@ -570,7 +570,7 @@ def materialized_mp4_videos(
 # failures (torn element, non-EBML magic, unknown DocType, stray
 # SimpleBlock track, duplicate track numbers). Ledger truth is
 # generator arithmetic.
-_WEBM_VER = "v2"  # v2: lacing classes
+_WEBM_VER = "v3"  # v2: lacing classes; v3: streamed Clusters, BlockGroups
 WEBM_CLASS_MOD = 16
 
 WEBM_VIDEOS_SCHEMA = T.StructType(
@@ -741,7 +741,7 @@ def synth_webm_videos(
 
 
 def webm_videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_webm_{_WEBM_VER}_{n}")
+    return oracle_cache_path(f"videos_webm_{_WEBM_VER}_{n}")
 
 
 def materialized_webm_videos(
@@ -818,7 +818,7 @@ def synth_fmp4_videos(
 
 
 def fmp4_videos_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"videos_fmp4_{_FMP4_VER}_{n}")
+    return oracle_cache_path(f"videos_fmp4_{_FMP4_VER}_{n}")
 
 
 def materialized_fmp4_videos(

@@ -23,18 +23,10 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.validate import VIOLATION_COLS
-from jsonschema_spark.plans.compile import CompileOptions, compile_schema
+from jsonschema_spark.operators.validate import validate
+from jsonschema_spark.plans.compile import CompileOptions
 from jsonschema_spark.resolve import ResolveConfig
 from jsonschema_spark.schema import Schema
-
-
-def _compile(df: DataFrame, schema, options, resolve_config):
-    if isinstance(schema, str):
-        schema = Schema.from_json(schema)
-    elif isinstance(schema, dict):
-        schema = Schema.from_value(schema)
-    return compile_schema(schema, df.schema, options, resolve_config)
 
 
 def annotate_stream(
@@ -45,11 +37,9 @@ def annotate_stream(
 ) -> DataFrame:
     """Streaming DataFrame + ``_valid`` boolean + ``_violations`` array.
 
-    Identical semantics to the batch ``validate(...).annotated``."""
-    compiled = _compile(stream, schema, options, resolve_config)
-    return stream.withColumn("_violations", compiled.violations_array()).withColumn(
-        "_valid", F.size("_violations") == 0
-    )
+    The batch ``validate(...).annotated``: checks reference columns by
+    name, so the same compile serves a ``readStream`` plan."""
+    return validate(stream, schema, options, resolve_config).annotated
 
 
 def stream_violations(
@@ -60,9 +50,7 @@ def stream_violations(
 ) -> DataFrame:
     """Streaming violation rows (key..., keyword_path, keyword, column,
     message) — stateless explode, safe for append-mode sinks."""
-    ann = annotate_stream(stream, schema, options)
-    v = ann.select(*key_cols, F.explode("_violations").alias("_v"))
-    return v.select(*key_cols, *[F.col(f"_v.{c}").alias(c) for c in VIOLATION_COLS])
+    return validate(stream, schema, options).violations(key_cols)
 
 
 def windowed_summary(

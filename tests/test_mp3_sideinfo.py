@@ -75,6 +75,23 @@ def test_failure_taxonomy_exact_errors(kind, idx, cfg, err):
     assert got["ok"] is False and got["error"] == err
 
 
+def test_mid_reservoir_plant_needs_room_past_the_reservoir():
+    """A back-pointer can only underflow while the reservoir holds fewer
+    than pointer_max bytes; past that the plant must refuse rather than
+    write a valid stream that the ledger calls invalid."""
+    raw, led = encode_sideinfo_stream(
+        n_frames=6, seed=9, plant=("mid_reservoir", 1),
+        mode="mono", bitrates_kbps=(32,),
+    )
+    assert parse_mp3_sideinfo(raw) == led
+    assert led["error"] == "reservoir_underflow@1"
+    with pytest.raises(ValueError, match="mid_reservoir@3"):
+        encode_sideinfo_stream(
+            n_frames=6, seed=9, plant=("mid_reservoir", 3),
+            mode="stereo", bitrates_kbps=(128,),
+        )
+
+
 def test_cut_stream_signature():
     """Byte-slicing a reservoir-active stream at a frame boundary (no
     reservoir flush) trips the back-pointer check — the real-world use

@@ -118,10 +118,24 @@ def test_audio_validation_single_python_node(spark):
 
     clips = synth_clips(spark, 50, partitions=2)
     opts = CompileOptions(content_checks={"audio/*": lambda c: audio_snr_ok()})
-    p = plan(validate(clips, CLIPS_JSON_SCHEMA, opts).totals())
+    r = validate(clips, CLIPS_JSON_SCHEMA, opts)
     # exactly ONE ArrowEvalPython for the decode UDF (plus the generator's
-    # mapInPandas source) — the keyword algebra itself never leaves the JVM
-    assert p.count("ArrowEvalPython") == 1
+    # mapInPandas source) — the keyword algebra itself never leaves the JVM.
+    # On the violation-row path a non-outer explode would copy the whole
+    # algebra, decode UDF included, into an inferred filter below it.
+    for df in (r.totals(), r.violations(["clip_id"])):
+        assert plan(df).count("ArrowEvalPython") == 1
+
+
+def test_jsonl_violation_rows_evaluate_checks_once(spark):
+    """Each compiled check appears once in the executed plan of the JSONL
+    job's violation rows: the algebra runs once per line."""
+    from jobs.validate_jsonl_job import violation_rows
+    from jsonschema_spark.sources import jsonl as J
+
+    df = J.read_jsonl(spark, J.materialized_jsonl(26))
+    p = plan(violation_rows(df, J.JSONL_DOC_SCHEMA))
+    assert p.count("/properties/doc/properties/lang/pattern") == 1
 
 
 def test_variant_validation_stays_jvm_side(spark):

@@ -11,6 +11,8 @@ from jsonschema_spark.operators.validate import validate
 from jsonschema_spark.schema import Schema
 from jsonschema_spark.sources.synth import _Rand, dataframe_for_schema, sample_pattern
 
+from .conftest import require_testdata
+
 PATTERNS = [
     r"^[A-Z]{3}-\d{3}$",
     r"\d{5}",
@@ -72,11 +74,12 @@ def test_violation_rate_detected(spark):
 
 def test_reference_fixture_schemas_generate_clean(spark):
     import json
+    import os
 
+    examples = os.path.join(require_testdata(), "testdata", "miscellaneous-examples")
     for name in ("person", "complex-object", "regex-pattern"):
-        doc = json.load(
-            open(f"/root/reference/testdata/miscellaneous-examples/{name}.schema.json")
-        )
+        with open(os.path.join(examples, f"{name}.schema.json")) as f:
+            doc = json.load(f)
         schema = Schema.from_value(doc)
         df = dataframe_for_schema(spark, schema, 120, seed=3)
         totals = validate(df, schema).totals().collect()[0]

@@ -1,11 +1,11 @@
-"""Two-parallelism scaling evidence (north rule: efficiency >= 0.8 from N
-to 4N executors; sandbox proxy: local[8] vs local[32] on the same input).
+"""Two-parallelism scaling evidence: local[1] against local[nproc] on the
+same input, nproc being the cores this process may run on.
 
 Runs the north-star job (full clips validation incl. audio decode) and a
 JVM-only aggregate at both parallelism levels, several passes each, and
 reports min-of-passes throughput + scaling efficiency:
 
-    efficiency = (throughput_32 / throughput_8) / 4
+    efficiency = (throughput_nproc / throughput_1) / nproc
 
 Usage: python tools/scaling.py [n_clips] [passes]
 Writes one JSON line to stdout; paste into BASELINE.md §Scaling.
@@ -58,6 +58,9 @@ def jvm_table(spark: SparkSession, cpus: int):
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 60000
 PASSES = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 PATH = f"/tmp/spark_graft_clips_{N}.parquet"
+LO, HI = 1, len(os.sched_getaffinity(0))
+# driver heap: 30% of physical memory, as the benchmark sizes it
+HEAP_GB = max(1, int(0.3 * os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30))
 
 
 def session(cpus: int) -> SparkSession:
@@ -66,7 +69,7 @@ def session(cpus: int) -> SparkSession:
         .appName(f"scaling-{cpus}")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{HEAP_GB}g")
         .config("spark.python.worker.reuse", "true")
         # payload-scan GC discipline (see bench.py build_spark): sub-
         # humongous reader batches + 32m G1 regions stop multi-second
@@ -81,7 +84,7 @@ def session(cpus: int) -> SparkSession:
 def compute_probe(cpus: int, passes: int = 3) -> float:
     """Compute-bound control: 24 chained sha2 rounds over 4M tiny rows —
     zero payload traffic, pure whole-stage codegen. Measures how much
-    compute the HOST actually grants 8 vs 32 runnable threads in this
+    compute the HOST actually grants 1 vs nproc runnable threads in this
     window; no job can scale past this, so scaling numbers below are
     reported alongside it (a 0.22 'efficiency' against a 0.37 host grant
     is the host, not the plan)."""
@@ -107,16 +110,18 @@ def compute_probe(cpus: int, passes: int = 3) -> float:
 
 
 def main():
+    if HI < 2:
+        sys.exit("scaling.py needs at least 2 cores to compare against 1")
     # materialize once (untimed)
     if not os.path.exists(PATH):
-        spark = session(32)
+        spark = session(HI)
         spark.sparkContext.setLogLevel("ERROR")
         synth_clips(spark, N, partitions=64).write.mode("overwrite").parquet(PATH)
         spark.stop()
 
     # INTERLEAVED rounds: each round restarts a session per parallelism
-    # level and times one pass at local[8] immediately followed by one at
-    # local[32], so host-noise windows (CPU steal, memory-bandwidth
+    # level and times one pass at local[1] immediately followed by one at
+    # local[nproc], so host-noise windows (CPU steal, memory-bandwidth
     # contention on this shared VM) hit both levels equally — sequential
     # blocks let a quiet half-hour flatter whichever config ran in it.
     # Efficiency is reported two ways: from the per-level minima (the
@@ -124,13 +129,13 @@ def main():
     # the fairest single number on a drifting host).
     opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
     times: dict[int, dict[str, list]] = {
-        8: {"validate": [], "jvm": []},
-        32: {"validate": [], "jvm": []},
+        LO: {"validate": [], "jvm": []},
+        HI: {"validate": [], "jvm": []},
     }
     paired = []
     for _ in range(PASSES):
         round_t = {}
-        for cpus in (8, 32):
+        for cpus in (LO, HI):
             spark = session(cpus)
             spark.sparkContext.setLogLevel("ERROR")
             clips = spark.read.parquet(PATH)
@@ -147,13 +152,13 @@ def main():
             spark.stop()
         paired.append(
             {
-                "eff_validate": round(round_t[8][0] / round_t[32][0] / 4.0, 3),
-                "eff_jvm": round(round_t[8][1] / round_t[32][1] / 4.0, 3),
+                "eff_validate": round(round_t[LO][0] / round_t[HI][0] / HI, 3),
+                "eff_jvm": round(round_t[LO][1] / round_t[HI][1] / HI, 3),
             }
         )
 
     results = {}
-    for cpus in (8, 32):
+    for cpus in (LO, HI):
         tv, tj = times[cpus]["validate"], times[cpus]["jvm"]
         results[str(cpus)] = {
             "validate_sec": [round(t, 2) for t in tv],
@@ -164,31 +169,30 @@ def main():
             "jvm_rows_per_sec": round(JVM_ROWS / min(tj), 0),
         }
 
-    eff_validate = (
-        results["32"]["clips_per_sec"] / results["8"]["clips_per_sec"]
-    ) / 4.0
-    eff_jvm = (results["8"]["jvm_min"] / results["32"]["jvm_min"]) / 4.0
+    lo, hi = results[str(LO)], results[str(HI)]
+    eff_validate = (hi["clips_per_sec"] / lo["clips_per_sec"]) / HI
+    eff_jvm = (lo["jvm_min"] / hi["jvm_min"]) / HI
 
     # same-session host-grant ceiling (compute-bound control)
-    probe8 = compute_probe(8)
-    probe32 = compute_probe(32)
-    host_grant_eff = round(probe8 / probe32 / 4.0, 3)
+    probe_lo = compute_probe(LO)
+    probe_hi = compute_probe(HI)
+    host_grant_eff = round(probe_lo / probe_hi / HI, 3)
     print(
         json.dumps(
             {
                 "n_clips": N,
                 "jvm_rows": JVM_ROWS,
                 "passes": PASSES,
-                "local8": results["8"],
-                "local32": results["32"],
+                f"local{LO}": lo,
+                f"local{HI}": hi,
                 "scaling_efficiency_validate": round(eff_validate, 3),
                 "scaling_efficiency_jvm": round(eff_jvm, 3),
                 "paired_rounds": paired,
                 "paired_best_validate": max(p["eff_validate"] for p in paired),
                 "paired_best_jvm": max(p["eff_jvm"] for p in paired),
                 "host_grant": {
-                    "probe8_sec": round(probe8, 2),
-                    "probe32_sec": round(probe32, 2),
+                    f"probe{LO}_sec": round(probe_lo, 2),
+                    f"probe{HI}_sec": round(probe_hi, 2),
                     "efficiency_ceiling": host_grant_eff,
                 },
                 "validate_vs_ceiling": round(
