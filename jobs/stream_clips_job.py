@@ -44,7 +44,21 @@ from pyspark.sql import functions as F  # noqa: E402
 from jsonschema_spark.functions.audio import audio_snr_ok  # noqa: E402
 from jsonschema_spark.plans.compile import CompileOptions  # noqa: E402
 from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, CLIPS_SCHEMA, synth_clips  # noqa: E402
-from jsonschema_spark.streaming.validate import annotate_stream  # noqa: E402
+from jsonschema_spark.streaming.validate import annotate_stream, stream_violations  # noqa: E402
+
+
+def violation_sink(stream, out: str, checkpoint: str, opts: CompileOptions):
+    """The append-mode parquet writer of violation rows (clip_id,
+    keyword_path, keyword, column, message), not yet started. Built with
+    ``stream_violations``, whose explode infers no filter below it, so the
+    decode UDF runs once per row."""
+    return (
+        stream_violations(stream, CLIPS_JSON_SCHEMA, ["clip_id"], opts)
+        .writeStream.format("parquet")
+        .option("path", os.path.join(out, "violations"))
+        .option("checkpointLocation", os.path.join(checkpoint, "violations"))
+        .outputMode("append")
+    )
 
 
 def main(argv=None) -> int:
@@ -81,15 +95,7 @@ def main(argv=None) -> int:
     stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(args.input)
     ann = annotate_stream(stream, CLIPS_JSON_SCHEMA, opts)
 
-    viol = ann.filter(~F.col("_valid")).select(
-        "clip_id", F.explode("_violations").alias("_v")
-    ).select("clip_id", "_v.keyword_path", "_v.keyword", "_v.column", "_v.message")
-    q_viol = (
-        viol.writeStream.format("parquet")
-        .option("path", os.path.join(args.out, "violations"))
-        .option("checkpointLocation", os.path.join(args.checkpoint, "violations"))
-        .outputMode("append")
-    )
+    q_viol = violation_sink(stream, args.out, args.checkpoint, opts)
 
     summary_path = os.path.join(args.out, "batch_summary")
 

@@ -39,10 +39,9 @@ rate. One Arrow hop per clip, no shuffles.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jsonschema_spark.functions.walker import Walker
 
 # ISO 14496-3 sampling_frequency_index table (13 valid entries)
 ADTS_SR_TABLE = (
@@ -120,38 +119,29 @@ def encode_adts_stream(
     return b"".join(out)
 
 
-ADTS_PROFILE_FIELDS = (
-    "ok", "error", "n_frames", "profile", "sample_rate", "channels",
-    "crc_frames", "total_blocks", "duration_ms",
-)
-
-ADTS_PROFILE_TYPE = T.StructType(
+ADTS = Walker(
+    "audio_adts_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("profile", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("crc_frames", T.IntegerType()),
-        T.StructField("total_blocks", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
+        ("n_frames", T.IntegerType()),
+        ("profile", T.StringType()),
+        ("sample_rate", T.IntegerType()),
+        ("channels", T.IntegerType()),
+        ("crc_frames", T.IntegerType()),
+        ("total_blocks", T.IntegerType()),
+        ("duration_ms", T.LongType()),
+    ],
+    """struct(ok, error, n_frames, profile, sample_rate, channels,
+    crc_frames, total_blocks, duration_ms): ADTS frame-walk
+    certification per clip, one Arrow hop.""",
 )
 
 
-def _adts_fail(err: str) -> dict:
-    d = {k: None for k in ADTS_PROFILE_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
+@ADTS.parser
 def parse_adts_stream(raw: bytes) -> dict:
     raw = bytes(raw)
     n = len(raw)
     if n < 7:
-        return _adts_fail("too_short")
+        return ADTS.fail("too_short")
     pos = 0
     k = 0
     params = None
@@ -159,28 +149,28 @@ def parse_adts_stream(raw: bytes) -> dict:
     total_blocks = 0
     while pos < n:
         if n - pos < 7:
-            return _adts_fail(f"truncated@{k}")
+            return ADTS.fail(f"truncated@{k}")
         h = int.from_bytes(raw[pos : pos + 7], "big")
         if (h >> 44) != 0xFFF:
-            return _adts_fail(f"bad_sync@{k}" if k else "no_sync")
+            return ADTS.fail(f"bad_sync@{k}" if k else "no_sync")
         layer = (h >> 41) & 0x3
         if layer != 0:
-            return _adts_fail(f"bad_layer@{k}")
+            return ADTS.fail(f"bad_layer@{k}")
         protection_absent = (h >> 40) & 1
         profile = (h >> 38) & 0x3
         sr_index = (h >> 34) & 0xF
         if sr_index >= len(ADTS_SR_TABLE):
-            return _adts_fail(f"bad_sr_index@{k}")
+            return ADTS.fail(f"bad_sr_index@{k}")
         channels = (h >> 30) & 0x7
         if channels == 0:
-            return _adts_fail(f"bad_channels@{k}")  # PCE config: out of scope
+            return ADTS.fail(f"bad_channels@{k}")  # PCE config: out of scope
         flen = (h >> 13) & 0x1FFF
         raw_blocks = h & 0x3
         hdr_len = 7 if protection_absent else 9
         if flen < hdr_len:
-            return _adts_fail(f"bad_frame_length@{k}")
+            return ADTS.fail(f"bad_frame_length@{k}")
         if pos + flen > n:
-            return _adts_fail(f"truncated@{k}")
+            return ADTS.fail(f"truncated@{k}")
         if not protection_absent:
             # presence-only: the 9-byte header room is already enforced
             # by the bad_frame_length guard above; the CRC VALUE is not
@@ -191,12 +181,12 @@ def parse_adts_stream(raw: bytes) -> dict:
         if params is None:
             params = these
         elif these != params:
-            return _adts_fail(f"param_change@{k}")
+            return ADTS.fail(f"param_change@{k}")
         total_blocks += raw_blocks + 1
         pos += flen
         k += 1
     if k == 0 or params is None:
-        return _adts_fail("no_sync")
+        return ADTS.fail("no_sync")
     sr = ADTS_SR_TABLE[params[1]]
     return {
         "ok": True, "error": None, "n_frames": k,
@@ -207,24 +197,5 @@ def parse_adts_stream(raw: bytes) -> dict:
     }
 
 
-def adts_profile_batch(p: pd.Series) -> pd.DataFrame:
-    # NULL payloads are failing rows, not task-killing TypeErrors —
-    # the suite gates promise "NULL counts as failing".
-    rows = [
-        _adts_fail("null_payload") if x is None
-        else parse_adts_stream(bytes(x))
-        for x in p
-    ]
-    return pd.DataFrame(rows, columns=list(ADTS_PROFILE_FIELDS))
-
-
-@F.pandas_udf(ADTS_PROFILE_TYPE)
-def _adts_udf(p: pd.Series) -> pd.DataFrame:
-    return adts_profile_batch(p)
-
-
-def audio_adts_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, n_frames, profile, sample_rate, channels,
-    crc_frames, total_blocks, duration_ms): ADTS frame-walk
-    certification per clip, one Arrow hop."""
-    return _adts_udf(F.col(payload) if isinstance(payload, str) else payload)
+adts_profile_batch = ADTS.batch
+audio_adts_profile = ADTS.column

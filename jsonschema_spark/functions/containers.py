@@ -48,7 +48,7 @@ from jsonschema_spark.functions.audio import (
     decode_payload,
 )
 from jsonschema_spark.functions.mp3 import parse_mp3_stream
-from jsonschema_spark.functions.ogg import parse_ogg_stream
+from jsonschema_spark.functions.ogg import OGG, parse_ogg_stream
 
 __all__ = [
     "container_sniff",
@@ -251,66 +251,30 @@ def _profile_one(raw: bytes) -> dict:
 
 
 def container_profile_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Mixed-container batch profile. Ogg payloads get the BATCHED page
-    CRC treatment (one kernel invocation across every Ogg page of the
-    Arrow batch; since r5 the kernel routes through zlib's C CRC via
-    the reflection identity — see ogg.ogg_crc_pages); every other
-    container profiles per clip as before."""
-    from jsonschema_spark.functions.ogg import (
-        _finalize,
-        _scan_pages,
-        ogg_crc_pages,
-    )
-
+    """Mixed-container batch profile. Ogg payloads (and NULL rows, which
+    come back as ``null_payload``) go through the batched Ogg walker, so
+    every Ogg page of the Arrow batch is CRC-verified in one kernel call
+    (ogg.verified_pages); every other container profiles per clip."""
     datas = [None if p is None else bytes(p) for p in payloads]
-    # phase 1: batch the Ogg page CRCs
-    ogg_scans: dict[int, object] = {}
-    all_pages: list[bytes] = []
-    spans: dict[int, tuple[int, int]] = {}
-    for i, d in enumerate(datas):
-        if d is None or container_sniff(d) != "ogg":
-            continue
-        s = _scan_pages(d)
-        ogg_scans[i] = s
-        if not isinstance(s, str):
-            spans[i] = (len(all_pages), len(s))
-            all_pages.extend(pg[7] for pg in s)
-    crcs = ogg_crc_pages(all_pages)
-
+    walked = [
+        i for i, d in enumerate(datas)
+        if d is None or container_sniff(d) == "ogg"
+    ]
+    ogg_rows = dict(zip(walked, OGG.rows([datas[i] for i in walked])))
     rows = []
     for i, d in enumerate(datas):
-        if d is None:
-            rows.append(
-                {"container": None, "ok": False, "error": "null_payload",
-                 "sample_rate": None, "channels": None, "n_samples": None,
-                 "parsed_dur_ms": None}
-            )
+        if i not in ogg_rows:
+            rows.append(_profile_one(d))
             continue
-        if i in ogg_scans:
-            out = {"container": "ogg", "ok": False, "error": None,
-                   "sample_rate": None, "channels": None,
-                   "n_samples": None, "parsed_dur_ms": None}
-            s = ogg_scans[i]
-            if isinstance(s, str):
-                out["error"] = s
-            else:
-                start, cnt = spans[i]
-                if any(int(crcs[start + k]) != s[k][6]
-                       for k in range(cnt)):
-                    out["error"] = "crc_mismatch"
-                else:
-                    r = _finalize(s, cnt)
-                    if not r["ok"]:
-                        out["error"] = r["error"]
-                    else:
-                        out.update(
-                            ok=True, sample_rate=r["sample_rate"],
-                            channels=r["channels"],
-                            parsed_dur_ms=r["duration_ms"],
-                        )
-            rows.append(out)
-            continue
-        rows.append(_profile_one(d))
+        r = ogg_rows[i]
+        out = {"container": None if d is None else "ogg", "ok": False,
+               "error": r["error"], "sample_rate": None, "channels": None,
+               "n_samples": None, "parsed_dur_ms": None}
+        if r["ok"]:
+            out.update(ok=True, sample_rate=r["sample_rate"],
+                       channels=r["channels"],
+                       parsed_dur_ms=r["duration_ms"])
+        rows.append(out)
     return pd.DataFrame(
         rows, columns=[f.name for f in CONTAINER_PROFILE_TYPE]
     )

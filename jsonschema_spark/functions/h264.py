@@ -36,10 +36,9 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jsonschema_spark.functions.walker import Walker
 
 # nal_unit_type taxonomy (Table 7-1)
 NAL_SLICE = 1
@@ -268,39 +267,30 @@ def _peek_slice_header(rbsp: bytes, sps: dict, pps_ids: set) -> dict:
     return {"first_mb": first_mb, "slice_type": slice_type}
 
 
-H264_PROFILE_FIELDS = (
-    "ok", "error", "n_nals", "n_frames", "n_idr", "n_slices",
-    "profile_idc", "level_idc", "width", "height",
-)
-
-H264_PROFILE_TYPE = T.StructType(
+H264 = Walker(
+    "video_h264_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("n_nals", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("n_idr", T.IntegerType()),
-        T.StructField("n_slices", T.IntegerType()),
-        T.StructField("profile_idc", T.IntegerType()),
-        T.StructField("level_idc", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
+        ("n_nals", T.IntegerType()),
+        ("n_frames", T.IntegerType()),
+        ("n_idr", T.IntegerType()),
+        ("n_slices", T.IntegerType()),
+        ("profile_idc", T.IntegerType()),
+        ("level_idc", T.IntegerType()),
+        ("width", T.IntegerType()),
+        ("height", T.IntegerType()),
+    ],
+    """struct(ok, error, n_nals, n_frames, n_idr, n_slices, profile_idc,
+    level_idc, width, height): Annex B NAL discipline + SPS/PPS parse +
+    slice-header frame counting per stream, one Arrow hop.""",
 )
 
 
-def _h264_fail(err: str) -> dict:
-    d = {k: None for k in H264_PROFILE_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
+@H264.parser
 def parse_h264_stream(raw: bytes) -> dict:
     """Full structural walk of one Annex B stream → profile dict."""
     nals = split_annexb_nals(raw)
     if isinstance(nals, str):
-        return _h264_fail(nals)
+        return H264.fail(nals)
     sps: Optional[dict] = None
     pps_ids: set = set()
     n_frames = n_idr = n_slices = 0
@@ -308,49 +298,49 @@ def parse_h264_stream(raw: bytes) -> dict:
     for k, nal in enumerate(nals):
         hdr = nal[0]
         if hdr & 0x80:
-            return _h264_fail(f"forbidden_bit@{k}")
+            return H264.fail(f"forbidden_bit@{k}")
         ntype = hdr & 0x1F
         ref_idc = (hdr >> 5) & 0x3
         if ntype in _RESERVED_TYPES:
-            return _h264_fail(f"reserved_nal@{k}")
+            return H264.fail(f"reserved_nal@{k}")
         rbsp, err = _ebsp_to_rbsp(nal[1:])
         if err:
-            return _h264_fail(f"{err}@{k}")
+            return H264.fail(f"{err}@{k}")
         try:
             if ntype == NAL_SPS:
                 sps = parse_sps(rbsp)
             elif ntype == NAL_PPS:
                 if sps is None:
-                    return _h264_fail(f"pps_before_sps@{k}")
+                    return H264.fail(f"pps_before_sps@{k}")
                 p = parse_pps(rbsp)
                 if p["sps_id"] != sps["sps_id"]:
-                    return _h264_fail(f"unknown_sps@{k}")
+                    return H264.fail(f"unknown_sps@{k}")
                 pps_ids.add(p["pps_id"])
             elif ntype in (NAL_SLICE, NAL_IDR):
                 if sps is None:
-                    return _h264_fail(f"slice_before_sps@{k}")
+                    return H264.fail(f"slice_before_sps@{k}")
                 if not pps_ids:
-                    return _h264_fail(f"slice_before_pps@{k}")
+                    return H264.fail(f"slice_before_pps@{k}")
                 sh = _peek_slice_header(rbsp, sps, pps_ids)
                 if ntype == NAL_IDR and ref_idc == 0:
-                    return _h264_fail(f"idr_without_ref@{k}")
+                    return H264.fail(f"idr_without_ref@{k}")
                 n_slices += 1
                 if sh["first_mb"] == 0:
                     n_frames += 1
                     if not saw_picture and ntype != NAL_IDR:
-                        return _h264_fail(f"no_idr_start@{k}")
+                        return H264.fail(f"no_idr_start@{k}")
                     saw_picture = True
                     if ntype == NAL_IDR:
                         n_idr += 1
                 elif not saw_picture:
-                    return _h264_fail(f"fragment_start@{k}")
+                    return H264.fail(f"fragment_start@{k}")
             # SEI / AUD / filler: structurally fine, not parsed
         except ValueError as e:
-            return _h264_fail(f"{e}@{k}")
+            return H264.fail(f"{e}@{k}")
     if sps is None:
-        return _h264_fail("missing_sps")
+        return H264.fail("missing_sps")
     if n_frames == 0:
-        return _h264_fail("no_frames")
+        return H264.fail("no_frames")
     return {
         "ok": True, "error": None, "n_nals": len(nals),
         "n_frames": n_frames, "n_idr": n_idr, "n_slices": n_slices,
@@ -359,27 +349,8 @@ def parse_h264_stream(raw: bytes) -> dict:
     }
 
 
-def h264_profile_batch(p: pd.Series) -> pd.DataFrame:
-    # NULL payloads are failing rows, not task-killing TypeErrors —
-    # the suite gates promise "NULL counts as failing".
-    rows = [
-        _h264_fail("null_payload") if x is None
-        else parse_h264_stream(bytes(x))
-        for x in p
-    ]
-    return pd.DataFrame(rows, columns=list(H264_PROFILE_FIELDS))
-
-
-@F.pandas_udf(H264_PROFILE_TYPE)
-def _h264_udf(p: pd.Series) -> pd.DataFrame:
-    return h264_profile_batch(p)
-
-
-def video_h264_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, n_nals, n_frames, n_idr, n_slices, profile_idc,
-    level_idc, width, height): Annex B NAL discipline + SPS/PPS parse +
-    slice-header frame counting per stream, one Arrow hop."""
-    return _h264_udf(F.col(payload) if isinstance(payload, str) else payload)
+h264_profile_batch = H264.batch
+video_h264_profile = H264.column
 
 
 # ---- bit-exact stream writer (ledger corpora + tests) -----------------------

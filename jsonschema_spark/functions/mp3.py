@@ -41,10 +41,9 @@ from __future__ import annotations
 from typing import Iterable, Optional
 
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import Column
+
+from jsonschema_spark.functions.walker import Walker
 
 __all__ = [
     "frame_length",
@@ -290,16 +289,30 @@ def encode_mp3_stream(
 
 
 # ---- walker -----------------------------------------------------------------
-def _fail(err: str) -> dict:
-    return {
-        "ok": False, "error": err, "version": None, "layer": None,
-        "sr_hz": None, "mode": None, "n_frames": None, "parsed_dur_ms": None,
-        "br_min_kbps": None, "br_max_kbps": None, "vbr": None,
-        "info_frames": None, "info_ok": None, "has_id3v2": None,
-        "crc_frames": None,
-    }
+MP3 = Walker(
+    "audio_mp3_profile",
+    [
+        ("version", T.StringType()),
+        ("layer", T.IntegerType()),
+        ("sr_hz", T.IntegerType()),
+        ("mode", T.StringType()),
+        ("n_frames", T.IntegerType()),
+        ("parsed_dur_ms", T.IntegerType()),
+        ("br_min_kbps", T.IntegerType()),
+        ("br_max_kbps", T.IntegerType()),
+        ("vbr", T.BooleanType()),
+        ("info_frames", T.IntegerType()),
+        ("info_ok", T.BooleanType()),
+        ("has_id3v2", T.BooleanType()),
+        ("crc_frames", T.IntegerType()),
+    ],
+    """struct(ok, error, version, layer, sr_hz, mode, n_frames,
+    parsed_dur_ms, br_min_kbps, br_max_kbps, vbr, info_frames, info_ok,
+    has_id3v2, crc_frames) — the frame-header walk, one Arrow hop.""",
+)
 
 
+@MP3.parser
 def parse_mp3_stream(raw: bytes) -> dict:
     """Walk every frame header; certify the stream or fail loudly.
 
@@ -315,17 +328,17 @@ def parse_mp3_stream(raw: bytes) -> dict:
     has_id3v2 = False
     if buf[:3] == b"ID3":
         if len(buf) < 10:
-            return _fail("truncated")
+            return MP3.fail("truncated")
         flags = buf[5]
         if any(b & 0x80 for b in buf[6:10]):
-            return _fail("bad_header")
+            return MP3.fail("bad_header")
         size = 0
         for b in buf[6:10]:
             size = (size << 7) | (b & 0x7F)
         pos = 10 + size + (10 if flags & 0x10 else 0)
         has_id3v2 = True
         if pos > len(buf):
-            return _fail("truncated")
+            return MP3.fail("truncated")
     end = len(buf)
     if end - pos >= 128 and buf[end - 128:end - 125] == b"TAG":
         end -= 128
@@ -341,14 +354,14 @@ def parse_mp3_stream(raw: bytes) -> dict:
             # a tail too short to even hold a header can only be junk
             # (longer junk is indistinguishable from sync loss and is
             # reported as sync_lost / no_sync below)
-            return _fail("truncated" if first else "trailing_garbage")
+            return MP3.fail("truncated" if first else "trailing_garbage")
         h0, h1, h2, h3 = buf[pos:pos + 4]
         if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
-            return _fail("no_sync" if first else "sync_lost")
+            return MP3.fail("no_sync" if first else "sync_lost")
         version_id = (h1 >> 3) & 0x3
         layer_bits = (h1 >> 1) & 0x3
         if version_id == 1 or layer_bits == 0:
-            return _fail("bad_header")
+            return MP3.fail("bad_header")
         layer = {3: 1, 2: 2, 1: 3}[layer_bits]
         protected = not (h1 & 0x1)
         br_idx = (h2 >> 4) & 0xF
@@ -357,22 +370,22 @@ def parse_mp3_stream(raw: bytes) -> dict:
         mode = (h3 >> 6) & 0x3
         emphasis = h3 & 0x3
         if br_idx == 15 or sr_idx == 3 or emphasis == 2:
-            return _fail("bad_header")
+            return MP3.fail("bad_header")
         if br_idx == 0:
-            return _fail("free_bitrate")
+            return MP3.fail("free_bitrate")
         sr_hz = _SR_TABLE[version_id][sr_idx]
         br_kbps = _bitrate_row(version_id, layer)[br_idx - 1]
         if stream is None:
             stream = (version_id, layer, sr_hz)
             mode_name = _MODE_NAME[mode]
         elif stream != (version_id, layer, sr_hz):
-            return _fail("inconsistent_stream")
+            return MP3.fail("inconsistent_stream")
         ln = frame_length(version_id, layer, br_kbps * 1000, sr_hz, padding)
         if pos + ln > end:
-            return _fail("truncated")
+            return MP3.fail("truncated")
         if protected:
             if pos + 6 > end:
-                return _fail("truncated")
+                return MP3.fail("truncated")
             if layer == 3:
                 side_len = _side_info_len(version_id, mode == 3)
                 covered = buf[pos + 2:pos + 4] + buf[
@@ -381,7 +394,7 @@ def parse_mp3_stream(raw: bytes) -> dict:
                 if crc16_mpeg(covered) != int.from_bytes(
                     buf[pos + 4:pos + 6], "big"
                 ):
-                    return _fail("crc_mismatch")
+                    return MP3.fail("crc_mismatch")
                 crc_frames += 1
         if first and layer == 3:
             side_len = _side_info_len(version_id, mode == 3)
@@ -401,7 +414,7 @@ def parse_mp3_stream(raw: bytes) -> dict:
         pos += ln
         first = False
     if stream is None:
-        return _fail("no_sync")
+        return MP3.fail("no_sync")
     version_id, layer, sr_hz = stream
     spf = samples_per_frame(version_id, layer)
     return {
@@ -424,42 +437,6 @@ def parse_mp3_stream(raw: bytes) -> dict:
 
 
 # ---- Spark surface ----------------------------------------------------------
-MP3_PROFILE_TYPE = T.StructType(
-    [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("version", T.StringType()),
-        T.StructField("layer", T.IntegerType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("mode", T.StringType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("parsed_dur_ms", T.IntegerType()),
-        T.StructField("br_min_kbps", T.IntegerType()),
-        T.StructField("br_max_kbps", T.IntegerType()),
-        T.StructField("vbr", T.BooleanType()),
-        T.StructField("info_frames", T.IntegerType()),
-        T.StructField("info_ok", T.BooleanType()),
-        T.StructField("has_id3v2", T.BooleanType()),
-        T.StructField("crc_frames", T.IntegerType()),
-    ]
-)
-
-
-def mp3_profile_batch(payloads: pd.Series) -> pd.DataFrame:
-    rows = [
-        _fail("null_payload") if p is None else parse_mp3_stream(bytes(p))
-        for p in payloads
-    ]
-    return pd.DataFrame(rows, columns=[f.name for f in MP3_PROFILE_TYPE])
-
-
-@F.pandas_udf(MP3_PROFILE_TYPE)
-def _mp3_profile_udf(p: pd.Series) -> pd.DataFrame:
-    return mp3_profile_batch(p)
-
-
-def audio_mp3_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, version, layer, sr_hz, mode, n_frames,
-    parsed_dur_ms, br_min_kbps, br_max_kbps, vbr, info_frames, info_ok,
-    has_id3v2, crc_frames) — the frame-header walk, one Arrow hop."""
-    return _mp3_profile_udf(F.col(payload) if isinstance(payload, str) else payload)
+MP3_PROFILE_TYPE = MP3.type
+mp3_profile_batch = MP3.batch
+audio_mp3_profile = MP3.column

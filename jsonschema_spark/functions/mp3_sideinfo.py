@@ -59,9 +59,6 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jsonschema_spark.functions.mp3 import (
@@ -71,6 +68,7 @@ from jsonschema_spark.functions.mp3 import (
     _side_info_len,
     frame_length,
 )
+from jsonschema_spark.functions.walker import Walker
 
 # Huffman big-value tables 4 and 14 are "not used" (ISO 11172-3
 # Table B.7): selecting them is a structural error.
@@ -202,32 +200,23 @@ def part2_bits_mpeg1(g: dict, granule_idx: int, scfsi: int) -> int:
     return 11 * s1 + 10 * s2
 
 
-SIDEINFO_FIELDS = (
-    "ok", "error", "n_frames", "n_granules", "part23_bits", "max_mdb",
-    "short_blocks", "reservoir_frames",
-)
-
-SIDEINFO_TYPE = T.StructType(
+SIDEINFO = Walker(
+    "audio_mp3_sideinfo_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("n_granules", T.IntegerType()),
-        T.StructField("part23_bits", T.LongType()),
-        T.StructField("max_mdb", T.IntegerType()),
-        T.StructField("short_blocks", T.IntegerType()),
-        T.StructField("reservoir_frames", T.IntegerType()),
-    ]
+        ("n_frames", T.IntegerType()),
+        ("n_granules", T.IntegerType()),
+        ("part23_bits", T.LongType()),
+        ("max_mdb", T.IntegerType()),
+        ("short_blocks", T.IntegerType()),
+        ("reservoir_frames", T.IntegerType()),
+    ],
+    """struct(ok, error, n_frames, n_granules, part23_bits, max_mdb,
+    short_blocks, reservoir_frames): Layer III side-info parse +
+    bit-reservoir discipline per stream, one Arrow hop.""",
 )
 
 
-def _si_fail(err: str) -> dict:
-    d = {k: None for k in SIDEINFO_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
+@SIDEINFO.parser
 def parse_mp3_sideinfo(raw: bytes) -> dict:
     """Layer III side-info walk + bit-reservoir discipline. Leading
     ID3v2 / trailing ID3v1 tags are skipped (same rules as
@@ -237,13 +226,13 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
     pos = 0
     if buf[:3] == b"ID3":
         if len(buf) < 10 or any(b & 0x80 for b in buf[6:10]):
-            return _si_fail("no_sync")
+            return SIDEINFO.fail("no_sync")
         size = 0
         for b in buf[6:10]:
             size = (size << 7) | (b & 0x7F)
         pos = 10 + size + (10 if buf[5] & 0x10 else 0)
         if pos > end:
-            return _si_fail("no_sync")
+            return SIDEINFO.fail("no_sync")
     if end - pos >= 128 and buf[end - 128 : end - 125] == b"TAG":
         end -= 128
     k = 0
@@ -256,33 +245,33 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
     reservoir_frames = 0
     while pos < end:
         if end - pos < 4:
-            return _si_fail(f"truncated@{k}" if k else "no_sync")
+            return SIDEINFO.fail(f"truncated@{k}" if k else "no_sync")
         h0, h1, h2, h3 = buf[pos : pos + 4]
         if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
-            return _si_fail(f"sync_lost@{k}" if k else "no_sync")
+            return SIDEINFO.fail(f"sync_lost@{k}" if k else "no_sync")
         version_id = (h1 >> 3) & 0x3
         layer_bits = (h1 >> 1) & 0x3
         if version_id == 1 or layer_bits == 0:
-            return _si_fail(f"bad_header@{k}")
+            return SIDEINFO.fail(f"bad_header@{k}")
         if layer_bits != 1:
-            return _si_fail(f"not_layer3@{k}")
+            return SIDEINFO.fail(f"not_layer3@{k}")
         protected = not (h1 & 0x1)
         br_idx = (h2 >> 4) & 0xF
         sr_idx = (h2 >> 2) & 0x3
         padding = (h2 >> 1) & 0x1
         mode = (h3 >> 6) & 0x3
         if br_idx in (0, 15) or sr_idx == 3:
-            return _si_fail(f"bad_header@{k}")
+            return SIDEINFO.fail(f"bad_header@{k}")
         sr_hz = _SR_TABLE[version_id][sr_idx]
         br_kbps = _bitrate_row(version_id, 3)[br_idx - 1]
         ln = frame_length(version_id, 3, br_kbps * 1000, sr_hz, padding)
         if pos + ln > end:
-            return _si_fail(f"truncated@{k}")
+            return SIDEINFO.fail(f"truncated@{k}")
         mono = mode == 3
         side_len = _side_info_len(version_id, mono)
         hdr = 4 + (2 if protected else 0)
         if ln < hdr + side_len:
-            return _si_fail(f"bad_header@{k}")
+            return SIDEINFO.fail(f"bad_header@{k}")
         si = parse_sideinfo_bits(
             buf[pos + hdr : pos + hdr + side_len], version_id, mono
         )
@@ -292,11 +281,11 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
         nch_f = si["nch"]
         for gi, g in enumerate(si["granules"]):
             if g["ws"] and g["block_type"] == 0:
-                return _si_fail(f"bad_block_type@{k}")
+                return SIDEINFO.fail(f"bad_block_type@{k}")
             if any(t in _INVALID_TABLES for t in g["tables"]):
-                return _si_fail(f"bad_table_select@{k}")
+                return SIDEINFO.fail(f"bad_table_select@{k}")
             if g["big_values"] > _MAX_BIG_VALUES:
-                return _si_fail(f"big_values_overflow@{k}")
+                return SIDEINFO.fail(f"big_values_overflow@{k}")
             if version_id == 3:
                 # part2 accounting: the scalefactor bits implied by
                 # scalefac_compress/block shape/scfsi must FIT inside
@@ -306,16 +295,16 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
                     g, gi // nch_f, si["scfsi"][gi % nch_f]
                 )
                 if p2 > g["part23"]:
-                    return _si_fail(f"part2_overflow@{k}")
+                    return SIDEINFO.fail(f"part2_overflow@{k}")
             frame_bits += g["part23"]
             if g["block_type"] == 2:
                 short_blocks += 1
         mdb = si["mdb"]
         if mdb > min(avail, ptr_max):
-            return _si_fail(f"reservoir_underflow@{k}")
+            return SIDEINFO.fail(f"reservoir_underflow@{k}")
         bytes_needed = (frame_bits + 7) // 8
         if bytes_needed > mdb + capacity:
-            return _si_fail(f"part23_overflow@{k}")
+            return SIDEINFO.fail(f"part23_overflow@{k}")
         part23_total += frame_bits
         n_granules += si["ngr"]
         max_mdb = max(max_mdb, mdb)
@@ -325,7 +314,7 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
         pos += ln
         k += 1
     if k == 0:
-        return _si_fail("no_sync")
+        return SIDEINFO.fail("no_sync")
     return {
         "ok": True, "error": None, "n_frames": k,
         "n_granules": n_granules, "part23_bits": part23_total,
@@ -334,27 +323,8 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
     }
 
 
-def sideinfo_profile_batch(p: pd.Series) -> pd.DataFrame:
-    rows = [
-        _si_fail("null_payload") if x is None
-        else parse_mp3_sideinfo(bytes(x))
-        for x in p
-    ]
-    return pd.DataFrame(rows, columns=list(SIDEINFO_FIELDS))
-
-
-@F.pandas_udf(SIDEINFO_TYPE)
-def _sideinfo_udf(p: pd.Series) -> pd.DataFrame:
-    return sideinfo_profile_batch(p)
-
-
-def audio_mp3_sideinfo_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, n_frames, n_granules, part23_bits, max_mdb,
-    short_blocks, reservoir_frames): Layer III side-info parse +
-    bit-reservoir discipline per stream, one Arrow hop."""
-    return _sideinfo_udf(
-        F.col(payload) if isinstance(payload, str) else payload
-    )
+sideinfo_profile_batch = SIDEINFO.batch
+audio_mp3_sideinfo_profile = SIDEINFO.column
 
 
 # ---- conforming writer (ledger corpora + tests) -----------------------------
@@ -597,7 +567,7 @@ def encode_sideinfo_stream(
         avail = min(avail + cap, 1 << 30)
     raw = b"".join(chunks)
     if err is not None:
-        led = _si_fail(err)
+        led = SIDEINFO.fail(err)
     else:
         led = {
             "ok": True, "error": None, "n_frames": n_frames,

@@ -24,6 +24,14 @@ Annex B walk:
 No sample DECODE here — the h264 payload tier is the Annex B walk
 (frame decode needs libavcodec; documented ceiling). Scale shape: one
 Arrow hop per file, no shuffles.
+
+Errors: null_payload (NULL payload), truncated, box_depth,
+missing_ftyp, missing_moov, multiple_moov, missing_mdat, missing_mvhd,
+missing_stbl, missing_avcc, bad_mvhd, bad_mdhd, bad_stsd (no entry, or
+an entry overrunning the stsd body), bad_pcm_bits, bad_avcc,
+avcc_sps_mismatch, truncated_stts, truncated_stsz, truncated_stco; the
+fragment profile adds moof_without_mvex, moof_without_mdat and
+truncated_trun.
 """
 
 from __future__ import annotations
@@ -31,10 +39,9 @@ from __future__ import annotations
 import struct
 from typing import Optional
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jsonschema_spark.functions.walker import Walker
 
 _CONTAINERS = {
     b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"dinf",
@@ -167,6 +174,8 @@ def _parse_stbl(raw: bytes, b0: int, b1: int) -> dict:
                 raise ValueError("bad_stsd")
             e0 = s0 + 8
             (esize,) = struct.unpack(">I", raw[e0 : e0 + 4])
+            if e0 + esize > s1:  # entry overruns the stsd body
+                raise ValueError("bad_stsd")
             fmt = raw[e0 + 4 : e0 + 8]
             out["codec"] = fmt.decode("latin1")
             if fmt == b"avc1":
@@ -225,56 +234,46 @@ def _parse_stbl(raw: bytes, b0: int, b1: int) -> dict:
     return out
 
 
-MP4_PROFILE_FIELDS = (
-    "ok", "error", "major_brand", "n_tracks", "video_codec", "width",
-    "height", "video_samples", "profile_idc", "audio_codec",
-    "sample_rate", "channels", "audio_samples", "duration_ms",
-    "tables_consistent",
-)
-
-MP4_PROFILE_TYPE = T.StructType(
+MP4 = Walker(
+    "video_mp4_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("major_brand", T.StringType()),
-        T.StructField("n_tracks", T.IntegerType()),
-        T.StructField("video_codec", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("video_samples", T.IntegerType()),
-        T.StructField("profile_idc", T.IntegerType()),
-        T.StructField("audio_codec", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("audio_samples", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("tables_consistent", T.BooleanType()),
-    ]
+        ("major_brand", T.StringType()),
+        ("n_tracks", T.IntegerType()),
+        ("video_codec", T.StringType()),
+        ("width", T.IntegerType()),
+        ("height", T.IntegerType()),
+        ("video_samples", T.IntegerType()),
+        ("profile_idc", T.IntegerType()),
+        ("audio_codec", T.StringType()),
+        ("sample_rate", T.IntegerType()),
+        ("channels", T.IntegerType()),
+        ("audio_samples", T.IntegerType()),
+        ("duration_ms", T.LongType()),
+        ("tables_consistent", T.BooleanType()),
+    ],
+    """struct(ok, error, major_brand, n_tracks, video/audio metadata,
+    duration_ms, tables_consistent): ISO-BMFF box discipline + sample-
+    table cross-checks per file, one Arrow hop.""",
 )
+MP4_PROFILE_FIELDS = MP4.fields
 
 
-def _mp4_fail(err: str) -> dict:
-    d = {k: None for k in MP4_PROFILE_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
+@MP4.parser
 def parse_mp4(raw: bytes) -> dict:
     raw = bytes(raw)
     try:
         top = _find_boxes(raw, 0, len(raw))
     except ValueError as e:
-        return _mp4_fail(str(e))
+        return MP4.fail(str(e))
     if not top or top[0][0] != b"ftyp":
-        return _mp4_fail("missing_ftyp")
+        return MP4.fail("missing_ftyp")
     brand = raw[top[0][1] : top[0][1] + 4].decode("latin1")
     moovs = [b for b in top if b[0] == b"moov"]
     mdats = [(b[1], b[2]) for b in top if b[0] == b"mdat"]
     if len(moovs) != 1:
-        return _mp4_fail("missing_moov" if not moovs else "multiple_moov")
+        return MP4.fail("missing_moov" if not moovs else "multiple_moov")
     if not mdats:
-        return _mp4_fail("missing_mdat")
+        return MP4.fail("missing_mdat")
     m0, m1, _ = moovs[0][1], moovs[0][2], moovs[0][3]
     try:
         mv_ts = mv_dur = None
@@ -301,9 +300,9 @@ def parse_mp4(raw: bytes) -> dict:
                                         stbl = _parse_stbl(raw, e0, e1)
                 tracks.append((handler, md_ts, md_dur, stbl))
     except ValueError as e:
-        return _mp4_fail(str(e))
+        return MP4.fail(str(e))
     if mv_ts is None:
-        return _mp4_fail("missing_mvhd")
+        return MP4.fail("missing_mvhd")
     out = {k: None for k in MP4_PROFILE_FIELDS}
     out["ok"] = True
     out["error"] = None
@@ -315,7 +314,7 @@ def parse_mp4(raw: bytes) -> dict:
     consistent = True
     for handler, md_ts, md_dur, stbl in tracks:
         if stbl is None or handler is None:
-            return _mp4_fail("missing_stbl")
+            return MP4.fail("missing_stbl")
         if stbl["n_samples_stts"] != stbl["n_samples_stsz"]:
             consistent = False
         for off in stbl["chunk_offsets"]:
@@ -335,7 +334,7 @@ def parse_mp4(raw: bytes) -> dict:
                 ):
                     consistent = False
             elif stbl["codec"] == "avc1":
-                return _mp4_fail("missing_avcc")
+                return MP4.fail("missing_avcc")
         elif handler == b"soun":
             out["audio_codec"] = stbl["codec"]
             out["sample_rate"] = stbl["sr"]
@@ -345,26 +344,8 @@ def parse_mp4(raw: bytes) -> dict:
     return out
 
 
-def mp4_profile_batch(p: pd.Series) -> pd.DataFrame:
-    rows = []
-    for raw in p:
-        try:
-            rows.append(parse_mp4(bytes(raw)))
-        except Exception as e:  # any unexpected shape: classify, not crash
-            rows.append(_mp4_fail(f"parse_error:{type(e).__name__}"))
-    return pd.DataFrame(rows, columns=list(MP4_PROFILE_FIELDS))
-
-
-@F.pandas_udf(MP4_PROFILE_TYPE)
-def _mp4_udf(p: pd.Series) -> pd.DataFrame:
-    return mp4_profile_batch(p)
-
-
-def video_mp4_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, major_brand, n_tracks, video/audio metadata,
-    duration_ms, tables_consistent): ISO-BMFF box discipline + sample-
-    table cross-checks per file, one Arrow hop."""
-    return _mp4_udf(F.col(payload) if isinstance(payload, str) else payload)
+mp4_profile_batch = MP4.batch
+video_mp4_profile = MP4.column
 
 
 # ---- minimal conforming writer (ledger corpora + tests) ---------------------
@@ -562,31 +543,23 @@ def _parse_trun(raw: bytes, b0: int, b1: int) -> int:
     return count
 
 
-MP4_FRAG_FIELDS = (
-    "ok", "error", "fragmented", "n_fragments", "frag_samples",
-    "seq_ok", "frag_tracks_ok",
-)
-
-MP4_FRAG_TYPE = T.StructType(
+MP4_FRAG = Walker(
+    "video_mp4_fragment_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("fragmented", T.BooleanType()),
-        T.StructField("n_fragments", T.IntegerType()),
-        T.StructField("frag_samples", T.IntegerType()),
-        T.StructField("seq_ok", T.BooleanType()),
-        T.StructField("frag_tracks_ok", T.BooleanType()),
-    ]
+        ("fragmented", T.BooleanType()),
+        ("n_fragments", T.IntegerType()),
+        ("frag_samples", T.IntegerType()),
+        ("seq_ok", T.BooleanType()),
+        ("frag_tracks_ok", T.BooleanType()),
+    ],
+    """struct(ok, error, fragmented, n_fragments, frag_samples, seq_ok,
+    frag_tracks_ok): fMP4/DASH fragment-layer discipline, one Arrow
+    hop.""",
 )
+MP4_FRAG_FIELDS = MP4_FRAG.fields
 
 
-def _frag_fail(err: str) -> dict:
-    d = {k: None for k in MP4_FRAG_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
+@MP4_FRAG.parser
 def parse_mp4_fragments(raw: bytes) -> dict:
     """Fragment-layer profile (complements :func:`parse_mp4`, which
     reads the moov sample tables — empty in an fMP4 init segment)."""
@@ -594,12 +567,12 @@ def parse_mp4_fragments(raw: bytes) -> dict:
     try:
         top = _find_boxes(raw, 0, len(raw))
     except ValueError as e:
-        return _frag_fail(str(e))
+        return MP4_FRAG.fail(str(e))
     if not top or top[0][0] != b"ftyp":
-        return _frag_fail("missing_ftyp")
+        return MP4_FRAG.fail("missing_ftyp")
     moovs = [b for b in top if b[0] == b"moov"]
     if len(moovs) != 1:
-        return _frag_fail("missing_moov" if not moovs else "multiple_moov")
+        return MP4_FRAG.fail("missing_moov" if not moovs else "multiple_moov")
     moofs = [b for b in top if b[0] == b"moof"]
     # declared track ids + mvex presence from moov
     track_ids = set()
@@ -615,7 +588,7 @@ def parse_mp4_fragments(raw: bytes) -> dict:
                             struct.unpack(">I", raw[c0 + 12 : c0 + 16])[0]
                         )
     except ValueError as e:
-        return _frag_fail(str(e))
+        return MP4_FRAG.fail(str(e))
     if not moofs:
         return {
             "ok": True, "error": None, "fragmented": False,
@@ -623,7 +596,7 @@ def parse_mp4_fragments(raw: bytes) -> dict:
             "frag_tracks_ok": True,
         }
     if not has_mvex:
-        return _frag_fail("moof_without_mvex")
+        return MP4_FRAG.fail("moof_without_mvex")
     seq_ok = True
     tracks_ok = True
     total = 0
@@ -647,12 +620,12 @@ def parse_mp4_fragments(raw: bytes) -> dict:
                         elif t2 == b"trun":
                             total += _parse_trun(raw, c0, c1)
     except ValueError as e:
-        return _frag_fail(str(e))
+        return MP4_FRAG.fail(str(e))
     # each moof must be directly followed by an mdat sibling
     kinds = [b[0] for b in top]
     for i, k in enumerate(kinds):
         if k == b"moof" and (i + 1 >= len(kinds) or kinds[i + 1] != b"mdat"):
-            return _frag_fail("moof_without_mdat")
+            return MP4_FRAG.fail("moof_without_mdat")
     return {
         "ok": True, "error": None, "fragmented": True,
         "n_fragments": len(moofs), "frag_samples": total,
@@ -660,28 +633,8 @@ def parse_mp4_fragments(raw: bytes) -> dict:
     }
 
 
-def mp4_fragment_batch(p: pd.Series) -> pd.DataFrame:
-    rows = []
-    for raw in p:
-        try:
-            rows.append(parse_mp4_fragments(bytes(raw)))
-        except Exception as e:
-            rows.append(_frag_fail(f"parse_error:{type(e).__name__}"))
-    return pd.DataFrame(rows, columns=list(MP4_FRAG_FIELDS))
-
-
-@F.pandas_udf(MP4_FRAG_TYPE)
-def _mp4_frag_udf(p: pd.Series) -> pd.DataFrame:
-    return mp4_fragment_batch(p)
-
-
-def video_mp4_fragment_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, fragmented, n_fragments, frag_samples, seq_ok,
-    frag_tracks_ok): fMP4/DASH fragment-layer discipline, one Arrow
-    hop."""
-    return _mp4_frag_udf(
-        F.col(payload) if isinstance(payload, str) else payload
-    )
+mp4_fragment_batch = MP4_FRAG.batch
+video_mp4_fragment_profile = MP4_FRAG.column
 
 
 def encode_mp4_fragmented(

@@ -30,16 +30,16 @@ from __future__ import annotations
 from typing import Iterable, Optional, Sequence
 
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import Column
+
+from jsonschema_spark.functions.walker import Walker
 
 __all__ = [
     "ogg_crc_pages",
     "build_page",
     "encode_ogg_opus",
     "encode_ogg_vorbis",
+    "verified_pages",
     "parse_ogg_stream",
     "ogg_profile_batch",
     "audio_ogg_profile",
@@ -286,19 +286,6 @@ def encode_ogg_vorbis(
 
 
 # ---- walker -----------------------------------------------------------------
-_FIELDS = (
-    "ok", "error", "codec", "channels", "sample_rate", "pre_skip",
-    "n_pages", "n_packets", "last_granule", "duration_ms", "crc_pages",
-)
-
-
-def _fail(err: str) -> dict:
-    d = {k: None for k in _FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
 def _scan_pages(raw: bytes) -> list[tuple] | str:
     """Structural page scan: returns [(flags, granule, serial, seq,
     lacing, body, crc_stored, zeroed_page), ...] or an error string."""
@@ -334,6 +321,33 @@ def _scan_pages(raw: bytes) -> list[tuple] | str:
         pos += total
     if not out:
         return "no_capture"
+    return out
+
+
+def verified_pages(payloads: Iterable) -> list:
+    """Page scan + CRC verification for a batch of Ogg payloads, with ONE
+    ``ogg_crc_pages`` call across every page of every clip — the only
+    O(bytes) work, kept per batch because per-clip kernel calls measured
+    ~20x slower. Returns, per payload, its page list or an error string:
+    ``null_payload``, the ``_scan_pages`` error, or ``crc_mismatch``.
+    Every Ogg consumer (the three walkers, the container profile, the
+    Vorbis decode) verifies pages here."""
+    scans = [
+        "null_payload" if p is None else _scan_pages(bytes(p))
+        for p in payloads
+    ]
+    crcs = ogg_crc_pages(
+        [pg[7] for s in scans if not isinstance(s, str) for pg in s]
+    ).tolist()
+    out = []
+    k = 0
+    for s in scans:
+        if not isinstance(s, str):
+            n = len(s)
+            if any(c != pg[6] for c, pg in zip(crcs[k:k + n], s)):
+                s = "crc_mismatch"
+            k += n
+        out.append(s)
     return out
 
 
@@ -403,28 +417,36 @@ def _parse_ident(first_packet: bytes) -> tuple | str:
     return "bad_ident"
 
 
-def parse_ogg_stream(raw: bytes) -> dict:
-    """Single-clip walker (tests / synth verification). The Spark path
-    (`ogg_profile_batch`) runs the same scan but batches CRC across all
-    clips of an Arrow batch."""
-    pages = _scan_pages(bytes(raw))
-    if isinstance(pages, str):
-        return _fail(pages)
-    crcs = ogg_crc_pages([p[7] for p in pages])
-    for k, p in enumerate(pages):
-        if int(crcs[k]) != p[6]:
-            return _fail("crc_mismatch")
-    return _finalize(pages, len(pages))
+OGG = Walker(
+    "audio_ogg_profile",
+    [
+        ("codec", T.StringType()),
+        ("channels", T.IntegerType()),
+        ("sample_rate", T.IntegerType()),
+        ("pre_skip", T.IntegerType()),
+        ("n_pages", T.IntegerType()),
+        ("n_packets", T.IntegerType()),
+        ("last_granule", T.LongType()),
+        ("duration_ms", T.LongType()),
+        ("crc_pages", T.IntegerType()),
+    ],
+    """struct(ok, error, codec, channels, sample_rate, pre_skip,
+    n_pages, n_packets, last_granule, duration_ms, crc_pages) — the Ogg
+    page walk with batched CRC verification, one Arrow hop.""",
+    prepare=verified_pages,
+)
 
 
-def _finalize(pages: list[tuple], n_pages: int) -> dict:
+@OGG.parser
+def _finalize(pages: list[tuple]) -> dict:
+    n_pages = len(pages)
     got = _finish_packets(pages)
     if isinstance(got, str):
-        return _fail(got)
+        return OGG.fail(got)
     n_packets, first_packet, last_granule = got
     ident = _parse_ident(first_packet)
     if isinstance(ident, str):
-        return _fail(ident)
+        return OGG.fail(ident)
     codec, channels, sample_rate, pre_skip = ident
     if codec == "opus":
         dur = max(0, last_granule - pre_skip) * 1000 // 48000
@@ -439,67 +461,15 @@ def _finalize(pages: list[tuple], n_pages: int) -> dict:
     }
 
 
-OGG_PROFILE_TYPE = T.StructType(
-    [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("pre_skip", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("n_packets", T.IntegerType()),
-        T.StructField("last_granule", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("crc_pages", T.IntegerType()),
-    ]
-)
+def parse_ogg_stream(raw: bytes) -> dict:
+    """Single-clip walker (tests / synth verification): the batch walker
+    (`ogg_profile_batch`) applied to one clip."""
+    return OGG.rows([raw])[0]
 
 
-def ogg_profile_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Batch walker: per-clip structural scan (cheap Python), then ONE
-    batched CRC kernel over every page of every clip in the batch —
-    the O(bytes) work never runs per-byte-per-page in Python."""
-    scans: list = []
-    all_pages: list[bytes] = []
-    spans: list[tuple[int, int]] = []
-    for p in payloads:
-        if p is None:
-            scans.append("null_payload")
-            spans.append((0, 0))
-            continue
-        s = _scan_pages(bytes(p))
-        scans.append(s)
-        if isinstance(s, str):
-            spans.append((0, 0))
-        else:
-            spans.append((len(all_pages), len(s)))
-            all_pages.extend(pg[7] for pg in s)
-    crcs = ogg_crc_pages(all_pages)
-    rows = []
-    for s, (start, cnt) in zip(scans, spans):
-        if isinstance(s, str):
-            rows.append(_fail(s))
-            continue
-        bad = any(
-            int(crcs[start + k]) != s[k][6] for k in range(cnt)
-        )
-        rows.append(_fail("crc_mismatch") if bad else _finalize(s, cnt))
-    return pd.DataFrame(rows, columns=list(_FIELDS))
-
-
-@F.pandas_udf(OGG_PROFILE_TYPE)
-def _ogg_profile_udf(p: pd.Series) -> pd.DataFrame:
-    return ogg_profile_batch(p)
-
-
-def audio_ogg_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, codec, channels, sample_rate, pre_skip,
-    n_pages, n_packets, last_granule, duration_ms, crc_pages) — the Ogg
-    page walk with batched CRC verification, one Arrow hop."""
-    return _ogg_profile_udf(
-        F.col(payload) if isinstance(payload, str) else payload
-    )
+OGG_PROFILE_TYPE = OGG.type
+ogg_profile_batch = OGG.batch
+audio_ogg_profile = OGG.column
 
 
 # ---- Opus packet-level validation (RFC 6716 §3.1/§3.2) ----------------------
@@ -665,31 +635,6 @@ def opus_stream_packet_stats(
     }
 
 
-OPUS_PACKET_TYPE = T.StructType(
-    [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("n_audio_packets", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("sum_samples", T.LongType()),
-        T.StructField("end_trim", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-_PKT_FIELDS = (
-    "ok", "error", "n_audio_packets", "n_frames", "sum_samples",
-    "end_trim", "duration_ms",
-)
-
-
-def _pkt_fail(err: str) -> dict:
-    d = {k: None for k in _PKT_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
 def _collect_packets(pages: list[tuple]) -> list[bytes] | str:
     """All packets in order (the flag/seq discipline of _finish_packets,
     but keeping every packet body)."""
@@ -709,89 +654,54 @@ def _collect_packets(pages: list[tuple]) -> list[bytes] | str:
     return out
 
 
-def parse_opus_packets(raw: bytes) -> dict:
-    """Single-clip packet audit: container walk first (any page-level
-    failure surfaces as that error), then the Opus framing audit."""
-    pages = _scan_pages(bytes(raw))
-    if isinstance(pages, str):
-        return _pkt_fail(pages)
-    crcs = ogg_crc_pages([p[7] for p in pages])
-    for k, p in enumerate(pages):
-        if int(crcs[k]) != p[6]:
-            return _pkt_fail("crc_mismatch")
-    return _opus_packets_from_pages(pages)
-
-
-def _opus_packets_from_pages(pages: list[tuple]) -> dict:
-    """Framing audit over an already-CRC-verified page list (shared by
-    the single-clip and the batched walkers)."""
-    packets = _collect_packets(pages)
-    if isinstance(packets, str):
-        return _pkt_fail(packets)
-    if not packets:
-        return _pkt_fail("bad_ident")
-    ident = _parse_ident(packets[0])
-    if isinstance(ident, str):
-        return _pkt_fail(ident)
-    codec, _channels, _rate, pre_skip = ident
-    if codec != "opus":
-        return _pkt_fail("not_opus")
-    if len(packets) < 2 or packets[1][:8] != b"OpusTags":
-        return _pkt_fail("missing_tags")
-    return opus_stream_packet_stats(
-        packets[2:], pre_skip, pages[-1][1]
-    )
-
-
-def opus_packet_profile_batch(payloads: pd.Series) -> pd.DataFrame:
-    """Batch walker: per-clip structural scan, then ONE batched CRC
-    kernel over every page of every clip in the Arrow batch (the
-    matrix kernel amortizes its per-byte Python cost over thousands of
-    pages — running it per clip measured ~20x slower), then the
-    framing audit per clip."""
-    scans: list = []
-    all_pages: list[bytes] = []
-    spans: list[tuple[int, int]] = []
-    for p in payloads:
-        if p is None:
-            scans.append("null_payload")
-            spans.append((0, 0))
-            continue
-        s = _scan_pages(bytes(p))
-        scans.append(s)
-        if isinstance(s, str):
-            spans.append((0, 0))
-        else:
-            spans.append((len(all_pages), len(s)))
-            all_pages.extend(pg[7] for pg in s)
-    crcs = ogg_crc_pages(all_pages)
-    rows = []
-    for s, (start, cnt) in zip(scans, spans):
-        if isinstance(s, str):
-            rows.append(_pkt_fail(s))
-            continue
-        if any(int(crcs[start + k]) != s[k][6] for k in range(cnt)):
-            rows.append(_pkt_fail("crc_mismatch"))
-            continue
-        rows.append(_opus_packets_from_pages(s))
-    return pd.DataFrame(rows, columns=list(_PKT_FIELDS))
-
-
-@F.pandas_udf(OPUS_PACKET_TYPE)
-def _opus_packet_udf(p: pd.Series) -> pd.DataFrame:
-    return opus_packet_profile_batch(p)
-
-
-def audio_opus_packet_profile(payload: Column | str = "bytes") -> Column:
+OPUS_PKT = Walker(
+    "audio_opus_packet_profile",
+    [
+        ("n_audio_packets", T.IntegerType()),
+        ("n_frames", T.IntegerType()),
+        ("sum_samples", T.LongType()),
+        ("end_trim", T.LongType()),
+        ("duration_ms", T.LongType()),
+    ],
     """struct(ok, error, n_audio_packets, n_frames, sum_samples,
     end_trim, duration_ms): RFC 6716 TOC/framing validation + RFC 7845
     granule cross-check per clip, one Arrow hop. Extends the SNR ladder
     one tier for compressed web audio: structural walk -> packet-level
     framing certification (sample decode stays out of scope without
-    libopus — documented ceiling, SURVEY §2C)."""
-    return _opus_packet_udf(
-        F.col(payload) if isinstance(payload, str) else payload
+    libopus — documented ceiling, SURVEY §2C).""",
+    prepare=verified_pages,
+)
+
+
+@OPUS_PKT.parser
+def _opus_packets_from_pages(pages: list[tuple]) -> dict:
+    """Framing audit over an already-CRC-verified page list."""
+    packets = _collect_packets(pages)
+    if isinstance(packets, str):
+        return OPUS_PKT.fail(packets)
+    if not packets:
+        return OPUS_PKT.fail("bad_ident")
+    ident = _parse_ident(packets[0])
+    if isinstance(ident, str):
+        return OPUS_PKT.fail(ident)
+    codec, _channels, _rate, pre_skip = ident
+    if codec != "opus":
+        return OPUS_PKT.fail("not_opus")
+    if len(packets) < 2 or packets[1][:8] != b"OpusTags":
+        return OPUS_PKT.fail("missing_tags")
+    return opus_stream_packet_stats(
+        packets[2:], pre_skip, pages[-1][1]
     )
+
+
+def parse_opus_packets(raw: bytes) -> dict:
+    """Single-clip packet audit: container walk first (any page-level
+    failure surfaces as that error), then the Opus framing audit."""
+    return OPUS_PKT.rows([raw])[0]
+
+
+opus_packet_profile_batch = OPUS_PKT.batch
+audio_opus_packet_profile = OPUS_PKT.column
 
 
 def _opus_len_code(n: int) -> bytes:
@@ -893,58 +803,48 @@ def encode_ogg_opus_framed(
 # codebooks, floor-1, residue, IMDCT) lives in functions/vorbis.py
 # (round 4); this walk remains the cheap structural tier.
 
-_VORBIS_PKT_FIELDS = (
-    "ok", "error", "n_audio_packets", "blocksize_0", "blocksize_1",
+VORBIS_PKT = Walker(
+    "audio_vorbis_packet_profile",
+    [
+        ("n_audio_packets", T.IntegerType()),
+        ("blocksize_0", T.IntegerType()),
+        ("blocksize_1", T.IntegerType()),
+    ],
+    """struct(ok, error, n_audio_packets, blocksize_0, blocksize_1):
+    Vorbis I header-discipline + packet-type certification, one Arrow
+    hop (see parse_vorbis_packets).""",
+    prepare=verified_pages,
 )
 
 
-def _vorbis_pkt_fail(err: str) -> dict:
-    d = {k: None for k in _VORBIS_PKT_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
-def parse_vorbis_packets(raw: bytes) -> dict:
-    """Single-clip Vorbis packet audit: container walk first, then the
-    header-discipline + packet-type checks."""
-    pages = _scan_pages(bytes(raw))
-    if isinstance(pages, str):
-        return _vorbis_pkt_fail(pages)
-    crcs = ogg_crc_pages([p[7] for p in pages])
-    for k, p in enumerate(pages):
-        if int(crcs[k]) != p[6]:
-            return _vorbis_pkt_fail("crc_mismatch")
-    return _vorbis_packets_from_pages(pages)
-
-
+@VORBIS_PKT.parser
 def _vorbis_packets_from_pages(pages: list[tuple]) -> dict:
     """Discipline audit over an already-CRC-verified page list."""
     packets = _collect_packets(pages)
     if isinstance(packets, str):
-        return _vorbis_pkt_fail(packets)
+        return VORBIS_PKT.fail(packets)
     if not packets or packets[0][:7] != b"\x01vorbis":
-        return _vorbis_pkt_fail("bad_ident")
+        return VORBIS_PKT.fail("bad_ident")
     ident = packets[0]
     if len(ident) < 30 or int.from_bytes(ident[7:11], "little") != 0:
-        return _vorbis_pkt_fail("bad_ident")
+        return VORBIS_PKT.fail("bad_ident")
     bs = ident[28]
     bs0, bs1 = 1 << (bs & 0xF), 1 << (bs >> 4)
     if not (64 <= bs0 <= bs1 <= 8192):
-        return _vorbis_pkt_fail("bad_blocksizes")
+        return VORBIS_PKT.fail("bad_blocksizes")
     if len(ident) < 30 or not (ident[29] & 0x1):
-        return _vorbis_pkt_fail("bad_framing")
+        return VORBIS_PKT.fail("bad_framing")
     if len(packets) < 3:
-        return _vorbis_pkt_fail("missing_headers")
+        return VORBIS_PKT.fail("missing_headers")
     if packets[1][:7] != b"\x03vorbis":
-        return _vorbis_pkt_fail("missing_comment")
+        return VORBIS_PKT.fail("missing_comment")
     if packets[2][:7] != b"\x05vorbis":
-        return _vorbis_pkt_fail("missing_setup")
+        return VORBIS_PKT.fail("missing_setup")
     for k, pkt in enumerate(packets[3:]):
         if len(pkt) == 0:
-            return _vorbis_pkt_fail(f"empty_packet@{k}")
+            return VORBIS_PKT.fail(f"empty_packet@{k}")
         if pkt[0] & 0x1:
-            return _vorbis_pkt_fail(f"bad_packet_type@{k}")
+            return VORBIS_PKT.fail(f"bad_packet_type@{k}")
     return {
         "ok": True, "error": None,
         "n_audio_packets": len(packets) - 3,
@@ -952,56 +852,14 @@ def _vorbis_packets_from_pages(pages: list[tuple]) -> dict:
     }
 
 
-VORBIS_PACKET_TYPE = T.StructType(
-    [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("n_audio_packets", T.IntegerType()),
-        T.StructField("blocksize_0", T.IntegerType()),
-        T.StructField("blocksize_1", T.IntegerType()),
-    ]
-)
+def parse_vorbis_packets(raw: bytes) -> dict:
+    """Single-clip Vorbis packet audit: container walk first, then the
+    header-discipline + packet-type checks."""
+    return VORBIS_PKT.rows([raw])[0]
 
 
-@F.pandas_udf(VORBIS_PACKET_TYPE)
-def _vorbis_packet_udf(p: pd.Series) -> pd.DataFrame:
-    # ONE batched CRC kernel per Arrow batch (see
-    # opus_packet_profile_batch — per-clip CRC measured ~20x slower)
-    scans: list = []
-    all_pages: list[bytes] = []
-    spans: list[tuple[int, int]] = []
-    for raw in p:
-        if raw is None:
-            scans.append("null_payload")
-            spans.append((0, 0))
-            continue
-        s = _scan_pages(bytes(raw))
-        scans.append(s)
-        if isinstance(s, str):
-            spans.append((0, 0))
-        else:
-            spans.append((len(all_pages), len(s)))
-            all_pages.extend(pg[7] for pg in s)
-    crcs = ogg_crc_pages(all_pages)
-    rows = []
-    for s, (start, cnt) in zip(scans, spans):
-        if isinstance(s, str):
-            rows.append(_vorbis_pkt_fail(s))
-            continue
-        if any(int(crcs[start + k]) != s[k][6] for k in range(cnt)):
-            rows.append(_vorbis_pkt_fail("crc_mismatch"))
-            continue
-        rows.append(_vorbis_packets_from_pages(s))
-    return pd.DataFrame(rows, columns=list(_VORBIS_PKT_FIELDS))
-
-
-def audio_vorbis_packet_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, n_audio_packets, blocksize_0, blocksize_1):
-    Vorbis I header-discipline + packet-type certification, one Arrow
-    hop (see parse_vorbis_packets)."""
-    return _vorbis_packet_udf(
-        F.col(payload) if isinstance(payload, str) else payload
-    )
+vorbis_packet_profile_batch = VORBIS_PKT.batch
+audio_vorbis_packet_profile = VORBIS_PKT.column
 
 
 def vorbis_header_packets(

@@ -30,10 +30,9 @@ from __future__ import annotations
 import struct
 from typing import Optional
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jsonschema_spark.functions.walker import Walker
 
 _TEXT_KEYS = {"TIT2": "title", "TPE1": "artist", "TALB": "album"}
 
@@ -231,32 +230,23 @@ def parse_comment_block(body: bytes, pos: int = 0) -> dict:
     return out
 
 
-TAGS_FIELDS = (
-    "ok", "error", "tag_format", "n_tags", "title", "artist", "album",
-    "vendor",
-)
-
-TAGS_TYPE = T.StructType(
+TAGS = Walker(
+    "audio_tags_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("tag_format", T.StringType()),
-        T.StructField("n_tags", T.IntegerType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("artist", T.StringType()),
-        T.StructField("album", T.StringType()),
-        T.StructField("vendor", T.StringType()),
-    ]
+        ("tag_format", T.StringType()),
+        ("n_tags", T.IntegerType()),
+        ("title", T.StringType()),
+        ("artist", T.StringType()),
+        ("album", T.StringType()),
+        ("vendor", T.StringType()),
+    ],
+    """struct(ok, error, tag_format, n_tags, title, artist, album,
+    vendor): ID3v2 / Vorbis-comment / OpusTags metadata extraction,
+    one Arrow hop.""",
 )
 
 
-def _tags_fail(err: str) -> dict:
-    d = {k: None for k in TAGS_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
-
-
+@TAGS.parser
 def parse_audio_tags(raw: bytes) -> dict:
     raw = bytes(raw)
     try:
@@ -277,12 +267,12 @@ def parse_audio_tags(raw: bytes) -> dict:
 
             pages = _scan_pages(raw)
             if isinstance(pages, str):
-                return _tags_fail(pages)
+                return TAGS.fail(pages)
             packets = _collect_packets(pages)
             if isinstance(packets, str):
-                return _tags_fail(packets)
+                return TAGS.fail(packets)
             if len(packets) < 2:
-                return _tags_fail("missing_comment_packet")
+                return TAGS.fail("missing_comment_packet")
             pk = bytes(packets[1])
             if pk[:7] == b"\x03vorbis":
                 t = parse_comment_block(pk, 7)
@@ -291,39 +281,20 @@ def parse_audio_tags(raw: bytes) -> dict:
                 t = parse_comment_block(pk, 8)
                 fmt = "opus_tags"
             else:
-                return _tags_fail("unknown_comment_packet")
+                return TAGS.fail("unknown_comment_packet")
             return {
                 "ok": True, "error": None, "tag_format": fmt,
                 "n_tags": t["n_frames"], "title": t["title"],
                 "artist": t["artist"], "album": t["album"],
                 "vendor": t["vendor"],
             }
-        return _tags_fail("no_tags")
+        return TAGS.fail("no_tags")
     except ValueError as e:
-        return _tags_fail(str(e))
+        return TAGS.fail(str(e))
 
 
-def audio_tags_batch(p: pd.Series) -> pd.DataFrame:
-    # NULL payloads are failing rows, not task-killing TypeErrors —
-    # the suite gates promise "NULL counts as failing".
-    rows = [
-        _tags_fail("null_payload") if x is None
-        else parse_audio_tags(bytes(x))
-        for x in p
-    ]
-    return pd.DataFrame(rows, columns=list(TAGS_FIELDS))
-
-
-@F.pandas_udf(TAGS_TYPE)
-def _tags_udf(p: pd.Series) -> pd.DataFrame:
-    return audio_tags_batch(p)
-
-
-def audio_tags_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, tag_format, n_tags, title, artist, album,
-    vendor): ID3v2 / Vorbis-comment / OpusTags metadata extraction,
-    one Arrow hop."""
-    return _tags_udf(F.col(payload) if isinstance(payload, str) else payload)
+audio_tags_batch = TAGS.batch
+audio_tags_profile = TAGS.column
 
 
 # ---- writers (ledger corpora + tests) ---------------------------------------

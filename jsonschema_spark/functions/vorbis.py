@@ -1532,19 +1532,11 @@ def vorbis_reference(clip_id: str, n_samples: int, channels: int) -> np.ndarray:
 
 def decode_vorbis_stream(raw: bytes) -> tuple[np.ndarray, int]:
     """Ogg container walk (CRC-verified) + full Vorbis decode."""
-    from jsonschema_spark.functions.ogg import (
-        _collect_packets,
-        _scan_pages,
-        ogg_crc_pages,
-    )
+    from jsonschema_spark.functions.ogg import _collect_packets, verified_pages
 
-    pages = _scan_pages(bytes(raw))
+    pages = verified_pages([raw])[0]
     if isinstance(pages, str):
         raise BadStream(pages)
-    crcs = ogg_crc_pages([p[7] for p in pages])
-    for k, p in enumerate(pages):
-        if int(crcs[k]) != p[6]:
-            raise BadStream("crc_mismatch")
     packets = _collect_packets(pages)
     if isinstance(packets, str):
         raise BadStream(packets)
@@ -1563,43 +1555,16 @@ def vorbis_decode_profile_batch(
     decoded floats."""
     import hashlib
 
-    from jsonschema_spark.functions.ogg import (
-        _collect_packets,
-        _scan_pages,
-        ogg_crc_pages,
-    )
+    from jsonschema_spark.functions.ogg import _collect_packets, verified_pages
 
-    # CRC the whole batch's pages in ONE matrix-kernel call (the
-    # CLAUDE.md opus-packet lesson: per-clip CRC calls amortize the
-    # per-byte column loop over ~20 pages instead of thousands —
-    # measured 53% of this kernel before batching)
-    scans = []
-    all_pages = []
-    spans = []
-    for raw in payloads.tolist():
-        if raw is None:
-            scans.append(None)
-            spans.append((0, 0))
-            continue
-        got = _scan_pages(bytes(raw))
-        scans.append(got)
-        if isinstance(got, str):
-            spans.append((0, 0))
-        else:
-            spans.append((len(all_pages), len(got)))
-            all_pages.extend(got)
-    crcs = ogg_crc_pages([p[7] for p in all_pages])
+    # CRC the whole batch's pages in ONE kernel call (verified_pages;
+    # per-clip CRC calls measured 53% of this kernel before batching)
     rows = []
-    it = zip(scans, spans, clip_ids.tolist(), srs.tolist(), durs.tolist())
-    for pages, (start, cnt), cid, sr, dur in it:
-        if pages is None:
-            rows.append(_vb_fail("null_payload"))
-            continue
+    it = zip(verified_pages(payloads.tolist()), clip_ids.tolist(),
+             srs.tolist(), durs.tolist())
+    for pages, cid, sr, dur in it:
         if isinstance(pages, str):
             rows.append(_vb_fail(pages))
-            continue
-        if any(int(crcs[start + k]) != pages[k][6] for k in range(cnt)):
-            rows.append(_vb_fail("crc_mismatch"))
             continue
         try:
             packets = _collect_packets(pages)

@@ -23,6 +23,12 @@ ceiling, same stance as h264 payloads):
   track numbers unique; video/audio metadata complete for their types.
 
 One Arrow hop per file; no shuffles.
+
+Errors: null_payload (NULL payload), missing_ebml_header, bad_vint,
+truncated, unknown_size, ebml_depth, unreadable_version, bad_doctype,
+missing_segment, multi_segment, missing_tracks, bad_track_entry,
+duplicate_track_numbers, bad_float, bad_sampling_frequency,
+bad_duration, bad_lacing.
 """
 
 from __future__ import annotations
@@ -31,10 +37,9 @@ import math
 import struct
 from typing import Optional
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from jsonschema_spark.functions.walker import Walker
 
 # element IDs (with their class-prefix bits, as they appear in streams)
 EBML_HEADER = 0x1A45DFA3
@@ -223,38 +228,28 @@ def _parse_simple_block(raw: bytes, c: int, d: int) -> tuple[int, int]:
     return tn, nframes
 
 
-WEBM_PROFILE_FIELDS = (
-    "ok", "error", "doctype", "n_tracks", "video_codec", "width",
-    "height", "audio_codec", "sample_rate", "channels", "n_clusters",
-    "video_blocks", "audio_blocks", "duration_ms", "blocks_consistent",
-)
-
-WEBM_PROFILE_TYPE = T.StructType(
+WEBM = Walker(
+    "video_webm_profile",
     [
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("doctype", T.StringType()),
-        T.StructField("n_tracks", T.IntegerType()),
-        T.StructField("video_codec", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("audio_codec", T.StringType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("n_clusters", T.IntegerType()),
-        T.StructField("video_blocks", T.IntegerType()),
-        T.StructField("audio_blocks", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("blocks_consistent", T.BooleanType()),
-    ]
+        ("doctype", T.StringType()),
+        ("n_tracks", T.IntegerType()),
+        ("video_codec", T.StringType()),
+        ("width", T.IntegerType()),
+        ("height", T.IntegerType()),
+        ("audio_codec", T.StringType()),
+        ("sample_rate", T.IntegerType()),
+        ("channels", T.IntegerType()),
+        ("n_clusters", T.IntegerType()),
+        ("video_blocks", T.IntegerType()),
+        ("audio_blocks", T.IntegerType()),
+        ("duration_ms", T.LongType()),
+        ("blocks_consistent", T.BooleanType()),
+    ],
+    """struct(ok, error, doctype, track/codec metadata, cluster/block
+    counts, duration_ms, blocks_consistent): EBML/WebM structural walk
+    per file, one Arrow hop.""",
 )
-
-
-def _webm_fail(err: str) -> dict:
-    d = {k: None for k in WEBM_PROFILE_FIELDS}
-    d["ok"] = False
-    d["error"] = err
-    return d
+WEBM_PROFILE_FIELDS = WEBM.fields
 
 
 def _parse_track(raw: bytes, a: int, b: int) -> dict:
@@ -288,30 +283,31 @@ def _parse_track(raw: bytes, a: int, b: int) -> dict:
     return t
 
 
+@WEBM.parser
 def parse_webm(raw: bytes) -> dict:
     raw = bytes(raw)
     if raw[:4] != b"\x1aE\xdf\xa3":
-        return _webm_fail("missing_ebml_header")
+        return WEBM.fail("missing_ebml_header")
     try:
         top = list(walk_ebml(raw, 0, len(raw)))
     except ValueError as e:
-        return _webm_fail(str(e))
+        return WEBM.fail(str(e))
     if not top or top[0][0] != EBML_HEADER:
-        return _webm_fail("missing_ebml_header")
+        return WEBM.fail("missing_ebml_header")
     doctype = None
     try:
         for eid, a, b, _u in walk_ebml(raw, top[0][1], top[0][2], 1):
             if eid == DOCTYPE:
                 doctype = raw[a:b].decode("latin1")
             elif eid == EBML_READ_VERSION and _uint(raw, a, b) > 1:
-                return _webm_fail("unreadable_version")
+                return WEBM.fail("unreadable_version")
     except ValueError as e:
-        return _webm_fail(str(e))
+        return WEBM.fail(str(e))
     if doctype not in ("webm", "matroska"):
-        return _webm_fail("bad_doctype")
+        return WEBM.fail("bad_doctype")
     segs = [t for t in top if t[0] == SEGMENT]
     if len(segs) != 1:
-        return _webm_fail("missing_segment" if not segs else "multi_segment")
+        return WEBM.fail("missing_segment" if not segs else "multi_segment")
     s0, s1 = segs[0][1], segs[0][2]
     ts_scale = 1_000_000
     duration = None
@@ -349,12 +345,12 @@ def parse_webm(raw: bytes) -> dict:
                                     block_counts.get(tn, 0) + nf
                                 )
     except ValueError as e:
-        return _webm_fail(str(e))
+        return WEBM.fail(str(e))
     if not tracks:
-        return _webm_fail("missing_tracks")
+        return WEBM.fail("missing_tracks")
     nums = [t["number"] for t in tracks]
     if len(set(nums)) != len(nums):
-        return _webm_fail("duplicate_track_numbers")
+        return WEBM.fail("duplicate_track_numbers")
     for tn in block_counts:
         if tn not in nums:
             stray_block = True
@@ -364,7 +360,7 @@ def parse_webm(raw: bytes) -> dict:
                blocks_consistent=not stray_block)
     if duration is not None:
         if not math.isfinite(duration) or duration < 0:
-            return _webm_fail("bad_duration")
+            return WEBM.fail("bad_duration")
         out["duration_ms"] = int(duration * ts_scale / 1_000_000)
     vb = ab = 0
     for t in tracks:
@@ -383,26 +379,8 @@ def parse_webm(raw: bytes) -> dict:
     return out
 
 
-def webm_profile_batch(p: pd.Series) -> pd.DataFrame:
-    rows = []
-    for raw in p:
-        try:
-            rows.append(parse_webm(bytes(raw)))
-        except Exception as e:
-            rows.append(_webm_fail(f"parse_error:{type(e).__name__}"))
-    return pd.DataFrame(rows, columns=list(WEBM_PROFILE_FIELDS))
-
-
-@F.pandas_udf(WEBM_PROFILE_TYPE)
-def _webm_udf(p: pd.Series) -> pd.DataFrame:
-    return webm_profile_batch(p)
-
-
-def video_webm_profile(payload: Column | str = "bytes") -> Column:
-    """struct(ok, error, doctype, track/codec metadata, cluster/block
-    counts, duration_ms, blocks_consistent): EBML/WebM structural walk
-    per file, one Arrow hop."""
-    return _webm_udf(F.col(payload) if isinstance(payload, str) else payload)
+webm_profile_batch = WEBM.batch
+video_webm_profile = WEBM.column
 
 
 # ---- minimal conforming writer (ledger corpora + tests) ---------------------

@@ -578,26 +578,9 @@ def _measured_packet_rate(df: DataFrame, payload: str, ctype: str) -> float:
     """Current packet/frame-walk failure fraction — the ceiling the
     drafted opus_packets / vorbis_packets / adts / mp3_sideinfo check
     is anchored to."""
-    if ctype == "opus_packets":
-        from jsonschema_spark.functions.ogg import audio_opus_packet_profile
+    from jsonschema_spark.operators.suite import WALKER_CHECKS
 
-        g = audio_opus_packet_profile(payload)
-    elif ctype == "adts":
-        from jsonschema_spark.functions.aac import audio_adts_profile
-
-        g = audio_adts_profile(payload)
-    elif ctype == "mp3_sideinfo":
-        from jsonschema_spark.functions.mp3_sideinfo import (
-            audio_mp3_sideinfo_profile,
-        )
-
-        g = audio_mp3_sideinfo_profile(payload)
-    else:
-        from jsonschema_spark.functions.ogg import (
-            audio_vorbis_packet_profile,
-        )
-
-        g = audio_vorbis_packet_profile(payload)
+    g = WALKER_CHECKS[ctype](payload)
     row = df.select(g["ok"].alias("_ok")).agg(
         F.avg((~F.col("_ok")).cast("double")).alias("r")
     ).first()

@@ -53,7 +53,16 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from jsonschema_spark.functions.aac import audio_adts_profile
 from jsonschema_spark.functions.grid import grid_round
+from jsonschema_spark.functions.h264 import video_h264_profile
+from jsonschema_spark.functions.mp3_sideinfo import audio_mp3_sideinfo_profile
+from jsonschema_spark.functions.mp4 import video_mp4_profile
+from jsonschema_spark.functions.ogg import (
+    audio_opus_packet_profile,
+    audio_vorbis_packet_profile,
+)
+from jsonschema_spark.functions.webm import video_webm_profile
 
 REPORT_SCHEMA = (
     "check_name string, check_type string, metric double, "
@@ -819,51 +828,6 @@ def _check_ctc_feasible(df: DataFrame, spec: dict) -> DataFrame:
     )(agg)
 
 
-def _check_opus_packets(df: DataFrame, spec: dict) -> DataFrame:
-    """Opus packet-framing gate: bound the fraction of clips failing
-    RFC 6716 TOC/framing certification or the RFC 7845 granule
-    cross-check (functions/ogg.audio_opus_packet_profile). Metric =
-    failing fraction; threshold ``max_violation_rate``. One Arrow
-    hop over the payload column."""
-    from jsonschema_spark.functions.ogg import audio_opus_packet_profile
-
-    max_rate = float(spec.get("max_violation_rate", 0.0))
-    g = audio_opus_packet_profile(spec.get("payload_col", "bytes"))
-    agg = df.select(g["ok"].alias("_ok")).agg(
-        F.coalesce(
-            F.sum((~F.col("_ok")).cast("long"))
-            / F.greatest(F.count(F.lit(1)), F.lit(1)),
-            F.lit(0.0),
-        ).alias("rate")
-    )
-    metric = F.col("rate")
-    return _report_row(
-        spec["name"], "opus_packets", metric, max_rate, metric <= max_rate
-    )(agg)
-
-
-def _check_vorbis_packets(df: DataFrame, spec: dict) -> DataFrame:
-    """Vorbis packet-discipline gate (header order/magic, blocksize +
-    framing validity, audio packet-type rule). Metric = failing
-    fraction; threshold ``max_violation_rate``."""
-    from jsonschema_spark.functions.ogg import audio_vorbis_packet_profile
-
-    max_rate = float(spec.get("max_violation_rate", 0.0))
-    g = audio_vorbis_packet_profile(spec.get("payload_col", "bytes"))
-    agg = df.select(g["ok"].alias("_ok")).agg(
-        F.coalesce(
-            F.sum((~F.col("_ok")).cast("long"))
-            / F.greatest(F.count(F.lit(1)), F.lit(1)),
-            F.lit(0.0),
-        ).alias("rate")
-    )
-    metric = F.col("rate")
-    return _report_row(
-        spec["name"], "vorbis_packets", metric, max_rate,
-        metric <= max_rate,
-    )(agg)
-
-
 def _fail_rate_gate(df: DataFrame, spec: dict, ctype: str,
                     ok_col) -> DataFrame:
     """Shared shape for the walker-backed gates: metric = fraction of
@@ -903,63 +867,49 @@ def _check_vorbis_decode(df: DataFrame, spec: dict) -> DataFrame:
     return _fail_rate_gate(df, spec, "vorbis_decode", ok)
 
 
-def _check_adts(df: DataFrame, spec: dict) -> DataFrame:
-    """AAC ADTS frame-walk gate (round 4): bound the fraction of clips
-    failing sync/layer/CRC/length-chain/parameter-constancy
-    certification."""
-    from jsonschema_spark.functions.aac import audio_adts_profile
+#: walker-backed check type -> the walker's Column function (one Arrow
+#: hop over the payload column); the suite gates and suggest's measured
+#: drafts both read this table
+WALKER_CHECKS = {
+    "opus_packets": audio_opus_packet_profile,
+    "vorbis_packets": audio_vorbis_packet_profile,
+    "adts": audio_adts_profile,
+    "mp3_sideinfo": audio_mp3_sideinfo_profile,
+    "h264": video_h264_profile,
+    "mp4_structure": video_mp4_profile,
+    "webm_structure": video_webm_profile,
+}
 
-    g = audio_adts_profile(spec.get("payload_col", "bytes"))
-    return _fail_rate_gate(df, spec, "adts", g["ok"])
-
-
-def _check_mp3_sideinfo(df: DataFrame, spec: dict) -> DataFrame:
-    """MP3 Layer III side-info gate (round 5): bound the fraction of
-    streams failing the per-granule side-information parse or the
-    bit-reservoir back-pointer discipline (reservoir_underflow is the
-    unflushed-stream-cut signature — exactly what a corpus of
-    byte-range-sliced MP3s trips)."""
-    from jsonschema_spark.functions.mp3_sideinfo import (
-        audio_mp3_sideinfo_profile,
-    )
-
-    g = audio_mp3_sideinfo_profile(spec.get("payload_col", "bytes"))
-    return _fail_rate_gate(df, spec, "mp3_sideinfo", g["ok"])
+#: container gates that, when ``require_consistent`` (default true), also
+#: require the walker's table/track-accounting flag
+_CONSISTENCY_FLAG = {
+    "mp4_structure": "tables_consistent",
+    "webm_structure": "blocks_consistent",
+}
 
 
-def _check_h264(df: DataFrame, spec: dict) -> DataFrame:
-    """H.264 Annex B gate (round 4): bound the fraction of streams
-    failing NAL discipline / SPS-PPS parse / frame-count walk."""
-    from jsonschema_spark.functions.h264 import video_h264_profile
-
-    g = video_h264_profile(spec.get("payload_col", "bytes"))
-    return _fail_rate_gate(df, spec, "h264", g["ok"])
-
-
-def _check_mp4_structure(df: DataFrame, spec: dict) -> DataFrame:
-    """ISO-BMFF gate (round 4): bound the fraction of files failing box
-    discipline or (when ``require_consistent``) the sample-table
-    consistency gates."""
-    from jsonschema_spark.functions.mp4 import video_mp4_profile
-
-    g = video_mp4_profile(spec.get("payload_col", "bytes"))
+def _check_walker(df: DataFrame, spec: dict) -> DataFrame:
+    """Walker-backed gate (``WALKER_CHECKS``): bound the fraction of rows
+    whose structural walk fails —
+    - opus_packets: RFC 6716 TOC/framing or the RFC 7845 granule
+      cross-check;
+    - vorbis_packets: header order/magic, blocksize + framing validity,
+      audio packet-type rule;
+    - adts: sync/layer/length-chain/parameter-constancy;
+    - mp3_sideinfo: Layer III side-info parse or the bit-reservoir
+      back-pointer discipline (reservoir_underflow is the signature of a
+      byte-range-sliced stream);
+    - h264: NAL discipline / SPS-PPS parse / frame-count walk;
+    - mp4_structure / webm_structure: box / element discipline and, when
+      ``require_consistent``, the sample-table / SimpleBlock
+      track-accounting gate."""
+    ctype = spec["type"]
+    g = WALKER_CHECKS[ctype](spec.get("payload_col", "bytes"))
     ok = g["ok"]
-    if spec.get("require_consistent", True):
-        ok = ok & F.coalesce(g["tables_consistent"], F.lit(False))
-    return _fail_rate_gate(df, spec, "mp4_structure", ok)
-
-
-def _check_webm_structure(df: DataFrame, spec: dict) -> DataFrame:
-    """WebM/EBML gate (round 4): bound the fraction of files failing
-    element discipline or (when ``require_consistent``) the SimpleBlock
-    track-accounting gate."""
-    from jsonschema_spark.functions.webm import video_webm_profile
-
-    g = video_webm_profile(spec.get("payload_col", "bytes"))
-    ok = g["ok"]
-    if spec.get("require_consistent", True):
-        ok = ok & F.coalesce(g["blocks_consistent"], F.lit(False))
-    return _fail_rate_gate(df, spec, "webm_structure", ok)
+    flag = _CONSISTENCY_FLAG.get(ctype)
+    if flag and spec.get("require_consistent", True):
+        ok = ok & F.coalesce(g[flag], F.lit(False))
+    return _fail_rate_gate(df, spec, ctype, ok)
 
 
 def _check_bloom_screen(
@@ -1128,23 +1078,16 @@ _CHECKS = {
     ),
     "audio_codec": lambda df, spec, tables: _check_audio_codec(df, spec),
     "ctc_feasible": lambda df, spec, tables: _check_ctc_feasible(df, spec),
-    "opus_packets": lambda df, spec, tables: _check_opus_packets(df, spec),
     "bloom_screen": _check_bloom_screen,
-    "vorbis_packets": lambda df, spec, tables: _check_vorbis_packets(
-        df, spec
-    ),
     "audio_snr": lambda df, spec, tables: _check_audio_snr(df, spec),
     "audio_artifacts": lambda df, spec, tables: _check_audio_artifacts(
         df, spec
     ),
     "vorbis_decode": lambda df, spec, tables: _check_vorbis_decode(df, spec),
-    "adts": lambda df, spec, tables: _check_adts(df, spec),
-    "mp3_sideinfo": lambda df, spec, tables: _check_mp3_sideinfo(df, spec),
-    "h264": lambda df, spec, tables: _check_h264(df, spec),
-    "mp4_structure": lambda df, spec, tables: _check_mp4_structure(df, spec),
-    "webm_structure": lambda df, spec, tables: _check_webm_structure(
-        df, spec
-    ),
+    **{
+        ctype: lambda df, spec, tables: _check_walker(df, spec)
+        for ctype in WALKER_CHECKS
+    },
 }
 
 

@@ -22,7 +22,7 @@ Family layout (i = row index, three members per family):
   pairs, not just cross-family ones). The truth is whatever ``_dhash``
   says: pairs are DERIVED from the ledger, never assumed.
 
-Oracle-cache protocol: materialized once under /tmp/jss_oracle_cache
+Oracle-cache protocol: materialized once under the versioned oracle cache
 (atomic rename, bit-identical across sessions); bump ``_IMAGES_VER``
 when generator arithmetic changes.
 """
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from jsonschema_spark.functions.multimodal import dhash_from_pixels, encode_png
-from jsonschema_spark.sources.clips import _MATERIALIZE_ROOT, publish_once
+from jsonschema_spark.sources.clips import oracle_cache_path, publish_once
 
 _IMAGES_VER = "v2"
 IMG_W, IMG_H = 48, 32
@@ -97,7 +97,7 @@ def synth_images(
 
 
 def images_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"images_{_IMAGES_VER}_{n}")
+    return oracle_cache_path(f"images_{_IMAGES_VER}_{n}")
 
 
 def materialized_images(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
@@ -174,7 +174,7 @@ def synth_jpeg_images(
 
 
 def jpeg_images_path(n: int) -> str:
-    return os.path.join(_MATERIALIZE_ROOT, f"images_jpeg_{_JPEG_VER}_{n}")
+    return oracle_cache_path(f"images_jpeg_{_JPEG_VER}_{n}")
 
 
 def materialized_jpeg_images(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
@@ -275,9 +275,7 @@ def synth_progressive_jpeg_images(
 
 
 def progressive_jpeg_images_path(n: int) -> str:
-    return os.path.join(
-        _MATERIALIZE_ROOT, f"images_pjpeg_{_PJPEG_VER}_{n}"
-    )
+    return oracle_cache_path(f"images_pjpeg_{_PJPEG_VER}_{n}")
 
 
 def materialized_progressive_jpeg_images(

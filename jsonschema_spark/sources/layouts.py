@@ -15,7 +15,7 @@ queries therefore emit only the one-row ``layout_report`` aggregate,
 never per-file rows; the DuckDB oracle groups by its own ``filename``
 column and lands on the same totals.
 
-Oracle-cache protocol: materialized once under /tmp/jss_oracle_cache
+Oracle-cache protocol: materialized once under the versioned oracle cache
 (atomic rename); bump ``_LAYOUT_VER`` when generator arithmetic changes.
 """
 
@@ -28,7 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jsonschema_spark.sources.clips import _MATERIALIZE_ROOT
+from jsonschema_spark.sources.clips import oracle_cache_path
 
 _LAYOUT_VER = "v1"
 LAYOUT_N = 20_000
@@ -36,9 +36,8 @@ LAYOUT_FILES = 8
 
 
 def layout_path(mode: str) -> str:
-    return os.path.join(
-        _MATERIALIZE_ROOT,
-        f"layout_{_LAYOUT_VER}_{mode}_{LAYOUT_N}_{LAYOUT_FILES}",
+    return oracle_cache_path(
+        f"layout_{_LAYOUT_VER}_{mode}_{LAYOUT_N}_{LAYOUT_FILES}"
     )
 
 
@@ -63,9 +62,8 @@ LAYOUT2D_FILES = 16          # 16 files -> 4x4 z-tiles of 32x32 each
 
 
 def layout2d_path(mode: str) -> str:
-    return os.path.join(
-        _MATERIALIZE_ROOT,
-        f"layout2d_{_LAYOUT2D_VER}_{mode}_{LAYOUT2D_SIDE}_{LAYOUT2D_FILES}",
+    return oracle_cache_path(
+        f"layout2d_{_LAYOUT2D_VER}_{mode}_{LAYOUT2D_SIDE}_{LAYOUT2D_FILES}"
     )
 
 

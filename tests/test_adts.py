@@ -90,28 +90,10 @@ def test_ledger_corpus_matches_walker(spark):
 def test_walker_never_crashes_on_random_tears():
     import random
 
-    rng = random.Random(13)
-    raw = encode_adts_stream(10, crc=True, seed=9)
-    for _ in range(150):
-        if rng.random() < 0.5:
-            cand = raw[: rng.randrange(len(raw) + 1)]
-        else:
-            b = bytearray(raw)
-            for _k in range(rng.randint(1, 4)):
-                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
-            cand = bytes(b)
-        p = parse_adts_stream(cand)
-        assert isinstance(p["ok"], bool)
-
-
-def test_null_payload_is_failing_row():
-    import pandas as pd
-
     from jsonschema_spark.functions.aac import adts_profile_batch
+    from tests.test_walkers import assert_walker_contract, seeded_tears
 
-    rows = adts_profile_batch(
-        pd.Series([None, encode_adts_stream(3, seed=1)], dtype=object)
+    raw = encode_adts_stream(10, crc=True, seed=9)
+    assert_walker_contract(
+        adts_profile_batch, seeded_tears(raw, random.Random(13), 150)
     )
-    assert bool(rows.iloc[0]["ok"]) is False
-    assert rows.iloc[0]["error"] == "null_payload"
-    assert bool(rows.iloc[1]["ok"]) is True

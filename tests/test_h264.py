@@ -105,32 +105,11 @@ def test_ledger_corpus_independent_pin():
 def test_walker_never_crashes_on_random_tears():
     import random
 
-    rng = random.Random(4)
+    from jsonschema_spark.functions.h264 import h264_profile_batch
+    from tests.test_walkers import assert_walker_contract, seeded_tears
+
     raw = encode_h264_stream(6, slices_per_frame=2, seed=5)
-    for _ in range(150):
-        if rng.random() < 0.5:
-            cand = raw[: rng.randrange(len(raw) + 1)]
-        else:
-            b = bytearray(raw)
-            for _k in range(rng.randint(1, 4)):
-                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
-            cand = bytes(b)
-        p = parse_h264_stream(cand)
-        assert isinstance(p["ok"], bool)
+    tears = list(seeded_tears(raw, random.Random(4), 150))
+    assert_walker_contract(h264_profile_batch, tears)
+    for cand in tears:
         split_annexb_nals(cand)
-
-
-def test_null_payload_is_failing_row():
-    import pandas as pd
-
-    from jsonschema_spark.functions.h264 import (
-        encode_h264_stream,
-        h264_profile_batch,
-    )
-
-    rows = h264_profile_batch(
-        pd.Series([None, encode_h264_stream(2, seed=1)], dtype=object)
-    )
-    assert bool(rows.iloc[0]["ok"]) is False
-    assert rows.iloc[0]["error"] == "null_payload"
-    assert bool(rows.iloc[1]["ok"]) is True

@@ -269,3 +269,21 @@ def test_bucketed_groupby_elides_exchange(spark, tmp_path):
         assert agg.count() == 97
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_agg")
+
+
+def test_corpus_paths_live_under_the_versioned_cache():
+    """Layout and image corpora resolve through oracle_cache_path, so a
+    _MATERIALIZE_VERSION bump re-materializes them with every other
+    cached table."""
+    from jsonschema_spark.sources.clips import oracle_cache_path
+    from jsonschema_spark.sources.images import (
+        images_path,
+        jpeg_images_path,
+        progressive_jpeg_images_path,
+    )
+    from jsonschema_spark.sources.layouts import layout2d_path, layout_path
+
+    root = oracle_cache_path("")
+    for path in (layout_path("geo"), layout2d_path("zorder"), images_path(8),
+                 jpeg_images_path(8), progressive_jpeg_images_path(8)):
+        assert path.startswith(root), path

@@ -135,36 +135,18 @@ def test_non_layer3_and_tears():
     import random
 
     from jsonschema_spark.functions.mp3 import encode_mp3_stream
+    from jsonschema_spark.functions.mp3_sideinfo import (
+        sideinfo_profile_batch,
+    )
+    from tests.test_walkers import assert_walker_contract, seeded_tears
 
     l2 = encode_mp3_stream(3, 3, 2, 44100, "stereo", (128,), seed=2)
     assert parse_mp3_sideinfo(l2)["error"] == "not_layer3@0"
     raw, _ = encode_sideinfo_stream(n_frames=8, seed=7)
     assert parse_mp3_sideinfo(raw[: len(raw) - 5])["error"] == "truncated@7"
-    rng = random.Random(31)
-    for _ in range(150):
-        if rng.random() < 0.5:
-            cand = raw[: rng.randrange(len(raw) + 1)]
-        else:
-            b = bytearray(raw)
-            for _k in range(rng.randint(1, 4)):
-                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
-            cand = bytes(b)
-        p = parse_mp3_sideinfo(cand)
-        assert isinstance(p["ok"], bool)
-
-
-def test_null_payload_is_failing_row():
-    import pandas as pd
-
-    from jsonschema_spark.functions.mp3_sideinfo import (
-        sideinfo_profile_batch,
+    assert_walker_contract(
+        sideinfo_profile_batch, seeded_tears(raw, random.Random(31), 150)
     )
-
-    raw, _ = encode_sideinfo_stream(n_frames=3, seed=1)
-    rows = sideinfo_profile_batch(pd.Series([None, raw], dtype=object))
-    assert bool(rows.iloc[0]["ok"]) is False
-    assert rows.iloc[0]["error"] == "null_payload"
-    assert bool(rows.iloc[1]["ok"]) is True
 
 
 def test_ledger_corpus_matches_walker(spark):

@@ -86,18 +86,13 @@ def test_ledger_corpus_independent_pin():
 def test_walker_never_crashes_on_random_tears():
     import random
 
-    rng = random.Random(11)
+    from jsonschema_spark.functions.mp4 import mp4_profile_batch
+    from tests.test_walkers import assert_walker_contract, seeded_tears
+
     raw = encode_mp4_h264(6, audio_samples=1000, seed=5)
-    for _ in range(150):
-        if rng.random() < 0.5:
-            cand = raw[: rng.randrange(len(raw) + 1)]
-        else:
-            b = bytearray(raw)
-            for _k in range(rng.randint(1, 4)):
-                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
-            cand = bytes(b)
-        p = parse_mp4(cand)
-        assert isinstance(p["ok"], bool)
+    assert_walker_contract(
+        mp4_profile_batch, seeded_tears(raw, random.Random(11), 150)
+    )
 
 
 def test_fragmented_round_trip_and_failures():

@@ -142,6 +142,47 @@ def test_batch_path_equals_single_clip_path():
             ), (i, k)
 
 
+def test_one_crc_kernel_call_per_batch(monkeypatch):
+    """Every batched Ogg consumer verifies the pages of ALL its clips with
+    one ogg_crc_pages call (per-clip calls measured ~20x slower)."""
+    from jsonschema_spark.functions import ogg
+    from jsonschema_spark.functions.containers import container_profile_batch
+    from jsonschema_spark.functions.vorbis import (
+        encode_vorbis_clip,
+        vorbis_decode_profile_batch,
+        vorbis_reference,
+    )
+
+    vorbis = [
+        encode_vorbis_clip(vorbis_reference(f"c{k}", 800, 1), 16000)[0]
+        for k in range(3)
+    ]
+    clips = pd.Series(
+        [encode_ogg_opus(6, seed=1), encode_ogg_vorbis(5, seed=2),
+         encode_ogg_opus(4, seed=3)[:-3], *vorbis, None], dtype=object
+    )
+    calls = []
+    kernel = ogg.ogg_crc_pages
+    monkeypatch.setattr(
+        ogg, "ogg_crc_pages", lambda pages: calls.append(1) or kernel(pages)
+    )
+    n = len(clips)
+    for run in (
+        ogg.ogg_profile_batch,
+        ogg.opus_packet_profile_batch,
+        ogg.vorbis_packet_profile_batch,
+        container_profile_batch,
+        lambda p: vorbis_decode_profile_batch(
+            p, pd.Series([f"c{k}" for k in range(n)]),
+            pd.Series([16000] * n), pd.Series([50] * n),
+        ),
+    ):
+        calls.clear()
+        out = run(clips)
+        assert len(out) == n and len(calls) == 1
+        assert out["error"].iloc[-1] == "null_payload"
+
+
 def test_ogg_ledger_corpus_verifies(spark):
     from jsonschema_spark.sources.clips import (
         OGG_CLASS_MOD,

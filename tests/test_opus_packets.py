@@ -343,26 +343,20 @@ def test_stream_walkers_never_crash_on_random_tears():
 
     from jsonschema_spark.functions.ogg import (
         encode_ogg_vorbis_framed,
-        parse_vorbis_packets,
+        opus_packet_profile_batch,
         vorbis_audio_packet,
+        vorbis_packet_profile_batch,
     )
+    from tests.test_walkers import assert_walker_contract, seeded_tears
 
     rng = random.Random(13)
     pk_o = [build_opus_packet(9, 0, [40 + j], seed=j) for j in range(6)]
     opus = encode_ogg_opus_framed(pk_o, granule_samples=[960] * 6)
     pk_v = [vorbis_audio_packet(100 + j, j) for j in range(6)]
     vorb = encode_ogg_vorbis_framed(pk_v)
-    for raw, fn in ((opus, parse_opus_packets),
-                    (vorb, parse_vorbis_packets)):
-        for _ in range(80):
-            if rng.random() < 0.5:
-                cand = raw[: rng.randrange(len(raw) + 1)]
-            else:
-                b = bytearray(raw)
-                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
-                cand = bytes(b)
-            out = fn(cand)
-            assert isinstance(out["ok"], bool)
+    for raw, batch in ((opus, opus_packet_profile_batch),
+                       (vorb, vorbis_packet_profile_batch)):
+        assert_walker_contract(batch, seeded_tears(raw, rng, 80, 1))
 
 
 def test_ogg_crc_kernel_identity():

@@ -71,18 +71,13 @@ def test_ledger_corpus_independent_pin():
 def test_walker_never_crashes_on_random_tears():
     import random
 
-    rng = random.Random(17)
+    from jsonschema_spark.functions.webm import webm_profile_batch
+    from tests.test_walkers import assert_walker_contract, seeded_tears
+
     raw = encode_webm(6, 10, seed=4)
-    for _ in range(150):
-        if rng.random() < 0.5:
-            cand = raw[: rng.randrange(len(raw) + 1)]
-        else:
-            b = bytearray(raw)
-            for _k in range(rng.randint(1, 4)):
-                b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
-            cand = bytes(b)
-        p = parse_webm(cand)
-        assert isinstance(p["ok"], bool)
+    assert_walker_contract(
+        webm_profile_batch, seeded_tears(raw, random.Random(17), 150)
+    )
 
 
 def test_container_sniff_routes_webm():
