@@ -1054,10 +1054,10 @@ def _q_validate_props_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JSONL_N = 1300
 
 
-def _q_validate_jsonl_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_validate_jsonl_docs(spark: SparkSession, sf_dir: str, n: int = _JSONL_N) -> DataFrame:
     from jsonschema_spark.sources import jsonl as J
 
-    path = J.materialized_jsonl(_JSONL_N)
+    path = J.materialized_jsonl(n)
     df = J.read_jsonl(spark, path)
     frame = df.select(J.doc_id_col().alias("doc_id"), "doc", "raw")
     viol = (
@@ -1956,7 +1956,7 @@ _NEARDUP_N = 400
 _QUALITY_N = 600
 
 
-def _q_clips_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_audio_quality(spark: SparkSession, sf_dir: str, n: int = _QUALITY_N) -> DataFrame:
     """Audio quality gates (loudness / silence / clipping) over the planted
     quality-defect corpus: decode -> one Arrow hop computing the whole
     signal struct -> JVM-side gate booleans. The planted classes
@@ -1966,7 +1966,7 @@ def _q_clips_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.audio import audio_quality, quality_gates
     from jsonschema_spark.sources.clips import materialized_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, _QUALITY_N)
+    clips, _ = materialized_quality_clips(spark, n)
     q = clips.select("clip_id", audio_quality("bytes", "sr_hz").alias("q"))
     g = quality_gates(F.col("q"))
     return q.select(
@@ -1981,7 +1981,7 @@ def _q_clips_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BW_N = 600
 
 
-def _q_clips_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_bandwidth(spark: SparkSession, sf_dir: str, n: int = _BW_N) -> DataFrame:
     """Bandwidth/upsample consistency over the planted pure-tone corpus:
     decode -> one Arrow hop counting zero crossings (an exact integer
     function of the bytes) -> JVM-side dominant-frequency bin + gates.
@@ -1992,7 +1992,7 @@ def _q_clips_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.audio import audio_bandwidth, bandwidth_gates
     from jsonschema_spark.sources.clips import materialized_bandwidth_clips
 
-    clips, _ = materialized_bandwidth_clips(spark, _BW_N)
+    clips, _ = materialized_bandwidth_clips(spark, n)
     b = clips.select(
         "clip_id", "sr_hz", audio_bandwidth("bytes", "sr_hz").alias("bw")
     )
@@ -2009,7 +2009,7 @@ def _q_clips_bandwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEGMENT_MS = 250
 
 
-def _q_clips_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_segments(spark: SparkSession, sf_dir: str, n: int = _QUALITY_N) -> DataFrame:
     """PCM segmentation as pure Column algebra (sequence/explode/binary
     substring — ZERO Python, zero shuffle): each clip becomes ceil(samples/
     segment) windows; the oracle re-slices the same payloads as hex strings
@@ -2017,7 +2017,7 @@ def _q_clips_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.operators.segments import segment_clips
     from jsonschema_spark.sources.clips import materialized_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, _QUALITY_N)
+    clips, _ = materialized_quality_clips(spark, n)
     segs = segment_clips(clips.select(*_CLIPS_COLS), _SEGMENT_MS)
     return segs.select(
         "clip_id",
@@ -2167,7 +2167,7 @@ def _q_clips_wav_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_clips_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_trim_silence(spark: SparkSession, sf_dir: str, n: int = _PAD_N) -> DataFrame:
     """Energy-VAD silence trimming: the span decision is ONE Arrow hop
     returning 24 bytes/row (integer frame-peak compare, no float in the
     decision path); the payload slice is JVM-side binary substring. The
@@ -2176,7 +2176,7 @@ def _q_clips_trim_silence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.operators.trim import trim_silence
     from jsonschema_spark.sources.clips import materialized_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = materialized_padded_clips(spark, n)
     t = trim_silence(clips.select(*_CLIPS_COLS))
     return t.select(
         "clip_id",
@@ -2233,7 +2233,10 @@ def _q_clips_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_clips_transcode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
+_WAVD_N = 550
+
+
+def _q_clips_transcode_flac(spark: SparkSession, sf_dir: str, n: int = _WAVD_N) -> DataFrame:
     """Archival normalization proven LOSSLESS end-to-end: the WAV-depth
     corpus (8/16/24-bit, mono/stereo, torn uploads included) is
     transcoded to REAL FLAC in one Arrow hop, then RE-DECODED in a
@@ -2245,7 +2248,7 @@ def _q_clips_transcode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.operators.trim import transcode_to_flac
     from jsonschema_spark.sources.clips import materialized_wav_depth_clips
 
-    clips, _ = materialized_wav_depth_clips(spark, _WAVD_N)
+    clips, _ = materialized_wav_depth_clips(spark, n)
     tc = transcode_to_flac(
         clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
     )
@@ -2307,7 +2310,7 @@ def _q_clips_flac_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEGD_N = 300
 
 
-def _q_clips_segment_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_segment_decoded(spark: SparkSession, sf_dir: str, n: int = _SEGD_N) -> DataFrame:
     """Decode-then-segment across the WHOLE codec surface: a mixed corpus
     (real FLAC, WAV16, IMA ADPCM, G.711 u-law, raw PCM + a torn-FLAC
     class) is decoded ONCE per clip inside one Arrow hop and exploded
@@ -2323,7 +2326,7 @@ def _q_clips_segment_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_segment_clips,
     )
 
-    clips, _ = materialized_segment_clips(spark, _SEGD_N)
+    clips, _ = materialized_segment_clips(spark, n)
     seg = segment_decoded(clips, segment_ms=SEGD_SEG_MS)
     return seg.select(
         "clip_id",
@@ -2407,7 +2410,7 @@ SEGMENTS_JSON_SCHEMA = {
 }
 
 
-def _q_validate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_validate_segments(spark: SparkSession, sf_dir: str, n: int = _SEGD_N) -> DataFrame:
     """Constraint evaluation over the SEGMENT fan-out: the same compiled
     keyword DAG the clips north star uses, applied one level below —
     every torn clip's loud NULL row must fail required(segment_id /
@@ -2421,7 +2424,7 @@ def _q_validate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_segment_clips,
     )
 
-    clips, _ = materialized_segment_clips(spark, _SEGD_N)
+    clips, _ = materialized_segment_clips(spark, n)
     seg = segment_auto(clips, segment_ms=SEGD_SEG_MS).drop("seg_bytes")
     return validate(seg, SEGMENTS_JSON_SCHEMA).violations(
         ["clip_id", "seg_idx"]
@@ -2614,7 +2617,7 @@ _GAIN_TARGET_RMS = 0.1
 _GAIN_MAX = 4.0
 
 
-def _q_clips_gain_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_gain_normalize(spark: SparkSession, sf_dir: str, n: int = _QUALITY_N) -> DataFrame:
     """Loudness normalization: gain = min(max, target / rms) in exactly-
     rounded double arithmetic, samples rescaled with explicit half-up
     rounding (floor(v*g + 0.5)) — the oracle recomputes gain AND every
@@ -2622,7 +2625,7 @@ def _q_clips_gain_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.operators.trim import normalize_loudness
     from jsonschema_spark.sources.clips import materialized_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, _QUALITY_N)
+    clips, _ = materialized_quality_clips(spark, n)
     r = normalize_loudness(
         clips.select(*_CLIPS_COLS), _GAIN_TARGET_RMS, _GAIN_MAX
     )
@@ -2639,7 +2642,7 @@ _MASK_MS = 100
 _MIX_GAIN = 0.25
 
 
-def _q_clips_speed_perturb(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_speed_perturb(spark: SparkSession, sf_dir: str, n: int = _PAD_N) -> DataFrame:
     """Speed perturbation (Kaldi-style 1.1x): output sample j is input
     sample (j*11)//10 — pure integer index arithmetic in one Arrow hop
     (operators/augment.speed_perturb). The oracle reassembles the
@@ -2647,7 +2650,7 @@ def _q_clips_speed_perturb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.operators.augment import speed_perturb
     from jsonschema_spark.sources.clips import materialized_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = materialized_padded_clips(spark, n)
     r = speed_perturb(clips.select(*_CLIPS_COLS), _SPEED_NUM, _SPEED_DEN)
     return r.select(
         "clip_id",
@@ -2657,7 +2660,7 @@ def _q_clips_speed_perturb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_clips_time_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_time_mask(spark: SparkSession, sf_dir: str, n: int = _PAD_N) -> DataFrame:
     """Waveform time masking (the SpecAugment primitive): two md5_60-
     derived spans zeroed per clip with ZERO Python — mask starts are
     codegen'd hash arithmetic and the rewrite is JVM binary surgery
@@ -2666,7 +2669,7 @@ def _q_clips_time_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.operators.augment import time_mask
     from jsonschema_spark.sources.clips import materialized_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = materialized_padded_clips(spark, n)
     r = time_mask(clips.select(*_CLIPS_COLS), n_masks=2, mask_ms=_MASK_MS)
     return r.select(
         "clip_id",
@@ -3247,7 +3250,7 @@ def _q_images_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return imgs.select("image_id", "bytes").mapInPandas(kernel, schema)
 
 
-def _q_images_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_images_jpeg_progressive(spark: SparkSession, sf_dir: str, n: int = _JPEG_N) -> DataFrame:
     """REAL progressive-JPEG decode (SOF2, T.81 Annex G — spectral
     selection, successive approximation, EOB runs, refinement
     correction bits; functions/jpeg.decode_jpeg_progressive). The
@@ -3265,7 +3268,7 @@ def _q_images_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_progressive_jpeg_images,
     )
 
-    imgs, _ = materialized_progressive_jpeg_images(spark, _JPEG_N)
+    imgs, _ = materialized_progressive_jpeg_images(spark, n)
 
     def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         for b in batches:
@@ -3395,7 +3398,7 @@ def _q_videos_mjpeg_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TAGS_N = 320
 
 
-def _q_clips_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_tags(spark: SparkSession, sf_dir: str, n: int = _TAGS_N) -> DataFrame:
     """Audio metadata extraction (round 4): ID3v2.3/2.4 text frames
     (latin-1 / UTF-16-BOM / UTF-8 encodings, syncsafe v2.4 frame sizes,
     padding tolerance), Vorbis comments and OpusTags (the shared
@@ -3406,7 +3409,7 @@ def _q_clips_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.tags import audio_tags_profile
     from jsonschema_spark.sources.clips import materialized_tagged_clips
 
-    clips, _ = materialized_tagged_clips(spark, _TAGS_N)
+    clips, _ = materialized_tagged_clips(spark, n)
     prof = clips.select("clip_id", audio_tags_profile("bytes").alias("p"))
     return prof.select(
         "clip_id",
@@ -3457,7 +3460,7 @@ def _q_videos_mp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WEBM_N = 300
 
 
-def _q_videos_webm_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_videos_webm_structure(spark: SparkSession, sf_dir: str, n: int = _WEBM_N) -> DataFrame:
     """WebM / Matroska EBML structural walk (round 4 — the second
     dominant web video container beside ISO-BMFF): RFC 8794 vints
     (element IDs, data sizes, the unknown-size marker legal only on
@@ -3472,7 +3475,7 @@ def _q_videos_webm_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.webm import video_webm_profile
     from jsonschema_spark.sources.videos import materialized_webm_videos
 
-    vids, _ = materialized_webm_videos(spark, _WEBM_N)
+    vids, _ = materialized_webm_videos(spark, n)
     prof = vids.select("video_id", video_webm_profile("bytes").alias("p"))
     return prof.select(
         "video_id",
@@ -3497,7 +3500,7 @@ def _q_videos_webm_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ADTS_N = 360
 
 
-def _q_clips_aac_adts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_aac_adts(spark: SparkSession, sf_dir: str, n: int = _ADTS_N) -> DataFrame:
     """AAC ADTS frame-walk certification (round 4 — the web's dominant
     lossy-audio bitstream after MP3): per-frame syncword/layer/
     sampling-index/channel validation against ISO 14496-3, CRC
@@ -3517,7 +3520,7 @@ def _q_clips_aac_adts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.aac import audio_adts_profile
     from jsonschema_spark.sources.clips import materialized_adts_clips
 
-    clips, _ = materialized_adts_clips(spark, _ADTS_N)
+    clips, _ = materialized_adts_clips(spark, n)
     prof = clips.select("clip_id", audio_adts_profile("bytes").alias("p"))
     return prof.select(
         "clip_id",
@@ -3536,7 +3539,7 @@ def _q_clips_aac_adts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MP3SI_N = 330
 
 
-def _q_clips_mp3_sideinfo(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_mp3_sideinfo(spark: SparkSession, sf_dir: str, n: int = _MP3SI_N) -> DataFrame:
     """MP3 Layer III SIDE-INFO + bit-reservoir certification (round 5 —
     VERDICT r4 item 4's sanctioned intermediate tier toward full Layer
     III decode): per-granule side-information parse (ISO 11172-3
@@ -3561,7 +3564,7 @@ def _q_clips_mp3_sideinfo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from jsonschema_spark.sources.clips import materialized_mp3si_clips
 
-    clips, _ = materialized_mp3si_clips(spark, _MP3SI_N)
+    clips, _ = materialized_mp3si_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_mp3_sideinfo_profile("bytes").alias("p")
     )
@@ -3581,7 +3584,7 @@ def _q_clips_mp3_sideinfo(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MP4_N = 300
 
 
-def _q_videos_mp4_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_videos_mp4_structure(spark: SparkSession, sf_dir: str, n: int = _MP4_N) -> DataFrame:
     """ISO-BMFF / MP4 structural walk (round 4 — the container tier
     beside the h264 Annex B walk): box discipline (size tiling, 64-bit
     largesize, ftyp-first, exactly one moov, mdat presence), moov parse
@@ -3595,7 +3598,7 @@ def _q_videos_mp4_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.mp4 import video_mp4_profile
     from jsonschema_spark.sources.videos import materialized_mp4_videos
 
-    vids, _ = materialized_mp4_videos(spark, _MP4_N)
+    vids, _ = materialized_mp4_videos(spark, n)
     prof = vids.select("video_id", video_mp4_profile("bytes").alias("p"))
     return prof.select(
         "video_id",
@@ -3620,7 +3623,7 @@ def _q_videos_mp4_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VORBIS_DEC_N = 320
 
 
-def _q_clips_vorbis_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_vorbis_decode(spark: SparkSession, sf_dir: str, n: int = _VORBIS_DEC_N) -> DataFrame:
     """REAL Vorbis I SAMPLE decode (VERDICT r3 item 5 — the SNR
     invariant on a genuinely lossy web codec, one tier past the r3
     packet certification): payloads are real Ogg-Vorbis streams
@@ -3641,7 +3644,7 @@ def _q_clips_vorbis_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_vorbis_decode_clips,
     )
 
-    clips, _ = materialized_vorbis_decode_clips(spark, _VORBIS_DEC_N)
+    clips, _ = materialized_vorbis_decode_clips(spark, n)
     prof = clips.select(
         "clip_id",
         audio_vorbis_decode_profile("bytes", "clip_id", "sr_hz",
@@ -3667,7 +3670,7 @@ def _q_clips_vorbis_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _H264_N = 360
 
 
-def _q_videos_h264_nals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_videos_h264_nals(spark: SparkSession, sf_dir: str, n: int = _H264_N) -> DataFrame:
     """H.264 Annex B STRUCTURAL walk (VERDICT r3 item 7 — the MP3/Ogg
     treatment for the web's dominant video codec): start-code scan, NAL
     header discipline (forbidden bit, reserved types), emulation-
@@ -3684,7 +3687,7 @@ def _q_videos_h264_nals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.h264 import video_h264_profile
     from jsonschema_spark.sources.videos import materialized_h264_videos
 
-    vids, _ = materialized_h264_videos(spark, _H264_N)
+    vids, _ = materialized_h264_videos(spark, n)
     prof = vids.select("video_id", video_h264_profile("bytes").alias("p"))
     return prof.select(
         "video_id",
@@ -3970,7 +3973,7 @@ def _q_clips_flac_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LOUD_N = 300
 
 
-def _q_clips_loudness_r128(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_loudness_r128(spark: SparkSession, sf_dir: str, n: int = _LOUD_N) -> DataFrame:
     """BS.1770-4 / EBU R128 loudness over a SOURCE-certified ledger
     corpus: integrated LUFS (two-stage -70 LUFS absolute + relative
     -10 LU gate), momentary-max LUFS, 4x-oversampled true peak (dBTP)
@@ -3984,7 +3987,7 @@ def _q_clips_loudness_r128(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.audio import audio_loudness
     from jsonschema_spark.sources.clips import materialized_loudness_clips
 
-    clips, _ = materialized_loudness_clips(spark, _LOUD_N)
+    clips, _ = materialized_loudness_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_loudness("bytes", "sr_hz").alias("l")
     )
@@ -4089,7 +4092,7 @@ def _q_clips_hum_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PITCH_N = 300
 
 
-def _q_clips_pitch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_pitch_screen(spark: SparkSession, sf_dir: str, n: int = _PITCH_N) -> DataFrame:
     """Pitch / voicing screen — speech-plausibility per clip: NACF pitch
     tracking (40 ms frames, 20 ms hop, batched FFT autocorrelation,
     smallest-lag tie-break so harmonic stacks resolve to the
@@ -4104,7 +4107,7 @@ def _q_clips_pitch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.pitch import audio_pitch, pitch_gates
     from jsonschema_spark.sources.clips import materialized_pitch_clips
 
-    clips, _ = materialized_pitch_clips(spark, _PITCH_N)
+    clips, _ = materialized_pitch_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_pitch("bytes", "sr_hz").alias("p")
     )
@@ -4124,7 +4127,9 @@ def _q_clips_pitch_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STEREO_SCREEN_N = 320
 
 
-def _q_clips_stereo_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_stereo_screen(
+    spark: SparkSession, sf_dir: str, n: int = _STEREO_SCREEN_N
+) -> DataFrame:
     """Stereo-integrity screen — channel-layout health per clip over
     the engine's four REAL stereo containers (WAV/AIFF/AU/FLAC):
     channel-preserving decode, Pearson L/R correlation, per-channel +
@@ -4143,7 +4148,7 @@ def _q_clips_stereo_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_stereo_screen_clips,
     )
 
-    clips, _ = materialized_stereo_screen_clips(spark, _STEREO_SCREEN_N)
+    clips, _ = materialized_stereo_screen_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_stereo("bytes").alias("p")
     )
@@ -4169,7 +4174,7 @@ def _q_clips_stereo_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TONALITY_N = 320
 
 
-def _q_clips_tonality_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_tonality_screen(spark: SparkSession, sf_dir: str, n: int = _TONALITY_N) -> DataFrame:
     """Tonality / spectral-flatness screen — synthetic-signal
     contamination per clip: Wiener-entropy spectral flatness over
     Hann-windowed 64 ms frames (ONE batched rfft per clip), top-8-bin
@@ -4189,7 +4194,7 @@ def _q_clips_tonality_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from jsonschema_spark.sources.clips import materialized_tonality_clips
 
-    clips, _ = materialized_tonality_clips(spark, _TONALITY_N)
+    clips, _ = materialized_tonality_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_tonality("bytes", "sr_hz").alias("p")
     )
@@ -4346,7 +4351,7 @@ def _q_clips_mfcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_clips_train_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_train_tensors(spark: SparkSession, sf_dir: str, n: int = _FBANK_MAT_N) -> DataFrame:
     """The one-hop production tensor kernel (bench.py's
     clips_train_tensors path, ~13x the JVM derive chain): decode +
     matrix + delta/delta-delta + SpecAugment + CMVN-normalize
@@ -4360,7 +4365,7 @@ def _q_clips_train_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_fbank_mat_clips,
     )
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = materialized_fbank_mat_clips(spark, n)
     s = clips.select(
         "clip_id",
         audio_train_tensors(
@@ -4698,7 +4703,7 @@ def _q_clips_fbank_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_clips_fbank_cmvn(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_fbank_cmvn(spark: SparkSession, sf_dir: str, n: int = _FBANK_N) -> DataFrame:
     """Corpus CMVN over the log-mel corpus: EXACT int64 aggregation of
     the quantized per-clip partials (bit-reproducible on any
     partitioning — the reason for the fixed point), final mean/std in
@@ -4709,14 +4714,14 @@ def _q_clips_fbank_cmvn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.fbank import cmvn_stats
     from jsonschema_spark.sources.clips import materialized_fbank_clips
 
-    clips, _ = materialized_fbank_clips(spark, _FBANK_N)
+    clips, _ = materialized_fbank_clips(spark, n)
     return cmvn_stats(clips)
 
 
 _DROPOUT_N = 300
 
 
-def _q_clips_dropout_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_dropout_screen(spark: SparkSession, sf_dir: str, n: int = _DROPOUT_N) -> DataFrame:
     """Dropout / click screen — transport-damage artifacts that survive
     every container check: exact-digital-zero runs inside the signal
     region (packet-loss / buffer-underrun concealment; real rooms have
@@ -4736,7 +4741,7 @@ def _q_clips_dropout_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from jsonschema_spark.sources.clips import materialized_dropout_clips
 
-    clips, _ = materialized_dropout_clips(spark, _DROPOUT_N)
+    clips, _ = materialized_dropout_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_artifacts("bytes", "sr_hz").alias("p")
     )
@@ -4760,7 +4765,7 @@ def _q_clips_dropout_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNR_N = 280
 
 
-def _q_clips_snr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_snr_screen(spark: SparkSession, sf_dir: str, n: int = _SNR_N) -> DataFrame:
     """Reference-free SNR screen — recording quality without a
     reference: percentile-energy method over 32 ms frames (speech has
     pauses; the quiet frames ARE the noise floor, the loud frames are
@@ -4776,7 +4781,7 @@ def _q_clips_snr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.snrest import audio_snr_est, snr_gates
     from jsonschema_spark.sources.clips import materialized_snr_clips
 
-    clips, _ = materialized_snr_clips(spark, _SNR_N)
+    clips, _ = materialized_snr_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_snr_est("bytes", "sr_hz").alias("p")
     )
@@ -4831,7 +4836,7 @@ def _q_clips_codec_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MP3_N = 480
 
 
-def _q_clips_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_mp3_headers(spark: SparkSession, sf_dir: str, n: int = _MP3_N) -> DataFrame:
     """MP3 (MPEG audio) frame-header walk — structural validation of the
     web's dominant compressed-audio format WITHOUT a decoder: every frame
     header is checked (sync, version/layer/bitrate/sample-rate indices),
@@ -4845,7 +4850,7 @@ def _q_clips_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.mp3 import audio_mp3_profile
     from jsonschema_spark.sources.clips import materialized_mp3_clips
 
-    clips, _ = materialized_mp3_clips(spark, _MP3_N)
+    clips, _ = materialized_mp3_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_mp3_profile("bytes").alias("p")
     )
@@ -4867,7 +4872,7 @@ def _q_clips_mp3_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OGG_N = 400
 
 
-def _q_clips_ogg_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_ogg_walk(spark: SparkSession, sf_dir: str, n: int = _OGG_N) -> DataFrame:
     """Ogg container walk (RFC 3533 + RFC 7845 OpusHead / Vorbis ident):
     page CRC-32 verified for EVERY page (batched matrix kernel — one
     byte column per step across all pages of an Arrow batch), page
@@ -4882,7 +4887,7 @@ def _q_clips_ogg_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.functions.ogg import audio_ogg_profile
     from jsonschema_spark.sources.clips import materialized_ogg_clips
 
-    clips, _ = materialized_ogg_clips(spark, _OGG_N)
+    clips, _ = materialized_ogg_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_ogg_profile("bytes").alias("p")
     )
@@ -4904,7 +4909,7 @@ def _q_clips_ogg_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OPUS_PKT_N = 400
 
 
-def _q_clips_opus_packets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_clips_opus_packets(spark: SparkSession, sf_dir: str, n: int = _OPUS_PKT_N) -> DataFrame:
     """Opus PACKET-level certification (VERDICT r2 item 4 — one tier
     beyond the container walk): per-packet RFC 6716 TOC config ->
     frame duration, frame-count codes 0-3 (CBR split, VBR length
@@ -4922,7 +4927,7 @@ def _q_clips_opus_packets(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialized_opus_packet_clips,
     )
 
-    clips, _ = materialized_opus_packet_clips(spark, _OPUS_PKT_N)
+    clips, _ = materialized_opus_packet_clips(spark, n)
     prof = clips.select(
         "clip_id", audio_opus_packet_profile("bytes").alias("p")
     )
@@ -5064,9 +5069,6 @@ def _q_clips_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WAVD_N = 550
-
-
 def _q_clips_wav_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-bit-depth / multi-channel WAV ingestion proof: the corpus
     cycles pcm8-mono, pcm24-mono, pcm16-stereo, pcm8-stereo, pcm24-stereo
@@ -5176,7 +5178,7 @@ def _q_audio_containment_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_dedup_audio_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_dedup_audio_clips(spark: SparkSession, sf_dir: str, n: int = _NEARDUP_N) -> DataFrame:
     """Audio fingerprint near-dup dedup (the audio analogue of MinHash):
     decode payload -> spectral fingerprint (one Arrow hop, L2-normalized
     band spectrum) -> hyperplane-LSH candidate buckets -> exact-cosine
@@ -5187,7 +5189,7 @@ def _q_dedup_audio_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     found pair set equals the ledger-derived expectation EXACTLY."""
     from jsonschema_spark.sources.clips import materialized_near_dup_clips
 
-    clips, _ = materialized_near_dup_clips(spark, _NEARDUP_N)
+    clips, _ = materialized_near_dup_clips(spark, n)
     return dedup.audio_near_dup_pairs(clips).select("id_a", "id_b")
 
 
@@ -5320,8 +5322,8 @@ def _q_similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_clips_validate_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clips = _clips(spark)
+def _q_clips_validate_totals(spark: SparkSession, sf_dir: str, n: int = _CLIPS_N) -> DataFrame:
+    clips = _clips(spark, n)
     return validate(clips, CLIPS_JSON_SCHEMA, _clips_options()).totals()
 
 
@@ -5398,8 +5400,8 @@ def _q_clips_invariant_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagged.filter(~F.col("snr_ok") | ~F.col("transcript_ok"))
 
 
-def _q_clips_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clips = _clips(spark)
+def _q_clips_uniqueness(spark: SparkSession, sf_dir: str, n: int = _CLIPS_N) -> DataFrame:
+    clips = _clips(spark, n)
     return uniqueness.uniqueness_summary(clips, "clip_id", salted=True)
 
 

@@ -1,15 +1,26 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32).
+"""Benchmark harness: a row times registered contract queries
+(``__spark_entry__.queries()``) at bench size over $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 tables, see ``SF_DIR``) on local[$SPARK_GRAFT_CPUS]
+(default: the cores this process may run on).
 
 Prints ONE JSON line:
   {"metric": "total_runtime", "value": <sec>, "unit": "sec",
    "queries": {...}, "sf": ..., "clips_per_sec": ..., "cpus": ...}
 
-``clips_per_sec`` is the north-star metric (BASELINE.json): full clips
-validation — schema compile + column-expression checks + vectorized audio
-decode/SNR + uniqueness — over a deterministically synthesized clips table.
-Scaling evidence (local[8] vs local[32]) is produced by running this file
-twice with SPARK_GRAFT_CPUS=8/32; see BASELINE.md §Scaling.
+A row is ``ROWS[name] = (contract_query, n)`` (or a tuple of queries, timed
+as their sum): each builder runs as
+``queries()[q](spark, SF_DIR[, n])`` — ``n`` is the bench-tier corpus size
+(``None`` keeps the oracle tier's size, e.g. every TPC-H/events query,
+which scales with ``SF_DIR`` instead) — and the result is drained into the
+``noop`` sink, which evaluates every output column (``count()`` would let
+column pruning skip the UDFs). The bench therefore times exactly the
+pipelines the DuckDB oracles certify. ``BESPOKE`` holds the rows whose
+production path (operator, hash family, query shape) no contract query
+builds on the same input.
+
+``clips_per_sec`` is the north-star metric: full clips validation (schema
+compile + column-expression checks + vectorized audio decode/SNR) over
+$SPARK_GRAFT_CLIPS (default 20000) materialized clips.
 """
 
 from __future__ import annotations
@@ -31,21 +42,161 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from jsonschema_spark.functions.audio import audio_snr_ok
-from jsonschema_spark.operators import dedup, drift, referential, similarity, stats
-from jsonschema_spark.operators import text as text_ops
-from jsonschema_spark.operators import uniqueness
-from jsonschema_spark.operators.validate import validate
-from jsonschema_spark.plans.compile import CompileOptions
-from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, synth_clips
+from jsonschema_spark.operators import dedup, similarity, stats
 from jsonschema_spark.sources.tables import load_table
 
-from __spark_entry__ import ORDERS_JSON_SCHEMA
+from __spark_entry__ import queries
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 CLIPS_N = int(os.environ.get("SPARK_GRAFT_CLIPS", "20000"))
-_VORBISDEC_BENCH_N = 1280  # real-Vorbis decode corpus rows for the bench query
+PASSES = int(os.environ.get("SPARK_GRAFT_PASSES", "3"))
+# driver heap: 30% of physical memory (the clips scan needs a few GB for
+# Arrow batches of ~40 KB payloads; the rest stays with the Python workers)
+HEAP_GB = max(1, int(0.3 * os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30))
+
+# bench row -> (contract query or tuple of them, bench-tier corpus size or
+# None). A tuple times the sum of its queries: the stages one row covers.
+# Sizes keep each row's share of the total: n is the number of clips the
+# row's earlier hand-written pipeline processed (e.g. clips_pitch ran on a
+# quarter of the 10k quality corpus, so n = 2500). Where the contract
+# corpus costs over 1.5x more per clip than the one that pipeline read
+# (real FLAC against PCM, ...), n is scaled down by that ratio, measured
+# at local[4] (clips_segment_decoded: 10000 * 1.5 s / 26 s ~ 600).
+ROWS = {
+    "clips_validate": ("clips_validate_totals", CLIPS_N),
+    "clips_uniqueness": ("clips_uniqueness", CLIPS_N),
+    "validate_orders": ("validate_orders_summary", None),
+    "uniqueness_lineitem": ("uniqueness_lineitem", None),
+    "referential": ("referential_lineitem_orders", None),
+    "drift_ks": ("drift_ks_binned_events", None),
+    "drift_ks_exact": ("drift_ks_events", None),
+    "drift_chi2": ("drift_chi_square_events", None),
+    "drift_report": ("drift_report_events", None),
+    "text_profile": ("text_profile_documents", None),
+    "span_dedup": ("span_dedup_documents", None),
+    "validate_part_logic": ("validate_part_logic", None),
+    "corpus_summary": ("corpus_summary_documents", None),
+    "embedding_lsh": ("dedup_embedding_lsh", None),
+    "validate_jsonl": ("validate_jsonl_docs", 50_000),
+    "audio_dedup": ("dedup_audio_clips", 10_000),
+    "audio_quality": ("clips_audio_quality", 10_000),
+    "clips_loudness": ("clips_loudness_r128", 1_600),
+    "clips_pitch": ("clips_pitch_screen", 2_500),
+    "clips_stereo": ("clips_stereo_screen", 6_000),
+    "clips_tonality": ("clips_tonality_screen", 6_000),
+    "clips_snr": ("clips_snr_screen", 5_000),
+    "clips_dropouts": ("clips_dropout_screen", 5_000),
+    "clips_fbank": ("clips_fbank_cmvn", 5_000),
+    "clips_train_tensors": ("clips_train_tensors", 5_000),
+    "clips_mp3_walk": ("clips_mp3_headers", 10_000),
+    "clips_ogg_walk": ("clips_ogg_walk", 10_000),
+    "clips_opus_packets": ("clips_opus_packets", 10_000),
+    "images_jpeg_progressive": ("images_jpeg_progressive", 1_800),
+    "clips_segments": ("clips_segments", 10_000),
+    "clips_segment_decoded": ("clips_segment_decoded", 600),
+    "validate_segments": ("validate_segments", 800),
+    "infer_schema": ("infer_constraints_orders", None),
+    "reconcile": ("reconcile_orders_lineitem", None),
+    "sample_token_budget": ("sample_documents_token_budget", None),
+    "clips_normalize": (("clips_trim_silence", "clips_gain_normalize"), 10_000),
+    "hygiene_suite": (("decontaminate_documents", "pii_documents",
+                       "boilerplate_documents"), None),
+    "chunk_pack": (("chunk_documents", "pack_plan_documents"), None),
+    "mixture_sample": ("mixture_sample_documents", None),
+    "clips_augment": (("clips_time_mask", "clips_speed_perturb"), 10_000),
+    "fd_report": ("fd_report_lineitem", None),
+    "sequence_profile": ("sequence_report_events", None),
+    "sessionize": ("sessionize_events", None),
+    "asof_attribution": ("asof_attribution_events", None),
+    "join_guard": (("join_explosion_events", "join_hot_keys_events"), None),
+    "model_eval": (("model_auc_documents", "model_ece_documents"), None),
+    "clips_vorbis_decode": ("clips_vorbis_decode", 1_280),
+    "clips_aac_adts": ("clips_aac_adts", 10_000),
+    "clips_tags": ("clips_tags", 10_000),
+    "videos_h264_nals": ("videos_h264_nals", 4_000),
+    "videos_mp4_structure": ("videos_mp4_structure", 4_000),
+    "videos_webm_structure": ("videos_webm_structure", 4_000),
+    "clips_mp3_sideinfo": ("clips_mp3_sideinfo", 10_000),
+    "clips_bandwidth": ("clips_bandwidth", 10_000),
+    "clips_transcode": ("clips_transcode_flac", 1_000),
+    "suggest": ("suite_suggest_orders", None),
+}
+
+
+def _drain(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _column_stats_lineitem(spark: SparkSession) -> None:
+    _drain(stats.column_stats(load_table(spark, SF_DIR, "lineitem")))
+
+
+def _curate_documents(spark: SparkSession) -> None:
+    from jobs.curate_documents_job import curate
+
+    curate(load_table(spark, SF_DIR, "documents"), quality_min=0.3,
+           min_tokens=5, jaccard_threshold=0.6)
+
+
+def _minhash_pairs(spark: SparkSession):
+    return dedup.minhash_lsh_pairs(load_table(spark, SF_DIR, "documents"),
+                                   threshold=0.5)
+
+
+def _dedup_minhash(spark: SparkSession) -> None:
+    _drain(_minhash_pairs(spark))
+
+
+def _dedup_components(spark: SparkSession) -> None:
+    _drain(dedup.connected_components(_minhash_pairs(spark)))
+
+
+def _quantiles(spark: SparkSession) -> None:
+    li = load_table(spark, SF_DIR, "lineitem")
+    _drain(stats.column_quantiles(li, "l_extendedprice"))
+
+
+def _topk_queries(emb):
+    return emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding")
+
+
+def _cosine_topk(spark: SparkSession) -> None:
+    emb = load_table(spark, SF_DIR, "embeddings")
+    _drain(similarity.cosine_topk(emb, _topk_queries(emb), k=10))
+
+
+def _pq_adc(spark: SparkSession) -> None:
+    emb = load_table(spark, SF_DIR, "embeddings")
+    books = similarity.pq_seed_codebooks(emb, m=8, k_per_space=16)
+    _drain(similarity.pq_topk(emb, _topk_queries(emb), books, k=10))
+
+
+# rows whose production path no contract query builds on the same input
+BESPOKE = {
+    # the contract query profiles two orders columns; this is all 16 of lineitem
+    "column_stats_lineitem": _column_stats_lineitem,
+    # a whole job funnel (validate -> gates -> exact + MinHash dedup), not one query
+    "curate_documents": _curate_documents,
+    # production xxhash64 MinHash; the contract query certifies the md5_60 family
+    "dedup_minhash": _dedup_minhash,
+    # components over MinHash pairs; the contract query uses exact Jaccard pairs
+    "dedup_components": _dedup_components,
+    # the production sketch; the contract query certifies exact percentiles
+    "quantiles": _quantiles,
+    # production top-k (8 queries, k=10); the contract queries run 3 at k=5
+    "cosine_topk": _cosine_topk,
+    "pq_adc": _pq_adc,
+}
+
+R1_SUBSET = [
+    "clips_uniqueness", "clips_validate", "column_stats_lineitem",
+    "corpus_summary", "cosine_topk", "curate_documents",
+    "dedup_minhash", "drift_chi2", "drift_ks", "embedding_lsh",
+    "quantiles", "referential", "text_profile",
+    "uniqueness_lineitem", "validate_orders", "validate_part_logic",
+]
 
 
 def build_spark() -> SparkSession:
@@ -55,7 +206,7 @@ def build_spark() -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(CPUS, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{HEAP_GB}g")
         # keep the default arrow batch (10000): measured ~1.8x faster than
         # 2048 on the payload-heavy audio UDF stage (fewer Arrow flushes)
         #
@@ -73,1160 +224,54 @@ def build_spark() -> SparkSession:
     )
 
 
-_CLIPS_PATH = f"/tmp/spark_graft_clips_{CLIPS_N}.parquet"
-
-
-def materialize_clips(spark: SparkSession) -> None:
-    """Untimed setup: persist the synthetic clips table once. The north-star
-    metric is *validation* throughput over an existing Iceberg/parquet table
-    (BASELINE.json north_rule), not synthesis."""
-    if not os.path.exists(_CLIPS_PATH):
-        synth_clips(spark, CLIPS_N, partitions=CPUS * 2).write.mode("overwrite").parquet(
-            _CLIPS_PATH
-        )
-
-
-def q_clips_validate(spark: SparkSession):
-    """North-star: full clips validation incl. audio decode + SNR gate."""
-    clips = spark.read.parquet(_CLIPS_PATH)
-    opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
-    return validate(clips, CLIPS_JSON_SCHEMA, opts).totals().collect()
-
-
-def q_clips_uniqueness(spark: SparkSession):
-    clips = spark.read.parquet(_CLIPS_PATH)
-    return uniqueness.uniqueness_summary(clips, "clip_id", salted=True).collect()
-
-
-def q_validate_orders(spark: SparkSession):
-    orders = load_table(spark, SF_DIR, "orders")
-    r = validate(orders, ORDERS_JSON_SCHEMA)
-    return r.totals().collect()
-
-
-def q_column_stats_lineitem(spark: SparkSession):
-    li = load_table(spark, SF_DIR, "lineitem")
-    return stats.column_stats(li).collect()
-
-
-def q_uniqueness_lineitem(spark: SparkSession):
-    li = load_table(spark, SF_DIR, "lineitem")
-    return uniqueness.uniqueness_summary(li, "l_orderkey", salted=True).collect()
-
-
-def q_referential(spark: SparkSession):
-    li = load_table(spark, SF_DIR, "lineitem")
-    orders = load_table(spark, SF_DIR, "orders")
-    return referential.check(li, orders, "l_orderkey", "o_orderkey").collect()
-
-
-def q_drift_ks(spark: SparkSession):
-    """Scale-default KS: binned ECDF grid — one aggregate per side, no
-    global sort (the registered contract path, drift_ks_binned_events)."""
-    ev = load_table(spark, SF_DIR, "events")
-    cur = ev.filter(F.col("event_id") % 2 == 1)
-    base = ev.filter(F.col("event_id") % 2 == 0)
-    return drift.ks_statistic_binned(cur, base, "value", 0.0, 600.0, 120).collect()
-
-
-def q_drift_ks_exact(spark: SparkSession):
-    """Audit path: exact KS via the global ordered window (single-reducer —
-    benched to document the cost delta vs the binned default)."""
-    ev = load_table(spark, SF_DIR, "events")
-    cur = ev.filter(F.col("event_id") % 2 == 1)
-    base = ev.filter(F.col("event_id") % 2 == 0)
-    return drift.ks_statistic_exact(cur, base, "value").collect()
-
-
-def q_drift_chi2(spark: SparkSession):
-    ev = load_table(spark, SF_DIR, "events")
-    cur = ev.filter(F.col("event_id") % 2 == 1)
-    base = ev.filter(F.col("event_id") % 2 == 0)
-    return drift.chi_square_table(cur, base, "event_type").collect()
-
-
-def q_drift_report(spark: SparkSession):
-    """Whole-table drift report: numeric + categorical columns verdict'd in
-    ONE stacked histogram pass per side (shuffle = sum of category
-    cardinalities, independent of row count)."""
-    ev = load_table(spark, SF_DIR, "events")
-    cur = ev.filter(F.col("event_id") % 2 == 1)
-    base = ev.filter(F.col("event_id") % 2 == 0)
-    return drift.drift_report(
-        cur, base, {"value": (0.0, 600.0, 120)}, ["event_type"]
-    ).collect()
-
-
-def q_text_profile(spark: SparkSession):
-    docs = load_table(spark, SF_DIR, "documents")
-    return (
-        text_ops.text_profile(docs)
-        .agg(F.sum("token_count"), F.avg("quality"), F.count(F.lit(1)))
-        .collect()
-    )
-
-
-def q_dedup_minhash(spark: SparkSession):
-    docs = load_table(spark, SF_DIR, "documents")
-    return dedup.minhash_lsh_pairs(docs, threshold=0.5).count()
-
-
-def q_span_dedup(spark: SparkSession):
-    """Cross-doc repeated-span trim (Lee et al. style): positional-gram
-    doc-freq shuffle + hot-set join + per-doc span algebra."""
-    from jsonschema_spark.operators import spandedup
-
-    docs = load_table(spark, SF_DIR, "documents")
-    return (
-        spandedup.repeated_span_report(docs, n=8, min_doc_freq=5)
-        .agg(F.sum("dup_tokens"), F.sum("n_spans"), F.count(F.lit(1)))
-        .collect()
-    )
-
-
-def q_validate_part_logic(spark: SparkSession):
-    from __spark_entry__ import PART_LOGIC_SCHEMA
-
-    part = load_table(spark, SF_DIR, "part")
-    return validate(part, PART_LOGIC_SCHEMA).totals().collect()
-
-
-def q_quantiles(spark: SparkSession):
-    li = load_table(spark, SF_DIR, "lineitem")
-    return stats.column_quantiles(li, "l_extendedprice").collect()
-
-
-def q_corpus_summary(spark: SparkSession):
-    docs = load_table(spark, SF_DIR, "documents")
-    return text_ops.corpus_summary(docs).collect()
-
-
-def q_curate_documents(spark: SparkSession):
-    """End-to-end training-data funnel: validate -> quality gate -> exact
-    dedup -> MinHash near-dedup (jobs/curate_documents_job.curate)."""
-    from jobs.curate_documents_job import curate
-
-    docs = load_table(spark, SF_DIR, "documents")
-    curated, stats = curate(docs, quality_min=0.3, min_tokens=5,
-                            jaccard_threshold=0.6)
-    return stats
-
-
-def q_embedding_lsh(spark: SparkSession):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    return dedup.embedding_near_dups(emb, threshold=0.4).count()
-
-
-_JSONL_BENCH_N = int(os.environ.get("SPARK_GRAFT_JSONL", "50000"))
-
-
-def q_validate_jsonl(spark: SparkSession):
-    """Raw-JSONL front door: readText -> try_parse_json VARIANT -> compiled
-    keyword algebra + parse-failure routing (the reference library's primary
-    real-world workflow). Corpus is materialized once, untimed."""
-    from jobs.validate_jsonl_job import violation_rows
-    from jsonschema_spark.sources import jsonl as J
-
-    df = J.read_jsonl(spark, J.materialized_jsonl(_JSONL_BENCH_N))
-    return (
-        violation_rows(df, J.JSONL_DOC_SCHEMA)
-        .groupBy("keyword").agg(F.count(F.lit(1)))
-        .collect()
-    )
-
-
-def q_dedup_components(spark: SparkSession):
-    """Pair list -> transitive duplicate clusters (alternating large-star/
-    small-star): the last step of the dedup ladder."""
-    docs = load_table(spark, SF_DIR, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5)
-    return dedup.connected_components(pairs).count()
-
-
-_NEARDUP_BENCH_N = int(os.environ.get("SPARK_GRAFT_NEARDUP", "10000"))
-
-
-def q_audio_dedup(spark: SparkSession):
-    """Audio fingerprint near-dup dedup at scale: decode -> spectral
-    fingerprint (one Arrow hop) -> hyperplane-LSH buckets -> cosine
-    verify, over the planted re-encode corpus (materialized untimed)."""
-    from jsonschema_spark.sources.clips import materialized_near_dup_clips
-
-    clips, _ = materialized_near_dup_clips(spark, _NEARDUP_BENCH_N)
-    return dedup.audio_near_dup_pairs(clips).count()
-
-
-_QUALITY_BENCH_N = int(os.environ.get("SPARK_GRAFT_QUALITY", "10000"))
-
-
-def q_audio_quality(spark: SparkSession):
-    """Reference-free audio quality gates (loudness/silence/clipping) —
-    decode + full signal family in ONE Arrow hop over the planted
-    defect corpus (materialized untimed)."""
-    from jsonschema_spark.functions.audio import audio_quality, quality_gates
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    g = quality_gates(audio_quality("bytes", "sr_hz"))
-    return (
-        clips.select(g["silent"].alias("s"), g["clipped"].alias("c"),
-                     g["too_quiet"].alias("q"))
-        .agg(F.sum(F.col("s").cast("long")), F.sum(F.col("c").cast("long")),
-             F.sum(F.col("q").cast("long")))
-        .collect()
-    )
-
-
-def q_clips_loudness(spark: SparkSession):
-    """BS.1770-4 / EBU R128 program loudness + 4x-oversampled true peak
-    (functions/loudness.py) over the quality corpus — decode + the
-    K-weighting IIR (advanced across all clips of a batch together) +
-    gated LUFS + interpolated peak in ONE Arrow hop."""
-    from jsonschema_spark.functions.audio import audio_loudness
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    # deterministic 1/4 subset via hash filter (limit() would collapse
-    # the payload scan to one partition — CLAUDE.md gotcha)
-    clips = clips.where(F.xxhash64("clip_id") % 4 == 0)
-    l = audio_loudness("bytes", "sr_hz")
-    return (
-        clips.select(l.alias("l"))
-        .agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("l.n_blocks")),
-            F.sum(
-                F.when(
-                    ~F.isnan(F.col("l.lufs_integrated")),
-                    F.col("l.lufs_integrated"),
-                ).otherwise(F.lit(0.0))
-            ),
-        )
-        .collect()
-    )
-
-
-def q_clips_pitch(spark: SparkSession):
-    """NACF pitch/voicing screen (functions/pitch.py): decode + framed
-    batched-FFT autocorrelation + lag search in ONE Arrow hop —
-    speech-plausibility (voiced_frac, median f0) per clip."""
-    from jsonschema_spark.functions.pitch import audio_pitch, pitch_gates
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    clips = clips.where(F.xxhash64("clip_id") % 4 == 1)
-    g = pitch_gates(audio_pitch("bytes", "sr_hz"))
-    return (
-        clips.select(g.alias("g"))
-        .agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("g.speechlike").cast("long")),
-            F.sum(F.col("g.unvoiced").cast("long")),
-            F.sum(F.col("g.measurable").cast("long")),
-        )
-        .collect()
-    )
-
-
-_STEREO_BENCH_N = int(os.environ.get("SPARK_GRAFT_STEREO", "6000"))
-
-
-def q_clips_stereo(spark: SparkSession):
-    """Stereo-integrity screen (functions/stereo.py): channel-preserving
-    decode across WAV/AIFF/AU/FLAC + L/R correlation + mid/side RMS in
-    ONE Arrow hop — dual-mono / out-of-phase / dead-channel gates per
-    clip."""
-    from jsonschema_spark.functions.stereo import audio_stereo, stereo_gates
-    from jsonschema_spark.sources.clips import materialized_stereo_screen_clips
-
-    clips, _ = materialized_stereo_screen_clips(spark, _STEREO_BENCH_N)
-    g = stereo_gates(audio_stereo("bytes"))
-    return (
-        clips.select(g.alias("g"))
-        .agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("g.dual_mono").cast("long")),
-            F.sum(F.col("g.out_of_phase").cast("long")),
-            F.sum(F.col("g.imbalanced").cast("long")),
-            F.sum(F.col("g.stereo_ok").cast("long")),
-        )
-        .collect()
-    )
-
-
-_TONALITY_BENCH_N = int(os.environ.get("SPARK_GRAFT_TONALITY", "6000"))
-
-
-def q_clips_tonality(spark: SparkSession):
-    """Tonality / spectral-flatness screen (functions/tonality.py):
-    decode + Hann-framed batched-FFT Wiener entropy in ONE Arrow hop —
-    tone/DTMF/sweep/static contamination gates per clip."""
-    from jsonschema_spark.functions.tonality import (
-        audio_tonality,
-        tonality_gates,
-    )
-    from jsonschema_spark.sources.clips import materialized_tonality_clips
-
-    clips, _ = materialized_tonality_clips(spark, _TONALITY_BENCH_N)
-    g = tonality_gates(audio_tonality("bytes", "sr_hz"))
-    return (
-        clips.select(g.alias("g"))
-        .agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("g.tonal").cast("long")),
-            F.sum(F.col("g.steady_tone").cast("long")),
-            F.sum(F.col("g.noiselike").cast("long")),
-            F.sum(F.col("g.spectral_ok").cast("long")),
-        )
-        .collect()
-    )
-
-
-_DROPOUT_BENCH_N = int(os.environ.get("SPARK_GRAFT_DROPOUT", "5000"))
-
-
-def q_clips_dropouts(spark: SparkSession):
-    """Dropout/click screen (functions/dropouts.py): decode + exact
-    zero-run walk + two-sided impulse detector in ONE Arrow hop —
-    transport-damage gates per clip."""
-    from jsonschema_spark.functions.dropouts import (
-        artifact_gates,
-        audio_artifacts,
-    )
-    from jsonschema_spark.sources.clips import materialized_dropout_clips
-
-    clips, _ = materialized_dropout_clips(spark, _DROPOUT_BENCH_N)
-    g = artifact_gates(audio_artifacts("bytes", "sr_hz"))
-    return (
-        clips.select(g.alias("g"))
-        .agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("g.has_dropouts").cast("long")),
-            F.sum(F.col("g.clicky").cast("long")),
-            F.sum(F.col("g.artifact_ok").cast("long")),
-        )
-        .collect()
-    )
-
-
-_FBANK_BENCH_N = int(os.environ.get("SPARK_GRAFT_FBANK", "5000"))
-
-
-def q_clips_fbank(spark: SparkSession):
-    """Log-mel + corpus CMVN (functions/fbank.py): decode + framed FFT
-    + mel matmul + fixed-point reduction in ONE Arrow hop, then the
-    exact int64 CMVN aggregation (skinny O(clips x 40) shuffle -> 40
-    rows)."""
-    from jsonschema_spark.functions.fbank import cmvn_stats
-    from jsonschema_spark.sources.clips import materialized_fbank_clips
-
-    clips, _ = materialized_fbank_clips(spark, _FBANK_BENCH_N)
-    return cmvn_stats(clips).collect()
-
-
-def q_clips_train_tensors(spark: SparkSession):
-    """Full training-tensor production: decode + log-mel matrix +
-    delta/delta-delta + SpecAugment + per-utterance CMVN-normalize,
-    all vectorized in ONE Arrow hop (audio_train_tensors; bit-equal
-    to the JVM derive-from-stored-parquet algebra, test-pinned) —
-    the complete per-clip network input, reduced to checksums
-    (try_element_at forces full tensor evaluation without collecting
-    the arrays)."""
-    from jsonschema_spark.functions.fbank import audio_train_tensors
-    from jsonschema_spark.sources.clips import materialized_fbank_clips
-
-    clips, _ = materialized_fbank_clips(spark, _FBANK_BENCH_N)
-    out = clips.select(
-        audio_train_tensors("clip_id", "bytes", "sr_hz", seed="ep0")
-        .alias("s")
-    ).select("s.mat_q", "s.delta_q", "s.ddelta_q", "s.aug_q", "s.x",
-             "s.n_frames")
-    last = F.greatest(F.size("mat_q"), F.lit(1))
-    return out.agg(
-        F.count(F.lit(1)),
-        F.sum("n_frames"),
-        F.sum(F.try_element_at("aug_q", last)),
-        F.sum(F.try_element_at("delta_q", last)),
-        F.sum(F.try_element_at("ddelta_q", last)),
-        F.sum(F.try_element_at("x", last)),
-    ).collect()
-
-
-_SNR_BENCH_N = int(os.environ.get("SPARK_GRAFT_SNR", "5000"))
-
-
-def q_clips_snr(spark: SparkSession):
-    """Reference-free SNR screen (functions/snrest.py): decode +
-    percentile-energy noise-floor estimate in ONE Arrow hop —
-    too-noisy / snr-ok gates per clip."""
-    from jsonschema_spark.functions.snrest import audio_snr_est, snr_gates
-    from jsonschema_spark.sources.clips import materialized_snr_clips
-
-    clips, _ = materialized_snr_clips(spark, _SNR_BENCH_N)
-    g = snr_gates(audio_snr_est("bytes", "sr_hz"))
-    return (
-        clips.select(g.alias("g"))
-        .agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("g.too_noisy").cast("long")),
-            F.sum(F.col("g.snr_ok").cast("long")),
-            F.sum(F.col("g.measurable").cast("long")),
-        )
-        .collect()
-    )
-
-
-_MP3_BENCH_N = int(os.environ.get("SPARK_GRAFT_MP3", "10000"))
-
-
-def q_clips_mp3_walk(spark: SparkSession):
-    """MP3 frame-header walk (functions/mp3.py): full structural
-    validation of MPEG audio streams without a decoder — every header
-    checked, frame lengths chained, Layer III CRC-16 verified, Xing/
-    VBRI counts cross-checked — one Arrow hop, O(frames) per clip."""
-    from jsonschema_spark.functions.mp3 import audio_mp3_profile
-    from jsonschema_spark.sources.clips import materialized_mp3_clips
-
-    clips, _ = materialized_mp3_clips(spark, _MP3_BENCH_N)
-    p = audio_mp3_profile("bytes")
-    return (
-        clips.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_frames"),
-            F.sum("p.parsed_dur_ms"),
-            F.sum("p.crc_frames"),
-        )
-        .collect()
-    )
-
-
-_OGG_BENCH_N = int(os.environ.get("SPARK_GRAFT_OGG", "10000"))
-
-
-def q_clips_ogg_walk(spark: SparkSession):
-    """Ogg page walk (functions/ogg.py): every page's CRC-32 verified
-    via the batched matrix kernel (one byte column per step across all
-    pages of an Arrow batch), flags/sequence/lacing discipline, codec
-    ident, granule-clock durations — one Arrow hop."""
-    from jsonschema_spark.functions.ogg import audio_ogg_profile
-    from jsonschema_spark.sources.clips import materialized_ogg_clips
-
-    clips, _ = materialized_ogg_clips(spark, _OGG_BENCH_N)
-    p = audio_ogg_profile("bytes")
-    return (
-        clips.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_pages"),
-            F.sum("p.n_packets"),
-            F.sum("p.duration_ms"),
-        )
-        .collect()
-    )
-
-
-_OPUS_PKT_BENCH_N = int(os.environ.get("SPARK_GRAFT_OPUSPKT", "10000"))
-
-
-def q_clips_opus_packets(spark: SparkSession):
-    """Opus packet-level certification (RFC 6716 TOC/framing + RFC
-    7845 granule cross-check) over the framed ledger corpus — one
-    Arrow hop, page CRC via the batched matrix kernel."""
-    from jsonschema_spark.functions.ogg import audio_opus_packet_profile
-    from jsonschema_spark.sources.clips import (
-        materialized_opus_packet_clips,
-    )
-
-    clips, _ = materialized_opus_packet_clips(spark, _OPUS_PKT_BENCH_N)
-    p = audio_opus_packet_profile("bytes")
-    return (
-        clips.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_audio_packets"),
-            F.sum("p.sum_samples"),
-            F.sum("p.duration_ms"),
-        )
-        .collect()
-    )
-
-
-def q_images_jpeg_progressive(spark: SparkSession):
-    """Progressive-JPEG decode (T.81 Annex G: spectral selection +
-    successive approximation) over the ledger corpus — per-image
-    Python bit loop inside the Arrow batch, like every decoder here."""
-    from typing import Iterator as _It
-
-    import pandas as _pd
-
-    from jsonschema_spark.functions.jpeg import decode_jpeg_progressive
-    from jsonschema_spark.sources.images import (
-        materialized_progressive_jpeg_images,
-    )
-
-    imgs, _ = materialized_progressive_jpeg_images(spark, _PJPEG_BENCH_N)
-
-    def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for b in batches:
-            oks, ysums = [], []
-            for raw in b["bytes"].tolist():
-                try:
-                    _, _, px = decode_jpeg_progressive(bytes(raw))
-                    oks.append(True)
-                    ysums.append(int(px.astype("int64").sum()))
-                except Exception:
-                    oks.append(False)
-                    ysums.append(0)
-            yield _pd.DataFrame({"ok": oks, "ysum": ysums})
-
-    return (
-        imgs.select("bytes")
-        .mapInPandas(kernel, "ok boolean, ysum long")
-        .agg(F.sum(F.col("ok").cast("long")), F.sum("ysum"))
-        .collect()
-    )
-
-
-_PJPEG_BENCH_N = int(os.environ.get("SPARK_GRAFT_PJPEG", "1800"))
-
-
-def q_clips_segments(spark: SparkSession):
-    """PCM segmentation: sequence/explode/binary-substring, zero Python —
-    slices every payload into 250ms training windows and folds a checksum
-    so the slicing work cannot be pruned."""
-    from jsonschema_spark.operators.segments import segment_clips
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    segs = segment_clips(clips.select("clip_id", "bytes", "sr_hz", "codec"), 250)
-    return segs.agg(
-        F.count(F.lit(1)), F.sum("seg_dur_ms"), F.sum(F.length("seg_bytes"))
-    ).collect()
-
-
-def q_clips_segment_decoded(spark: SparkSession):
-    """Decode-then-segment for compressed containers: one Arrow decode hop
-    per clip (array of 250ms PCM16 windows) + JVM posexplode — the path
-    segment_clips defers for its sliceable=false rows; checksums fold so
-    neither the decode nor the fan-out can be pruned."""
-    from jsonschema_spark.operators.segments import segment_decoded
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    segs = segment_decoded(
-        clips.select("clip_id", "bytes", "sr_hz", "codec"), 250
-    )
-    return segs.agg(
-        F.count(F.lit(1)),
-        F.sum("seg_n_samples"),
-        F.sum(F.length("seg_bytes")),
-    ).collect()
-
-
-def q_validate_segments(spark: SparkSession):
-    """Constraint-eval throughput one level below clips: the routed
-    segmentation fan-out (byte-slice + decode paths) flows straight into
-    the compiled keyword DAG and a totals aggregate — scan -> fan-out ->
-    codegen checks -> partial agg, zero shuffle before the 1-row total."""
-    import copy
-
-    from __spark_entry__ import SEGMENTS_JSON_SCHEMA
-    from jsonschema_spark.operators.segments import segment_auto
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    schema = copy.deepcopy(SEGMENTS_JSON_SCHEMA)
-    # quality corpus runs up to 48 kHz: 250 ms windows reach 12000 samples,
-    # and its sr/codec domains differ from the ledger corpus — keep the
-    # structural checks (required/pattern/bounds), retarget the domains
-    schema["properties"]["seg_n_samples"]["maximum"] = 12000
-    schema["properties"]["sr_hz"] = {"type": "integer", "minimum": 1}
-    schema["properties"]["codec"] = {"type": "string"}
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    seg = segment_auto(
-        clips.select("clip_id", "bytes", "sr_hz", "codec"), 250
-    ).drop("seg_bytes")
-    return validate(seg, schema).totals().collect()
-
-
-def q_infer_schema(spark: SparkSession):
-    """Schema inference profile over orders: two exact hash aggregates
-    (bounds/nulls/distincts, then gated enum collect)."""
-    from jsonschema_spark.plans.infer import infer_schema
-
-    orders = load_table(spark, SF_DIR, "orders")
-    return infer_schema(orders)
-
-
-def q_reconcile(spark: SparkSession):
-    """Cross-table reconciliation: decimal-exact detail aggregate + AQE-
-    sized join of orders vs lineitem."""
-    from jsonschema_spark.operators.reconcile import reconcile_summary
-
-    orders = load_table(spark, SF_DIR, "orders")
-    li = load_table(spark, SF_DIR, "lineitem")
-    amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-    return reconcile_summary(
-        orders, li, "o_orderkey", "l_orderkey", "o_totalprice", amount
-    ).collect()
-
-
-def q_sample_token_budget(spark: SparkSession):
-    """Deterministic per-source token-budget sampling (hash-ordered greedy
-    prefix, window per stratum)."""
-    from jsonschema_spark.operators.sampling import token_budget_sample
-
-    docs = load_table(spark, SF_DIR, "documents")
-    return (
-        token_budget_sample(docs, "doc_id", "n_chars", 40000, strata_col="source")
-        .agg(F.count(F.lit(1)), F.sum("n_chars"))
-        .collect()
-    )
-
-
-def q_clips_normalize(spark: SparkSession):
-    """Payload normalization chain over the quality corpus: VAD trim
-    (one Arrow span hop + JVM byte slice) -> loudness normalization (one
-    Arrow rewrite hop); checksum folds so nothing prunes."""
-    from jsonschema_spark.operators.trim import normalize_loudness, trim_silence
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    t = trim_silence(clips.select("clip_id", "bytes", "sr_hz", "codec", "dur_ms"))
-    n = normalize_loudness(
-        t.select("clip_id", "bytes", "sr_hz", "codec", "dur_ms")
-    )
-    return n.agg(
-        F.count(F.lit(1)), F.sum(F.length("bytes")), F.sum("gain")
-    ).collect()
-
-
-def q_clips_transcode(spark: SparkSession):
-    """Archival codec normalization at corpus scale: every payload of the
-    quality corpus re-encoded as REAL FLAC in one Arrow hop (the 100-TB
-    storage-rewrite plan: one scan, zero shuffle); byte-total checksums
-    fold so the encode work cannot be pruned."""
-    from jsonschema_spark.operators.trim import transcode_to_flac
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-
-    clips, _ = materialized_quality_clips(spark, _QUALITY_BENCH_N)
-    # deterministic 1/4 subset via hash filter — keeps the scan parallel
-    # (limit() would collapse it to one partition); the FLAC bit-writer
-    # is the priciest kernel in the suite, so bound its share of total
-    sub = clips.where(F.xxhash64("clip_id") % 4 == 0)
-    tc = transcode_to_flac(
-        sub.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-    )
-    return tc.agg(
-        F.count(F.lit(1)),
-        F.sum(F.length("bytes")),
-        F.sum("n_out"),
-        F.sum(F.col("transcoded").cast("long")),
-    ).collect()
-
-
-def q_pq_adc(spark: SparkSession):
-    """PQ encode + ADC top-k: the memory-bound ANN path (corpus scan reads
-    only (id, code); codebooks ride as literals)."""
-    from jsonschema_spark.operators import similarity
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    books = similarity.pq_seed_codebooks(emb, m=8, k_per_space=16)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.pq_topk(emb, queries, books, k=10).count()
-
-
-def q_cosine_topk(spark: SparkSession):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.cosine_topk(emb, queries_df, k=10).collect()
-
-
-def q_hygiene_suite(spark: SparkSession):
-    """Training-data hygiene sweep over documents at SF_DIR: benchmark
-    decontamination (corpus-derived prompt set), PII detect+redact, and
-    boilerplate block-dedup — three scans, one groupBy-on-md5 shuffle
-    (boilerplate), everything else codegen'd projections."""
-    from jsonschema_spark.operators import boilerplate, decontaminate, pii
-    from jsonschema_spark.operators.text import tokens
-
-    docs = load_table(spark, SF_DIR, "documents")
-    bench_set = docs.filter(F.col("doc_id") % 17 == 0).select(
-        F.array_join(F.slice(tokens(F.col("text")), 3, 8), " ").alias("text")
-    )
-    a = (
-        decontaminate.contamination_report(docs, bench_set, n=5)
-        .agg(F.count(F.lit(1)), F.sum("contaminated_ngrams"))
-        .collect()
-    )
-    b = pii.pii_report(docs).agg(F.sum("pii_total"), F.count(F.lit(1))).collect()
-    c = (
-        boilerplate.remove_common_blocks(docs, block_tokens=16, min_doc_freq=5)
-        .agg(F.sum("n_removed"), F.sum(F.length("clean_text")))
-        .collect()
-    )
-    return a + b + c
-
-
-def q_chunk_pack(spark: SparkSession):
-    """Context-window chunking (32-token windows, overlap 4; zero-shuffle
-    generate) + packing attribution (per-source window)."""
-    from jsonschema_spark.operators import chunk
-
-    docs = load_table(spark, SF_DIR, "documents")
-    a = (
-        chunk.chunk_documents(docs, chunk_tokens=32, overlap=4)
-        .agg(F.count(F.lit(1)), F.sum("n_tokens"))
-        .collect()
-    )
-    b = (
-        chunk.pack_plan(docs, budget=2000, weight_col="n_chars")
-        .agg(F.max("pack_last"), F.sum("n_packs"))
-        .collect()
-    )
-    return a + b
-
-
-def q_mixture_sample(spark: SparkSession):
-    """Temperature corpus mixing: alpha=0.5 plan over sources + md5-hash
-    membership at each stratum's rate (one tiny groupBy + broadcast join +
-    row-local filter)."""
-    from jsonschema_spark.operators.sampling import mixture_sample
-
-    docs = load_table(spark, SF_DIR, "documents")
-    s = mixture_sample(docs, "doc_id", "source", 120_000, weight_col="n_chars")
-    return s.agg(F.count(F.lit(1)), F.sum("n_chars")).collect()
-
-
-def q_fd_report(spark: SparkSession):
-    """Functional-dependency report: two FDs over lineitem in ONE scan
-    (stacked inline generator) + two narrow hash aggregates; shuffle
-    bounded by distinct (fd, det, dep) triples."""
-    from jsonschema_spark.operators.fd import fd_report
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    return fd_report(
-        li,
-        {
-            "partkey_suppkey": ("l_partkey", "l_suppkey"),
-            "orderline_qty": (("l_orderkey", "l_linenumber"), "l_quantity"),
-        },
-    ).collect()
-
-
-def q_sequence_profile(spark: SparkSession):
-    """Per-key sequence checks over events: two orderings sharing ONE hash
-    partitioning on the key (one exchange, two sorts), exact BIGINT
-    microsecond gaps, final narrow rollup."""
-    from jsonschema_spark.operators.sequence import sequence_report
-
-    ev = load_table(spark, SF_DIR, "events")
-    return sequence_report(ev, "user_id", "ts", "event_id", max_gap_s=216000.0).collect()
-
-
-def q_sessionize(spark: SparkSession):
-    """Gap sessionization of events (8h gap): native session_window agg
-    — one shuffle on the key; index/idle windows run over per-SESSION
-    rows only."""
-    from jsonschema_spark.operators.temporal import sessionize
-
-    ev = load_table(spark, SF_DIR, "events")
-    s = sessionize(ev, "user_id", "ts", gap_s=28800.0, id_col="event_id",
-                   value_col="value")
-    return s.agg(F.count(F.lit(1)), F.sum("n_events")).collect()
-
-
-def q_asof_attribution(spark: SparkSession):
-    """Backward as-of join (purchase -> latest click per user): union-tag
-    + running last(ignorenulls) — ONE exchange, zero joins in the plan."""
-    from jsonschema_spark.operators.temporal import asof_join
-
-    ev = load_table(spark, SF_DIR, "events")
-    p = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts")
-    c = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    out = asof_join(p, c, "user_id", "ts", right_cols=["event_id"],
-                    dedup_tie_col="event_id")
-    return out.agg(
-        F.count(F.lit(1)), F.count("matched_event_id"),
-        F.max("matched_latency_us"),
-    ).collect()
-
-
-def q_clips_augment(spark: SparkSession):
-    """Augmentation funnel over 10k clips: waveform time masking (ZERO
-    Python — codegen'd md5_60 spans + JVM binary surgery) followed by 1.1x
-    speed perturbation (one Arrow hop). Reports total output bytes so the
-    whole rewrite chain materializes."""
-    from jsonschema_spark.operators.augment import speed_perturb, time_mask
-
-    # deterministic half of the table (a limit() would gather to one
-    # partition; the hash filter keeps the scan parallel)
-    clips = spark.read.parquet(_CLIPS_PATH).filter(
-        F.xxhash64("clip_id") % 2 == 0
-    )
-    masked = time_mask(clips, n_masks=2, mask_ms=100)
-    sp = speed_perturb(masked, 11, 10)
-    return sp.select(
-        F.count("*").alias("n"),
-        F.sum(F.length("bytes")).alias("out_bytes"),
-        F.sum(F.col("perturbed").cast("long")).alias("n_perturbed"),
-    ).collect()
-
-
-def q_join_guard(spark: SparkSession):
-    """Pre-flight join sizing over events: the explosion report for the
-    event_type self-join + the user_id hot-key shortlist — two key
-    profiles and profile-level joins, never a row-level join."""
-    from jsonschema_spark.operators.joincard import (
-        join_cardinality_report,
-        join_hot_keys,
-    )
-
-    ev = load_table(spark, SF_DIR, "events")
-    rep = join_cardinality_report(ev, ev, "event_type", "event_type").collect()
-    ev2 = load_table(spark, SF_DIR, "events")
-    hot = join_hot_keys(ev2, ev2, "user_id", "user_id", k=10).collect()
-    return rep, hot
-
-
-def q_model_eval(spark: SparkSession):
-    """Filter-model evaluation over sf documents: binned ROC-AUC (histogram
-    rank sums) + expected calibration error (narrow groupBy(bin)) on the
-    expression-only quality model's scores."""
-    import __spark_entry__ as E
-
-    auc = E._q_model_auc_documents(spark, SF_DIR).collect()
-    ece = E._q_model_ece_documents(spark, SF_DIR).collect()
-    return auc, ece
-
-
-def q_clips_vorbis_decode(spark: SparkSession):
-    """REAL Vorbis I sample decode + SNR invariant over the materialized
-    decode-ledger corpus (round 4): codebook Huffman/VQ, floor-1 curve,
-    type-2 residues, IMDCT + window switching, batch-CRC'd Ogg layer —
-    one Arrow hop; reports pass/fail + SNR-gate counts."""
-    from jsonschema_spark.functions.vorbis import audio_vorbis_decode_profile
-    from jsonschema_spark.sources.clips import (
-        VORBIS_DEC_SNR_GATE_DB,
-        materialized_vorbis_decode_clips,
-    )
-
-    clips, _ = materialized_vorbis_decode_clips(spark, _VORBISDEC_BENCH_N)
-    p = clips.select(
-        audio_vorbis_decode_profile(
-            "bytes", "clip_id", "sr_hz", "dur_ms"
-        ).alias("p")
-    )
-    return p.select(
-        F.count("*").alias("n"),
-        F.sum(F.col("p.ok").cast("long")).alias("n_ok"),
-        F.sum(
-            (F.col("p.snr_db") >= VORBIS_DEC_SNR_GATE_DB).cast("long")
-        ).alias("n_snr_ok"),
-    ).collect()
-
-
-def q_clips_bandwidth(spark: SparkSession):
-    """Bandwidth/upsample consistency over half the clips table: decode ->
-    zero-crossing count in one Arrow hop -> JVM gate booleans; reports the
-    flagged fractions (the deterministic hash filter keeps the payload
-    scan parallel — a limit() would collapse it to one partition)."""
-    from jsonschema_spark.functions.audio import audio_bandwidth, bandwidth_gates
-
-    clips = spark.read.parquet(_CLIPS_PATH).filter(
-        F.xxhash64("clip_id") % 2 == 1
-    )
-    b = clips.select(
-        "sr_hz", audio_bandwidth("bytes", "sr_hz").alias("bw")
-    )
-    g = bandwidth_gates(F.col("bw"), "sr_hz")
-    return b.select(
-        F.count("*").alias("n"),
-        F.sum(g["upsample_suspect"].cast("long")).alias("n_upsample"),
-        F.sum(g["nyquist_crowded"].cast("long")).alias("n_crowded"),
-    ).collect()
-
-
-def q_suggest(spark: SparkSession):
-    """Constraint suggestion over orders: one wide aggregate + one stacked
-    distinct pass drafting the table's check suite (operators/suggest)."""
-    from jsonschema_spark.operators.suggest import column_suggestions
-
-    orders = load_table(spark, SF_DIR, "orders")
-    return column_suggestions(
-        orders,
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-         "o_orderpriority"],
-    ).collect()
-
-
-# ---- round-5 structural-walker bench rows (VERDICT r4 item 5):
-# the five r4 walkers + the r5 MP3 side-info tier, each over its own
-# materialized ledger corpus at bench scale — scan -> one Arrow hop ->
-# partial agg, zero shuffles (the pinned codec-tier plan shape).
-_ADTS_BENCH_N = int(os.environ.get("SPARK_GRAFT_ADTS", "10000"))
-_TAGS_BENCH_N = int(os.environ.get("SPARK_GRAFT_TAGS", "10000"))
-_H264_BENCH_N = int(os.environ.get("SPARK_GRAFT_H264", "4000"))
-_MP4_BENCH_N = int(os.environ.get("SPARK_GRAFT_MP4", "4000"))
-_WEBM_BENCH_N = int(os.environ.get("SPARK_GRAFT_WEBM", "4000"))
-_MP3SI_BENCH_N = int(os.environ.get("SPARK_GRAFT_MP3SI", "10000"))
-
-
-def q_clips_aac_adts(spark: SparkSession):
-    """ADTS frame walk (functions/aac.py): header discipline, exact
-    next-frame positioning, parameter constancy, CRC presence — one
-    Arrow hop, O(frames) per clip."""
-    from jsonschema_spark.functions.aac import audio_adts_profile
-    from jsonschema_spark.sources.clips import materialized_adts_clips
-
-    clips, _ = materialized_adts_clips(spark, _ADTS_BENCH_N)
-    p = audio_adts_profile("bytes")
-    return (
-        clips.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_frames"),
-            F.sum("p.total_blocks"),
-            F.sum("p.duration_ms"),
-        )
-        .collect()
-    )
-
-
-def q_clips_tags(spark: SparkSession):
-    """Metadata-tag extraction (functions/tags.py): ID3v2 frame walk
-    (incl. terminated UTF-16 / ext-header layouts), Vorbis comments,
-    OpusTags — one Arrow hop."""
-    from jsonschema_spark.functions.tags import audio_tags_profile
-    from jsonschema_spark.sources.clips import materialized_tagged_clips
-
-    clips, _ = materialized_tagged_clips(spark, _TAGS_BENCH_N)
-    p = audio_tags_profile("bytes")
-    return (
-        clips.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_tags"),
-            F.count(F.col("p.title")),
-        )
-        .collect()
-    )
-
-
-def q_videos_h264_nals(spark: SparkSession):
-    """H.264 Annex B NAL walk (functions/h264.py): start-code scan,
-    EBSP->RBSP, SPS/PPS parse, slice-header frame counting — one
-    Arrow hop."""
-    from jsonschema_spark.functions.h264 import video_h264_profile
-    from jsonschema_spark.sources.videos import materialized_h264_videos
-
-    vids, _ = materialized_h264_videos(spark, _H264_BENCH_N)
-    p = video_h264_profile("bytes")
-    return (
-        vids.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_nals"),
-            F.sum("p.n_frames"),
-        )
-        .collect()
-    )
-
-
-def q_videos_mp4_structure(spark: SparkSession):
-    """ISO-BMFF box walk (functions/mp4.py): tiling, moov/stbl sample
-    tables, avcC cross-checks — one Arrow hop."""
-    from jsonschema_spark.functions.mp4 import video_mp4_profile
-    from jsonschema_spark.sources.videos import materialized_mp4_videos
-
-    vids, _ = materialized_mp4_videos(spark, _MP4_BENCH_N)
-    p = video_mp4_profile("bytes")
-    return (
-        vids.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.video_samples"),
-            F.sum("p.duration_ms"),
-        )
-        .collect()
-    )
-
-
-def q_videos_webm_structure(spark: SparkSession):
-    """WebM/EBML walk (functions/webm.py): vint discipline, track
-    parse, SimpleBlock lacing tables, streamed unknown-size clusters —
-    one Arrow hop."""
-    from jsonschema_spark.functions.webm import video_webm_profile
-    from jsonschema_spark.sources.videos import materialized_webm_videos
-
-    vids, _ = materialized_webm_videos(spark, _WEBM_BENCH_N)
-    p = video_webm_profile("bytes")
-    return (
-        vids.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.video_blocks"),
-            F.sum("p.audio_blocks"),
-        )
-        .collect()
-    )
-
-
-def q_clips_mp3_sideinfo(spark: SparkSession):
-    """MP3 Layer III side-info + bit-reservoir walk
-    (functions/mp3_sideinfo.py): per-granule bit parse and
-    main_data_begin back-pointer discipline — one Arrow hop."""
-    from jsonschema_spark.functions.mp3_sideinfo import (
-        audio_mp3_sideinfo_profile,
-    )
-    from jsonschema_spark.sources.clips import materialized_mp3si_clips
-
-    clips, _ = materialized_mp3si_clips(spark, _MP3SI_BENCH_N)
-    p = audio_mp3_sideinfo_profile("bytes")
-    return (
-        clips.select(p.alias("p"))
-        .agg(
-            F.sum(F.col("p.ok").cast("long")),
-            F.sum("p.n_granules"),
-            F.sum("p.part23_bits"),
-            F.sum("p.max_mdb"),
-        )
-        .collect()
-    )
-
-
-QUERIES = {
-    "clips_validate": q_clips_validate,
-    "clips_uniqueness": q_clips_uniqueness,
-    "validate_orders": q_validate_orders,
-    "column_stats_lineitem": q_column_stats_lineitem,
-    "uniqueness_lineitem": q_uniqueness_lineitem,
-    "referential": q_referential,
-    "drift_ks": q_drift_ks,
-    "drift_ks_exact": q_drift_ks_exact,
-    "drift_chi2": q_drift_chi2,
-    "drift_report": q_drift_report,
-    "text_profile": q_text_profile,
-    "dedup_minhash": q_dedup_minhash,
-    "span_dedup": q_span_dedup,
-    "cosine_topk": q_cosine_topk,
-    "pq_adc": q_pq_adc,
-    "validate_part_logic": q_validate_part_logic,
-    "quantiles": q_quantiles,
-    "corpus_summary": q_corpus_summary,
-    "curate_documents": q_curate_documents,
-    "embedding_lsh": q_embedding_lsh,
-    "validate_jsonl": q_validate_jsonl,
-    "dedup_components": q_dedup_components,
-    "audio_dedup": q_audio_dedup,
-    "audio_quality": q_audio_quality,
-    "clips_loudness": q_clips_loudness,
-    "clips_pitch": q_clips_pitch,
-    "clips_stereo": q_clips_stereo,
-    "clips_tonality": q_clips_tonality,
-    "clips_snr": q_clips_snr,
-    "clips_dropouts": q_clips_dropouts,
-    "clips_fbank": q_clips_fbank,
-    "clips_train_tensors": q_clips_train_tensors,
-    "clips_mp3_walk": q_clips_mp3_walk,
-    "clips_ogg_walk": q_clips_ogg_walk,
-    "clips_opus_packets": q_clips_opus_packets,
-    "images_jpeg_progressive": q_images_jpeg_progressive,
-    "clips_segments": q_clips_segments,
-    "clips_segment_decoded": q_clips_segment_decoded,
-    "validate_segments": q_validate_segments,
-    "infer_schema": q_infer_schema,
-    "reconcile": q_reconcile,
-    "sample_token_budget": q_sample_token_budget,
-    "clips_normalize": q_clips_normalize,
-    "hygiene_suite": q_hygiene_suite,
-    "chunk_pack": q_chunk_pack,
-    "mixture_sample": q_mixture_sample,
-    "clips_augment": q_clips_augment,
-    "fd_report": q_fd_report,
-    "sequence_profile": q_sequence_profile,
-    "sessionize": q_sessionize,
-    "asof_attribution": q_asof_attribution,
-    "join_guard": q_join_guard,
-    "model_eval": q_model_eval,
-    "clips_vorbis_decode": q_clips_vorbis_decode,
-    "clips_aac_adts": q_clips_aac_adts,
-    "clips_tags": q_clips_tags,
-    "videos_h264_nals": q_videos_h264_nals,
-    "videos_mp4_structure": q_videos_mp4_structure,
-    "videos_webm_structure": q_videos_webm_structure,
-    "clips_mp3_sideinfo": q_clips_mp3_sideinfo,
-    "clips_bandwidth": q_clips_bandwidth,
-    "clips_transcode": q_clips_transcode,
-    "suggest": q_suggest,
-}
-
-
-R1_SUBSET = [
-    "clips_uniqueness", "clips_validate", "column_stats_lineitem",
-    "corpus_summary", "cosine_topk", "curate_documents",
-    "dedup_minhash", "drift_chi2", "drift_ks", "embedding_lsh",
-    "quantiles", "referential", "text_profile",
-    "uniqueness_lineitem", "validate_orders", "validate_part_logic",
-]
-
-
 def main():
-    # --quick: the r1-subset only (the stable cross-round yardstick) —
-    # cheap to re-run in a quiet window before round close (VERDICT r3
-    # item 6); emits the same one-line JSON with "quick": true
+    # --quick: the r1-subset only (the stable cross-round yardstick);
+    # emits the same one-line JSON with "quick": true
     quick = "--quick" in sys.argv[1:]
+    names = R1_SUBSET if quick else [*ROWS, *BESPOKE]
     spark = build_spark()
     spark.sparkContext.setLogLevel("ERROR")
     # JVM/codegen warm-up outside the timed region
     spark.range(1000).selectExpr("sum(id)").collect()
-    materialize_clips(spark)
-    from jsonschema_spark.sources import jsonl as J
-    from jsonschema_spark.sources.clips import materialized_near_dup_clips
-    J.materialized_jsonl(_JSONL_BENCH_N)  # untimed corpus setup
-    materialized_near_dup_clips(spark, _NEARDUP_BENCH_N)  # untimed
-    from jsonschema_spark.sources.clips import materialized_quality_clips
-    materialized_quality_clips(spark, _QUALITY_BENCH_N)  # untimed
+    reg = queries()
 
-    # three passes, keep the per-query minimum: the sandbox VM shows heavy
-    # run-to-run CPU-steal variance (identical scans measured 2s and 52s
-    # back-to-back) and the min is the honest capability
+    def build(name):
+        qs, n = ROWS[name]
+        args = (spark, SF_DIR) if n is None else (spark, SF_DIR, n)
+        return [reg[q](*args) for q in ((qs,) if isinstance(qs, str) else qs)]
+
+    # untimed setup: building each row's DataFrames materializes its corpora
+    for name in names:
+        if name in ROWS:
+            build(name)
+
+    # keep the per-row minimum over the passes: the sandbox VM shows heavy
+    # run-to-run CPU-steal variance and the min is the honest capability
     timings: dict[str, float] = {}
-    bench_queries = (
-        {k: QUERIES[k] for k in R1_SUBSET} if quick else QUERIES
-    )
-    for _pass in range(int(os.environ.get("SPARK_GRAFT_PASSES", "3"))):
-        for name, fn in bench_queries.items():
+    for _pass in range(PASSES):
+        for name in names:
             t0 = time.perf_counter()
-            fn(spark)
+            if name in ROWS:
+                for df in build(name):
+                    _drain(df)
+            else:
+                BESPOKE[name](spark)
             dt = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, dt), dt)
 
-    total = round(sum(timings.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # the 16 queries benchmarked since round 1 — tracked as their own
-    # subtotal so round-over-round regression detection stays one
-    # subtraction (judge r2 item 8)
-    r1_subset = R1_SUBSET
     out = {
         "metric": "total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "clips_per_sec": round(CLIPS_N / timings["clips_validate"], 1),
         "clips_n": CLIPS_N,
         "cpus": CPUS,
-        "r1_subset_total": round(
-            sum(timings[q] for q in r1_subset if q in timings), 3
-        ),
-        "passes": int(os.environ.get("SPARK_GRAFT_PASSES", "3")),
+        # the 16 rows benchmarked since round 1, as their own subtotal
+        "r1_subset_total": round(sum(timings[q] for q in R1_SUBSET), 3),
+        "passes": PASSES,
     }
     if quick:
         out["quick"] = True

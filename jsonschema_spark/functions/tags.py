@@ -13,8 +13,13 @@ One sniff routes each payload:
   offsets only — r4 judge finding); extended headers skipped with
   version-correct size semantics; the unsynchronisation flag is
   rejected loudly ("unsync_unsupported") rather than misparsed;
-  padding tolerated; TIT2/TPE1/TALB extracted, total frame count
-  reported).
+  per-frame format flags read: compressed, encrypted and (v2.4)
+  per-frame-unsynchronised frames are rejected loudly
+  ("frame_compression_unsupported", "frame_encryption_unsupported",
+  "frame_unsync_unsupported"), the grouping byte and the v2.4
+  data-length indicator are skipped ("bad_frame_prefix" when they do
+  not fit in the frame); padding tolerated; TIT2/TPE1/TALB extracted,
+  total frame count reported).
 - Ogg -> packet 1 of the stream: Vorbis comment header (\\x03vorbis) or
   OpusTags magic, then the shared vendor + "KEY=value" list layout
   (little-endian lengths).
@@ -187,9 +192,22 @@ def parse_id3v2(raw: bytes) -> dict:
         if body0 + fsize > end:
             raise ValueError("frame_overrun")
         out["n_frames"] += 1
+        # format flags: which per-frame data precedes the body
+        fmt = raw[pos + 9]
+        if fmt & (0x08 if ver == 4 else 0x80):
+            raise ValueError("frame_compression_unsupported")
+        if fmt & (0x04 if ver == 4 else 0x40):
+            raise ValueError("frame_encryption_unsupported")
+        if ver == 4 and fmt & 0x02:
+            raise ValueError("frame_unsync_unsupported")
+        # grouping identity byte, then (v2.4) the 4-byte data-length indicator
+        prefix = 1 if fmt & (0x40 if ver == 4 else 0x20) else 0
+        prefix += 4 if ver == 4 and fmt & 0x01 else 0
+        if prefix > fsize:
+            raise ValueError("bad_frame_prefix")
         key = _TEXT_KEYS.get(fid.decode("latin-1"))
         if key and out[key] is None:  # duplicate frames: first one wins
-            out[key] = _decode_text(raw[body0 : body0 + fsize])
+            out[key] = _decode_text(raw[body0 + prefix : body0 + fsize])
         pos = body0 + fsize
     return out
 

@@ -5,6 +5,7 @@ import pytest
 
 from jsonschema_spark.functions.mp3 import encode_mp3_stream
 from jsonschema_spark.functions.tags import (
+    _syncsafe_bytes,
     build_comment_fields,
     build_id3v2,
     parse_audio_tags,
@@ -202,3 +203,55 @@ def test_id3v22_compression_bit_rejected():
     t = parse_audio_tags(bytes(tag) + _mp3())
     assert t["ok"] is False
     assert t["error"] == "v22_compression_unsupported"
+
+
+def _first_frame_patched(version, fmt, prefix=b"", title="Title"):
+    """ID3v2.3/2.4 tag whose first frame (TIT2) carries format-flag byte
+    ``fmt`` and ``prefix`` ahead of its text body; the frame and tag
+    sizes are rewritten to match."""
+    tag = build_id3v2(title, "A", None, version, 3)
+    frames = tag[10:]
+    fsize = (syncsafe(frames[4:8]) if version == 4
+             else int.from_bytes(frames[4:8], "big"))
+    body = prefix + frames[10 : 10 + fsize]
+    size = (_syncsafe_bytes(len(body)) if version == 4
+            else len(body).to_bytes(4, "big"))
+    frames = frames[:4] + size + bytes((0, fmt)) + body + frames[10 + fsize :]
+    return tag[:6] + _syncsafe_bytes(len(frames)) + frames + _mp3()
+
+
+def test_v24_data_length_indicator_skipped():
+    # the DLI is syncsafe "\x00\x00\x00\x06": read as the encoding byte,
+    # its first byte would make the title latin-1 garbage
+    dli = _syncsafe_bytes(len("Title") + 1)
+    t = parse_audio_tags(_first_frame_patched(4, 0x01, dli))
+    assert t["ok"], t["error"]
+    assert t["title"] == "Title" and t["artist"] == "A" and t["n_tags"] == 2
+
+
+@pytest.mark.parametrize("version,fmt,prefix", [
+    (4, 0x41, b"\x07\x00\x00\x00\x06"),  # grouping byte, then DLI
+    (3, 0x20, b"\x07"),  # v2.3 grouping byte
+])
+def test_grouping_byte_skipped(version, fmt, prefix):
+    t = parse_audio_tags(_first_frame_patched(version, fmt, prefix))
+    assert t["ok"], t["error"]
+    assert t["title"] == "Title"
+
+
+@pytest.mark.parametrize("version,fmt,error", [
+    (3, 0x80, "frame_compression_unsupported"),
+    (4, 0x08, "frame_compression_unsupported"),
+    (3, 0x40, "frame_encryption_unsupported"),
+    (4, 0x04, "frame_encryption_unsupported"),
+    (4, 0x02, "frame_unsync_unsupported"),
+])
+def test_frame_format_flags_rejected_loudly(version, fmt, error):
+    t = parse_audio_tags(_first_frame_patched(version, fmt))
+    assert t["ok"] is False and t["error"] == error
+
+
+def test_frame_prefix_must_fit_in_frame():
+    # an empty UTF-8 title is a 1-byte body: no room for a 4-byte DLI
+    t = parse_audio_tags(_first_frame_patched(4, 0x01, title=""))
+    assert t["ok"] is False and t["error"] == "bad_frame_prefix"

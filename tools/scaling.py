@@ -1,5 +1,6 @@
 """Two-parallelism scaling evidence: local[1] against local[nproc] on the
-same input, nproc being the cores this process may run on.
+same input, nproc and the driver heap sized as bench.py sizes them (the
+cores this process may run on, or $SPARK_GRAFT_CPUS; 30% of physical RAM).
 
 Runs the north-star job (full clips validation incl. audio decode) and a
 JVM-only aggregate at both parallelism levels, several passes each, and
@@ -31,6 +32,8 @@ from jsonschema_spark.operators.validate import validate  # noqa: E402
 from jsonschema_spark.plans.compile import CompileOptions  # noqa: E402
 from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, synth_clips  # noqa: E402
 
+from bench import CPUS, HEAP_GB  # noqa: E402
+
 JVM_ROWS = 20_000_000
 
 JVM_SCHEMA = {
@@ -58,9 +61,7 @@ def jvm_table(spark: SparkSession, cpus: int):
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 60000
 PASSES = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 PATH = f"/tmp/spark_graft_clips_{N}.parquet"
-LO, HI = 1, len(os.sched_getaffinity(0))
-# driver heap: 30% of physical memory, as the benchmark sizes it
-HEAP_GB = max(1, int(0.3 * os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30))
+LO, HI = 1, CPUS
 
 
 def session(cpus: int) -> SparkSession:
