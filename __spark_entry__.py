@@ -1057,15 +1057,7 @@ _JSONL_N = 1300
 def _q_validate_jsonl_docs(spark: SparkSession, sf_dir: str, n: int = _JSONL_N) -> DataFrame:
     from jsonschema_spark.sources import jsonl as J
 
-    path = J.materialized_jsonl(n)
-    df = J.read_jsonl(spark, path)
-    frame = df.select(J.doc_id_col().alias("doc_id"), "doc", "raw")
-    viol = (
-        validate(frame, J.JSONL_DOC_SCHEMA)
-        .violations(["doc_id"])
-        .select("doc_id", "keyword_path", "keyword")
-    )
-    return viol.unionByName(J.parse_failures(df, J.doc_id_col()))
+    return J.violation_rows(J.read_jsonl(spark, J.materialized_jsonl(n)), J.JSONL_DOC_SCHEMA)
 
 
 def _q_validate_jsonl_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1076,15 +1068,9 @@ def _q_validate_jsonl_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     decompress -> try_parse_json -> keyword algebra end-to-end."""
     from jsonschema_spark.sources import jsonl as J
 
-    path = J.materialized_jsonl_gz(_JSONL_N)
-    df = J.read_jsonl(spark, path)
-    frame = df.select(J.doc_id_col().alias("doc_id"), "doc", "raw")
-    viol = (
-        validate(frame, J.JSONL_DOC_SCHEMA)
-        .violations(["doc_id"])
-        .select("doc_id", "keyword_path", "keyword")
+    return J.violation_rows(
+        J.read_jsonl(spark, J.materialized_jsonl_gz(_JSONL_N)), J.JSONL_DOC_SCHEMA
     )
-    return viol.unionByName(J.parse_failures(df, J.doc_id_col()))
 
 
 def _q_validate_orders_orc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,23 +42,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from jsonschema_spark.operators.validate import validate  # noqa: E402
+# validate stays importable from here: perfbench's traced run wraps
+# jobs.validate_jsonl_job.validate by name
+from jsonschema_spark.operators.validate import validate  # noqa: E402,F401
 from jsonschema_spark.sources import jsonl as J  # noqa: E402
-
-
-def violation_rows(df: DataFrame, schema: dict) -> DataFrame:
-    """(doc_id, keyword_path, keyword) violations incl. parse failures,
-    from a (raw, doc) frame produced by ``sources.jsonl.read_jsonl``."""
-    frame = df.select(J.doc_id_col().alias("doc_id"), "doc", "raw")
-    viol = (
-        validate(frame, schema)
-        .violations(["doc_id"])
-        .select("doc_id", "keyword_path", "keyword")
-    )
-    return viol.unionByName(J.parse_failures(df, J.doc_id_col()))
+from jsonschema_spark.sources.jsonl import violation_rows  # noqa: E402
 
 
 def main(argv=None) -> int:

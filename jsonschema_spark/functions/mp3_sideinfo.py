@@ -37,8 +37,10 @@ Validation (exact error@frame strings):
   main data cannot END within this frame's region (main data may
   point BACK via the reservoir but never forward).
 - part2_overflow@k — a granule-channel's part2_3_length is smaller
-  than the scalefactor bits its scalefac_compress (and scfsi sharing)
-  declares (MPEG-1 only; the LSF slen scheme is not checked).
+  than the scalefactor bits its scalefac_compress declares: MPEG-1
+  with scfsi sharing (11172-3 §2.4.2.7), MPEG-2/2.5 LSF with the
+  slen1..4 scheme and its intensity-stereo variant (13818-3
+  §2.4.3.2).
 
 The stricter encoder-side non-overlap invariant (each frame's data
 consumed exactly once) is deliberately NOT enforced: stuffing gaps
@@ -200,6 +202,52 @@ def part2_bits_mpeg1(g: dict, granule_idx: int, scfsi: int) -> int:
     return 11 * s1 + 10 * s2
 
 
+# ISO 13818-3 §2.4.3.2 (LSF): scalefactor counts per slen1..4 group, by
+# table row (chosen from scalefac_compress) and block shape (long,
+# short, mixed). Every row holds 21 long / 36 short / 33 mixed values.
+LSF_NR_OF_SFB = (
+    ((6, 5, 5, 5), (9, 9, 9, 9), (6, 9, 9, 9)),
+    ((6, 5, 7, 3), (9, 9, 12, 6), (6, 9, 12, 6)),
+    ((11, 10, 0, 0), (18, 18, 0, 0), (15, 18, 0, 0)),
+    ((7, 7, 7, 0), (12, 12, 12, 0), (6, 15, 12, 0)),
+    ((6, 6, 6, 3), (12, 9, 9, 6), (6, 12, 9, 6)),
+    ((8, 8, 5, 0), (15, 12, 9, 0), (6, 18, 9, 0)),
+)
+
+
+def lsf_slen(scalefac_compress: int, intensity_right: bool) -> tuple[int, tuple]:
+    """(table row, (slen1..4)) of a 9-bit LSF scalefac_compress. The
+    right channel of an intensity-stereo frame reads it halved, through
+    rows 3-5 (13818-3 §2.4.3.2)."""
+    sfc = scalefac_compress
+    if intensity_right:
+        sfc >>= 1
+        if sfc < 180:
+            return 3, (sfc // 36, (sfc % 36) // 6, sfc % 6, 0)
+        if sfc < 244:
+            sfc -= 180
+            return 4, ((sfc % 64) >> 4, (sfc % 16) >> 2, sfc % 4, 0)
+        sfc -= 244
+        return 5, (sfc // 3, sfc % 3, 0, 0)
+    if sfc < 400:
+        return 0, ((sfc >> 4) // 5, (sfc >> 4) % 5, (sfc & 15) >> 2, sfc & 3)
+    if sfc < 500:
+        sfc -= 400
+        return 1, ((sfc >> 2) // 5, (sfc >> 2) % 5, sfc & 3, 0)
+    sfc -= 500
+    return 2, (sfc // 3, sfc % 3, 0, 0)
+
+
+def part2_bits_lsf(g: dict, intensity_right: bool) -> int:
+    """Scalefactor (part2) bit count for one MPEG-2/2.5 granule-channel:
+    the row's per-group counts times slen1..4, in the long, short or
+    mixed column of the block shape."""
+    row, slen = lsf_slen(g["scalefac_compress"], intensity_right)
+    short = g["ws"] == 1 and g["block_type"] == 2
+    col = (2 if g["mixed"] else 1) if short else 0
+    return sum(n * w for n, w in zip(LSF_NR_OF_SFB[row][col], slen))
+
+
 SIDEINFO = Walker(
     "audio_mp3_sideinfo_profile",
     [
@@ -268,6 +316,8 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
         if pos + ln > end:
             return SIDEINFO.fail(f"truncated@{k}")
         mono = mode == 3
+        # joint stereo with the intensity bit of mode_extension
+        intensity = mode == 1 and bool(h3 & 0x10)
         side_len = _side_info_len(version_id, mono)
         hdr = 4 + (2 if protected else 0)
         if ln < hdr + side_len:
@@ -286,16 +336,17 @@ def parse_mp3_sideinfo(raw: bytes) -> dict:
                 return SIDEINFO.fail(f"bad_table_select@{k}")
             if g["big_values"] > _MAX_BIG_VALUES:
                 return SIDEINFO.fail(f"big_values_overflow@{k}")
+            # part2 accounting: the scalefactor bits implied by
+            # scalefac_compress/block shape (and scfsi or intensity
+            # stereo) must FIT inside part2_3_length
             if version_id == 3:
-                # part2 accounting: the scalefactor bits implied by
-                # scalefac_compress/block shape/scfsi must FIT inside
-                # part2_3_length (LSF uses a different slen scheme —
-                # not accounted; its side-info walk is still full)
                 p2 = part2_bits_mpeg1(
                     g, gi // nch_f, si["scfsi"][gi % nch_f]
                 )
-                if p2 > g["part23"]:
-                    return SIDEINFO.fail(f"part2_overflow@{k}")
+            else:
+                p2 = part2_bits_lsf(g, intensity and gi % nch_f == 1)
+            if p2 > g["part23"]:
+                return SIDEINFO.fail(f"part2_overflow@{k}")
             frame_bits += g["part23"]
             if g["block_type"] == 2:
                 short_blocks += 1
@@ -529,6 +580,10 @@ def encode_sideinfo_stream(
             g["part23"] = min(
                 4095, mins[f_i] + base + (1 if f_i < rem else 0)
             )
+            if version_id != 3 and part2_bits_lsf(g, False) > g["part23"]:
+                # LSF: a share too small for its scalefactors carries
+                # none (frames are written without intensity stereo)
+                g["scalefac_compress"] = 0
         if plant_here:
             if plant[0] == "bad_block_type":
                 grs[0]["ws"] = 1

@@ -28,13 +28,9 @@ from typing import Mapping, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.validate import ValidationResult
-from jsonschema_spark.plans.compile import CompileOptions, compile_schema
+from jsonschema_spark.operators.validate import ValidationResult, annotate
+from jsonschema_spark.plans.compile import VIOLATIONS_TYPE, CompileOptions, compile_schema
 from jsonschema_spark.schema import Schema
-
-_VIOLATIONS_TYPE = (
-    "array<struct<keyword_path:string,keyword:string,column:string,message:string>>"
-)
 
 
 def _parse(schema) -> Schema:
@@ -67,11 +63,13 @@ def validate_dispatch(
     if not schemas:
         raise ValueError("validate_dispatch: empty schema registry")
 
+    # one extraction prefix per schema keeps the projected names distinct
     compiled = {
-        k: compile_schema(_parse(s), df.schema, options) for k, s in schemas.items()
+        k: compile_schema(_parse(s), df.schema, options, extraction_prefix=f"__jss_{i}_")
+        for i, (k, s) in enumerate(schemas.items())
     }
 
-    empty = F.array().cast(_VIOLATIONS_TYPE)
+    empty = F.array().cast(VIOLATIONS_TYPE)
     if on_unregistered == "reject":
         fallback = F.array(
             F.struct(
@@ -87,15 +85,16 @@ def validate_dispatch(
         fallback = empty
 
     routed = None
+    extractions = []
     for value, comp in compiled.items():
         cond = F.col(discriminator) == F.lit(value)
         arr = comp.violations_array()
         routed = F.when(cond, arr) if routed is None else routed.when(cond, arr)
+        # a row pays only for its own schema's extractions
+        extractions += [e._replace(expr=F.when(cond, e.expr)) for e in comp.extractions]
     routed = routed.otherwise(fallback)
 
-    annotated = df.withColumn("_violations", routed).withColumn(
-        "_valid", F.size("_violations") == 0
-    )
+    annotated = annotate(df, extractions, routed)
     envelope = compile_schema(
         _parse({"$id": envelope_id}), df.schema, options
     )

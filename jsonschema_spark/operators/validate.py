@@ -25,6 +25,7 @@ from jsonschema_spark.functions.grid import grid_round
 from jsonschema_spark.plans.compile import (
     CompiledSchema,
     CompileOptions,
+    Extraction,
     compile_schema,
 )
 from jsonschema_spark.resolve import ResolveConfig
@@ -584,10 +585,27 @@ def validate(
     elif isinstance(schema, dict):
         schema = Schema.from_value(schema)
     compiled = compile_schema(schema, df.schema, options, resolve_config)
-    annotated = df.withColumn("_violations", compiled.violations_array()).withColumn(
+    annotated = annotate(df, compiled.extractions, compiled.violations_array())
+    return ValidationResult(annotated=annotated, compiled=compiled)
+
+
+def annotate(
+    df: DataFrame, extractions: Sequence[Extraction], violations: Column
+) -> DataFrame:
+    """``df`` + ``_violations`` + ``_valid``, with the compiled checks'
+    variant extractions projected below them, one ``select`` per depth,
+    and dropped above. Each extraction is read by several checks, so
+    Catalyst keeps its projection instead of inlining the extraction into
+    every check (a projection whose non-cheap outputs are referenced more
+    than once does not collapse)."""
+    for depth in sorted({e.depth for e in extractions}):
+        df = df.select(
+            "*", *[e.expr.alias(e.name) for e in extractions if e.depth == depth]
+        )
+    out = df.withColumn("_violations", violations).withColumn(
         "_valid", F.size("_violations") == 0
     )
-    return ValidationResult(annotated=annotated, compiled=compiled)
+    return out.drop(*[e.name for e in extractions]) if extractions else out
 
 
 def violations(

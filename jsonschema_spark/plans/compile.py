@@ -33,7 +33,7 @@ import json
 import re
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Any, Callable, Optional
+from typing import Any, Callable, NamedTuple, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -121,10 +121,38 @@ _METADATA_KEYWORDS = (
 )
 
 
+VIOLATIONS_TYPE = (
+    "array<struct<keyword_path:string,keyword:string,column:string,message:string>>"
+)
+
+
+class Extraction(NamedTuple):
+    """A variant view the checks read as ``F.col(name)``: computed once per
+    row in a projection below them. ``depth`` orders the projections (a
+    view of a view sits one level above it)."""
+
+    name: str
+    expr: Column
+    depth: int
+
+
+# variant views by extraction kind (keyword gates and typed values)
+_VARIANT_VIEWS: dict[str, Callable[[Column], Column]] = {
+    "sov": F.schema_of_variant,
+    "double": lambda v: F.try_variant_get(v, "$", "double"),
+    "string": lambda v: F.try_variant_get(v, "$", "string"),
+    "array": lambda v: F.try_variant_get(v, "$", "array<variant>"),
+    "map": lambda v: F.try_variant_get(v, "$", "map<string,variant>"),
+}
+
+
 @dataclass
 class CompiledSchema:
     checks: list[Check]
     schema: Schema  # post-inline, post-fold document
+    # variant views the checks reference by name; apply them with
+    # operators/validate.annotate, never evaluate the checks without them
+    extractions: list[Extraction] = field(default_factory=list)
 
     def metadata_report(self) -> list[dict]:
         """Annotation keywords carried through compile (schema.go:133-139 —
@@ -144,13 +172,6 @@ class CompiledSchema:
         Walk(self.schema, fn)
         return out
 
-    def valid(self) -> Column:
-        """Row validity: conjunction of all checks (for filters)."""
-        out = F.lit(True)
-        for c in self.checks:
-            out = out & c.ok
-        return out
-
     def violations_array(self) -> Column:
         """array<struct<keyword_path,keyword,column,message>> of failures.
 
@@ -159,9 +180,7 @@ class CompiledSchema:
         whole-stage codegen (interpreted eval), while when/array/concat stay
         inside it — measured ~1.8x faster on a 20M-row pure-JVM validation.
         """
-        empty = F.array().cast(
-            "array<struct<keyword_path:string,keyword:string,column:string,message:string>>"
-        )
+        empty = F.array().cast(VIOLATIONS_TYPE)
         if not self.checks:
             return empty
         entries = [
@@ -698,9 +717,35 @@ def _fmt_num(v: Any) -> str:
 
 
 class _Compiler:
-    def __init__(self, options: CompileOptions):
+    def __init__(self, options: CompileOptions, prefix: str):
         self.opts = options
         self.checks: list[Check] = []
+        self.prefix = prefix
+        self.extractions: list[Extraction] = []
+        self._named: dict[tuple[str, str], str] = {}  # (kind, instance) -> name
+        self._depth: dict[str, int] = {}
+
+    def _extract(self, kind: str, col: Column, build: Callable[[Column], Column]) -> Column:
+        """``build(col)`` as a column of its own, registered once per (kind,
+        instance). Only granular (non-lambda) checks call this: their
+        instance columns are rooted at real input columns or at earlier
+        extractions, so the view can be projected below the checks."""
+        instance = col._jc.toString()
+        key = (kind, instance)
+        name = self._named.get(key)
+        if name is None:
+            name = f"{self.prefix}{len(self.extractions)}"
+            depth = self._depth.get(instance, 0) + 1
+            self.extractions.append(Extraction(name, build(col), depth))
+            self._named[key] = name
+            self._depth[name] = depth
+        return F.col(name)
+
+    def _view(self, kind: str, col: Column, granular: bool) -> Column:
+        """A ``_VARIANT_VIEWS`` view of ``col``: an extraction column on
+        the granular path, the inline expression inside lambda scope."""
+        build = _VARIANT_VIEWS[kind]
+        return self._extract(kind, col, build) if granular else build(col)
 
     # -- check emission helpers --
 
@@ -781,7 +826,7 @@ class _Compiler:
 
         # VariantType: the value's JSON type is only known at runtime, so
         # type/enum/const and the type-gated keyword families evaluate via
-        # schema_of_variant + try_variant_get (see _variant_value_keywords).
+        # typed try_variant_get views (see _variant_value_keywords).
         # Object keywords route through a map<string,variant> view inside
         # _object_keywords; applicators below recurse on the variant as-is.
         if is_variant:
@@ -1151,8 +1196,9 @@ class _Compiler:
     # -- VariantType: runtime-typed JSON values (dynamic schema path) --
     #
     # A Variant's JSON type is only known per row, so keyword applicability
-    # gates become runtime predicates over schema_of_variant, and typed views
-    # are extracted with try_variant_get (NULL when the path/cast fails).
+    # gates become runtime predicates: object/array test their map/array
+    # view for NULL, scalars go through schema_of_variant; typed views are
+    # extracted with try_variant_get (NULL when the path/cast fails).
     # Variant is the one column kind where JSON null and ABSENT are truly
     # distinct: an absent property extracts to a Spark NULL variant (vacuous
     # everywhere, detected by required), while a present JSON null is a
@@ -1178,24 +1224,33 @@ class _Compiler:
             else:
                 collect(expr)
 
-        sov = F.schema_of_variant(col)
-        v_num = sov.rlike(self._V_NUM_SOV)
-        v_str = sov == "STRING"
-        v_bool = sov == "BOOLEAN"
-        v_null = sov == "VOID"
-        v_arr = sov.rlike("^ARRAY")
-        v_obj = sov.rlike("^OBJECT")
-        num = F.try_variant_get(col, "$", "double")
-        sval = F.try_variant_get(col, "$", "string")
-        arr = F.try_variant_get(col, "$", "array<variant>")
+        # Views are built on first use. Outside lambda scope each one is an
+        # extraction column shared by every check at this instance; object
+        # and array gates test the map/array view, so schema_of_variant
+        # (which walks the whole value) only runs for scalar type tests.
+        views: dict[str, Column] = {}
+
+        def view(kind: str) -> Column:
+            if kind not in views:
+                views[kind] = self._view(kind, col, granular)
+            return views[kind]
+
+        def gate(t: str) -> Column:
+            """Is the value of JSON type ``t`` (integer excluded)?"""
+            if t == "object":
+                return view("map").isNotNull()
+            if t == "array":
+                return view("array").isNotNull()
+            if t == "number":
+                return view("sov").rlike(self._V_NUM_SOV)
+            return view("sov") == {"string": "STRING", "boolean": "BOOLEAN", "null": "VOID"}[t]
 
         def type_pred(t: str) -> Column:
             if t == "integer":
-                return v_num & (num == F.floor(num))
-            return {
-                "number": v_num, "string": v_str, "boolean": v_bool,
-                "null": v_null, "array": v_arr, "object": v_obj,
-            }.get(t, F.lit(False))
+                return gate("number") & (view("double") == F.floor(view("double")))
+            if t in ("number", "string", "boolean", "null", "array", "object"):
+                return gate(t)
+            return F.lit(False)
 
         if s.type is not None:
             raw = F.lit(False)
@@ -1205,18 +1260,18 @@ class _Compiler:
 
         def member_eq(mv: Any) -> Column:
             if mv is None:
-                return v_null
+                return gate("null")
             if isinstance(mv, bool):
-                return v_bool & (
+                return gate("boolean") & (
                     F.try_variant_get(col, "$", "boolean") == F.lit(mv)
                 )
             if isinstance(mv, (int, float, Decimal)):
-                return v_num & (num == _num_lit(mv).cast("double"))
+                return gate("number") & (view("double") == _num_lit(mv).cast("double"))
             if isinstance(mv, str):
-                return v_str & (sval == F.lit(mv))
+                return gate("string") & (view("string") == F.lit(mv))
             # composite members: the string view of a variant is canonical
             # JSON (sorted keys, no spaces) — same form as _canon_json
-            return (v_arr | v_obj) & (sval == F.lit(_canon_json(mv)))
+            return (gate("array") | gate("object")) & (view("string") == F.lit(_canon_json(mv)))
 
         if s.const is not None:
             out("const", member_eq(s.const), f"{name} must equal the const value")
@@ -1227,6 +1282,9 @@ class _Compiler:
             out("enum", raw, f"{name} must be one of the enumerated values")
 
         # numeric (gated: inapplicable types pass)
+        if any(v is not None for v in (s.multiple_of, s.maximum, s.exclusive_maximum,
+                                       s.minimum, s.exclusive_minimum)):
+            v_num, num = gate("number"), view("double")
         if s.multiple_of is not None:
             m = s.multiple_of
             if isinstance(m, int):
@@ -1250,6 +1308,10 @@ class _Compiler:
                 f"{name} must be > {_fmt_num(s.exclusive_minimum)}")
 
         # string (gated)
+        if (s.max_length is not None or s.min_length is not None or s.pattern is not None
+                or (s.format is not None and self.opts.assert_formats)
+                or s.content_encoding is not None or s.content_schema is not None):
+            v_str, sval = gate("string"), view("string")
         if s.max_length is not None:
             out("maxLength", ~v_str | (F.length(sval) <= s.max_length),
                 f"{name} length must be <= {s.max_length}")
@@ -1263,6 +1325,10 @@ class _Compiler:
 
         # array (gated; elements recurse as variants)
         vt = T.VariantType()
+        if (s.max_items is not None or s.min_items is not None or s.unique_items
+                or s.prefix_items or s.items is not None or s.contains is not None
+                or s.unevaluated_items is not None):
+            v_arr, arr = gate("array"), view("array")
         if s.max_items is not None:
             out("maxItems", ~v_arr | (F.size(arr) <= s.max_items),
                 f"{name} must have <= {s.max_items} items")
@@ -1371,8 +1437,11 @@ class _Compiler:
         # cast is NULL for non-object variants, so object keywords pass
         # vacuously on them (JSON Schema applicability), and map values are
         # variants that recurse back through the variant path.
+        # Outside lambda scope the view and each property's value are
+        # extraction columns, shared with the variant type gate.
+        variant_view = granular and isinstance(dtype, T.VariantType)
         if isinstance(dtype, T.VariantType):
-            col = F.try_variant_get(col, "$", "map<string,variant>")
+            col = self._view("map", col, granular)
             dtype = T.MapType(T.StringType(), T.VariantType())
 
         def out(keyword: str, raw: Column, message: str, vacuous: bool = True) -> None:
@@ -1425,6 +1494,9 @@ class _Compiler:
                         continue  # property can never be present: vacuous
                     child_col = col.getField(key)
                     child_type = fields[key]
+                elif variant_view:
+                    child_col = self._extract(f"item:{key}", col, lambda m, k=key: m.getItem(k))
+                    child_type = dtype.valueType
                 elif is_map:
                     child_col = col.getItem(key)
                     child_type = dtype.valueType
@@ -1907,12 +1979,15 @@ def compile_schema(
     struct: T.StructType,
     options: Optional[CompileOptions] = None,
     resolve_config: Optional[ResolveConfig] = None,
+    extraction_prefix: str = "__jss_",
 ) -> CompiledSchema:
     """Compile ``schema`` (root object schema over the row) against the
     DataFrame schema ``struct`` into a flat list of boolean Column checks.
 
     The returned expressions reference columns by name (``F.col``); apply
-    them to any DataFrame with that schema (batch or streaming).
+    them to any DataFrame with that schema (batch or streaming) through
+    ``operators/validate.annotate``, which projects the variant
+    extractions (named ``<extraction_prefix><i>``) below the checks.
     """
     opts = options or CompileOptions()
     lowered = lower_dynamic_refs(schema, strict=opts.strict)
@@ -1923,7 +1998,7 @@ def compile_schema(
     resolved = resolve_dynamic_refs_post_inline(
         resolved, strict=opts.strict, max_depth=opts.max_ref_depth
     )
-    c = _Compiler(opts)
+    c = _Compiler(opts, extraction_prefix)
 
     # The row is the instance: a non-null struct. Bind object keywords at the
     # root against top-level columns.
@@ -1947,7 +2022,7 @@ def compile_schema(
                 ok=F.coalesce(pred, F.lit(False)),
             )
         )
-    return CompiledSchema(checks=c.checks, schema=resolved)
+    return CompiledSchema(checks=c.checks, schema=resolved, extractions=c.extractions)
 
 
 def _strip_defs(s: Schema) -> Schema:

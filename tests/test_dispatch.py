@@ -81,3 +81,30 @@ def test_single_scan_no_shuffle(spark, frame):
     assert "Union" not in plan
     assert "Exchange" not in plan
     assert "Python" not in plan
+
+
+def test_dispatch_over_variant_column(spark):
+    """Two schemas over a parse_json column, routed by a discriminator: the
+    extraction columns of both schemas coexist, and each routed slice's
+    violation rows equal a plain validate() of that slice."""
+    schemas = {
+        "a": {"properties": {"p": {"type": "object", "required": ["k"],
+                                   "properties": {"k": {"type": "integer", "minimum": 10}}}}},
+        "b": {"properties": {"p": {"type": "object", "required": ["m"],
+                                   "properties": {"k": {"type": "string", "pattern": "^x"}}}}},
+    }
+    rows = [
+        (1, "a", '{"k": 3}'), (2, "a", '{"k": 40}'), (3, "a", '{"m": 1}'),
+        (4, "a", '"s"'), (5, "b", '{"m": 1, "k": "xy"}'), (6, "b", '{"k": "y"}'),
+        (7, "b", '{"m": 2, "k": 5}'), (8, "b", "[1]"),
+    ]
+    df = spark.createDataFrame(rows, "id long, kind string, js string").select(
+        "id", "kind", F.parse_json("js").alias("p")
+    )
+    routed = validate_dispatch(df, schemas, "kind").violations(["id"])
+    assert routed.columns == ["id", "keyword_path", "keyword", "column", "message"]
+    for kind, schema in schemas.items():
+        part = df.where(F.col("kind") == kind)
+        mine = routed.join(part.select("id"), "id", "left_semi")
+        assert _v(mine) == _v(validate(part, schema).violations(["id"])), kind
+    assert len(_v(routed)) == 7

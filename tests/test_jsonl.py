@@ -11,7 +11,6 @@ import json
 
 from pyspark.sql import functions as F
 
-from jsonschema_spark.operators.validate import validate
 from jsonschema_spark.sources import jsonl as J
 
 
@@ -31,15 +30,8 @@ def test_synth_lines_deterministic_and_parseable():
 
 
 def _validated(spark, n):
-    path = J.materialized_jsonl(n)
-    df = J.read_jsonl(spark, path)
-    frame = df.select(J.doc_id_col().alias("doc_id"), "doc", "raw")
-    viol = (
-        validate(frame, J.JSONL_DOC_SCHEMA)
-        .violations(["doc_id"])
-        .select("doc_id", "keyword_path", "keyword")
-    )
-    return df, viol.unionByName(J.parse_failures(df, J.doc_id_col()))
+    df = J.read_jsonl(spark, J.materialized_jsonl(n))
+    return df, J.violation_rows(df, J.JSONL_DOC_SCHEMA)
 
 
 def test_planted_violation_counts(spark):
@@ -98,10 +90,9 @@ def test_jsonl_plan_is_python_free(spark):
 
 def test_jsonl_stream_matches_batch(spark, tmp_path):
     """JSONL ingestion under readStream.text: the same select (try_parse_json
-    -> variant) + the same compiled plan produce identical violations to the
-    batch path — raw-JSON validation works as a streaming source."""
-    from jsonschema_spark.streaming.validate import annotate_stream
-
+    -> variant) + the same violation-row function produce identical
+    violations to the batch path — raw-JSON validation works as a streaming
+    source."""
     n = 13 * 6
     src = tmp_path / "jsonl_src"
     src.mkdir()
@@ -117,17 +108,7 @@ def test_jsonl_stream_matches_batch(spark, tmp_path):
         F.col("value").alias("raw"),
         F.try_parse_json(F.col("value")).alias("doc"),
     )
-    frame = stream_raw.select(J.doc_id_col().alias("doc_id"), "doc", "raw")
-    ann = annotate_stream(frame, J.JSONL_DOC_SCHEMA)
-    viol = ann.select(
-        "doc_id", F.explode("_violations").alias("v"), "doc", "raw"
-    ).select(
-        "doc_id",
-        F.col("v.keyword_path").alias("keyword_path"),
-        F.col("v.keyword").alias("keyword"),
-    )
-    parse_rows = J.parse_failures(frame, J.doc_id_col())
-    out = viol.unionByName(parse_rows)
+    out = J.violation_rows(stream_raw, J.JSONL_DOC_SCHEMA)
     q = (
         out.writeStream.format("memory")
         .queryName("jsonl_stream")

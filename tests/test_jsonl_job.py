@@ -1,5 +1,5 @@
 """Job-level composition test for jobs/validate_jsonl_job.py: the CLI's
-violation_rows (keyword algebra UNION parse-failure routing) over the
+violation_rows (keyword algebra plus parse-failure routing) over the
 deterministic synthetic corpus reproduces the planted per-class rates."""
 
 from pyspark.sql import functions as F

@@ -256,3 +256,79 @@ def test_part2_accounting_and_scfsi():
         mode="stereo", bitrates_kbps=(128,),
     )
     assert parse_mp3_sideinfo(raw) == led and led["ok"]
+
+
+def test_lsf_part2_bits_by_block_shape():
+    """13818-3 §2.4.3.2: slen1..4 from the 9-bit scalefac_compress, the
+    count row by its range, the column by block shape; the right channel
+    of an intensity-stereo frame reads the halved value (rows 3-5)."""
+    from jsonschema_spark.functions.mp3_sideinfo import LSF_NR_OF_SFB, part2_bits_lsf
+
+    for row in LSF_NR_OF_SFB:
+        assert [sum(c) for c in row] == [21, 36, 33]
+
+    def g(sfc, **kw):
+        return {"scalefac_compress": sfc, "ws": 0, "block_type": 0, "mixed": 0, **kw}
+
+    # 399 -> row 0, slen (4, 4, 3, 3)
+    assert part2_bits_lsf(g(399), False) == 6 * 4 + 5 * 4 + 5 * 3 + 5 * 3
+    assert part2_bits_lsf(g(399, ws=1, block_type=2), False) == 9 * (4 + 4 + 3 + 3)
+    assert part2_bits_lsf(g(399, ws=1, block_type=2, mixed=1), False) == (
+        6 * 4 + 9 * 4 + 9 * 3 + 9 * 3
+    )
+    # 499 -> row 1, slen (4, 4, 3, 0); 511 -> row 2, slen (3, 2, 0, 0)
+    assert part2_bits_lsf(g(499), False) == 6 * 4 + 5 * 4 + 7 * 3
+    assert part2_bits_lsf(g(511), False) == 11 * 3 + 10 * 2
+    # intensity right channel: 511 >> 1 = 255 -> row 5, slen (3, 2, 0, 0);
+    # 100 >> 1 = 50 -> row 3, slen (1, 2, 2, 0); 400 >> 1 = 200 -> row 4,
+    # slen (1, 1, 0, 0)
+    assert part2_bits_lsf(g(511), True) == 8 * 3 + 8 * 2
+    assert part2_bits_lsf(g(100), True) == 7 * 1 + 7 * 2 + 7 * 2
+    assert part2_bits_lsf(g(400), True) == 6 * 1 + 6 * 1
+
+
+def _lsf_joint_frame(part23_right: int, intensity: bool) -> bytes:
+    from jsonschema_spark.functions.mp3_sideinfo import (
+        _default_granule,
+        build_l3_sideinfo_frame,
+    )
+
+    left = _default_granule(11, False, 100)
+    left["scalefac_compress"] = 0
+    right = _default_granule(12, False, part23_right)
+    right["scalefac_compress"] = 511  # 53 part2 bits; 40 under intensity
+    frame = bytearray(
+        build_l3_sideinfo_frame(2, 64, 22050, "joint", 0, [left, right], seed=3)
+    )
+    if intensity:
+        frame[3] |= 0x10  # mode_extension bit 0: intensity stereo
+    return bytes(frame)
+
+
+def test_lsf_part2_overflow_mutant():
+    """A hand-built MPEG-2 joint-stereo stream whose second frame declares
+    more scalefactor bits than its part2_3_length holds is rejected at
+    that frame; the intensity-stereo reading of the same frame fits."""
+    ok = _lsf_joint_frame(100, intensity=False)
+    assert parse_mp3_sideinfo(ok + _lsf_joint_frame(53, intensity=False))["ok"]
+    bad = parse_mp3_sideinfo(ok + _lsf_joint_frame(45, intensity=False))
+    assert bad["ok"] is False and bad["error"] == "part2_overflow@1"
+    assert parse_mp3_sideinfo(ok + _lsf_joint_frame(45, intensity=True))["ok"]
+    bad_is = parse_mp3_sideinfo(ok + _lsf_joint_frame(39, intensity=True))
+    assert bad_is["error"] == "part2_overflow@1"
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        dict(version_id=2, sr_hz=16000, mode="mono", bitrates_kbps=(48,)),
+        dict(version_id=0, sr_hz=11025, mode="stereo", bitrates_kbps=(32,)),
+        dict(version_id=2, sr_hz=22050, mode="stereo", bitrates_kbps=(8,)),
+    ],
+)
+def test_lsf_corpus_streams_pass_part2_check(cfg):
+    """Every LSF stream the writer emits (the two corpus classes over the
+    corpus's seeds, and the smallest-frame bitrate) still walks clean."""
+    for seed in range(400):
+        raw, led = encode_sideinfo_stream(n_frames=6 + seed % 18, seed=seed, **cfg)
+        assert led["ok"] and parse_mp3_sideinfo(raw) == led, seed

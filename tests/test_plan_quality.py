@@ -138,6 +138,23 @@ def test_jsonl_violation_rows_evaluate_checks_once(spark):
     assert p.count("/properties/doc/properties/lang/pattern") == 1
 
 
+def test_jsonl_violation_rows_extract_each_view_once(spark):
+    """The JSONL violation rows cast the document to its map view once,
+    below the checks; no type test runs schema_of_variant over the whole
+    document (the map view is map-typed, so it cannot be an argument
+    either); parse failures ride the same single text scan instead of a
+    second unioned one."""
+    import re
+
+    from jsonschema_spark.sources import jsonl as J
+
+    df = J.read_jsonl(spark, J.materialized_jsonl(26))
+    p = plan(J.violation_rows(df, J.JSONL_DOC_SCHEMA))
+    assert len(re.findall(r"try_variant_get\(doc#\d+, \$, MapType\(", p)) == 1
+    assert "schemaOfVariant(doc#" not in p
+    assert p.count("FileScan text") == 1
+
+
 def test_variant_validation_stays_jvm_side(spark):
     """The variant path (schema_of_variant / try_variant_get / map view)
     must compile to JVM expressions — no Python evaluation nodes."""
