@@ -36,7 +36,7 @@ from jsonschema_spark.operators.webtext import (
     REPLACEMENT_CHAR as _ENC_REPL,
 )
 from jsonschema_spark.plans.compile import CompileOptions
-from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA
+from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, corpus, corpus_path
 from jsonschema_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -93,8 +93,8 @@ PART_LOGIC_SCHEMA = {
 _CLIPS_N = 4000  # synthetic clips per correctness run (deterministic)
 _CLIPS_BASE_N = 3000  # drift-baseline snapshot size
 _CLIPS_BASE_DUR = (300, 3000)  # shifted duration distribution (drift trigger)
-_CLIPS_MANIFEST_N = 1000
-_CLIPS_MANIFEST_BUCKETS = 8
+# (n, dur_range, n_buckets): the checkpoint-protocol corpus carries _bucket
+_CLIPS_MANIFEST = (1000, (200, 2000), 8)
 
 # The 6 schema columns; the materialized table additionally carries the
 # planted-violation ledger (_row_idx) which must not enter closed-world
@@ -106,16 +106,16 @@ def _clips(spark: SparkSession, n: int = _CLIPS_N) -> DataFrame:
     """Deterministic clips table, materialized to parquet once and SCANNED
     (the production shape: validation reads a table). The same files back
     the DuckDB oracles via read_parquet + the _row_idx planted ledger."""
-    from jsonschema_spark.sources.clips import materialized_clips
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    df, _ = materialized_clips(spark, n)
+    df, _ = corpus(spark, synth_ledger_clips, n)
     return df.select(*_CLIPS_COLS)
 
 
 def _clips_baseline(spark: SparkSession) -> DataFrame:
-    from jsonschema_spark.sources.clips import materialized_clips
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    df, _ = materialized_clips(spark, _CLIPS_BASE_N, dur_range=_CLIPS_BASE_DUR)
+    df, _ = corpus(spark, synth_ledger_clips, _CLIPS_BASE_N, _CLIPS_BASE_DUR)
     return df.select(*_CLIPS_COLS)
 
 
@@ -1069,7 +1069,7 @@ def _q_validate_jsonl_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jsonschema_spark.sources import jsonl as J
 
     return J.violation_rows(
-        J.read_jsonl(spark, J.materialized_jsonl_gz(_JSONL_N)), J.JSONL_DOC_SCHEMA
+        J.read_jsonl(spark, J.jsonl_gz(_JSONL_N)), J.JSONL_DOC_SCHEMA
     )
 
 
@@ -1078,9 +1078,9 @@ def _q_validate_orders_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/formats.py — Spark's built-in ORC reader, no extra jars).
     The oracle reads the parquet ground truth: a hash match certifies
     the ORC round trip changes nothing about validation output."""
-    from jsonschema_spark.sources.formats import materialized_orc_twin
+    from jsonschema_spark.sources.formats import format_twin
 
-    path = materialized_orc_twin(spark, sf_dir, "orders")
+    path = format_twin(spark, "orc", sf_dir, "orders")
     return validate(
         spark.read.orc(path), ORDERS_JSON_SCHEMA
     ).violations(["o_orderkey"])
@@ -1091,12 +1091,9 @@ def _q_validate_orders_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference; Spark writes doubles at shortest-round-trip precision
     and quotes comment text, so the read-back is value-identical). The
     oracle reads the parquet ground truth."""
-    from jsonschema_spark.sources.formats import (
-        materialized_csv_twin,
-        read_csv_twin,
-    )
+    from jsonschema_spark.sources.formats import format_twin, read_csv_twin
 
-    path = materialized_csv_twin(spark, sf_dir, "orders")
+    path = format_twin(spark, "csv", sf_dir, "orders")
     return validate(
         read_csv_twin(spark, sf_dir, "orders", path), ORDERS_JSON_SCHEMA
     ).violations(["o_orderkey"])
@@ -1950,9 +1947,9 @@ def _q_clips_audio_quality(spark: SparkSession, sf_dir: str, n: int = _QUALITY_N
     wide margins (silence 0.48 vs gate 0.2; clipping >= 0.12 vs 0.005;
     rms <= -65 dBFS vs -45), so gate outcomes equal ledger arithmetic."""
     from jsonschema_spark.functions.audio import audio_quality, quality_gates
-    from jsonschema_spark.sources.clips import materialized_quality_clips
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, n)
+    clips, _ = corpus(spark, synth_quality_clips, n)
     q = clips.select("clip_id", audio_quality("bytes", "sr_hz").alias("q"))
     g = quality_gates(F.col("q"))
     return q.select(
@@ -1976,9 +1973,9 @@ def _q_clips_bandwidth(spark: SparkSession, sf_dir: str, n: int = _BW_N) -> Data
     >=45 Hz margin against the estimator's ~5 Hz worst-case error, so the
     100-Hz bin and all three verdicts equal ledger arithmetic."""
     from jsonschema_spark.functions.audio import audio_bandwidth, bandwidth_gates
-    from jsonschema_spark.sources.clips import materialized_bandwidth_clips
+    from jsonschema_spark.sources.clips import synth_bandwidth_clips
 
-    clips, _ = materialized_bandwidth_clips(spark, n)
+    clips, _ = corpus(spark, synth_bandwidth_clips, n)
     b = clips.select(
         "clip_id", "sr_hz", audio_bandwidth("bytes", "sr_hz").alias("bw")
     )
@@ -2001,9 +1998,9 @@ def _q_clips_segments(spark: SparkSession, sf_dir: str, n: int = _QUALITY_N) -> 
     segment) windows; the oracle re-slices the same payloads as hex strings
     and compares window md5s byte-for-byte."""
     from jsonschema_spark.operators.segments import segment_clips
-    from jsonschema_spark.sources.clips import materialized_quality_clips
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, n)
+    clips, _ = corpus(spark, synth_quality_clips, n)
     segs = segment_clips(clips.select(*_CLIPS_COLS), _SEGMENT_MS)
     return segs.select(
         "clip_id",
@@ -2023,9 +2020,9 @@ def _q_clips_segments_transcript(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutting) — pure Column algebra, zero Python. The oracle re-derives
     every boundary with the same integer arithmetic."""
     from jsonschema_spark.operators.segments import segment_clips
-    from jsonschema_spark.sources.clips import materialized_quality_clips
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, _QUALITY_N)
+    clips, _ = corpus(spark, synth_quality_clips, _QUALITY_N)
     segs = segment_clips(
         clips.select(*_CLIPS_COLS), _SEGMENT_MS, transcript_col="transcript"
     )
@@ -2104,9 +2101,9 @@ def _q_clips_payload_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     %113 truncates the payload, %127 drifts dur_ms; the 'amr' rows
     exercise the unknown-codec (uncertifiable -> false) path."""
     from jsonschema_spark.operators.integrity import payload_integrity
-    from jsonschema_spark.sources.clips import materialized_clips
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    clips, _ = materialized_clips(spark, _CLIPS_N)
+    clips, _ = corpus(spark, synth_ledger_clips, _CLIPS_N)
     idx = F.col("_row_idx")
     mutated = clips.select(
         "clip_id",
@@ -2128,9 +2125,9 @@ def _q_clips_wav_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata columns; the oracle re-parses every field from the same
     parquet blob hex."""
     from jsonschema_spark.operators.integrity import wav_header_checks
-    from jsonschema_spark.sources.clips import materialized_wav_clips
+    from jsonschema_spark.sources.clips import synth_wav_clips
 
-    clips, _ = materialized_wav_clips(spark, _WAV_N)
+    clips, _ = corpus(spark, synth_wav_clips, _WAV_N)
     w = wav_header_checks(clips.select(*_CLIPS_COLS))
     return w.select(
         "clip_id",
@@ -2160,9 +2157,9 @@ def _q_clips_trim_silence(spark: SparkSession, sf_dir: str, n: int = _PAD_N) -> 
     oracle re-decodes EVERY int16 sample from the parquet hex, recomputes
     frame maxima, spans, and the md5 of the trimmed window."""
     from jsonschema_spark.operators.trim import trim_silence
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, n)
+    clips, _ = corpus(spark, synth_padded_clips, n)
     t = trim_silence(clips.select(*_CLIPS_COLS))
     return t.select(
         "clip_id",
@@ -2181,9 +2178,9 @@ def _q_clips_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop; the oracle rebuilds the decimated payload hex (every 2nd sample,
     order-pinned string_agg) and compares md5s byte-for-byte."""
     from jsonschema_spark.operators.trim import resample_pcm
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = corpus(spark, synth_padded_clips, _PAD_N)
     r = resample_pcm(clips.select(*_CLIPS_COLS), _RESAMPLE_SR)
     return r.select(
         "clip_id",
@@ -2206,9 +2203,9 @@ def _q_clips_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     original samples bit-for-bit). The oracle rebuilds the interpolated
     payload hex sample-by-sample and compares md5s."""
     from jsonschema_spark.operators.trim import upsample_pcm
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = corpus(spark, synth_padded_clips, _PAD_N)
     r = upsample_pcm(clips.select(*_CLIPS_COLS), _UPSAMPLE_SR)
     return r.select(
         "clip_id",
@@ -2232,9 +2229,9 @@ def _q_clips_transcode_flac(spark: SparkSession, sf_dir: str, n: int = _WAVD_N) 
     zero shuffle — the 100-TB archival-rewrite plan."""
     from jsonschema_spark.functions.audio import audio_decode_profile
     from jsonschema_spark.operators.trim import transcode_to_flac
-    from jsonschema_spark.sources.clips import materialized_wav_depth_clips
+    from jsonschema_spark.sources.clips import synth_wav_depth_clips
 
-    clips, _ = materialized_wav_depth_clips(spark, n)
+    clips, _ = corpus(spark, synth_wav_depth_clips, n)
     tc = transcode_to_flac(
         clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
     )
@@ -2265,9 +2262,9 @@ def _q_clips_flac_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_decode_profile,
         window_pcm,
     )
-    from jsonschema_spark.sources.clips import materialized_flac_seek_clips
+    from jsonschema_spark.sources.clips import synth_flac_seek_clips
 
-    clips, _ = materialized_flac_seek_clips(spark, _SEEK_N)
+    clips, _ = corpus(spark, synth_flac_seek_clips, _SEEK_N)
     w = clips.select(
         "clip_id",
         "bytes",
@@ -2307,12 +2304,9 @@ def _q_clips_segment_decoded(spark: SparkSession, sf_dir: str, n: int = _SEGD_N)
     loud NULL-segment row. One scan -> one ArrowEvalPython -> one
     Generate, zero shuffle — the 100-TB segmentation plan."""
     from jsonschema_spark.operators.segments import segment_decoded
-    from jsonschema_spark.sources.clips import (
-        SEGD_SEG_MS,
-        materialized_segment_clips,
-    )
+    from jsonschema_spark.sources.clips import SEGD_SEG_MS, synth_segment_clips
 
-    clips, _ = materialized_segment_clips(spark, n)
+    clips, _ = corpus(spark, synth_segment_clips, n)
     seg = segment_decoded(clips, segment_ms=SEGD_SEG_MS)
     return seg.select(
         "clip_id",
@@ -2333,12 +2327,9 @@ def _q_clips_segment_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-disjoint scans both push their codec filter into the
     parquet scan."""
     from jsonschema_spark.operators.segments import segment_auto
-    from jsonschema_spark.sources.clips import (
-        SEGD_SEG_MS,
-        materialized_segment_clips,
-    )
+    from jsonschema_spark.sources.clips import SEGD_SEG_MS, synth_segment_clips
 
-    clips, _ = materialized_segment_clips(spark, _SEGD_N)
+    clips, _ = corpus(spark, synth_segment_clips, _SEGD_N)
     seg = segment_auto(clips, segment_ms=SEGD_SEG_MS)
     return seg.select(
         "clip_id",
@@ -2362,12 +2353,9 @@ def _q_clips_segment_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         segment_auto,
         segment_energy,
     )
-    from jsonschema_spark.sources.clips import (
-        SEGD_SEG_MS,
-        materialized_segment_clips,
-    )
+    from jsonschema_spark.sources.clips import SEGD_SEG_MS, synth_segment_clips
 
-    clips, _ = materialized_segment_clips(spark, _SEGD_N)
+    clips, _ = corpus(spark, synth_segment_clips, _SEGD_N)
     seg = segment_energy(segment_auto(clips, segment_ms=SEGD_SEG_MS))
     return seg.select(
         "clip_id", "seg_idx", "seg_sumsq", "seg_peak", "silent"
@@ -2405,12 +2393,9 @@ def _q_validate_segments(spark: SparkSession, sf_dir: str, n: int = _SEGD_N) -> 
     in one stage; the oracle replays every check arm from the
     lockstep-unnested ledger."""
     from jsonschema_spark.operators.segments import segment_auto
-    from jsonschema_spark.sources.clips import (
-        SEGD_SEG_MS,
-        materialized_segment_clips,
-    )
+    from jsonschema_spark.sources.clips import SEGD_SEG_MS, synth_segment_clips
 
-    clips, _ = materialized_segment_clips(spark, n)
+    clips, _ = corpus(spark, synth_segment_clips, n)
     seg = segment_auto(clips, segment_ms=SEGD_SEG_MS).drop("seg_bytes")
     return validate(seg, SEGMENTS_JSON_SCHEMA).violations(
         ["clip_id", "seg_idx"]
@@ -2426,12 +2411,9 @@ def _q_clips_segment_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     clips carry NULL. The oracle recomputes every window with DuckDB
     integer division over the lockstep-unnested ledger."""
     from jsonschema_spark.operators.segments import segment_auto
-    from jsonschema_spark.sources.clips import (
-        SEGD_SEG_MS,
-        materialized_segment_clips,
-    )
+    from jsonschema_spark.sources.clips import SEGD_SEG_MS, synth_segment_clips
 
-    clips, _ = materialized_segment_clips(spark, _SEGD_N)
+    clips, _ = corpus(spark, synth_segment_clips, _SEGD_N)
     seg = segment_auto(
         clips, segment_ms=SEGD_SEG_MS, transcript_col="transcript"
     )
@@ -2446,13 +2428,10 @@ def _q_suite_report_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     (torn raw PCM decodes SHORT, so decodable=1.0 while length < 1).
     The oracle recomputes every metric from the ledger columns alone."""
     from jsonschema_spark.operators.suite import run_suite
-    from jsonschema_spark.sources.clips import (
-        materialized_flac_clips,
-        materialized_wav_depth_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_flac_clips, synth_wav_depth_clips
 
-    flac, _ = materialized_flac_clips(spark, _FLAC_N)
-    wav, _ = materialized_wav_depth_clips(spark, _WAVD_N)
+    flac, _ = corpus(spark, synth_flac_clips, _FLAC_N)
+    wav, _ = corpus(spark, synth_wav_depth_clips, _WAVD_N)
     cols = ["clip_id", "bytes", "sr_hz", "dur_ms"]
     cfg = {"checks": [
         {"type": "row_count", "name": "flac_nonempty", "table": "clips_flac",
@@ -2609,9 +2588,9 @@ def _q_clips_gain_normalize(spark: SparkSession, sf_dir: str, n: int = _QUALITY_
     rounding (floor(v*g + 0.5)) — the oracle recomputes gain AND every
     output sample from the parquet hex and md5s the rebuilt payload."""
     from jsonschema_spark.operators.trim import normalize_loudness
-    from jsonschema_spark.sources.clips import materialized_quality_clips
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    clips, _ = materialized_quality_clips(spark, n)
+    clips, _ = corpus(spark, synth_quality_clips, n)
     r = normalize_loudness(
         clips.select(*_CLIPS_COLS), _GAIN_TARGET_RMS, _GAIN_MAX
     )
@@ -2634,9 +2613,9 @@ def _q_clips_speed_perturb(spark: SparkSession, sf_dir: str, n: int = _PAD_N) ->
     (operators/augment.speed_perturb). The oracle reassembles the
     perturbed payload hex sample-by-sample and md5-compares."""
     from jsonschema_spark.operators.augment import speed_perturb
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, n)
+    clips, _ = corpus(spark, synth_padded_clips, n)
     r = speed_perturb(clips.select(*_CLIPS_COLS), _SPEED_NUM, _SPEED_DEN)
     return r.select(
         "clip_id",
@@ -2653,9 +2632,9 @@ def _q_clips_time_mask(spark: SparkSession, sf_dir: str, n: int = _PAD_N) -> Dat
     (substring/concat/unhex(repeat)). The oracle recomputes both spans
     from md5(clip_id||':tm<k>') and rebuilds the masked hex."""
     from jsonschema_spark.operators.augment import time_mask
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, n)
+    clips, _ = corpus(spark, synth_padded_clips, n)
     r = time_mask(clips.select(*_CLIPS_COLS), n_masks=2, mask_ms=_MASK_MS)
     return r.select(
         "clip_id",
@@ -2674,9 +2653,9 @@ def _q_clips_mix_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the selection hash, re-decodes BOTH payloads from
     parquet hex, and rebuilds the mixed sample stream bit-for-bit."""
     from jsonschema_spark.operators.augment import mix_overlay
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = corpus(spark, synth_padded_clips, _PAD_N)
     r = mix_overlay(
         clips.select(*_CLIPS_COLS), clips, n_noise=_PAD_N, gain=_MIX_GAIN
     )
@@ -2708,12 +2687,10 @@ def _q_clips_tar_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative 512-header + 512-padded data; sidecar size = the exact
     json.dumps text length) — the index is pinned against tar-format
     math, not against another tar parser."""
-    from jsonschema_spark.sources.clips import (
-        materialized_tar_shards_flat,
-    )
+    from jsonschema_spark.sources.clips import tar_shards
     from jsonschema_spark.sources.shards import tar_member_index
 
-    path = materialized_tar_shards_flat(spark, _TAR_N)
+    path = tar_shards(spark, _TAR_N, flat=True)
     return tar_member_index(spark, path + "/*.tar")
 
 
@@ -2729,9 +2706,9 @@ def _q_clips_mix_snr(spark: SparkSession, sf_dir: str) -> DataFrame:
     gain AND every output sample — gain doubles and payload md5s both
     hash-matched."""
     from jsonschema_spark.operators.augment import mix_overlay
-    from jsonschema_spark.sources.clips import materialized_padded_clips
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    clips, _ = materialized_padded_clips(spark, _PAD_N)
+    clips, _ = corpus(spark, synth_padded_clips, _PAD_N)
     r = mix_overlay(
         clips.select(*_CLIPS_COLS), clips, n_noise=_PAD_N,
         snr_lin=_MIX_SNR_R,
@@ -2756,9 +2733,9 @@ def _q_clips_content_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy; payloads reduce to 32-byte digests before the shuffle. The
     oracle recomputes every bucket from the same parquet blobs."""
     from jsonschema_spark.operators.integrity import content_manifest
-    from jsonschema_spark.sources.clips import materialized_clips
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    clips, _ = materialized_clips(spark, _CLIPS_N)
+    clips, _ = corpus(spark, synth_ledger_clips, _CLIPS_N)
     return content_manifest(
         clips.select(*_CLIPS_COLS), n_buckets=_MANIFEST_BUCKETS
     )
@@ -2775,9 +2752,9 @@ def _q_clips_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-decodes BOTH channels from the parquet hex and rebuilds
     floor((l+r)/2) sample-for-sample."""
     from jsonschema_spark.operators.trim import downmix_mono
-    from jsonschema_spark.sources.clips import materialized_stereo_clips
+    from jsonschema_spark.sources.clips import synth_stereo_clips
 
-    clips, _ = materialized_stereo_clips(spark, _STEREO_N)
+    clips, _ = corpus(spark, synth_stereo_clips, _STEREO_N)
     r = downmix_mono(clips.select(*_CLIPS_COLS))
     return r.select(
         "clip_id",
@@ -2798,9 +2775,9 @@ def _q_layout_report(mode: str):
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from jsonschema_spark.operators.layout import layout_report
-        from jsonschema_spark.sources.layouts import materialized_layout
+        from jsonschema_spark.sources.layouts import layout_corpus, synth_layout
 
-        df, _ = materialized_layout(spark, mode)
+        df, _ = layout_corpus(spark, synth_layout, mode)
         return layout_report(df, "k")
 
     q.__doc__ = _q_layout_report.__doc__
@@ -2821,16 +2798,17 @@ def _q_compaction_report_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     own filename grouping (file SIZES are engine-invariant even though
     names are task UUIDs — sizes are unique, so the desc order is total)."""
     from jsonschema_spark.operators.layout import compaction_report
-    from jsonschema_spark.sources.layouts import materialized_layout
+    from jsonschema_spark.sources.layouts import layout_corpus, synth_layout
 
-    df, _ = materialized_layout(spark, "geo")
+    df, _ = layout_corpus(spark, synth_layout, "geo")
     return compaction_report(df, _COMPACT_TARGET)
 
 
 def _compaction_report_geo_sql() -> str:
-    from jsonschema_spark.sources.layouts import layout_path
+    from jsonschema_spark.sources.layouts import synth_layout
 
-    src = f"read_parquet('{layout_path('geo')}/*/*.parquet', filename=true)"
+    geo = corpus_path(synth_layout, "geo")
+    src = f"read_parquet('{geo}/*/*.parquet', filename=true)"
     t = _COMPACT_TARGET
     return f"""
         WITH p AS (
@@ -2912,11 +2890,11 @@ def _q_layout_zorder_vs_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict rows (layout x dim); the oracle regroups per DuckDB's own
     filename column and must land on identical totals."""
     from jsonschema_spark.operators.layout import layout_report
-    from jsonschema_spark.sources.layouts import materialized_layout_2d
+    from jsonschema_spark.sources.layouts import layout_corpus, synth_layout_2d
 
     parts = []
     for mode in ("sort", "zorder"):
-        df, _ = materialized_layout_2d(spark, mode)
+        df, _ = layout_corpus(spark, synth_layout_2d, mode)
         for dim in ("k1", "k2"):
             parts.append(
                 layout_report(df, dim).select(
@@ -2977,11 +2955,12 @@ def _layout_verdict_select(sfx: str = "", labels: str = "") -> str:
 
 
 def _layout_zorder_vs_sort_sql() -> str:
-    from jsonschema_spark.sources.layouts import layout2d_path
+    from jsonschema_spark.sources.layouts import synth_layout_2d
 
     ctes, selects = [], []
     for mode in ("sort", "zorder"):
-        src = f"read_parquet('{layout2d_path(mode)}/*/*.parquet', filename=true)"
+        path = corpus_path(synth_layout_2d, mode)
+        src = f"read_parquet('{path}/*/*.parquet', filename=true)"
         for dim in ("k1", "k2"):
             sfx = f"_{mode}_{dim}"
             c, _ = _layout_report_ctes(src, dim, sfx)
@@ -2995,9 +2974,10 @@ def _layout_zorder_vs_sort_sql() -> str:
 
 
 def _layout_report_sql(mode: str) -> str:
-    from jsonschema_spark.sources.layouts import layout_path
+    from jsonschema_spark.sources.layouts import synth_layout
 
-    src = f"read_parquet('{layout_path(mode)}/*/*.parquet', filename=true)"
+    path = corpus_path(synth_layout, mode)
+    src = f"read_parquet('{path}/*/*.parquet', filename=true)"
     ctes, select = _layout_report_ctes(src, "k")
     return "WITH " + ctes + select
 
@@ -3012,9 +2992,9 @@ def _q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels at synth time, never through the codec), so a hash match
     certifies the whole encode->store->decode->hash path bit-for-bit."""
     from jsonschema_spark.functions.multimodal import image_dhash
-    from jsonschema_spark.sources.images import materialized_images
+    from jsonschema_spark.sources.images import synth_images
 
-    images, _ = materialized_images(spark, _IMAGES_N)
+    images, _ = corpus(spark, synth_images, _IMAGES_N)
     return image_dhash(images)
 
 
@@ -3208,9 +3188,9 @@ def _q_images_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as _pd
 
     from jsonschema_spark.functions.jpeg import decode_jpeg_gray
-    from jsonschema_spark.sources.images import materialized_jpeg_images
+    from jsonschema_spark.sources.images import synth_jpeg_images
 
-    imgs, _ = materialized_jpeg_images(spark, _JPEG_N)
+    imgs, _ = corpus(spark, synth_jpeg_images, _JPEG_N)
 
     def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         for b in batches:
@@ -3250,11 +3230,9 @@ def _q_images_jpeg_progressive(spark: SparkSession, sf_dir: str, n: int = _JPEG_
     import pandas as _pd
 
     from jsonschema_spark.functions.jpeg import decode_jpeg_progressive
-    from jsonschema_spark.sources.images import (
-        materialized_progressive_jpeg_images,
-    )
+    from jsonschema_spark.sources.images import synth_progressive_jpeg_images
 
-    imgs, _ = materialized_progressive_jpeg_images(spark, n)
+    imgs, _ = corpus(spark, synth_progressive_jpeg_images, n)
 
     def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         for b in batches:
@@ -3301,9 +3279,9 @@ def _q_videos_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         avi_frame_chunks,
         decode_avi_frame,
     )
-    from jsonschema_spark.sources.videos import materialized_mjpeg_videos
+    from jsonschema_spark.sources.videos import synth_mjpeg_videos
 
-    vids, _ = materialized_mjpeg_videos(spark, _MJPEG_N)
+    vids, _ = corpus(spark, synth_mjpeg_videos, _MJPEG_N)
 
     def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         for b in batches:
@@ -3348,9 +3326,9 @@ def _q_videos_mjpeg_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as _pd
 
     from jsonschema_spark.functions.avi import parse_avi_mjpeg
-    from jsonschema_spark.sources.videos import materialized_mjpeg_videos
+    from jsonschema_spark.sources.videos import synth_mjpeg_videos
 
-    vids, _ = materialized_mjpeg_videos(spark, _MJPEG_N)
+    vids, _ = corpus(spark, synth_mjpeg_videos, _MJPEG_N)
 
     def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         cols = ("video_id", "avi_ok", "avi_error", "avi_width",
@@ -3393,9 +3371,9 @@ def _q_clips_tags(spark: SparkSession, sf_dir: str, n: int = _TAGS_N) -> DataFra
     loud no_tags; truncated tags and frame-size lies raise exact
     structural errors. Ledger truth is generator strings."""
     from jsonschema_spark.functions.tags import audio_tags_profile
-    from jsonschema_spark.sources.clips import materialized_tagged_clips
+    from jsonschema_spark.sources.clips import synth_tagged_clips
 
-    clips, _ = materialized_tagged_clips(spark, n)
+    clips, _ = corpus(spark, synth_tagged_clips, n)
     prof = clips.select("clip_id", audio_tags_profile("bytes").alias("p"))
     return prof.select(
         "clip_id",
@@ -3425,9 +3403,9 @@ def _q_videos_mp4_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragmented=false) + sequence-break, stray-track and torn planted
     failures; ledger truth is generator arithmetic."""
     from jsonschema_spark.functions.mp4 import video_mp4_fragment_profile
-    from jsonschema_spark.sources.videos import materialized_fmp4_videos
+    from jsonschema_spark.sources.videos import synth_fmp4_videos
 
-    vids, _ = materialized_fmp4_videos(spark, _FMP4_N)
+    vids, _ = corpus(spark, synth_fmp4_videos, _FMP4_N)
     prof = vids.select(
         "video_id", video_mp4_fragment_profile("bytes").alias("p")
     )
@@ -3459,9 +3437,9 @@ def _q_videos_webm_structure(spark: SparkSession, sf_dir: str, n: int = _WEBM_N)
     AVC-in-mkv, multi-cluster) + five planted failures; ledger truth
     is generator arithmetic."""
     from jsonschema_spark.functions.webm import video_webm_profile
-    from jsonschema_spark.sources.videos import materialized_webm_videos
+    from jsonschema_spark.sources.videos import synth_webm_videos
 
-    vids, _ = materialized_webm_videos(spark, n)
+    vids, _ = corpus(spark, synth_webm_videos, n)
     prof = vids.select("video_id", video_webm_profile("bytes").alias("p"))
     return prof.select(
         "video_id",
@@ -3504,9 +3482,9 @@ def _q_clips_aac_adts(spark: SparkSession, sf_dir: str, n: int = _ADTS_N) -> Dat
     planted failures with exact error@index strings; ledger truth is
     generator arithmetic."""
     from jsonschema_spark.functions.aac import audio_adts_profile
-    from jsonschema_spark.sources.clips import materialized_adts_clips
+    from jsonschema_spark.sources.clips import synth_adts_clips
 
-    clips, _ = materialized_adts_clips(spark, n)
+    clips, _ = corpus(spark, synth_adts_clips, n)
     prof = clips.select("clip_id", audio_adts_profile("bytes").alias("p"))
     return prof.select(
         "clip_id",
@@ -3548,9 +3526,9 @@ def _q_clips_mp3_sideinfo(spark: SparkSession, sf_dir: str, n: int = _MP3SI_N) -
     from jsonschema_spark.functions.mp3_sideinfo import (
         audio_mp3_sideinfo_profile,
     )
-    from jsonschema_spark.sources.clips import materialized_mp3si_clips
+    from jsonschema_spark.sources.clips import synth_mp3si_clips
 
-    clips, _ = materialized_mp3si_clips(spark, n)
+    clips, _ = corpus(spark, synth_mp3si_clips, n)
     prof = clips.select(
         "clip_id", audio_mp3_sideinfo_profile("bytes").alias("p")
     )
@@ -3582,9 +3560,9 @@ def _q_videos_mp4_structure(spark: SparkSession, sf_dir: str, n: int = _MP4_N) -
     only, A/V with 'sowt' PCM, High profile, 30 fps, High+audio) + five
     planted failures; ledger truth is generator arithmetic."""
     from jsonschema_spark.functions.mp4 import video_mp4_profile
-    from jsonschema_spark.sources.videos import materialized_mp4_videos
+    from jsonschema_spark.sources.videos import synth_mp4_videos
 
-    vids, _ = materialized_mp4_videos(spark, n)
+    vids, _ = corpus(spark, synth_mp4_videos, n)
     prof = vids.select("video_id", video_mp4_profile("bytes").alias("p"))
     return prof.select(
         "video_id",
@@ -3627,10 +3605,10 @@ def _q_clips_vorbis_decode(spark: SparkSession, sf_dir: str, n: int = _VORBIS_DE
     from jsonschema_spark.functions.vorbis import audio_vorbis_decode_profile
     from jsonschema_spark.sources.clips import (
         VORBIS_DEC_SNR_GATE_DB,
-        materialized_vorbis_decode_clips,
+        synth_vorbis_decode_clips,
     )
 
-    clips, _ = materialized_vorbis_decode_clips(spark, n)
+    clips, _ = corpus(spark, synth_vorbis_decode_clips, n)
     prof = clips.select(
         "clip_id",
         audio_vorbis_decode_profile("bytes", "clip_id", "sr_hz",
@@ -3671,9 +3649,9 @@ def _q_videos_h264_nals(spark: SparkSession, sf_dir: str, n: int = _H264_N) -> D
     variant) + six planted-failure classes with exact error@index
     strings; ledger truth is generator arithmetic."""
     from jsonschema_spark.functions.h264 import video_h264_profile
-    from jsonschema_spark.sources.videos import materialized_h264_videos
+    from jsonschema_spark.sources.videos import synth_h264_videos
 
-    vids, _ = materialized_h264_videos(spark, n)
+    vids, _ = corpus(spark, synth_h264_videos, n)
     prof = vids.select("video_id", video_h264_profile("bytes").alias("p"))
     return prof.select(
         "video_id",
@@ -3710,9 +3688,9 @@ def _q_videos_av_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
         avi_audio_meta,
         avi_audio_pcm,
     )
-    from jsonschema_spark.sources.videos import materialized_av_videos
+    from jsonschema_spark.sources.videos import synth_av_videos
 
-    vids, _ = materialized_av_videos(spark, _AV_N)
+    vids, _ = corpus(spark, synth_av_videos, _AV_N)
 
     def kernel(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
         cols = ("video_id", "has_audio", "sample_rate", "n_audio_bytes",
@@ -3760,9 +3738,9 @@ def _q_videos_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     luma sum — certifying header parse, frame addressing, and the
     truncation boundary byte-for-byte."""
     from jsonschema_spark.functions.multimodal import sample_frames
-    from jsonschema_spark.sources.videos import materialized_videos
+    from jsonschema_spark.sources.videos import synth_videos
 
-    vids, _ = materialized_videos(spark, _VIDEOS_N)
+    vids, _ = corpus(spark, synth_videos, _VIDEOS_N)
     return sample_frames(vids, every_n=3)
 
 
@@ -3774,9 +3752,9 @@ def _q_image_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute for Hamming <= 3), so candidate generation AND verification
     are both certified."""
     from jsonschema_spark.operators.dedup import image_near_dup_pairs
-    from jsonschema_spark.sources.images import materialized_images
+    from jsonschema_spark.sources.images import synth_images
 
-    images, _ = materialized_images(spark, _IMAGES_N)
+    images, _ = corpus(spark, synth_images, _IMAGES_N)
     return image_near_dup_pairs(images, max_hamming=3).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
@@ -3803,9 +3781,9 @@ def _q_clips_ulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu-law round-trips. The mu-law gate is therefore 15 dB: >11 dB of
     margin to the clean minimum AND to the corrupt maximum (-3.6 dB)."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_ulaw_clips
+    from jsonschema_spark.sources.clips import synth_ulaw_clips
 
-    clips, _ = materialized_ulaw_clips(spark, _ULAW_N)
+    clips, _ = corpus(spark, synth_ulaw_clips, _ULAW_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -3832,9 +3810,9 @@ def _q_clips_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth to make the decoder raise (decode_ok=false — torn uploads never
     return partial audio silently)."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_adpcm_clips
+    from jsonschema_spark.sources.clips import synth_adpcm_clips
 
-    clips, _ = materialized_adpcm_clips(spark, _ADPCM_N)
+    clips, _ = corpus(spark, synth_adpcm_clips, _ADPCM_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -3856,9 +3834,9 @@ def _q_clips_msadpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth-VERIFIED torn uploads (decode_ok=false, never silent partial
     audio)."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_msadpcm_clips
+    from jsonschema_spark.sources.clips import synth_msadpcm_clips
 
-    clips, _ = materialized_msadpcm_clips(spark, _ADPCM_N)
+    clips, _ = corpus(spark, synth_msadpcm_clips, _ADPCM_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -3884,9 +3862,9 @@ def _q_clips_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both synth-VERIFIED to raise) must fail loudly via the stream's own
     CRC-8/CRC-16/STREAMINFO-MD5 integrity chain (decode_ok=false)."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_flac_clips
+    from jsonschema_spark.sources.clips import synth_flac_clips
 
-    clips, _ = materialized_flac_clips(spark, _FLAC_N)
+    clips, _ = corpus(spark, synth_flac_clips, _FLAC_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -3912,9 +3890,9 @@ def _q_clips_flac_lpc_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     uploads and mid-stream bit flips (synth-verified to raise) must fail
     loudly through the CRC-8/CRC-16/STREAMINFO-MD5 chain."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_flac_lpc_clips
+    from jsonschema_spark.sources.clips import synth_flac_lpc_clips
 
-    clips, _ = materialized_flac_lpc_clips(spark, _FLACL_N)
+    clips, _ = corpus(spark, synth_flac_lpc_clips, _FLACL_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -3939,11 +3917,9 @@ def _q_clips_flac_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     stereo downmixes before depth conversion, and the torn class fails
     loudly through the CRC/MD5 chain."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import (
-        materialized_flac_depth_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_flac_depth_clips
 
-    clips, _ = materialized_flac_depth_clips(spark, _FLACD_N)
+    clips, _ = corpus(spark, synth_flac_depth_clips, _FLACD_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -3971,9 +3947,9 @@ def _q_clips_loudness_r128(spark: SparkSession, sf_dir: str, n: int = _LOUD_N) -
     clips NULL loudness with n_blocks = 0. ONE Arrow hop; the
     per-sample IIR advances all clips of a batch together."""
     from jsonschema_spark.functions.audio import audio_loudness
-    from jsonschema_spark.sources.clips import materialized_loudness_clips
+    from jsonschema_spark.sources.clips import synth_loudness_clips
 
-    clips, _ = materialized_loudness_clips(spark, n)
+    clips, _ = corpus(spark, synth_loudness_clips, n)
     prof = clips.select(
         "clip_id", audio_loudness("bytes", "sr_hz").alias("l")
     )
@@ -3997,9 +3973,9 @@ def _q_clips_lufs_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the same arithmetic. Unmeasurable clips (torn / sub-block) must
     pass through with normalized = false."""
     from jsonschema_spark.operators.trim import normalize_to_lufs
-    from jsonschema_spark.sources.clips import materialized_loudness_clips
+    from jsonschema_spark.sources.clips import synth_loudness_clips
 
-    clips, _ = materialized_loudness_clips(spark, _LOUD_N)
+    clips, _ = corpus(spark, synth_loudness_clips, _LOUD_N)
     norm = normalize_to_lufs(
         clips.select("clip_id", "bytes", "sr_hz", "codec"),
         target_lufs=-23.0, max_gain=8.0,
@@ -4024,9 +4000,9 @@ def _q_clips_containers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-validated against the stdlib aifc/sunau reference codecs in
     tests/test_aiff_au.py."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_container_clips
+    from jsonschema_spark.sources.clips import synth_container_clips
 
-    clips, _ = materialized_container_clips(spark, _CONT_N)
+    clips, _ = corpus(spark, synth_container_clips, _CONT_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -4054,9 +4030,9 @@ def _q_clips_hum_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from SOURCE samples (PCM16 WAV is lossless); analytic anchors for
     the kernel live in tests/test_hum.py."""
     from jsonschema_spark.functions.audio import audio_hum, hum_gates
-    from jsonschema_spark.sources.clips import materialized_hum_clips
+    from jsonschema_spark.sources.clips import synth_hum_clips
 
-    clips, _ = materialized_hum_clips(spark, _HUM_N)
+    clips, _ = corpus(spark, synth_hum_clips, _HUM_N)
     prof = clips.select(
         "clip_id", audio_hum("bytes", "sr_hz").alias("h")
     )
@@ -4091,9 +4067,9 @@ def _q_clips_pitch_screen(spark: SparkSession, sf_dir: str, n: int = _PITCH_N) -
     anchors (planted f0 recovered within lag quantization) live in
     tests/test_pitch.py."""
     from jsonschema_spark.functions.pitch import audio_pitch, pitch_gates
-    from jsonschema_spark.sources.clips import materialized_pitch_clips
+    from jsonschema_spark.sources.clips import synth_pitch_clips
 
-    clips, _ = materialized_pitch_clips(spark, n)
+    clips, _ = corpus(spark, synth_pitch_clips, n)
     prof = clips.select(
         "clip_id", audio_pitch("bytes", "sr_hz").alias("p")
     )
@@ -4130,11 +4106,9 @@ def _q_clips_stereo_screen(
     both sides via Arrow). Class 7 anchors floor-tightness: corr ~0.99
     real stereo must stay stereo_ok."""
     from jsonschema_spark.functions.stereo import audio_stereo, stereo_gates
-    from jsonschema_spark.sources.clips import (
-        materialized_stereo_screen_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_stereo_screen_clips
 
-    clips, _ = materialized_stereo_screen_clips(spark, n)
+    clips, _ = corpus(spark, synth_stereo_screen_clips, n)
     prof = clips.select(
         "clip_id", audio_stereo("bytes").alias("p")
     )
@@ -4178,9 +4152,9 @@ def _q_clips_tonality_screen(spark: SparkSession, sf_dir: str, n: int = _TONALIT
         audio_tonality,
         tonality_gates,
     )
-    from jsonschema_spark.sources.clips import materialized_tonality_clips
+    from jsonschema_spark.sources.clips import synth_tonality_clips
 
-    clips, _ = materialized_tonality_clips(spark, n)
+    clips, _ = corpus(spark, synth_tonality_clips, n)
     prof = clips.select(
         "clip_id", audio_tonality("bytes", "sr_hz").alias("p")
     )
@@ -4212,11 +4186,9 @@ def _q_clips_fbank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pos -> frame = pos div 40, mel = pos mod 40). Undecodable clips
     carry empty tensors and emit no rows."""
     from jsonschema_spark.functions.fbank import audio_fbank_matrix
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     s = clips.select(
         "clip_id", audio_fbank_matrix("bytes", "sr_hz").alias("s")
     )
@@ -4240,11 +4212,9 @@ def _q_clips_fbank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_fbank_matrix,
         delta_features,
     )
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     s = clips.select(
         "clip_id", audio_fbank_matrix("bytes", "sr_hz").alias("s")
     )
@@ -4283,10 +4253,10 @@ def _q_clips_tensor_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes BOTH tensors from the `_mat` ledger — the
     whole pack->unpack cycle must be lossless for integers and IEEE
     doubles alike."""
-    from jsonschema_spark.sources.clips import materialized_tensor_shards
+    from jsonschema_spark.sources.clips import tensor_shards
     from jsonschema_spark.sources.shards import read_tensor_shards
 
-    path = materialized_tensor_shards(spark, _FBANK_MAT_N)
+    path = tensor_shards(spark, _FBANK_MAT_N)
     back = read_tensor_shards(
         spark, path + "/*.tar",
         members={"mat": "long", "x": "double"},
@@ -4318,11 +4288,9 @@ def _q_clips_mfcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_fbank_matrix,
         mfcc_q,
     )
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     s = clips.select(
         "clip_id", audio_fbank_matrix("bytes", "sr_hz").alias("s")
     )
@@ -4347,11 +4315,9 @@ def _q_clips_train_tensors(spark: SparkSession, sf_dir: str, n: int = _FBANK_MAT
     fast path and the Column-algebra path are BOTH pinned to the same
     external arithmetic, not merely to each other."""
     from jsonschema_spark.functions.fbank import audio_train_tensors
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, n)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, n)
     s = clips.select(
         "clip_id",
         audio_train_tensors(
@@ -4393,11 +4359,9 @@ def _q_clips_cmvn_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_fbank_full,
         cmvn_normalize,
     )
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     s = clips.select(
         "clip_id", audio_fbank_full("bytes", "sr_hz").alias("s")
     )
@@ -4470,11 +4434,9 @@ def _q_clips_cmvn_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         cmvn_normalize_with,
         corpus_cmvn_arrays,
     )
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     base = (
         clips.select(
             "clip_id", audio_fbank_full("bytes", "sr_hz").alias("s")
@@ -4504,11 +4466,9 @@ def _q_clips_frame_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_fbank_matrix,
         stack_frames,
     )
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     base = clips.select(
         "clip_id", audio_fbank_matrix("bytes", "sr_hz").alias("s")
     ).select(
@@ -4585,11 +4545,9 @@ def _q_clips_specaugment(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic."""
     from jsonschema_spark.functions.fbank import audio_fbank_matrix
     from jsonschema_spark.operators.augment import spec_augment
-    from jsonschema_spark.sources.clips import (
-        materialized_fbank_mat_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    clips, _ = materialized_fbank_mat_clips(spark, _FBANK_MAT_N)
+    clips, _ = corpus(spark, synth_fbank_mat_clips, _FBANK_MAT_N)
     s = clips.select(
         "clip_id", audio_fbank_matrix("bytes", "sr_hz").alias("s")
     )
@@ -4641,10 +4599,10 @@ def _q_clips_tar_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecar metadata); the oracle reads the SOURCE parquet, so the
     whole pack->unpack cycle must be lossless for every container
     type."""
-    from jsonschema_spark.sources.clips import materialized_tar_shards
+    from jsonschema_spark.sources.clips import tar_shards
     from jsonschema_spark.sources.shards import read_tar_shards
 
-    path = materialized_tar_shards(spark, _TAR_N)
+    path = tar_shards(spark, _TAR_N)
     back = read_tar_shards(spark, path + "/*.tar")
     return back.select(
         "clip_id",
@@ -4668,9 +4626,9 @@ def _q_clips_fbank_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output = one row per (clip, mel bin); undecodable clips carry
     empty arrays and explode to no rows."""
     from jsonschema_spark.functions.fbank import audio_fbank_stats
-    from jsonschema_spark.sources.clips import materialized_fbank_clips
+    from jsonschema_spark.sources.clips import synth_fbank_clips
 
-    clips, _ = materialized_fbank_clips(spark, _FBANK_N)
+    clips, _ = corpus(spark, synth_fbank_clips, _FBANK_N)
     s = clips.select(
         "clip_id", audio_fbank_stats("bytes", "sr_hz").alias("s")
     )
@@ -4698,9 +4656,9 @@ def _q_clips_fbank_cmvn(spark: SparkSession, sf_dir: str, n: int = _FBANK_N) -> 
     bit-for-bit. The skinny shuffle is O(clips x 40) long rows ->
     40 output rows."""
     from jsonschema_spark.functions.fbank import cmvn_stats
-    from jsonschema_spark.sources.clips import materialized_fbank_clips
+    from jsonschema_spark.sources.clips import synth_fbank_clips
 
-    clips, _ = materialized_fbank_clips(spark, n)
+    clips, _ = corpus(spark, synth_fbank_clips, n)
     return cmvn_stats(clips)
 
 
@@ -4725,9 +4683,9 @@ def _q_clips_dropout_screen(spark: SparkSession, sf_dir: str, n: int = _DROPOUT_
         artifact_gates,
         audio_artifacts,
     )
-    from jsonschema_spark.sources.clips import materialized_dropout_clips
+    from jsonschema_spark.sources.clips import synth_dropout_clips
 
-    clips, _ = materialized_dropout_clips(spark, n)
+    clips, _ = corpus(spark, synth_dropout_clips, n)
     prof = clips.select(
         "clip_id", audio_artifacts("bytes", "sr_hz").alias("p")
     )
@@ -4765,9 +4723,9 @@ def _q_clips_snr_screen(spark: SparkSession, sf_dir: str, n: int = _SNR_N) -> Da
     tests/test_snrest.py pins estimate-vs-planted tracking (+2-4 dB
     bias from speech-frame variance, monotone)."""
     from jsonschema_spark.functions.snrest import audio_snr_est, snr_gates
-    from jsonschema_spark.sources.clips import materialized_snr_clips
+    from jsonschema_spark.sources.clips import synth_snr_clips
 
-    clips, _ = materialized_snr_clips(spark, n)
+    clips, _ = corpus(spark, synth_snr_clips, n)
     prof = clips.select(
         "clip_id", audio_snr_est("bytes", "sr_hz").alias("p")
     )
@@ -4804,9 +4762,9 @@ def _q_clips_codec_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_container_profile,
         codec_match_gate,
     )
-    from jsonschema_spark.sources.clips import materialized_codec_clips
+    from jsonschema_spark.sources.clips import synth_codec_clips
 
-    clips, _ = materialized_codec_clips(spark, _CODEC_N)
+    clips, _ = corpus(spark, synth_codec_clips, _CODEC_N)
     prof = clips.select(
         "clip_id", "codec",
         audio_container_profile("bytes").alias("p"),
@@ -4834,9 +4792,9 @@ def _q_clips_mp3_headers(spark: SparkSession, sf_dir: str, n: int = _MP3_N) -> D
     corrupted CRC, mid-stream sync loss) that must fail loudly. Ledger
     truth is GENERATOR arithmetic — the walker never runs at synth time."""
     from jsonschema_spark.functions.mp3 import audio_mp3_profile
-    from jsonschema_spark.sources.clips import materialized_mp3_clips
+    from jsonschema_spark.sources.clips import synth_mp3_clips
 
-    clips, _ = materialized_mp3_clips(spark, n)
+    clips, _ = corpus(spark, synth_mp3_clips, n)
     prof = clips.select(
         "clip_id", audio_mp3_profile("bytes").alias("p")
     )
@@ -4871,9 +4829,9 @@ def _q_clips_ogg_walk(spark: SparkSession, sf_dir: str, n: int = _OGG_N) -> Data
     fail loudly with the precise error. Ledger truth is GENERATOR
     arithmetic — the walker never runs at synth time."""
     from jsonschema_spark.functions.ogg import audio_ogg_profile
-    from jsonschema_spark.sources.clips import materialized_ogg_clips
+    from jsonschema_spark.sources.clips import synth_ogg_clips
 
-    clips, _ = materialized_ogg_clips(spark, n)
+    clips, _ = corpus(spark, synth_ogg_clips, n)
     prof = clips.select(
         "clip_id", audio_ogg_profile("bytes").alias("p")
     )
@@ -4909,11 +4867,9 @@ def _q_clips_opus_packets(spark: SparkSession, sf_dir: str, n: int = _OPUS_PKT_N
     four planted-failure classes with exact error@index strings;
     ledger truth is generator arithmetic."""
     from jsonschema_spark.functions.ogg import audio_opus_packet_profile
-    from jsonschema_spark.sources.clips import (
-        materialized_opus_packet_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_opus_packet_clips
 
-    clips, _ = materialized_opus_packet_clips(spark, n)
+    clips, _ = corpus(spark, synth_opus_packet_clips, n)
     prof = clips.select(
         "clip_id", audio_opus_packet_profile("bytes").alias("p")
     )
@@ -4942,11 +4898,9 @@ def _q_clips_vorbis_packets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus: two VALID classes + four planted header/type violations;
     ledger truth is generator arithmetic."""
     from jsonschema_spark.functions.ogg import audio_vorbis_packet_profile
-    from jsonschema_spark.sources.clips import (
-        materialized_vorbis_packet_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_vorbis_packet_clips
 
-    clips, _ = materialized_vorbis_packet_clips(spark, _VORBIS_PKT_N)
+    clips, _ = corpus(spark, synth_vorbis_packet_clips, _VORBIS_PKT_N)
     prof = clips.select(
         "clip_id", audio_vorbis_packet_profile("bytes").alias("p")
     )
@@ -4977,9 +4931,9 @@ def _q_clips_container_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_container_profile,
         container_meta_gates,
     )
-    from jsonschema_spark.sources.clips import materialized_mixed_clips
+    from jsonschema_spark.sources.clips import synth_mixed_clips
 
-    clips, _ = materialized_mixed_clips(spark, _MIXED_N)
+    clips, _ = corpus(spark, synth_mixed_clips, _MIXED_N)
     prof = clips.select(
         "clip_id", "sr_hz", "dur_ms",
         audio_container_profile("bytes").alias("p"),
@@ -5008,11 +4962,9 @@ def _q_clips_flac_multichannel(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(sum/n) downmix ledger — the N-way interleaved MD5 and per-frame
     CRCs still gate the torn class loudly."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import (
-        materialized_flac_multichannel_clips,
-    )
+    from jsonschema_spark.sources.clips import synth_flac_multichannel_clips
 
-    clips, _ = materialized_flac_multichannel_clips(spark, _FLACM_N)
+    clips, _ = corpus(spark, synth_flac_multichannel_clips, _FLACM_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -5040,9 +4992,9 @@ def _q_clips_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Planted truncations and mid-stream bit flips (synth-
     VERIFIED to raise) must fail loudly via CRC-8/CRC-16/MD5."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_flac_stereo_clips
+    from jsonschema_spark.sources.clips import synth_flac_stereo_clips
 
-    clips, _ = materialized_flac_stereo_clips(spark, _FLAC2_N)
+    clips, _ = corpus(spark, synth_flac_stereo_clips, _FLAC2_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -5066,9 +5018,9 @@ def _q_clips_wav_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ledger certifies even the truncated decodes (whole frames below
     the cut, computed from SOURCE samples)."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import materialized_wav_depth_clips
+    from jsonschema_spark.sources.clips import synth_wav_depth_clips
 
-    clips, _ = materialized_wav_depth_clips(spark, _WAVD_N)
+    clips, _ = corpus(spark, synth_wav_depth_clips, _WAVD_N)
     prof = clips.select(
         "clip_id", "sr_hz", "dur_ms",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -5092,13 +5044,10 @@ def _q_clips_pcm24_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rebuilt int16-LE stream bit-for-bit — planted torn uploads
     included, because both sides trim to whole 3-byte frames."""
     from jsonschema_spark.functions.audio import audio_decode_profile
-    from jsonschema_spark.sources.clips import (
-        WAVD_LAYOUTS,
-        materialized_wav_depth_clips,
-    )
+    from jsonschema_spark.sources.clips import WAVD_LAYOUTS, synth_wav_depth_clips
 
     mono24 = WAVD_LAYOUTS.index((24, 1))
-    clips, _ = materialized_wav_depth_clips(spark, _WAVD_N)
+    clips, _ = corpus(spark, synth_wav_depth_clips, _WAVD_N)
     sub = clips.where(F.col("_row_idx") % len(WAVD_LAYOUTS) == mono24)
     prof = sub.select(
         "clip_id",
@@ -5133,9 +5082,9 @@ def _q_clips_alaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         SNR_THRESHOLD_DB,
         audio_decode_profile,
     )
-    from jsonschema_spark.sources.clips import materialized_alaw_clips
+    from jsonschema_spark.sources.clips import synth_alaw_clips
 
-    clips, _ = materialized_alaw_clips(spark, _ALAW_N)
+    clips, _ = corpus(spark, synth_alaw_clips, _ALAW_N)
     prof = clips.select(
         "clip_id",
         audio_decode_profile("bytes", "clip_id", "sr_hz", "dur_ms").alias("p"),
@@ -5156,9 +5105,9 @@ def _q_audio_containment_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
     i % 4 == 3; margins match the whole-clip fingerprint family, so the
     found pair set equals the ledger arithmetic exactly."""
     from jsonschema_spark.operators.dedup import audio_containment_pairs
-    from jsonschema_spark.sources.clips import materialized_containment_clips
+    from jsonschema_spark.sources.clips import synth_containment_clips
 
-    clips, _ = materialized_containment_clips(spark, _CONTAIN_N)
+    clips, _ = corpus(spark, synth_containment_clips, _CONTAIN_N)
     return audio_containment_pairs(clips.select(*_CLIPS_COLS)).select(
         "id_a", "id_b"
     )
@@ -5173,9 +5122,9 @@ def _q_dedup_audio_clips(spark: SparkSession, sf_dir: str, n: int = _NEARDUP_N) 
     i % 4 == 3; the fingerprint design guarantees planted cosine
     >= 1-1e-6 vs worst non-dup 0.94 (tests/test_audio_dedup.py), so the
     found pair set equals the ledger-derived expectation EXACTLY."""
-    from jsonschema_spark.sources.clips import materialized_near_dup_clips
+    from jsonschema_spark.sources.clips import synth_near_dup_clips
 
-    clips, _ = materialized_near_dup_clips(spark, n)
+    clips, _ = corpus(spark, synth_near_dup_clips, n)
     return dedup.audio_near_dup_pairs(clips).select("id_a", "id_b")
 
 
@@ -5187,9 +5136,9 @@ def _q_dedup_transcript_edits(spark: SparkSession, sf_dir: str) -> DataFrame:
     at _row_idx%7==3, substitute 1st char at _row_idx%11==5) — the oracle
     rebuilds the same corpus in SQL and brute-forces levenshtein over the
     length-window, so equality also certifies the banding's exact recall."""
-    from jsonschema_spark.sources.clips import materialized_clips
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    clips, _ = materialized_clips(spark, _CLIPS_N)
+    clips, _ = corpus(spark, synth_ledger_clips, _CLIPS_N)
     base = clips.select(
         F.col("clip_id").alias("id"), F.col("transcript").alias("text"), "_row_idx"
     )
@@ -5203,10 +5152,10 @@ def _q_dedup_transcript_edits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("id"), F.lit("~s")).alias("id"),
         F.concat(F.lit("z"), F.expr("substring(text, 2)")).alias("text"),
     )
-    corpus = (
+    texts = (
         base.select("id", "text").unionByName(dele).unionByName(subs).distinct()
     )
-    return dedup.edit_distance_pairs(corpus, k=2, text_col="text", id_col="id")
+    return dedup.edit_distance_pairs(texts, k=2, text_col="text", id_col="id")
 
 
 def _q_dedup_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5349,12 +5298,7 @@ _SYNTH_ROUNDTRIP_SCHEMA = {
         if r in ORDERS_JSON_SCHEMA["properties"]
     ],
 }
-def _synth_roundtrip_path() -> str:
-    # rides the shared versioned oracle cache: bumping the generator
-    # version in sources/clips.py invalidates this materialization too
-    from jsonschema_spark.sources.clips import oracle_cache_path
-
-    return oracle_cache_path("synth_orders_2000_seed11")
+_SYNTH_ROUNDTRIP = (_SYNTH_ROUNDTRIP_SCHEMA, 2000, 11)  # (schema, n, seed)
 
 
 def _q_synth_schema_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5363,12 +5307,9 @@ def _q_synth_schema_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The synthesized table is materialized so the DuckDB oracle re-derives
     the same totals by evaluating every schema predicate in SQL over the
     identical rows."""
-    from jsonschema_spark.sources.clips import publish_once
     from jsonschema_spark.sources.synth import dataframe_for_schema
 
-    path = _synth_roundtrip_path()
-    publish_once(dataframe_for_schema(spark, _SYNTH_ROUNDTRIP_SCHEMA, 2000, seed=11), path)
-    df = spark.read.parquet(path)
+    df, _ = corpus(spark, dataframe_for_schema, *_SYNTH_ROUNDTRIP)
     return validate(df, _SYNTH_ROUNDTRIP_SCHEMA).totals()
 
 
@@ -5496,11 +5437,9 @@ def _q_clips_resumable_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from jsonschema_spark.operators.checkpoint import validate_resumable
-    from jsonschema_spark.sources.clips import materialized_clips
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    clips, _ = materialized_clips(
-        spark, _CLIPS_MANIFEST_N, n_buckets=_CLIPS_MANIFEST_BUCKETS
-    )
+    clips, _ = corpus(spark, synth_ledger_clips, *_CLIPS_MANIFEST)
     manifest_dir = tempfile.mkdtemp(prefix="jss_manifest_")
     validate_resumable(
         clips, CLIPS_JSON_SCHEMA, manifest_dir, "_bucket",
@@ -6991,10 +6930,9 @@ def _jsonl_sql() -> str:
     schema check with SQL JSON functions. Checks that can never fire on
     this corpus (doc_id/text required, numeric minimums) are still
     recomputed — 0 rows is an assertion, not an omission."""
-    from jsonschema_spark.sources.jsonl import jsonl_path, materialized_jsonl
+    from jsonschema_spark.sources.jsonl import materialized_jsonl
 
     path = materialized_jsonl(_JSONL_N)
-    assert path == jsonl_path(_JSONL_N)
     return f"""
     WITH lines AS (
       SELECT unnest(string_split(content, chr(10))) AS raw
@@ -7080,7 +7018,7 @@ def _jsonl_sql() -> str:
 
 # ---------------------------------------------------------------------------
 # Clips oracles. The contract clips tables are materialized deterministic
-# parquet (sources/clips.materialized_clips) carrying the planted-violation
+# parquet (sources/clips.corpus) carrying the planted-violation
 # ledger column _row_idx: every corruption is a pure function of the row
 # index (sources/clips.py module docstring), so DuckDB recomputes each
 # check's expected outcome from the SAME files — including the audio SNR
@@ -7089,7 +7027,10 @@ def _jsonl_sql() -> str:
 # otherwise, unit-pinned in tests/test_audio.py).
 # ---------------------------------------------------------------------------
 
-from jsonschema_spark.sources.clips import clips_path, neardup_clips_path  # noqa: E402
+from jsonschema_spark.sources.clips import (  # noqa: E402
+    synth_ledger_clips,
+    synth_near_dup_clips,
+)
 
 
 def _dedup_audio_sql() -> str:
@@ -7098,7 +7039,7 @@ def _dedup_audio_sql() -> str:
     clips.synth_near_dup_clips), and the fingerprint margins guarantee the
     operator finds exactly that set — so the expected pairs derive from
     _row_idx arithmetic over the SAME materialized parquet."""
-    src = f"read_parquet('{neardup_clips_path(_NEARDUP_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_near_dup_clips, _NEARDUP_N))
     return f"""
         SELECT a.clip_id AS id_a, b.clip_id AS id_b
         FROM {src} a JOIN {src} b ON a._row_idx + 1 = b._row_idx
@@ -7110,9 +7051,9 @@ def _clips_audio_quality_sql() -> str:
     """Ledger oracle for the audio quality gates: expected booleans are
     pure _row_idx % 12 arithmetic over the SAME materialized parquet
     (classes and margins documented at sources/clips.QUALITY_CLS_*)."""
-    from jsonschema_spark.sources.clips import quality_clips_path
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    src = f"read_parquet('{quality_clips_path(_QUALITY_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_quality_clips, _QUALITY_N))
     return f"""
         SELECT clip_id,
                (_row_idx % 12 = 1 OR _row_idx % 12 = 9) AS silent,
@@ -7236,9 +7177,9 @@ def _clips_bandwidth_sql() -> str:
     """Ledger oracle for the bandwidth gates: expected frequency bin and
     verdicts are pure _row_idx arithmetic over the SAME materialized
     parquet (classes and margins documented at sources/clips.BW_CLS_*)."""
-    from jsonschema_spark.sources.clips import bandwidth_clips_path
+    from jsonschema_spark.sources.clips import synth_bandwidth_clips
 
-    src = f"read_parquet('{bandwidth_clips_path(_BW_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_bandwidth_clips, _BW_N))
     return f"""
         SELECT clip_id,
                CAST(CASE WHEN _row_idx % 9 = 5 THEN 1
@@ -7255,9 +7196,9 @@ def _clips_segments_sql() -> str:
     """Hex-string re-slicing oracle for PCM segmentation: byte window
     [i*sps*2, +this*2) of the payload is hex-char window [i*sps*4+1, this*4);
     both engines md5 the identical uppercase hex text of each window."""
-    from jsonschema_spark.sources.clips import quality_clips_path
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    src = f"read_parquet('{quality_clips_path(_QUALITY_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_quality_clips, _QUALITY_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx, sr_hz,
@@ -7293,9 +7234,9 @@ def _clips_segments_transcript_sql() -> str:
     char range [start*len//n + 1, end*len//n) via integer floor — the
     same arithmetic the Column expressions use (transcripts are ASCII, so
     char == byte positions agree across engines)."""
-    from jsonschema_spark.sources.clips import quality_clips_path
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    src = f"read_parquet('{quality_clips_path(_QUALITY_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_quality_clips, _QUALITY_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx, sr_hz, transcript,
@@ -7335,9 +7276,9 @@ def _clips_segments_transcript_sql() -> str:
 def _clips_dispatch_sql() -> str:
     """Replay of the codec-routed registry: each branch's checks as
     codec-gated SELECTs, plus the unregistered-codec rejection row."""
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     checks = [
         # (codec, pointer, keyword, column, message, fail predicate)
         ("pcm_s16le", "/properties/dur_ms/minimum", "minimum", "dur_ms",
@@ -7381,9 +7322,9 @@ def _payload_integrity_sql() -> str:
     """Replay of payload_integrity: the same in-query mutations (%113
     truncation, %127 dur drift), then magic/length reconciliation over the
     hex of the SAME parquet blobs."""
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     return f"""
         WITH m AS (
           SELECT clip_id, codec, sr_hz,
@@ -7436,9 +7377,9 @@ def _wav_headers_sql() -> str:
     """Field-level header re-parse from the parquet blob hex — the oracle
     recomputes every little-endian integer and every reconciliation flag
     from the bytes, independent of the planted-class ledger."""
-    from jsonschema_spark.sources.clips import wav_clips_path
+    from jsonschema_spark.sources.clips import synth_wav_clips
 
-    src = f"read_parquet('{wav_clips_path(_WAV_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_wav_clips, _WAV_N))
     le = _hx_le
     return f"""
         WITH t AS (
@@ -7502,9 +7443,9 @@ def _clips_trim_silence_sql() -> str:
     md5 the hex of the trimmed byte window. Integer arithmetic end to end
     — bit-identical to the numpy kernel."""
     from jsonschema_spark.functions.audio import SILENCE_AMP
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx, sr_hz,
@@ -7556,9 +7497,9 @@ def _clips_resample_sql() -> str:
     """Decimation oracle: output sample j is input sample j*factor; the
     oracle reassembles the decimated payload as hex text (4 chars/sample,
     ORDER BY j pins the aggregation order) and md5s it."""
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx,
@@ -7594,9 +7535,9 @@ def _clips_transcode_flac_sql() -> str:
     same SOURCE-sample ledger as the direct WAV decode — so the
     expectation is simply the wav_depth ledger columns again (truth
     never passes through either codec)."""
-    from jsonschema_spark.sources.clips import wav_depth_clips_path
+    from jsonschema_spark.sources.clips import synth_wav_depth_clips
 
-    src = f"read_parquet('{wav_depth_clips_path(_WAVD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_wav_depth_clips, _WAVD_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -7610,9 +7551,9 @@ def _clips_segment_decoded_sql() -> str:
     (DuckDB zips same-SELECT unnests positionally) — one expected row per
     certified segment, and the torn class's [NULL] arrays yield exactly
     the one NULL row the loud posexplode_outer path must emit."""
-    from jsonschema_spark.sources.clips import segment_clips_path
+    from jsonschema_spark.sources.clips import synth_segment_clips
 
-    src = f"read_parquet('{segment_clips_path(_SEGD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_segment_clips, _SEGD_N))
     return f"""
         SELECT clip_id,
                unnest(_seg_idxs) AS seg_idx,
@@ -7627,9 +7568,9 @@ def _clips_segment_auto_sql() -> str:
     """Router oracle: the same lockstep-unnested per-segment ledger, with
     the expected path derived from the codec column alone (pcm_s16le ->
     slice, everything else -> decode)."""
-    from jsonschema_spark.sources.clips import segment_clips_path
+    from jsonschema_spark.sources.clips import synth_segment_clips
 
-    src = f"read_parquet('{segment_clips_path(_SEGD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_segment_clips, _SEGD_N))
     return f"""
         SELECT clip_id,
                unnest(_seg_idxs) AS seg_idx,
@@ -7646,9 +7587,9 @@ def _segd_segs_cte() -> str:
     """Shared CTE: the segment relation rebuilt from the ledger arrays
     (lockstep unnest) with segment_id re-derived by the same lpad
     arithmetic the operator uses."""
-    from jsonschema_spark.sources.clips import segment_clips_path
+    from jsonschema_spark.sources.clips import synth_segment_clips
 
-    src = f"read_parquet('{segment_clips_path(_SEGD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_segment_clips, _SEGD_N))
     return f"""
         WITH segs AS (
             SELECT clip_id,
@@ -7777,10 +7718,10 @@ def _clips_flac_window_sql() -> str:
     from jsonschema_spark.sources.clips import (
         SEEK_CLASS_MOD,
         SEEK_CLS_EARLY_CORRUPT,
-        flac_seek_clips_path,
+        synth_flac_seek_clips,
     )
 
-    src = f"read_parquet('{flac_seek_clips_path(_SEEK_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_flac_seek_clips, _SEEK_N))
     return f"""
         SELECT clip_id,
                _win_n AS n_win,
@@ -7802,12 +7743,12 @@ def _suite_report_clips_sql() -> str:
         FLAC_CLASS_MOD,
         FLAC_FLIP_CLS,
         FLAC_TRUNC_CLS,
-        flac_clips_path,
-        wav_depth_clips_path,
+        synth_flac_clips,
+        synth_wav_depth_clips,
     )
 
-    f = f"read_parquet('{flac_clips_path(_FLAC_N)}/*.parquet')"
-    w = f"read_parquet('{wav_depth_clips_path(_WAVD_N)}/*.parquet')"
+    f = _pq(corpus_path(synth_flac_clips, _FLAC_N))
+    w = _pq(corpus_path(synth_wav_depth_clips, _WAVD_N))
     bad = f"_row_idx % {FLAC_CLASS_MOD} IN ({FLAC_TRUNC_CLS}, {FLAC_FLIP_CLS})"
 
     def row(name, ctype, metric, threshold, passed):
@@ -7842,9 +7783,9 @@ def _clips_upsample_sql() -> str:
     clamped]) // L - 32768 (nonnegative numerator: truncating division
     IS floor, bit-identical to the numpy kernel), rebuild the payload
     hex ORDER BY j and md5."""
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx,
@@ -8032,9 +7973,9 @@ def _clips_gain_normalize_sql() -> str:
     CAST/divide/sqrt/least — is correctly-rounded IEEE, matching numpy
     bit-for-bit), rescale each sample with floor(v*g + 0.5), clip, re-hex
     little-endian via printf, md5 the rebuilt payload."""
-    from jsonschema_spark.sources.clips import quality_clips_path
+    from jsonschema_spark.sources.clips import synth_quality_clips
 
-    src = f"read_parquet('{quality_clips_path(_QUALITY_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_quality_clips, _QUALITY_N))
     tgt, gmax = repr(_GAIN_TARGET_RMS), repr(_GAIN_MAX)
     return f"""
         WITH t AS (
@@ -8088,9 +8029,9 @@ def _images_jpeg_decode_sql() -> str:
     """Ledger oracle for the JPEG decode: the expected Y sums were
     computed at synth time by the same codec (and truncated rows were
     VERIFIED to break it), so expectations are pure ledger columns."""
-    from jsonschema_spark.sources.images import jpeg_images_path
+    from jsonschema_spark.sources.images import synth_jpeg_images
 
-    src = f"read_parquet('{jpeg_images_path(_JPEG_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_jpeg_images, _JPEG_N))
     return f"""
         SELECT image_id,
                CASE WHEN _row_idx % 9 = 6 THEN NULL ELSE width END AS width,
@@ -8105,9 +8046,9 @@ def _images_jpeg_progressive_sql() -> str:
     """Ledger oracle for the progressive-JPEG decode: expected Y sums
     computed at synth time by the same Annex G decoder (with the
     baseline-equality cross-check asserted during synthesis)."""
-    from jsonschema_spark.sources.images import progressive_jpeg_images_path
+    from jsonschema_spark.sources.images import synth_progressive_jpeg_images
 
-    src = f"read_parquet('{progressive_jpeg_images_path(_JPEG_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_progressive_jpeg_images, _JPEG_N))
     return f"""
         SELECT image_id,
                CASE WHEN _row_idx % 9 = 6 THEN NULL ELSE width END AS width,
@@ -8123,9 +8064,9 @@ def _videos_y4m_frames_sql() -> str:
     FRAME marker + 64 Y + 32 chroma), complete frames = (len-39)//102;
     each sampled frame's luma = exact sum of its 64 Y hex pairs / 64
     (power-of-two divide — bit-exact DOUBLE in both engines)."""
-    from jsonschema_spark.sources.videos import videos_path
+    from jsonschema_spark.sources.videos import synth_videos
 
-    src = f"read_parquet('{videos_path(_VIDEOS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_videos, _VIDEOS_N))
     return f"""
         WITH v AS (
           SELECT video_id, hex(bytes) AS hx, n_frames,
@@ -8162,9 +8103,9 @@ def _videos_mjpeg_frames_sql() -> str:
     """MJPEG frame-sampling oracle: the ledger's per-frame Y sums
     (computed at synth by the same JPEG decoder, class verdicts
     asserted then); sampled index k decodes iff k < len(_ysums)."""
-    from jsonschema_spark.sources.videos import mjpeg_videos_path
+    from jsonschema_spark.sources.videos import synth_mjpeg_videos
 
-    src = f"read_parquet('{mjpeg_videos_path(_MJPEG_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mjpeg_videos, _MJPEG_N))
     return f"""
         WITH e AS (
           SELECT video_id, _ysums,
@@ -8184,9 +8125,9 @@ def _videos_mjpeg_integrity_sql() -> str:
     """MJPEG integrity oracle: ledger verdicts + generator-arithmetic
     profile fields (valid rows carry the synthesis parameters; failed
     walks carry NULLs exactly as the walker emits)."""
-    from jsonschema_spark.sources.videos import mjpeg_videos_path
+    from jsonschema_spark.sources.videos import synth_mjpeg_videos
 
-    src = f"read_parquet('{mjpeg_videos_path(_MJPEG_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mjpeg_videos, _MJPEG_N))
     return f"""
         SELECT video_id,
                _ok AS avi_ok,
@@ -8204,9 +8145,9 @@ def _videos_mjpeg_integrity_sql() -> str:
 def _videos_av_demux_sql() -> str:
     """A/V demux oracle: the synth-time demux ledger (sample rates,
     post-tear byte counts and md5s; video-only rows carry NULLs)."""
-    from jsonschema_spark.sources.videos import av_videos_path
+    from jsonschema_spark.sources.videos import synth_av_videos
 
-    src = f"read_parquet('{av_videos_path(_AV_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_av_videos, _AV_N))
     return f"""
         SELECT video_id,
                _has_audio AS has_audio,
@@ -8219,9 +8160,9 @@ def _videos_av_demux_sql() -> str:
 
 def _clips_tags_sql() -> str:
     """Tag-extraction ledger oracle (generator strings)."""
-    from jsonschema_spark.sources.clips import tagged_clips_path
+    from jsonschema_spark.sources.clips import synth_tagged_clips
 
-    src = f"read_parquet('{tagged_clips_path(_TAGS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_tagged_clips, _TAGS_N))
     return f"""
         SELECT clip_id,
                _ok AS tags_ok,
@@ -8238,9 +8179,9 @@ def _clips_tags_sql() -> str:
 
 def _videos_mp4_fragments_sql() -> str:
     """fMP4 ledger oracle (generator-arithmetic truth)."""
-    from jsonschema_spark.sources.videos import fmp4_videos_path
+    from jsonschema_spark.sources.videos import synth_fmp4_videos
 
-    src = f"read_parquet('{fmp4_videos_path(_FMP4_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fmp4_videos, _FMP4_N))
     return f"""
         SELECT video_id,
                _ok AS frag_ok,
@@ -8257,9 +8198,9 @@ def _videos_mp4_fragments_sql() -> str:
 def _videos_webm_structure_sql() -> str:
     """WebM ledger oracle: generator-arithmetic truth (track/codec
     metadata, cluster/block counts, consistency gates, error strings)."""
-    from jsonschema_spark.sources.videos import webm_videos_path
+    from jsonschema_spark.sources.videos import synth_webm_videos
 
-    src = f"read_parquet('{webm_videos_path(_WEBM_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_webm_videos, _WEBM_N))
     return f"""
         SELECT video_id,
                _ok AS webm_ok,
@@ -8284,9 +8225,9 @@ def _videos_webm_structure_sql() -> str:
 def _clips_mp3_sideinfo_sql() -> str:
     """MP3 side-info ledger oracle: generator-arithmetic truth (the
     writer's own reservoir schedule and part2_3 bit totals)."""
-    from jsonschema_spark.sources.clips import mp3si_clips_path
+    from jsonschema_spark.sources.clips import synth_mp3si_clips
 
-    src = f"read_parquet('{mp3si_clips_path(_MP3SI_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mp3si_clips, _MP3SI_N))
     return f"""
         SELECT clip_id,
                _ok AS si_ok,
@@ -8304,9 +8245,9 @@ def _clips_mp3_sideinfo_sql() -> str:
 def _clips_aac_adts_sql() -> str:
     """ADTS ledger oracle: generator-arithmetic truth (frame/block
     counts, profile/rate/channels, CRC counts, error@index strings)."""
-    from jsonschema_spark.sources.clips import adts_clips_path
+    from jsonschema_spark.sources.clips import synth_adts_clips
 
-    src = f"read_parquet('{adts_clips_path(_ADTS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_adts_clips, _ADTS_N))
     return f"""
         SELECT clip_id,
                _ok AS adts_ok,
@@ -8325,9 +8266,9 @@ def _clips_aac_adts_sql() -> str:
 def _videos_mp4_structure_sql() -> str:
     """MP4 ledger oracle: generator-arithmetic truth (box/track/sample
     counts, SPS-derived dims, consistency gates, error strings)."""
-    from jsonschema_spark.sources.videos import mp4_videos_path
+    from jsonschema_spark.sources.videos import synth_mp4_videos
 
-    src = f"read_parquet('{mp4_videos_path(_MP4_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mp4_videos, _MP4_N))
     return f"""
         SELECT video_id,
                _ok AS mp4_ok,
@@ -8354,10 +8295,10 @@ def _clips_vorbis_decode_sql() -> str:
     (fingerprints + SNR-gate booleans; planted-failure error strings)."""
     from jsonschema_spark.sources.clips import (
         VORBIS_DEC_SNR_GATE_DB,
-        vorbis_decode_clips_path,
+        synth_vorbis_decode_clips,
     )
 
-    src = f"read_parquet('{vorbis_decode_clips_path(_VORBIS_DEC_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_vorbis_decode_clips, _VORBIS_DEC_N))
     return f"""
         SELECT clip_id,
                _ok AS vb_ok,
@@ -8375,9 +8316,9 @@ def _clips_vorbis_decode_sql() -> str:
 def _videos_h264_nals_sql() -> str:
     """H.264 ledger oracle: generator-arithmetic truth (NAL/frame/slice
     counts, SPS-derived dims, planted error@index strings)."""
-    from jsonschema_spark.sources.videos import h264_videos_path
+    from jsonschema_spark.sources.videos import synth_h264_videos
 
-    src = f"read_parquet('{h264_videos_path(_H264_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_h264_videos, _H264_N))
     return f"""
         SELECT video_id,
                _ok AS h264_ok,
@@ -8398,9 +8339,9 @@ def _image_dhash_sql() -> str:
     """dHash ledger oracle: the materialized parquet's planted truth
     (the Spark query materializes the corpus before the oracle runs —
     same protocol as the ulaw/alaw ledgers)."""
-    from jsonschema_spark.sources.images import images_path
+    from jsonschema_spark.sources.images import synth_images
 
-    src = f"read_parquet('{images_path(_IMAGES_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_images, _IMAGES_N))
     return f"""
         SELECT image_id, CAST(_dhash AS BIGINT) AS dhash, TRUE AS decode_ok
         FROM {src}
@@ -8410,9 +8351,9 @@ def _image_dhash_sql() -> str:
 def _image_near_dup_pairs_sql() -> str:
     """Brute-force all-pairs Hamming over the ledger hashes — independent
     of banding; equals the banded set for Hamming <= 3 by pigeonhole."""
-    from jsonschema_spark.sources.images import images_path
+    from jsonschema_spark.sources.images import synth_images
 
-    src = f"read_parquet('{images_path(_IMAGES_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_images, _IMAGES_N))
     return f"""
         SELECT a.image_id AS id_a, b.image_id AS id_b,
                CAST(bit_count(xor(a._dhash, b._dhash)) AS INTEGER) AS hamming
@@ -8426,9 +8367,9 @@ def _clips_adpcm_decode_sql() -> str:
     recurrence is not SQL-expressible, so expectations are the synth-time
     decode fingerprints (and synth-VERIFIED truncation failures) carried
     in the SAME parquet the Spark query scans — the jpeg-ledger stance."""
-    from jsonschema_spark.sources.clips import adpcm_clips_path
+    from jsonschema_spark.sources.clips import synth_adpcm_clips
 
-    src = f"read_parquet('{adpcm_clips_path(_ADPCM_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_adpcm_clips, _ADPCM_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -8445,10 +8386,10 @@ def _clips_msadpcm_decode_sql() -> str:
     from jsonschema_spark.sources.clips import (
         MSADPCM_TRUNC_CLS,
         MSADPCM_TRUNC_MOD,
-        msadpcm_clips_path,
+        synth_msadpcm_clips,
     )
 
-    src = f"read_parquet('{msadpcm_clips_path(_ADPCM_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_msadpcm_clips, _ADPCM_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -8464,12 +8405,10 @@ def _clips_flac_multichannel_sql() -> str:
     from jsonschema_spark.sources.clips import (
         FLACM_CLASS_MOD,
         FLACM_CLS_TORN,
-        flac_multichannel_clips_path,
+        synth_flac_multichannel_clips,
     )
 
-    src = (
-        f"read_parquet('{flac_multichannel_clips_path(_FLACM_N)}/*.parquet')"
-    )
+    src = _pq(corpus_path(synth_flac_multichannel_clips, _FLACM_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -8486,10 +8425,10 @@ def _clips_flac_depths_sql() -> str:
     from jsonschema_spark.sources.clips import (
         FLACD_CLASS_MOD,
         FLACD_CLS_TORN,
-        flac_depth_clips_path,
+        synth_flac_depth_clips,
     )
 
-    src = f"read_parquet('{flac_depth_clips_path(_FLACD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_flac_depth_clips, _FLACD_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -8504,9 +8443,9 @@ def _clips_loudness_sql() -> str:
     """Loudness oracle: the ledger columns ARE the expected kernel
     outputs (computed at synth time from the pre-encode samples; the
     decode->kernel path must reproduce them bit-for-bit)."""
-    from jsonschema_spark.sources.clips import loudness_clips_path
+    from jsonschema_spark.sources.clips import synth_loudness_clips
 
-    src = f"read_parquet('{loudness_clips_path(_LOUD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_loudness_clips, _LOUD_N))
     return f"""
         SELECT clip_id,
                _lufs_i AS lufs_integrated,
@@ -8520,9 +8459,9 @@ def _clips_loudness_sql() -> str:
 def _clips_lufs_normalize_sql() -> str:
     """Normalization ledger oracle: expected gain + output-payload md5
     from the synth-time rewrite of the pre-encode samples."""
-    from jsonschema_spark.sources.clips import loudness_clips_path
+    from jsonschema_spark.sources.clips import synth_loudness_clips
 
-    src = f"read_parquet('{loudness_clips_path(_LOUD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_loudness_clips, _LOUD_N))
     return f"""
         SELECT clip_id,
                (_ngain IS NOT NULL) AS normalized,
@@ -8539,10 +8478,10 @@ def _clips_containers_sql() -> str:
     from jsonschema_spark.sources.clips import (
         CONT_CLASS_MOD,
         CONT_CLS_TORN,
-        container_clips_path,
+        synth_container_clips,
     )
 
-    src = f"read_parquet('{container_clips_path(_CONT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_container_clips, _CONT_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -8558,9 +8497,9 @@ def _clips_hum_screen_sql() -> str:
     arithmetic replayed over them (NaN sentinels are stored as NULL via
     Arrow nan-as-null, so plain IS NOT NULL replicates the Spark-side
     isNotNull/isnan guards)."""
-    from jsonschema_spark.sources.clips import hum_clips_path
+    from jsonschema_spark.sources.clips import synth_hum_clips
 
-    src = f"read_parquet('{hum_clips_path(_HUM_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_hum_clips, _HUM_N))
     return f"""
         SELECT clip_id,
                _dc AS dc_offset,
@@ -8595,9 +8534,9 @@ def _clips_pitch_screen_sql() -> str:
     doubles, already replayed at synth time — the ledger stores the
     final booleans, so the oracle is a straight ledger read; NaN
     sentinels land as NULL via Arrow nan-as-null on BOTH sides)."""
-    from jsonschema_spark.sources.clips import pitch_clips_path
+    from jsonschema_spark.sources.clips import synth_pitch_clips
 
-    src = f"read_parquet('{pitch_clips_path(_PITCH_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_pitch_clips, _PITCH_N))
     return f"""
         SELECT clip_id,
                _f0 AS f0_median_hz,
@@ -8618,12 +8557,9 @@ def _clips_stereo_screen_sql() -> str:
     ledger stores the final booleans, so the oracle is a straight
     ledger read; NaN sentinels land as NULL via Arrow nan-as-null on
     BOTH sides)."""
-    from jsonschema_spark.sources.clips import stereo_screen_clips_path
+    from jsonschema_spark.sources.clips import synth_stereo_screen_clips
 
-    src = (
-        f"read_parquet('{stereo_screen_clips_path(_STEREO_SCREEN_N)}"
-        "/*.parquet')"
-    )
+    src = _pq(corpus_path(synth_stereo_screen_clips, _STEREO_SCREEN_N))
     return f"""
         SELECT clip_id,
                _nch AS n_channels,
@@ -8647,9 +8583,9 @@ def _clips_tonality_screen_sql() -> str:
     """Tonality ledger oracle: kernel doubles + gate booleans recorded
     at synth time (straight ledger read; NaN -> NULL on both sides via
     Arrow nan-as-null)."""
-    from jsonschema_spark.sources.clips import tonality_clips_path
+    from jsonschema_spark.sources.clips import synth_tonality_clips
 
-    src = f"read_parquet('{tonality_clips_path(_TONALITY_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_tonality_clips, _TONALITY_N))
     return f"""
         SELECT clip_id,
                _flat AS flat_med,
@@ -8672,9 +8608,9 @@ def _clips_fbank_matrix_sql() -> str:
     quantized matrix via a CONSTANT range cross join filtered to each
     row's length (DuckDB's range() table function cannot be lateral) +
     list_extract (1-based)."""
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     return f"""
         SELECT clip_id,
                CAST(r.range AS INTEGER) AS pos,
@@ -8730,9 +8666,9 @@ def _clips_fbank_delta_sql() -> str:
     expands the inner regression in closed form exactly as the Spark
     Column algebra does."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     d_expr, dd_expr = _delta_sql_exprs(nm)
     return f"""
@@ -8758,9 +8694,9 @@ def _clips_cmvn_global_sql() -> str:
     """Corpus-CMVN oracle: GLOBAL per-bin sums from the ledger, then
     the exact-op apply chain per element."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     return f"""
         WITH e AS (
@@ -8795,9 +8731,9 @@ def _clips_frame_stack_sql() -> str:
     (i = pos//width, j/m from the remainder, src = least(i*stride+j,
     T-1)) over the `_mat` ledger."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     width = 3 * nm
     return f"""
@@ -8822,9 +8758,9 @@ def _clips_labels_sql() -> str:
     walk (both engines: 1-based position, 0 = absent); the vocab's
     apostrophe is SQL-escaped."""
     from jsonschema_spark.operators.labels import DEFAULT_VOCAB
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     vocab_sql = "'" + DEFAULT_VOCAB.replace("'", "''") + "'"
     return f"""
         WITH n AS (
@@ -8863,9 +8799,9 @@ def _clips_label_coverage_sql() -> str:
     aggregated per codec; label totals as BIGINT, the OOV rate as one
     exact-op double division."""
     from jsonschema_spark.operators.labels import DEFAULT_VOCAB
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     vocab_sql = "'" + DEFAULT_VOCAB.replace("'", "''") + "'"
     return f"""
         WITH n AS (
@@ -8913,9 +8849,9 @@ def _clips_tensor_shards_sql() -> str:
     exact-op normalized doubles from the `_mat` ledger (zero-frame
     clips produce no elements, matching the sink's skip)."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     return f"""
         WITH e AS (
@@ -8957,9 +8893,9 @@ def _clips_mfcc_sql() -> str:
         N_MELS,
         mfcc_coeffs_q,
     )
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm, nc = N_MELS, N_CEPS
     c_lit = (
         "["
@@ -8995,9 +8931,9 @@ def _clips_train_tensors_sql() -> str:
     normalization, all from the `_mat` ledger in a single WITH chain
     (separate WITH statements cannot UNION in DuckDB)."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     seed = _SPECAUG_SEED
     max_t, max_f = 20, 8
@@ -9076,9 +9012,9 @@ def _clips_cmvn_normalize_sql() -> str:
     every constant CAST to DOUBLE (DECIMAL-literal trap), divisions
     left-associated exactly as the Spark expression tree."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     return f"""
         WITH e AS (
@@ -9116,9 +9052,9 @@ def _clips_batch_assign_sql() -> str:
     division, and the same (dur, id) window order — ORDER BY spelled
     with explicit ASC (no NULLs survive the filter, but the Spark/
     DuckDB NULLS FIRST/LAST default split makes explicitness policy)."""
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     key = f"'{_BATCH_SEED}' || '|' || clip_id"
     shard = f"{_h60(key)} % 4"
     return f"""
@@ -9160,9 +9096,9 @@ def _clips_ctc_feasibility_sql() -> str:
     empty/NULL/all-OOV transcripts fail closed exactly as the Spark
     gate."""
     from jsonschema_spark.operators.labels import DEFAULT_VOCAB
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     vocab_sql = "'" + DEFAULT_VOCAB.replace("'", "''") + "'"
     return f"""
         WITH f AS (
@@ -9220,9 +9156,9 @@ def _clips_specaugment_sql() -> str:
     every masked element from the `_mat` ledger — integer arithmetic
     end to end."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_mat_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_mat_clips
 
-    src = f"read_parquet('{fbank_mat_clips_path(_FBANK_MAT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_mat_clips, _FBANK_MAT_N))
     nm = N_MELS
     seed = _SPECAUG_SEED
     max_t, max_f = 20, 8
@@ -9296,9 +9232,9 @@ def _clips_tar_roundtrip_sql() -> str:
     """Tar round-trip oracle: the SOURCE parquet of the mixed corpus —
     the pack->unpack cycle must reproduce every payload byte (md5 over
     hex, the repo's BLOB-hash convention) and every sidecar field."""
-    from jsonschema_spark.sources.clips import mixed_clips_path
+    from jsonschema_spark.sources.clips import synth_mixed_clips
 
-    src = f"read_parquet('{mixed_clips_path(_TAR_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mixed_clips, _TAR_N))
     return f"""
         SELECT clip_id,
                md5(hex(bytes)) AS payload_md5,
@@ -9316,9 +9252,9 @@ def _clips_fbank_features_sql() -> str:
     WITH ORDINALITY) — pure integer ledger read. Empty arrays (torn /
     sub-window clips) produce no rows, matching posexplode."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_clips
 
-    src = f"read_parquet('{fbank_clips_path(_FBANK_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_clips, _FBANK_N))
     return f"""
         SELECT clip_id,
                CAST(r.range AS INTEGER) AS bin,
@@ -9338,9 +9274,9 @@ def _clips_fbank_cmvn_sql() -> str:
     sqrt are correctly rounded — the float-oracle whitelist; every
     constant CAST to DOUBLE against DuckDB's DECIMAL-literal trap)."""
     from jsonschema_spark.functions.fbank import N_MELS
-    from jsonschema_spark.sources.clips import fbank_clips_path
+    from jsonschema_spark.sources.clips import synth_fbank_clips
 
-    src = f"read_parquet('{fbank_clips_path(_FBANK_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_fbank_clips, _FBANK_N))
     return f"""
         WITH e AS (
             SELECT r.range AS bin,
@@ -9378,9 +9314,9 @@ def _clips_dropout_screen_sql() -> str:
     """Dropout/click ledger oracle: counts and durations are GENERATOR
     arithmetic (the plant plan, asserted against the detector at synth
     time); click_thr is kernel replay. Straight ledger read."""
-    from jsonschema_spark.sources.clips import dropout_clips_path
+    from jsonschema_spark.sources.clips import synth_dropout_clips
 
-    src = f"read_parquet('{dropout_clips_path(_DROPOUT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_dropout_clips, _DROPOUT_N))
     return f"""
         SELECT clip_id,
                _nd AS n_dropouts,
@@ -9402,9 +9338,9 @@ def _clips_snr_screen_sql() -> str:
     """SNR ledger oracle: kernel doubles + gate booleans recorded at
     synth time (straight ledger read; NaN -> NULL on both sides via
     Arrow nan-as-null; +inf survives parquet on both sides)."""
-    from jsonschema_spark.sources.clips import snr_clips_path
+    from jsonschema_spark.sources.clips import synth_snr_clips
 
-    src = f"read_parquet('{snr_clips_path(_SNR_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_snr_clips, _SNR_N))
     return f"""
         SELECT clip_id,
                _est AS snr_est_db,
@@ -9424,9 +9360,9 @@ def _clips_codec_match_sql() -> str:
     """Codec-label ledger oracle: the lie plan + shared CODEC_ACCEPT
     mapping replayed in Python at synth time (straight ledger read;
     container truth is generator arithmetic)."""
-    from jsonschema_spark.sources.clips import codec_clips_path
+    from jsonschema_spark.sources.clips import synth_codec_clips
 
-    src = f"read_parquet('{codec_clips_path(_CODEC_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_codec_clips, _CODEC_N))
     return f"""
         SELECT clip_id,
                codec,
@@ -9439,9 +9375,9 @@ def _clips_codec_match_sql() -> str:
 def _clips_container_dispatch_sql() -> str:
     """Mixed-container ledger oracle: generator-arithmetic truth for the
     normalized profile plus the gate booleans replayed at synth time."""
-    from jsonschema_spark.sources.clips import mixed_clips_path
+    from jsonschema_spark.sources.clips import synth_mixed_clips
 
-    src = f"read_parquet('{mixed_clips_path(_MIXED_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mixed_clips, _MIXED_N))
     return f"""
         SELECT clip_id,
                _container AS container,
@@ -9461,9 +9397,9 @@ def _clips_ogg_walk_sql() -> str:
     """Ogg ledger oracle: generator-arithmetic truth (page/packet
     counts, granule positions, 48 kHz-clock durations, planted-failure
     error names)."""
-    from jsonschema_spark.sources.clips import ogg_clips_path
+    from jsonschema_spark.sources.clips import synth_ogg_clips
 
-    src = f"read_parquet('{ogg_clips_path(_OGG_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ogg_clips, _OGG_N))
     return f"""
         SELECT clip_id,
                _ok AS ok,
@@ -9484,9 +9420,9 @@ def _clips_opus_packets_sql() -> str:
     """Opus packet-framing ledger oracle: generator-arithmetic truth
     (per-code frame/sample counts, end-trim, error@index strings for
     the planted framing violations)."""
-    from jsonschema_spark.sources.clips import opus_packet_clips_path
+    from jsonschema_spark.sources.clips import synth_opus_packet_clips
 
-    src = f"read_parquet('{opus_packet_clips_path(_OPUS_PKT_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_opus_packet_clips, _OPUS_PKT_N))
     return f"""
         SELECT clip_id,
                _ok AS pkt_ok,
@@ -9502,12 +9438,9 @@ def _clips_opus_packets_sql() -> str:
 
 def _clips_vorbis_packets_sql() -> str:
     """Vorbis packet-discipline ledger oracle (generator truth)."""
-    from jsonschema_spark.sources.clips import vorbis_packet_clips_path
+    from jsonschema_spark.sources.clips import synth_vorbis_packet_clips
 
-    src = (
-        f"read_parquet('{vorbis_packet_clips_path(_VORBIS_PKT_N)}"
-        f"/*.parquet')"
-    )
+    src = _pq(corpus_path(synth_vorbis_packet_clips, _VORBIS_PKT_N))
     return f"""
         SELECT clip_id,
                _ok AS pkt_ok,
@@ -9523,9 +9456,9 @@ def _clips_mp3_headers_sql() -> str:
     """MP3 header-walk oracle: the ledger's generator-arithmetic truth
     (frame totals, n*spf*1000//sr durations, bitrate-schedule min/max,
     declared-vs-actual info counts, planted-failure classes)."""
-    from jsonschema_spark.sources.clips import mp3_clips_path
+    from jsonschema_spark.sources.clips import synth_mp3_clips
 
-    src = f"read_parquet('{mp3_clips_path(_MP3_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mp3_clips, _MP3_N))
     return f"""
         SELECT clip_id,
                _ok AS ok,
@@ -9550,10 +9483,10 @@ def _clips_flac_lpc_decode_sql() -> str:
         FLACL_CLASS_MOD,
         FLACL_FLIP_CLS,
         FLACL_TRUNC_CLS,
-        flac_lpc_clips_path,
+        synth_flac_lpc_clips,
     )
 
-    src = f"read_parquet('{flac_lpc_clips_path(_FLACL_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_flac_lpc_clips, _FLACL_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -9576,10 +9509,10 @@ def _clips_flac_decode_sql() -> str:
         FLAC_CLASS_MOD,
         FLAC_FLIP_CLS,
         FLAC_TRUNC_CLS,
-        flac_clips_path,
+        synth_flac_clips,
     )
 
-    src = f"read_parquet('{flac_clips_path(_FLAC_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_flac_clips, _FLAC_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -9600,10 +9533,10 @@ def _clips_flac_stereo_decode_sql() -> str:
         FLAC_CLASS_MOD,
         FLAC_FLIP_CLS,
         FLAC_TRUNC_CLS,
-        flac_stereo_clips_path,
+        synth_flac_stereo_clips,
     )
 
-    src = f"read_parquet('{flac_stereo_clips_path(_FLAC2_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_flac_stereo_clips, _FLAC2_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -9620,9 +9553,9 @@ def _clips_wav_depths_sql() -> str:
     chain) come from synth-time source arithmetic; len_ok is recomputed
     INDEPENDENTLY from the metadata columns (_n_dec vs sr*dur//1000), not
     from the planted-class arithmetic, so it cross-checks the ledger."""
-    from jsonschema_spark.sources.clips import wav_depth_clips_path
+    from jsonschema_spark.sources.clips import synth_wav_depth_clips
 
-    src = f"read_parquet('{wav_depth_clips_path(_WAVD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_wav_depth_clips, _WAVD_N))
     return f"""
         SELECT clip_id,
                _n_dec AS n_samples,
@@ -9641,13 +9574,10 @@ def _clips_pcm24_decode_sql() -> str:
     Rebuild the int16-LE hex stream and md5 — must
     match the Arrow-hop decode bit-for-bit, torn uploads included (both
     engines trim to whole 3-byte frames)."""
-    from jsonschema_spark.sources.clips import (
-        WAVD_LAYOUTS,
-        wav_depth_clips_path,
-    )
+    from jsonschema_spark.sources.clips import WAVD_LAYOUTS, synth_wav_depth_clips
 
     mono24 = WAVD_LAYOUTS.index((24, 1))
-    src = f"read_parquet('{wav_depth_clips_path(_WAVD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_wav_depth_clips, _WAVD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx,
@@ -9692,10 +9622,10 @@ def _clips_ulaw_decode_sql() -> str:
     from jsonschema_spark.sources.clips import (
         ULAW_CLASS_MOD,
         ULAW_CLS_CORRUPT,
-        ulaw_clips_path,
+        synth_ulaw_clips,
     )
 
-    src = f"read_parquet('{ulaw_clips_path(_ULAW_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ulaw_clips, _ULAW_N))
     return f"""
         WITH t AS (
           SELECT clip_id, _row_idx, hex(bytes) AS hx,
@@ -9734,7 +9664,7 @@ def _clips_content_manifest_sql() -> str:
     """Manifest oracle: bucket assignment, keyed line hash and the
     DECIMAL-exact commutative sum all recomputed from the parquet blobs
     (md5_60 == ('0x' || substr(md5(x),1,15))::BIGINT)."""
-    src = _CLIPS_MAIN_PQ
+    src = _clips_pq(_CLIPS_N)
     return f"""
         WITH r AS (
           SELECT CAST(('0x' || substr(md5(clip_id), 1, 15)) AS BIGINT)
@@ -9763,10 +9693,10 @@ def _clips_downmix_sql() -> str:
     from jsonschema_spark.sources.clips import (
         STEREO_CLS_MONO,
         STEREO_MONO_MOD,
-        stereo_clips_path,
+        synth_stereo_clips,
     )
 
-    src = f"read_parquet('{stereo_clips_path(_STEREO_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_stereo_clips, _STEREO_N))
     return f"""
         WITH t AS (
           SELECT clip_id, _row_idx, hex(bytes) AS hx,
@@ -9819,9 +9749,9 @@ def _clips_speed_perturb_sql() -> str:
     """Speed-perturbation oracle: output sample j is input sample
     (j*num)//den, n_out = (n*den)//num; the decimated/stretched payload
     is reassembled as hex text (ORDER BY j pins aggregation order)."""
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     num, den = _SPEED_NUM, _SPEED_DEN
     return f"""
         WITH t AS (
@@ -9853,9 +9783,9 @@ def _clips_time_mask_sql() -> str:
     """Time-masking oracle: both mask starts recomputed from
     md5(clip_id||':tm<k>') (top-60-bit hash % (n-w+1)), masked samples
     rendered as '0000', everything else copied from the source hex."""
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, hex(bytes) AS hx, sr_hz,
@@ -9899,9 +9829,9 @@ def _clips_mix_overlay_sql() -> str:
     streams from hex, and rebuild clip(floor(a + b*gain + 0.5)) — every
     operation exactly-rounded double arithmetic, so the md5 of the
     re-hexed sample stream matches the numpy kernel bit-for-bit."""
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, _row_idx, hex(bytes) AS hx,
@@ -9956,9 +9886,9 @@ def _clips_mix_overlay_sql() -> str:
 def _transcript_char_counts_sql() -> str:
     """Char-histogram oracle: normalize + per-position substr walk,
     grouped by character."""
-    from jsonschema_spark.sources.clips import clips_path
+    from jsonschema_spark.sources.clips import synth_ledger_clips
 
-    src = f"read_parquet('{clips_path(_CLIPS_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_ledger_clips, _CLIPS_N))
     return f"""
         WITH n AS (
             SELECT trim(regexp_replace(lower(transcript),
@@ -9981,9 +9911,9 @@ def _clips_tar_index_sql() -> str:
     codec-mapped extension, then the json sidecar whose size is the
     exact json.dumps text length), each costing 512 header bytes +
     data padded to 512; offsets are the running sum."""
-    from jsonschema_spark.sources.clips import mixed_clips_path
+    from jsonschema_spark.sources.clips import synth_mixed_clips
 
-    src = f"read_parquet('{mixed_clips_path(_TAR_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_mixed_clips, _TAR_N))
     ext = (
         "CASE codec WHEN 'flac' THEN 'flac' WHEN 'aiff' THEN 'aiff'"
         " WHEN 'au' THEN 'au' WHEN 'mp3' THEN 'mp3'"
@@ -10028,9 +9958,9 @@ def _clips_mix_snr_sql() -> str:
     (i < nb inside the i < na domain == i < min(na, nb)), the gain in
     the IDENTICAL op order (sqrt / sqrt / r), and every output
     sample."""
-    from jsonschema_spark.sources.clips import padded_clips_path
+    from jsonschema_spark.sources.clips import synth_padded_clips
 
-    src = f"read_parquet('{padded_clips_path(_PAD_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_padded_clips, _PAD_N))
     return f"""
         WITH t AS (
           SELECT clip_id, _row_idx, hex(bytes) AS hx,
@@ -10128,10 +10058,10 @@ def _clips_alaw_decode_sql() -> str:
     from jsonschema_spark.sources.clips import (
         ALAW_CLASS_MOD,
         ALAW_CLS_CORRUPT,
-        alaw_clips_path,
+        synth_alaw_clips,
     )
 
-    src = f"read_parquet('{alaw_clips_path(_ALAW_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_alaw_clips, _ALAW_N))
     return f"""
         WITH t AS (
           SELECT clip_id, _row_idx, hex(bytes) AS hx,
@@ -10176,9 +10106,9 @@ def _audio_containment_sql() -> str:
     excerpt of row i-1 at every _row_idx i % 4 == 3 (sources/clips.
     synth_containment_clips); fingerprint margins guarantee the operator
     finds exactly that pair set."""
-    from jsonschema_spark.sources.clips import containment_clips_path
+    from jsonschema_spark.sources.clips import synth_containment_clips
 
-    src = f"read_parquet('{containment_clips_path(_CONTAIN_N)}/*.parquet')"
+    src = _pq(corpus_path(synth_containment_clips, _CONTAIN_N))
     return f"""
         SELECT a.clip_id AS id_a, b.clip_id AS id_b
         FROM {src} a JOIN {src} b ON a._row_idx + 1 = b._row_idx
@@ -10190,11 +10120,10 @@ def _pq(path: str) -> str:
     return f"read_parquet('{path}/*.parquet')"
 
 
-_CLIPS_MAIN_PQ = _pq(clips_path(_CLIPS_N))
-_CLIPS_BASE_PQ = _pq(clips_path(_CLIPS_BASE_N, _CLIPS_BASE_DUR))
-_CLIPS_MANIFEST_PQ = _pq(
-    clips_path(_CLIPS_MANIFEST_N, n_buckets=_CLIPS_MANIFEST_BUCKETS)
-)
+def _clips_pq(*params) -> str:
+    """The ledger-clips corpus at ``params``, resolved per call so the
+    oracle follows a re-pointed cache root as the Spark side does."""
+    return _pq(corpus_path(synth_ledger_clips, *params))
 
 # (keyword_path, keyword, DuckDB fail-predicate) — mirrors every check the
 # compiled CLIPS_JSON_SCHEMA emits (required/pattern/maxLength never fire in
@@ -10264,7 +10193,7 @@ def _clips_rollup_sql() -> str:
            CAST(sum(CASE WHEN NOT ({any_fail}) THEN 1 ELSE 0 END) AS BIGINT) AS passed,
            CAST(sum(CASE WHEN {any_fail} THEN 1 ELSE 0 END) AS BIGINT) AS failed,
            CAST(sum({viol_sum}) AS BIGINT) AS violation_count
-    FROM {_CLIPS_MAIN_PQ}
+    FROM {_clips_pq(_CLIPS_N)}
     GROUP BY ROLLUP (codec, sr_hz)
     """
 
@@ -10732,6 +10661,8 @@ def _uniqueness_sql(src: str, key: str) -> str:
 
 
 def _synth_roundtrip_sql() -> str:
+    from jsonschema_spark.sources.synth import dataframe_for_schema
+
     fails = [
         f for k, (_, _, _, _, f) in _ORDERS_CHECK_FAILS.items()
         if k != "req_orderdate"  # not in the synthesized schema (no property)
@@ -10743,7 +10674,7 @@ def _synth_roundtrip_sql() -> str:
            CAST(sum(CASE WHEN NOT ({any_fail}) THEN 1 ELSE 0 END) AS BIGINT) AS passed,
            CAST(sum(CASE WHEN {any_fail} THEN 1 ELSE 0 END) AS BIGINT) AS failed,
            CAST(sum({viol_sum}) AS BIGINT) AS violation_count
-    FROM {_pq(_synth_roundtrip_path())}
+    FROM {_pq(corpus_path(dataframe_for_schema, *_SYNTH_ROUNDTRIP))}
     """
 
 
@@ -10769,6 +10700,8 @@ _PART_LOGIC_FAILS = {
 
 
 def oracle_sql() -> dict[str, str]:
+    clips_main = _clips_pq(_CLIPS_N)
+    clips_base = _clips_pq(_CLIPS_BASE_N, _CLIPS_BASE_DUR)
     part_logic_sql = " UNION ALL ".join(
         f"SELECT p_partkey, '{k.split('|')[0]}' AS keyword_path, "
         f"'{k.split('|')[1]}' AS keyword FROM part WHERE {cond}"
@@ -12137,7 +12070,7 @@ def oracle_sql() -> dict[str, str]:
         "dedup_transcript_edits": f"""
             WITH base AS (
                 SELECT clip_id AS id, transcript AS text, _row_idx
-                FROM {_CLIPS_MAIN_PQ}
+                FROM {clips_main}
             ), corpus AS (
                 SELECT DISTINCT id, text FROM (
                     SELECT id, text FROM base
@@ -12294,18 +12227,18 @@ def oracle_sql() -> dict[str, str]:
         # --- clips contract rows: DuckDB reads the SAME materialized parquet
         # the Spark queries scan; the _row_idx planted ledger supplies the
         # expected outcome of the audio SNR / transcript invariants.
-        "clips_validate_totals": _clips_totals_sql(_CLIPS_MAIN_PQ),
-        "clips_violations": _clips_violations_sql(_CLIPS_MAIN_PQ),
+        "clips_validate_totals": _clips_totals_sql(clips_main),
+        "clips_violations": _clips_violations_sql(clips_main),
         "clips_speech_rate": f"""
             SELECT clip_id, '/rowChecks/speech_rate' AS keyword_path,
                    'rowCheck' AS keyword
-            FROM {_CLIPS_MAIN_PQ}
+            FROM {clips_main}
             WHERE transcript IS NOT NULL AND dur_ms IS NOT NULL AND dur_ms > 0
               AND NOT (length(transcript) / (dur_ms / 1000.0)
                        BETWEEN 5.0 AND 200.0)
         """,
         "clips_summary_by_codec": _clips_totals_sql(
-            _CLIPS_MAIN_PQ, ("codec", "sr_hz")
+            clips_main, ("codec", "sr_hz")
         ),
         "clips_duration_buckets": f"""
             WITH g AS (
@@ -12313,7 +12246,7 @@ def oracle_sql() -> dict[str, str]:
                      CAST(count(*) AS BIGINT) AS n_clips,
                      CAST(sum(dur_ms) AS BIGINT) AS total_ms,
                      CAST(max(dur_ms) AS BIGINT) AS max_ms
-              FROM {_CLIPS_MAIN_PQ}
+              FROM {clips_main}
               WHERE dur_ms IS NOT NULL AND dur_ms >= 0
               GROUP BY 1
             )
@@ -12334,7 +12267,7 @@ def oracle_sql() -> dict[str, str]:
                      CAST(count(*) AS BIGINT) AS n_clips,
                      CAST(sum(dur_ms) AS BIGINT) AS total_ms,
                      CAST(max(dur_ms) AS BIGINT) AS max_ms
-              FROM {_CLIPS_MAIN_PQ}
+              FROM {clips_main}
               WHERE dur_ms IS NOT NULL AND dur_ms >= 0
               GROUP BY 1
             ), a AS (
@@ -12359,7 +12292,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "clips_summary_rollup": _clips_rollup_sql(),
         "clips_partition_health": f"""
-            WITH s AS ({_clips_totals_sql(_CLIPS_MAIN_PQ, ("codec", "sr_hz"))}),
+            WITH s AS ({_clips_totals_sql(clips_main, ("codec", "sr_hz"))}),
             r AS (
                 SELECT codec, sr_hz, "rows", failed,
                        floor((failed / "rows") * 1e9 + 5e-1) / 1e9 AS fail_rate
@@ -12386,15 +12319,15 @@ def oracle_sql() -> dict[str, str]:
             SELECT clip_id,
                    (_row_idx % 109 <> 108) AS snr_ok,
                    NOT (_row_idx % 107 = 106 OR _row_idx % 211 = 210) AS transcript_ok
-            FROM {_CLIPS_MAIN_PQ}
+            FROM {clips_main}
             WHERE _row_idx % 109 = 108
                OR _row_idx % 107 = 106
                OR _row_idx % 211 = 210
         """,
-        "clips_uniqueness": _uniqueness_sql(_CLIPS_MAIN_PQ, "clip_id"),
+        "clips_uniqueness": _uniqueness_sql(clips_main, "clip_id"),
         "pack_plan_clips": f"""
             WITH singles AS (
-              SELECT clip_id FROM {_CLIPS_MAIN_PQ}
+              SELECT clip_id FROM {clips_main}
               GROUP BY clip_id HAVING COUNT(*) = 1
             ), h AS (
               SELECT c.clip_id, c.codec, CAST(c.dur_ms AS BIGINT) AS weight,
@@ -12402,7 +12335,7 @@ def oracle_sql() -> dict[str, str]:
                        PARTITION BY c.codec ORDER BY c.clip_id ASC
                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
                      ), 0) AS off
-              FROM {_CLIPS_MAIN_PQ} c JOIN singles USING (clip_id)
+              FROM {clips_main} c JOIN singles USING (clip_id)
               WHERE c.clip_id IS NOT NULL AND c.dur_ms IS NOT NULL
             ), p AS (
               SELECT clip_id, codec, weight, off,
@@ -12418,7 +12351,7 @@ def oracle_sql() -> dict[str, str]:
         "mixture_sample_clips": f"""
             WITH mixs AS (
               SELECT codec AS stratum, CAST(SUM(dur_ms) AS BIGINT) AS n
-              FROM {_CLIPS_MAIN_PQ} WHERE codec IS NOT NULL GROUP BY codec
+              FROM {clips_main} WHERE codec IS NOT NULL GROUP BY codec
             ), mixw AS (
               SELECT stratum, n,
                      CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1048576.0) AS BIGINT)
@@ -12433,7 +12366,7 @@ def oracle_sql() -> dict[str, str]:
               FROM mixw, mixt
             )
             SELECT c.clip_id, c.codec, c.dur_ms
-            FROM {_CLIPS_MAIN_PQ} c JOIN mixr ON c.codec = mixr.stratum
+            FROM {clips_main} c JOIN mixr ON c.codec = mixr.stratum
             WHERE c.clip_id IS NOT NULL
               AND ('0x' || substr(md5('mc1' || '|' || c.clip_id), 1, 15))::BIGINT
                   / 1152921504606846976.0
@@ -12441,18 +12374,18 @@ def oracle_sql() -> dict[str, str]:
         """,
         "clips_drift_dur_ms": _ks_binned_sql(
             _CLIPS_KS_GRID, "TRUE", "TRUE",
-            table=_CLIPS_MAIN_PQ, col="dur_ms", base_table=_CLIPS_BASE_PQ,
+            table=clips_main, col="dur_ms", base_table=clips_base,
         ),
         "clips_drift_wasserstein": _wasserstein_binned_sql(
             _CLIPS_KS_GRID, "TRUE", "TRUE",
-            table=_CLIPS_MAIN_PQ, col="dur_ms", base_table=_CLIPS_BASE_PQ,
+            table=clips_main, col="dur_ms", base_table=clips_base,
         ),
         "clips_drift_codec": _chi_square_sql(
-            _CLIPS_MAIN_PQ, _CLIPS_BASE_PQ, "codec"
+            clips_main, clips_base, "codec"
         ),
         "clips_drift_matrix_codec": _drift_matrix_sql(
-            _CLIPS_MAIN_PQ,
-            _CLIPS_BASE_PQ,
+            clips_main,
+            clips_base,
             "codec",
             _drift_matrix_bin_expr(_CLIPS_KS_GRID, "dur_ms"),
             cur_where="dur_ms IS NOT NULL",
@@ -12460,15 +12393,15 @@ def oracle_sql() -> dict[str, str]:
             group_alias="codec",
         ),
         "clips_drift_report": _drift_report_sql(
-            _CLIPS_MAIN_PQ,
-            _CLIPS_BASE_PQ,
+            clips_main,
+            clips_base,
             {"dur_ms": _CLIPS_KS_GRID},
             ["sr_hz", "codec"],
         ),
         "clips_resumable_manifest": f"""
             SELECT _bucket AS partition_value, "rows", passed, failed,
                    violation_count
-            FROM ({_clips_totals_sql(_CLIPS_MANIFEST_PQ, ("_bucket",))})
+            FROM ({_clips_totals_sql(_clips_pq(*_CLIPS_MANIFEST), ("_bucket",))})
         """,
         "synth_schema_roundtrip": _synth_roundtrip_sql(),
         # minhash / simhash / LSH-ANN / IVF oracles follow below once their

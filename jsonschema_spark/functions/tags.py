@@ -327,7 +327,8 @@ def build_id3v2(
     title: str, artist: str, album: Optional[str] = None,
     version: int = 3, encoding: int = 3, padding: int = 16,
     terminated: bool = False, ext_header: bool = False,
-    unsync_flag: bool = False,
+    unsync_flag: bool = False, frame_flags: int = 0,
+    frame_prefix: bytes = b"",
 ) -> bytes:
     """A real ID3v2.3/2.4 tag with TIT2/TPE1(/TALB) text frames.
 
@@ -337,7 +338,11 @@ def build_id3v2(
     judge repro showed the parser mishandled. ``ext_header`` emits a
     version-correct extended header (v2.3 size-excluded / v2.4
     size-included). ``unsync_flag`` sets the unsynchronisation header
-    bit (the parser rejects it loudly: "unsync_unsupported")."""
+    bit (the parser rejects it loudly: "unsync_unsupported").
+    ``frame_flags`` is every frame's format-flags byte and
+    ``frame_prefix`` the per-frame data it announces (grouping identity
+    byte, v2.4 data-length indicator), written ahead of each text body
+    and counted in the frame size."""
     frames = b""
     for fid, text in (("TIT2", title), ("TPE1", artist), ("TALB", album)):
         if text is None:
@@ -356,9 +361,10 @@ def build_id3v2(
             term = b"\x00"
         if terminated:
             body += term
+        body = frame_prefix + body
         size = (_syncsafe_bytes(len(body)) if version == 4
                 else struct.pack(">I", len(body)))
-        frames += fid.encode() + size + b"\x00\x00" + body
+        frames += fid.encode() + size + bytes((0, frame_flags)) + body
     if ext_header:
         if version == 4:
             # syncsafe size incl. itself (4) + flag-byte count + flags

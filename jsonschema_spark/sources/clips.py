@@ -22,8 +22,12 @@ Planted violations (deterministic by index; period => known a-priori rates):
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from typing import Iterator, Optional
+import os
+import shutil
+import uuid
+from typing import Callable, Iterator, Optional
 
 import numpy as np
 import pandas as pd
@@ -188,100 +192,112 @@ def synth_clips(
     )
 
 
-# Bump when the generator arithmetic changes: the cache path is content-
-# addressed by (version, n, dur_range, buckets), so stale materializations
-# from earlier rounds can never be read.
-_MATERIALIZE_VERSION = "v8"  # v8: tagged corpus adds ID3v2.2, webm
-# corpus adds BlockGroup class; v7: mp3si corpus gains part2 accounting
-# (part2-aware allocation + part2_overflow + scfsi classes); v6 added
-# the tagged-corpus terminated-UTF-16 / ext-header / unsync classes
+# ---------------------------------------------------------------------------
+# Content-keyed corpus cache
+# ---------------------------------------------------------------------------
+# Every synthesized corpus lives at <root>/<generator name>_<key>. The key
+# hashes the package source, the numpy version and the generator's
+# parameters, so any library edit moves every path: a corpus on disk is
+# always the one the current code writes, and Spark and the DuckDB oracle
+# derive the same path from the same call. Nothing is evicted (deleting
+# under a concurrent reader is unsafe). Read at call time, so a caller may
+# re-point the root.
 _MATERIALIZE_ROOT = "/tmp/jss_oracle_cache"
 
 
-def oracle_cache_path(name: str) -> str:
-    """Canonical path under the versioned oracle cache for any materialized
-    deterministic table (bump _MATERIALIZE_VERSION when ANY generator's
-    arithmetic changes — all cached tables re-materialize together)."""
-    import os
-
-    return os.path.join(_MATERIALIZE_ROOT, _MATERIALIZE_VERSION, name)
-
-
-def publish_once(df: DataFrame, path: str) -> None:
-    """Materialize ``df`` at ``path`` exactly once, race-safely: write to a
-    session-private temp dir, then atomically rename into place. Concurrent
-    sessions produce bit-identical content (deterministic synthesis), so
-    the rename loser simply discards its copy — readers (Spark scans AND
-    the DuckDB oracle's read_parquet) never observe a partial directory."""
-    import os
-    import shutil
-    import uuid
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # another session published
-
-
-def clips_path(
-    n: int,
-    dur_range: tuple[int, int] = (200, 2000),
-    n_buckets: Optional[int] = None,
-) -> str:
-    """Canonical materialization path for (n, dur_range, buckets) — shared
-    by the Spark queries and the DuckDB oracle SQL generator."""
-    import os
-
-    suffix = f"_b{n_buckets}" if n_buckets else ""
-    return os.path.join(
-        _MATERIALIZE_ROOT,
-        _MATERIALIZE_VERSION,
-        f"clips_{n}_{dur_range[0]}_{dur_range[1]}{suffix}",
+@functools.lru_cache(maxsize=None)
+def _package_digest() -> bytes:
+    """sha256 over every .py file under jsonschema_spark/ (relative path,
+    length and bytes, sorted by path), once per process."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rels = sorted(
+        os.path.relpath(os.path.join(d, f), pkg).replace(os.sep, "/")
+        for d, _, fs in os.walk(pkg)
+        for f in fs
+        if f.endswith(".py")
     )
+    h = hashlib.sha256()
+    for rel in rels:
+        with open(os.path.join(pkg, rel), "rb") as fh:
+            data = fh.read()
+        h.update(f"{rel}\0{len(data)}\0".encode() + data)
+    return h.digest()
 
 
-def materialized_clips(
-    spark: SparkSession,
-    n: int,
-    dur_range: tuple[int, int] = (200, 2000),
-    n_buckets: Optional[int] = None,
+def corpus_path(make: Callable, *params) -> str:
+    """Cache path of the corpus ``make`` builds from ``params``. Only
+    ``[A-Za-z0-9_]`` besides the root: the oracle splices it into
+    ``read_parquet('<path>/*.parquet')``."""
+    h = hashlib.sha256(_package_digest())
+    h.update(f"{np.__version__}\0{params!r}".encode())
+    return os.path.join(_MATERIALIZE_ROOT, f"{make.__name__}_{h.hexdigest()}")
+
+
+def publish(path: str, write: Callable[[str], object]) -> str:
+    """Build ``path`` once, atomically: ``write(tmp)`` fills a
+    session-private temp path that is then renamed into place, so readers
+    (Spark scans and the oracle's read_parquet) never see a partial
+    corpus. Concurrent sessions write identical content; the rename loser
+    discards its copy. A ``write`` that raises leaves nothing behind."""
+    if os.path.exists(path):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.exists(path):
+                raise
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+        elif os.path.exists(tmp):
+            os.remove(tmp)
+    return path
+
+
+def corpus(
+    spark: SparkSession, synth: Callable[..., DataFrame], *params
 ) -> tuple[DataFrame, str]:
-    """Deterministic clips table materialized to parquet ONCE, then scanned.
-
-    Returns (DataFrame read from parquet, absolute path). Serving the
-    contract queries from a real parquet scan (instead of re-synthesizing
-    per query) is both the production shape — validation reads a table —
-    and what makes the driver's DuckDB oracle possible: the oracle SQL
-    reads the SAME files via read_parquet(), with the ``_row_idx`` ledger
-    column carrying the planted-violation ground truth. Synthesis is
-    bit-deterministic, so an existing materialization is always valid for
-    its parameters.
-
-    ``n_buckets`` adds the checkpoint-protocol partition column ``_bucket``
-    (hash of clip_id — materialized so the oracle need not reproduce the
-    hash function).
-    """
-    import os
-
-    path = clips_path(n, dur_range, n_buckets)
+    """``synth(spark, *params)`` published as parquet once, then scanned:
+    (DataFrame read from parquet, path). Serving queries from a real scan
+    is the production shape, and it lets the DuckDB oracle read the SAME
+    files, with the ``_row_idx`` ledger column carrying the planted ground
+    truth. Synthesis is bit-deterministic, so a published corpus is always
+    valid for its key."""
     # ~20-40KB binary payloads x the default 4096-row vectorized-reader
     # batch = ~100MB contiguous buffers -> reader OOM/G1-humongous stalls
     # on modest heaps. 128-row batches keep scan buffers a few MB; harmless
     # for the narrow tables sharing the session (see BASELINE.md finding).
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df = synth_clips(spark, n, dur_range=dur_range, with_index=True)
-        if n_buckets:
-            from jsonschema_spark.operators.checkpoint import with_bucket
-
-            df = with_bucket(df, "clip_id", n_buckets=n_buckets)
-        publish_once(df, path)
+    path = publish(
+        corpus_path(synth, *params),
+        lambda tmp: synth(spark, *params).write.parquet(tmp),
+    )
     return spark.read.parquet(path), path
+
+
+def synth_ledger_clips(
+    spark: SparkSession,
+    n: int,
+    dur_range: tuple[int, int] = (200, 2000),
+    n_buckets: Optional[int] = None,
+) -> DataFrame:
+    """``synth_clips`` with the ``_row_idx`` ledger. ``n_buckets`` adds the
+    checkpoint-protocol partition column ``_bucket`` (hash of clip_id —
+    materialized so the oracle need not reproduce the hash function)."""
+    df = synth_clips(spark, n, dur_range=dur_range, with_index=True)
+    if n_buckets:
+        from jsonschema_spark.operators.checkpoint import with_bucket
+
+        df = with_bucket(df, "clip_id", n_buckets=n_buckets)
+    return df
+
+
+def materialized_clips(spark: SparkSession, n: int, *params) -> tuple[DataFrame, str]:
+    return corpus(spark, synth_ledger_clips, n, *params)
 
 
 # ---------------------------------------------------------------------------
@@ -363,25 +379,6 @@ def synth_near_dup_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def neardup_clips_path(n: int, dup_period: int = 4) -> str:
-    return oracle_cache_path(f"clips_neardup_{n}_{dup_period}")
-
-
-def materialized_near_dup_clips(
-    spark: SparkSession, n: int, dup_period: int = 4
-) -> tuple[DataFrame, str]:
-    """Near-dup clips table materialized once (same oracle-cache protocol as
-    materialized_clips); the DuckDB oracle reads the SAME files and derives
-    the expected pair set from ``_row_idx`` arithmetic."""
-    import os
-
-    path = neardup_clips_path(n, dup_period)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_near_dup_clips(spark, n, dup_period), path)
-    return spark.read.parquet(path), path
-
-
 # Planted quality-defect classes (disjoint by construction, _row_idx % 12):
 #   cls 1 -> second half of the waveform zeroed   (silence_frac ~= 0.5)
 #   cls 5 -> gain x2.2 before int16 conversion    (hard clipping; every
@@ -439,23 +436,6 @@ def synth_quality_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def quality_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_quality_{n}")
-
-
-def materialized_quality_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Quality-defect clips table materialized once (oracle-cache protocol);
-    the DuckDB oracle reads the SAME files and derives expected gate
-    booleans from ``_row_idx % 12`` alone."""
-    import os
-
-    path = quality_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_quality_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # Bandwidth-consistency clips (the upsample-detection ledger table): every
@@ -523,23 +503,6 @@ def synth_bandwidth_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def bandwidth_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_bandwidth_{n}")
-
-
-def materialized_bandwidth_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Bandwidth-defect clips table materialized once (oracle-cache
-    protocol); the DuckDB oracle derives the expected frequency bin and
-    gate booleans from ``_row_idx`` arithmetic alone."""
-    import os
-
-    path = bandwidth_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_bandwidth_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # Silence-padded clips (the trim/resample ledger table): every row is a
 # voiced two-harmonic body wrapped in exact-zero pads, all sizes whole
 # 20 ms frames at 16 kHz so the expected speech span is pure _row_idx
@@ -596,22 +559,6 @@ def synth_padded_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def padded_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_padded_{n}")
-
-
-def materialized_padded_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Silence-padded clips table materialized once (oracle-cache protocol);
-    the DuckDB oracle re-decodes every sample from the SAME parquet hex."""
-    import os
-
-    path = padded_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_padded_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 def synth_containment_clips(
     spark: SparkSession,
     n: int,
@@ -654,24 +601,6 @@ def synth_containment_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def containment_clips_path(n: int, period: int = 4) -> str:
-    return oracle_cache_path(f"clips_containment_{n}_{period}")
-
-
-def materialized_containment_clips(
-    spark: SparkSession, n: int, period: int = 4
-) -> tuple[DataFrame, str]:
-    """Containment clips table materialized once (oracle-cache protocol);
-    the DuckDB oracle derives the expected pair set from ``_row_idx``."""
-    import os
-
-    path = containment_clips_path(n, period)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_containment_clips(spark, n, period), path)
-    return spark.read.parquet(path), path
 
 
 def codecs_dim(spark: SparkSession) -> DataFrame:
@@ -758,22 +687,6 @@ def synth_wav_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def wav_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_wav_{n}")
-
-
-def materialized_wav_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """WAV-header ledger table materialized once (oracle-cache protocol);
-    the DuckDB oracle re-parses every header field from the SAME blobs."""
-    import os
-
-    path = wav_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_wav_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # ---------------------------------------------------------------------------
 # G.711 mu-law ledger corpus (real-lossy-codec ground truth)
 # ---------------------------------------------------------------------------
@@ -836,22 +749,6 @@ def synth_ulaw_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def ulaw_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_ulaw_{n}")
-
-
-def materialized_ulaw_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Mu-law ledger table materialized once (oracle-cache protocol); the
-    DuckDB oracle re-decodes the SAME blobs with integer SQL."""
-    import os
-
-    path = ulaw_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_ulaw_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # ---------------------------------------------------------------------------
@@ -918,22 +815,6 @@ def synth_alaw_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def alaw_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_alaw_{n}")
-
-
-def materialized_alaw_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """A-law ledger table materialized once (oracle-cache protocol); the
-    DuckDB oracle re-decodes the SAME blobs with integer SQL."""
-    import os
-
-    path = alaw_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_alaw_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # ---------------------------------------------------------------------------
 # Stereo ledger corpus (channel-downmix ground truth)
 # ---------------------------------------------------------------------------
@@ -993,22 +874,6 @@ def synth_stereo_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def stereo_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_stereo_{n}")
-
-
-def materialized_stereo_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Stereo ledger table materialized once (oracle-cache protocol); the
-    DuckDB oracle re-decodes both channels from the SAME blobs."""
-    import os
-
-    path = stereo_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_stereo_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- REAL-ADPCM ledger corpus (IMA/DVI 4-bit WAV, functions/audio.py) ----
@@ -1096,23 +961,6 @@ def synth_adpcm_clips(
     )
 
 
-def adpcm_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_adpcm_{n}")
-
-
-def materialized_adpcm_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """ADPCM ledger table materialized once (oracle-cache protocol); the
-    DuckDB oracle reads the SAME files and serves expectations from the
-    synth-verified ledger columns alone."""
-    import os
-
-    path = adpcm_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_adpcm_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- MS-ADPCM ledger corpus (WAVE_FORMAT_ADPCM = 0x0002) ------------------
 # Same ledger stance as the IMA corpus: non-truncated rows carry the
 # synth-time decode fingerprint (encode -> store -> distribute -> decode
@@ -1182,23 +1030,6 @@ def synth_msadpcm_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=ADPCM_CLIPS_SCHEMA
     )
-
-
-def msadpcm_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_msadpcm_{n}")
-
-
-def materialized_msadpcm_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """MS-ADPCM ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = msadpcm_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_msadpcm_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- REAL-FLAC ledger corpus (functions/flac.py subset codec) ------------
@@ -1284,10 +1115,6 @@ def synth_flac_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=ADPCM_CLIPS_SCHEMA
     )
-
-
-def flac_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_flac_{n}")
 
 
 # --- REAL-FLAC STEREO ledger corpus (channel decorrelation) ---------------
@@ -1376,10 +1203,6 @@ def synth_flac_stereo_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=ADPCM_CLIPS_SCHEMA
     )
-
-
-def flac_stereo_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_flac2_{n}")
 
 
 # --- WAV bit-depth/channel ledger corpus (8/16/24-bit, mono/stereo) -------
@@ -1478,10 +1301,6 @@ def synth_wav_depth_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=ADPCM_CLIPS_SCHEMA
     )
-
-
-def wav_depth_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_wavdepth_{n}")
 
 
 # --- FLAC seek/window ledger corpus (SEEKTABLE random access) -------------
@@ -1584,61 +1403,6 @@ def synth_flac_seek_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def flac_seek_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_flacseek_{n}")
-
-
-def materialized_flac_seek_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Seekable-FLAC ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = flac_seek_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_flac_seek_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
-def materialized_wav_depth_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """WAV-depth ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = wav_depth_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_wav_depth_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
-def materialized_flac_stereo_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Stereo-FLAC ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = flac_stereo_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_flac_stereo_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
-def materialized_flac_clips(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """FLAC ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = flac_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_flac_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- decode-then-segment ledger corpus -------------------------------------
@@ -1791,28 +1555,6 @@ def synth_segment_clips(
     )
 
 
-def segment_clips_path(n: int) -> str:
-    # "segment3": the ledger gained the energy arrays (_seg_sumsqs/
-    # _seg_peaks) — a schema change needs its own cache key or a stale
-    # pre-energy or pre-planted-silence table would satisfy the _SUCCESS check
-    return oracle_cache_path(f"clips_segment3_{n}")
-
-
-def materialized_segment_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Segmentation ledger table materialized once (oracle-cache
-    protocol); the DuckDB oracle lockstep-unnests the ledger arrays over
-    the SAME files."""
-    import os
-
-    path = segment_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_segment_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- REAL-FLAC LPC ledger corpus (RFC 9639 §9.2.4) -------------------------
 # Same SOURCE-sample ledger stance as the fixed-predictor FLAC corpora,
 # but every payload is encoded with LPC trials enabled over a SMOOTHED
@@ -1933,23 +1675,6 @@ def synth_flac_lpc_clips(
     )
 
 
-def flac_lpc_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_flaclpc_{n}")
-
-
-def materialized_flac_lpc_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """LPC-FLAC ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = flac_lpc_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_flac_lpc_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- FLAC bit-depth ledger corpus (8/16/24-bit, mono/stereo, LPC on) -------
 # Mirrors the WAV-depth corpus for the compressed container: rows cycle
 # through five depth/channel layouts (plus a torn-24-bit class), every
@@ -2062,24 +1787,6 @@ def synth_flac_depth_clips(
     )
 
 
-def flac_depth_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_flacdepth_{n}")
-
-
-def materialized_flac_depth_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """FLAC-depth ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = flac_depth_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_flac_depth_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- FLAC multichannel ledger corpus (3-8 channels, independent) ----------
 # Rows cycle through 3/4/6/8-channel LPC streams (plus a torn class);
 # the ledger certifies the engine downmix floor(sum/n) from the SOURCE
@@ -2150,24 +1857,6 @@ def synth_flac_multichannel_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=ADPCM_CLIPS_SCHEMA
     )
-
-
-def flac_multichannel_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_flacmc_{n}")
-
-
-def materialized_flac_multichannel_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Multichannel-FLAC ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = flac_multichannel_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_flac_multichannel_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- AIFF / AIFF-C / Sun AU container ledger corpus ------------------------
@@ -2403,42 +2092,6 @@ def synth_loudness_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def loudness_clips_path(n: int) -> str:
-    # g2: generator grew the -23 LUFS normalization ledger columns
-    return oracle_cache_path(f"clips_loud_{n}_g2")
-
-
-def materialized_loudness_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Loudness ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = loudness_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_loudness_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
-def container_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_cont_{n}")
-
-
-def materialized_container_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """AIFF/AU container ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = container_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_container_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- MP3 frame-header-walk ledger corpus -------------------------------------
 # MP3 payload bits are opaque to a header walker, so the ledger is
 # SOURCE-certified by pure arithmetic over the generator's own parameters
@@ -2582,23 +2235,6 @@ def synth_mp3_clips(
     )
 
 
-def mp3_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_mp3_{n}")
-
-
-def materialized_mp3_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """MP3 ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = mp3_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_mp3_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- mains-hum / DC-offset ledger corpus -------------------------------------
 # Classes: clean program; 60 Hz-family hum injected (fundamental +
 # harmonics); 50 Hz-family hum; DC-biased; sub-window (too short to
@@ -2706,23 +2342,6 @@ def synth_hum_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def hum_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_hum_{n}")
-
-
-def materialized_hum_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Hum/DC ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = hum_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_hum_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- Ogg container-walk ledger corpus ----------------------------------------
@@ -2886,23 +2505,6 @@ def synth_ogg_clips(
     )
 
 
-def ogg_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_ogg_{n}")
-
-
-def materialized_ogg_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Ogg ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = ogg_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_ogg_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- mixed-container dispatch ledger corpus ----------------------------------
 # One corpus, every container family the engine knows: decodable (WAV,
 # real FLAC, AIFF stereo, AU mu-law), structural (MP3 frame walk, Ogg
@@ -3059,24 +2661,6 @@ def synth_mixed_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def mixed_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_mixed_{n}")
-
-
-def materialized_mixed_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Mixed-container ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = mixed_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_mixed_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- pitch / voicing ledger corpus -------------------------------------------
 # Classes: harmonically-rich voiced "vowels" at hash-drawn f0 (90-250 Hz),
 # broadband noise (unvoiced), half-voiced/half-noise, a low-pitch 70 Hz
@@ -3203,23 +2787,6 @@ def synth_pitch_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def pitch_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_pitch_{n}")
-
-
-def materialized_pitch_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Pitch ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = pitch_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_pitch_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- stereo-integrity ledger corpus (functions/stereo.py) ------------------
@@ -3356,23 +2923,6 @@ def synth_stereo_screen_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def stereo_screen_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_stereo_screen_{n}")
-
-
-def materialized_stereo_screen_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Stereo ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = stereo_screen_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_stereo_screen_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- tonality / spectral-flatness ledger corpus (functions/tonality.py) -----
@@ -3528,23 +3078,6 @@ def synth_tonality_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def tonality_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_tonality_{n}")
-
-
-def materialized_tonality_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Tonality ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = tonality_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_tonality_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- codec-label ledger corpus (containers.codec_match_gate) ----------------
 # The mixed-container corpus with a deterministic lie plan over the
 # codec COLUMN: _row_idx % 4 == 1 rows lie — % 8 == 1 claims a WRONG
@@ -3593,24 +3126,6 @@ def synth_codec_clips(
             yield b
 
     return base.mapInPandas(gen, schema=schema)
-
-
-def codec_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_codec_{n}")
-
-
-def materialized_codec_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Codec-label ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = codec_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_codec_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- reference-free SNR ledger corpus (functions/snrest.py) -----------------
@@ -3735,23 +3250,6 @@ def synth_snr_clips(
             yield pd.DataFrame(rows, columns=cols)
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
-
-
-def snr_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_snr_{n}")
-
-
-def materialized_snr_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """SNR ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = snr_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_snr_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- dropout / click ledger corpus (functions/dropouts.py) ------------------
@@ -3919,24 +3417,6 @@ def synth_dropout_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def dropout_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_dropout_{n}")
-
-
-def materialized_dropout_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Dropout/click ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = dropout_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_dropout_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- log-mel / CMVN ledger corpus (functions/fbank.py) ----------------------
 # Class roster (i % 4): speech proxy / steady tone / static / torn —
 # enough spectral diversity that per-bin CMVN means differ by orders
@@ -4018,57 +3498,33 @@ def synth_fbank_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def fbank_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_fbank_{n}")
-
-
-def materialized_fbank_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Log-mel ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = fbank_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_fbank_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- WebDataset tar-shard cache (sources/shards.py round-trip oracle) -------
 
 
-def tar_shards_dir(n: int) -> str:
-    return oracle_cache_path(f"clips_tar_{n}")
-
-
-def materialized_tar_shards(spark: SparkSession, n: int) -> str:
-    """WebDataset tars packed ONCE from the mixed-container corpus
-    (range-partitioned + sorted by clip_id -> deterministic shard
-    contents); the round-trip oracle reads the SOURCE parquet."""
-    import os
-
+def tar_shards(spark: SparkSession, n: int, flat: bool = False) -> str:
+    """WebDataset tars packed once from the mixed-container corpus, sorted
+    by clip_id so shard contents are deterministic; the round-trip oracle
+    reads the SOURCE parquet. ``flat`` packs ONE tar (coalesce(1)): member
+    order, sizes and therefore every USTAR offset become pure functions of
+    the parquet rows, so the member-index oracle can rebuild the whole
+    layout arithmetically (header 512 + data padded to 512 per member).
+    The flat pack is the ORACLE corpus only — the operator itself is
+    per-shard parallel."""
     from jsonschema_spark.sources.shards import write_tar_shards
 
-    path = tar_shards_dir(n)
-    ok = os.path.join(path, "_SHARDS_OK")
-    if not os.path.exists(ok):
-        clips, _ = materialized_mixed_clips(spark, n)
-        led = [c for c in clips.columns if c.startswith("_")]
-        src = (
-            clips.drop(*led)
-            .repartitionByRange(4, "clip_id")
-            .sortWithinPartitions("clip_id")
+    def write(tmp: str) -> None:
+        clips, _ = corpus(spark, synth_mixed_clips, n)
+        src = clips.drop(*[c for c in clips.columns if c.startswith("_")])
+        src = src.coalesce(1) if flat else src.repartitionByRange(4, "clip_id")
+        manifest = write_tar_shards(
+            src.sortWithinPartitions("clip_id"), tmp,
+            shard_bytes=1 << 30 if flat else 1 << 20,
         )
-        from pyspark.sql import functions as F
-
-        manifest = write_tar_shards(src, path, shard_bytes=1 << 20)
         total = manifest.agg(F.sum("n_samples")).collect()[0][0]
         if total != n:
             raise RuntimeError(f"tar pack lost rows: {total}/{n}")
-        with open(ok, "w") as f:
-            f.write(str(total))
-    return path
+
+    return publish(corpus_path(tar_shards, n, flat), write)
 
 
 # --- per-frame feature-tensor ledger corpus (fbank matrix query) ------------
@@ -4142,42 +3598,17 @@ def synth_fbank_mat_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def fbank_mat_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_fbank_mat_{n}")
-
-
-def materialized_fbank_mat_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Feature-tensor ledger table materialized once."""
-    import os
-
-    path = fbank_mat_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_fbank_mat_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
-def tensor_shards_dir(n: int) -> str:
-    return oracle_cache_path(f"clips_tensor_shards_{n}")
-
-
-def materialized_tensor_shards(spark: SparkSession, n: int) -> str:
-    """Training-tensor npy tars packed ONCE: the fbank ledger corpus
+def tensor_shards(spark: SparkSession, n: int) -> str:
+    """Training-tensor npy tars packed once: the fbank ledger corpus
     -> one-hop tensor kernel -> write_tensor_shards (mat int64 + x
     float64 members). The round-trip oracle recomputes both tensors
     from the `_mat` ledger, so pack -> unpack must be lossless for
     integers AND doubles."""
-    import os
-
     from jsonschema_spark.functions.fbank import audio_train_tensors
     from jsonschema_spark.sources.shards import write_tensor_shards
 
-    path = tensor_shards_dir(n)
-    ok = os.path.join(path, "_SHARDS_OK")
-    if not os.path.exists(ok):
-        clips, _ = materialized_fbank_mat_clips(spark, n)
+    def write(tmp: str) -> None:
+        clips, _ = corpus(spark, synth_fbank_mat_clips, n)
         src = (
             clips.select(
                 "clip_id", "transcript",
@@ -4196,50 +3627,15 @@ def materialized_tensor_shards(spark: SparkSession, n: int) -> str:
             .sortWithinPartitions("clip_id")
         )
         manifest = write_tensor_shards(
-            src, path,
+            src, tmp,
             tensor_cols={"mat_q": "mat", "x": "x"},
             shard_bytes=1 << 20,
         )
         total = manifest.agg(F.sum("n_samples")).collect()[0][0]
         if not total or total <= 0:
             raise RuntimeError("tensor pack produced no samples")
-        with open(ok, "w") as f:
-            f.write(str(total))
-    return path
 
-
-def tar_flat_dir(n: int) -> str:
-    return oracle_cache_path(f"clips_tar_flat_{n}")
-
-
-def materialized_tar_shards_flat(spark: SparkSession, n: int) -> str:
-    """ONE deterministic tar of the mixed corpus (coalesce(1) + sorted
-    keys): member order, sizes and therefore every USTAR offset become
-    pure functions of the parquet rows, so the member-index oracle can
-    rebuild the whole layout arithmetically (header 512 + data padded
-    to 512 per member). The flat pack is the ORACLE corpus only — the
-    operator itself is per-shard parallel."""
-    import os
-
-    from jsonschema_spark.sources.shards import write_tar_shards
-
-    path = tar_flat_dir(n)
-    ok = os.path.join(path, "_SHARDS_OK")
-    if not os.path.exists(ok):
-        clips, _ = materialized_mixed_clips(spark, n)
-        led = [c for c in clips.columns if c.startswith("_")]
-        src = (
-            clips.drop(*led)
-            .coalesce(1)
-            .sortWithinPartitions("clip_id")
-        )
-        manifest = write_tar_shards(src, path, shard_bytes=1 << 30)
-        total = manifest.agg(F.sum("n_samples")).collect()[0][0]
-        if total != n:
-            raise RuntimeError(f"flat tar pack lost rows: {total}/{n}")
-        with open(ok, "w") as f:
-            f.write(str(total))
-    return path
+    return publish(corpus_path(tensor_shards, n), write)
 
 
 # --- Opus packet-framing ledger corpus ---------------------------------------
@@ -4374,23 +3770,6 @@ def synth_opus_packet_clips(
     )
 
 
-def opus_packet_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_opuspkt_{n}")
-
-
-def materialized_opus_packet_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Opus packet-framing ledger table materialized once."""
-    import os
-
-    path = opus_packet_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_opus_packet_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- Vorbis packet-discipline ledger corpus ----------------------------------
 # Companion to the Opus packet corpus (VERDICT r2 item 4): header
 # discipline (ident/comment/setup order + magic), ident blocksize and
@@ -4483,23 +3862,6 @@ def synth_vorbis_packet_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=VORBIS_PKT_CLIPS_SCHEMA
     )
-
-
-def vorbis_packet_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_vorbispkt_{n}")
-
-
-def materialized_vorbis_packet_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Vorbis packet-discipline ledger table materialized once."""
-    import os
-
-    path = vorbis_packet_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_vorbis_packet_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- REAL Vorbis decoded-PCM ledger corpus (VERDICT r3 item 5) ---------------
@@ -4637,27 +3999,6 @@ def synth_vorbis_decode_clips(
     )
 
 
-def vorbis_decode_clips_path(n: int) -> str:
-    # local generation tag (g2: + coupled-stereo classes) — renaming the
-    # cached table is equivalent to a version bump without invalidating
-    # every other corpus
-    return oracle_cache_path(f"clips_vorbisdec_g2_{n}")
-
-
-def materialized_vorbis_decode_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Real-Vorbis ledger table materialized once (oracle-cache
-    protocol)."""
-    import os
-
-    path = vorbis_decode_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_vorbis_decode_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- AAC ADTS ledger corpus (round 4) ----------------------------------------
 # Frame-walk certification for the web's dominant lossy-audio bitstream
 # after MP3: five VALID classes (profiles Main/LC/SSR/LTP, 8-48 kHz,
@@ -4770,23 +4111,6 @@ def synth_adts_clips(
     )
 
 
-def adts_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_adts_{n}")
-
-
-def materialized_adts_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """ADTS ledger table materialized once (oracle-cache protocol)."""
-    import os
-
-    path = adts_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_adts_clips(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- tagged-metadata ledger corpus (round 4; widened round 5) ----------------
 # ID3v2.3/2.4 text frames (latin-1/UTF-16/UTF-16BE/UTF-8 encodings),
 # Vorbis comments, OpusTags — the provenance metadata a pipeline joins
@@ -4795,9 +4119,11 @@ def materialized_adts_clips(
 # (the iTunes/mutagen layout — terminator at an even code-unit
 # offset), extended headers (v2.3 size-excluded / v2.4 size-included),
 # UTF-16BE encoding byte 2, and an unsynchronised tag that must be
-# REJECTED loudly ("unsync_unsupported"), not misparsed. Ledger truth
-# is generator strings.
-TAGS_CLASS_MOD = 13
+# REJECTED loudly ("unsync_unsupported"), not misparsed. Class 13
+# carries per-frame format data the parser must skip: the grouping byte
+# (v2.3), or the grouping byte plus the data-length indicator (v2.4).
+# Ledger truth is generator strings.
+TAGS_CLASS_MOD = 14
 
 TAGS_CLIPS_SCHEMA = T.StructType(
     list(CLIPS_SCHEMA.fields)
@@ -4917,9 +4243,9 @@ def synth_tagged_clips(
             raw = build_id3v2(title, artist, None, 3, 3,
                               unsync_flag=True) + mp3
             err = "unsync_unsupported"
-        else:           # 12: ID3v2.2 — 3-char IDs, 3-byte sizes (the
-                        # layout old iTunes wrote); UCS-2 terminated on
-                        # odd rows, latin-1 (ASCII-safe) on even
+        elif cls == 12:  # ID3v2.2 — 3-char IDs, 3-byte sizes (the
+                         # layout old iTunes wrote); UCS-2 terminated on
+                         # odd rows, latin-1 (ASCII-safe) on even
             from jsonschema_spark.functions.tags import build_id3v22
 
             if i % 2:
@@ -4930,6 +4256,18 @@ def synth_tagged_clips(
                 t2 = f"Take {i}"
                 raw = build_id3v22(t2, artist, album, 0) + mp3
                 led = ("id3v2.2", 3, t2, artist, album, None)
+        else:           # 13: per-frame grouping byte (+ v2.4 DLI)
+            if i % 2:
+                # flags 0x41: grouping identity, then the syncsafe
+                # data-length indicator (a nominal value: unread)
+                raw = build_id3v2(title, artist, album, 4, 3,
+                                  frame_flags=0x41,
+                                  frame_prefix=b"\x07\x00\x00\x00\x10")
+                led = ("id3v2.4", 3, title, artist, album, None)
+            else:
+                raw = build_id3v2(title, artist, album, 3, 3,
+                                  frame_flags=0x20, frame_prefix=b"\x07")
+                led = ("id3v2.3", 3, title, artist, album, None)
         if led is None:
             out = (False, err, None, None, None, None, None, None)
         else:
@@ -4948,23 +4286,6 @@ def synth_tagged_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=TAGS_CLIPS_SCHEMA
     )
-
-
-def tagged_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_tagged_{n}")
-
-
-def materialized_tagged_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """Tagged-metadata ledger table materialized once."""
-    import os
-
-    path = tagged_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_tagged_clips(spark, n), path)
-    return spark.read.parquet(path), path
 
 
 # --- MP3 Layer III side-info ledger corpus (round 5) -------------------------
@@ -5083,18 +4404,3 @@ def synth_mp3si_clips(
     )
 
 
-def mp3si_clips_path(n: int) -> str:
-    return oracle_cache_path(f"clips_mp3si_{n}")
-
-
-def materialized_mp3si_clips(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    """MP3 side-info ledger table materialized once."""
-    import os
-
-    path = mp3si_clips_path(n)
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_mp3si_clips(spark, n), path)
-    return spark.read.parquet(path), path

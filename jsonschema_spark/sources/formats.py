@@ -1,10 +1,11 @@
 """Row-identical format twins (ORC, CSV) of the parquet test tables.
 
 "Complete" for a validation engine includes the boring part: reading
-the SAME table from whatever container the lake actually has. These
-helpers materialize an ORC and a CSV twin of a parquet table once
-(oracle-cache protocol) so contract queries can run the SAME compiled
-validation plan over ``spark.read.orc`` / ``spark.read.csv`` — and the
+the SAME table from whatever container the lake actually has.
+``format_twin`` publishes an ORC or a CSV twin of a parquet table once
+(content-keyed corpus cache, atomic rename) so contract queries can run
+the SAME compiled validation plan over ``spark.read.orc`` /
+``spark.read.csv`` — and the
 DuckDB oracle keeps reading the parquet ground truth, certifying that
 the format round-trip changes nothing.
 
@@ -18,40 +19,25 @@ construction. DuckDB reads neither twin — it doesn't need to.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from jsonschema_spark.sources.clips import oracle_cache_path
+from jsonschema_spark.sources.clips import corpus_path, publish
 from jsonschema_spark.sources.tables import load_table
 
 
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(sf_dir.rstrip("/")) or "sf"
+def format_twin(spark: SparkSession, fmt: str, sf_dir: str, table: str) -> str:
+    """``fmt`` ("orc" or "csv" with header) copy of ``table``, written once
+    per scale factor. Read a CSV twin back with ``read_csv_twin`` —
+    explicit schema, no inference."""
 
+    def write(tmp: str) -> None:
+        w = load_table(spark, sf_dir, table).write
+        if fmt == "orc":
+            w.orc(tmp)
+        else:
+            w.option("header", "true").csv(tmp)
 
-def materialized_orc_twin(
-    spark: SparkSession, sf_dir: str, table: str
-) -> str:
-    """ORC copy of ``table`` (written once per scale factor)."""
-    path = oracle_cache_path(f"orc_{_sf_tag(sf_dir)}_{table}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, table).write.mode("overwrite").orc(path)
-    return path
-
-
-def materialized_csv_twin(
-    spark: SparkSession, sf_dir: str, table: str
-) -> str:
-    """CSV copy of ``table`` with header (written once per scale
-    factor). Read it back with ``read_csv_twin`` — explicit schema, no
-    inference."""
-    path = oracle_cache_path(f"csv_{_sf_tag(sf_dir)}_{table}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, table).write.mode("overwrite").option(
-            "header", "true"
-        ).csv(path)
-    return path
+    return publish(corpus_path(format_twin, fmt, sf_dir, table), write)
 
 
 def read_csv_twin(

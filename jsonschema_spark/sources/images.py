@@ -22,14 +22,13 @@ Family layout (i = row index, three members per family):
   pairs, not just cross-family ones). The truth is whatever ``_dhash``
   says: pairs are DERIVED from the ledger, never assumed.
 
-Oracle-cache protocol: materialized once under the versioned oracle cache
-(atomic rename, bit-identical across sessions); bump ``_IMAGES_VER``
-when generator arithmetic changes.
+Each corpus here is published once through ``sources.clips.corpus``
+(atomic rename, bit-identical across sessions), keyed by the package
+source and its parameters (no version to bump).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 import numpy as np
@@ -37,9 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from jsonschema_spark.functions.multimodal import dhash_from_pixels, encode_png
-from jsonschema_spark.sources.clips import oracle_cache_path, publish_once
 
-_IMAGES_VER = "v2"
 IMG_W, IMG_H = 48, 32
 MEMBERS_PER_FAMILY = 3
 
@@ -96,26 +93,12 @@ def synth_images(
     )
 
 
-def images_path(n: int) -> str:
-    return oracle_cache_path(f"images_{_IMAGES_VER}_{n}")
-
-
-def materialized_images(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Image ledger table materialized once (oracle-cache protocol); the
-    DuckDB oracle reads the SAME files."""
-    path = images_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_images(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- REAL-JPEG ledger corpus (baseline grayscale, functions/jpeg.py) ----
 # Planted defect (_row_idx % 9 == 6): the stream is truncated 12 bytes
 # mid-scan (torn upload) -> decode must fail LOUDLY (decode_ok=false),
 # never return partial pixels silently. The ledger carries the decoded
 # Y-plane sum computed at synth time by the SAME decoder, so the
 # contract query certifies encode -> store -> decode bit-for-bit.
-_JPEG_VER = "v1"
 JPEG_TRUNC_MOD = 9
 JPEG_TRUNC_CLS = 6
 JPEG_TRUNC_BYTES = 12
@@ -173,17 +156,6 @@ def synth_jpeg_images(
     )
 
 
-def jpeg_images_path(n: int) -> str:
-    return oracle_cache_path(f"images_jpeg_{_JPEG_VER}_{n}")
-
-
-def materialized_jpeg_images(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    path = jpeg_images_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_jpeg_images(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- PROGRESSIVE-JPEG ledger corpus (SOF2, T.81 Annex G) ----------------
 # VERDICT r2 item 5: most real web JPEGs are progressive. Rows cycle
 # two scan scripts (the libjpeg-shaped successive-approximation script
@@ -193,7 +165,6 @@ def materialized_jpeg_images(spark: SparkSession, n: int) -> tuple[DataFrame, st
 # and synth ALSO asserts the progressive decode equals the BASELINE
 # decode of the same pixels (quantized coefficients are identical), so
 # the corpus itself certifies Annex G against Annex F.
-_PJPEG_VER = "v3"  # v3: chroma DC table Td=1 in interleaved DC scan
 PJPEG_SPECTRAL_ONLY = ((0, 0, 0, 0), (1, 31, 0, 0), (32, 63, 0, 0))
 
 
@@ -274,14 +245,3 @@ def synth_progressive_jpeg_images(
     )
 
 
-def progressive_jpeg_images_path(n: int) -> str:
-    return oracle_cache_path(f"images_pjpeg_{_PJPEG_VER}_{n}")
-
-
-def materialized_progressive_jpeg_images(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = progressive_jpeg_images_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_progressive_jpeg_images(spark, n), path)
-    return spark.read.parquet(path), path

@@ -13,25 +13,25 @@ codegen'd expressions (no Python), and the only shuffle is whatever the
 caller's aggregation needs.
 
 Synthesis for tests/oracles follows the clips pattern
-(`sources/clips.py:materialized_clips`): a deterministic generator plants
-violations as a pure function of the line's doc_id, the file materializes
-once under the versioned oracle cache, and the DuckDB oracle reads the
+(`sources/clips.py:corpus`): a deterministic generator plants violations
+as a pure function of the line's doc_id, the file is published once at
+``corpus_path(synth_jsonl_lines, n)``, and the DuckDB oracle reads the
 SAME file via read_text() and recomputes every check with SQL JSON
 functions — engine-independent ground truth, not a copied answer.
 """
 
 from __future__ import annotations
 
+import gzip
 import importlib
 import os
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsonschema_spark.operators.validate import _explode
 from jsonschema_spark.plans.compile import VIOLATIONS_TYPE
-from jsonschema_spark.sources.clips import oracle_cache_path
+from jsonschema_spark.sources.clips import corpus_path, publish
 
 # Document schema the synthesized corpus is validated against. Exercises
 # required / type / pattern / minLength / numeric bounds / array keywords
@@ -128,24 +128,17 @@ def synth_jsonl_lines(n: int) -> list[str]:
     return lines
 
 
-def jsonl_path(n: int) -> str:
-    """Canonical materialized path — shared by Spark and the oracle SQL."""
-    return oracle_cache_path(f"docs_{n}.jsonl")
+def _jsonl_text(n: int) -> str:
+    return "\n".join(synth_jsonl_lines(n)) + "\n"
+
+
+def _write_jsonl(path: str, n: int) -> None:
+    with open(path, "w") as f:
+        f.write(_jsonl_text(n))
 
 
 def materialized_jsonl(n: int) -> str:
-    """Write the synthetic corpus once, atomically (temp file + rename:
-    concurrent sessions produce identical bytes, the rename loser's copy
-    is simply discarded; readers never observe a partial file)."""
-    path = jsonl_path(n)
-    if os.path.exists(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write("\n".join(synth_jsonl_lines(n)) + "\n")
-    os.replace(tmp, path)
-    return path
+    return publish(corpus_path(synth_jsonl_lines, n), lambda tmp: _write_jsonl(tmp, n))
 
 
 def read_jsonl(
@@ -203,32 +196,21 @@ def violation_rows(df: DataFrame, schema: dict) -> DataFrame:
     )
 
 
-def jsonl_gz_path(n: int) -> str:
-    return oracle_cache_path(f"docs_{n}.jsonl.gz")
+def jsonl_gz(n: int) -> str:
+    """Gzip twin of the JSONL corpus — SAME lines, compressed — as a
+    directory holding one ``docs.jsonl.gz``. Spark's text source
+    decompresses .gz transparently (one task per file — gz is not
+    splittable; shard large corpora into many .gz files). The oracle keeps
+    reading the UNCOMPRESSED twin: the certification is exactly that
+    decompress->parse->validate lands on the same output. gzip mtime is
+    pinned to 0 so the artifact is bit-identical across sessions."""
 
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "docs.jsonl.gz"), "wb") as f:
+            # filename="" — GzipFile would otherwise embed the file name
+            # in the FNAME header
+            with gzip.GzipFile(filename="", fileobj=f, mode="wb", mtime=0) as gz:
+                gz.write(_jsonl_text(n).encode())
 
-def materialized_jsonl_gz(n: int) -> str:
-    """Gzip twin of the JSONL corpus — SAME lines, compressed. Spark's
-    text source decompresses .gz transparently (one task per file — gz
-    is not splittable; shard large corpora into many .gz files). The
-    oracle keeps reading the UNCOMPRESSED twin: the certification is
-    exactly that decompress->parse->validate lands on the same output.
-    gzip mtime pinned to 0 so the artifact is bit-identical across
-    sessions (oracle-cache protocol)."""
-    import gzip
-
-    path = jsonl_gz_path(n)
-    if os.path.exists(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    data = ("\n".join(synth_jsonl_lines(n)) + "\n").encode()
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "wb") as f:
-        # filename="" — GzipFile would otherwise embed the random tmp
-        # name in the FNAME header and break bit-determinism
-        with gzip.GzipFile(
-            filename="", fileobj=f, mode="wb", mtime=0
-        ) as gz:
-            gz.write(data)
-    os.replace(tmp, path)
-    return path
+    return publish(corpus_path(jsonl_gz, n), write)

@@ -15,30 +15,21 @@ queries therefore emit only the one-row ``layout_report`` aggregate,
 never per-file rows; the DuckDB oracle groups by its own ``filename``
 column and lands on the same totals.
 
-Oracle-cache protocol: materialized once under the versioned oracle cache
-(atomic rename); bump ``_LAYOUT_VER`` when generator arithmetic changes.
+Each layout is published once through ``layout_corpus``, keyed by the
+package source and its parameters (no version to bump).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jsonschema_spark.sources.clips import oracle_cache_path
+from jsonschema_spark.sources.clips import corpus_path, publish
 
-_LAYOUT_VER = "v1"
 LAYOUT_N = 20_000
 LAYOUT_FILES = 8
-
-
-def layout_path(mode: str) -> str:
-    return oracle_cache_path(
-        f"layout_{_LAYOUT_VER}_{mode}_{LAYOUT_N}_{LAYOUT_FILES}"
-    )
 
 
 def _bucket(mode: str):
@@ -56,15 +47,8 @@ def _bucket(mode: str):
     raise ValueError(f"unknown layout mode: {mode!r}")
 
 
-_LAYOUT2D_VER = "v1"
 LAYOUT2D_SIDE = 128          # k1, k2 in [0, 128): full 128x128 grid
 LAYOUT2D_FILES = 16          # 16 files -> 4x4 z-tiles of 32x32 each
-
-
-def layout2d_path(mode: str) -> str:
-    return oracle_cache_path(
-        f"layout2d_{_LAYOUT2D_VER}_{mode}_{LAYOUT2D_SIDE}_{LAYOUT2D_FILES}"
-    )
 
 
 def _bucket2d(mode: str):
@@ -88,50 +72,37 @@ def _bucket2d(mode: str):
     raise ValueError(f"unknown 2-D layout mode: {mode!r}")
 
 
-def materialized_layout_2d(
-    spark: SparkSession, mode: str
+def synth_layout_2d(spark: SparkSession, mode: str) -> DataFrame:
+    """The 2-D grid, one file per ``_b`` bucket of the ``mode`` layout."""
+    side = LAYOUT2D_SIDE
+    return (
+        spark.range(side * side)
+        .select(
+            (F.col("id") % side).cast("long").alias("k1"),
+            (F.col("id") / side).cast("long").alias("k2"),
+        )
+        .withColumn("_b", _bucket2d(mode))
+        .repartition(LAYOUT2D_FILES, "_b")
+    )
+
+
+def synth_layout(spark: SparkSession, mode: str) -> DataFrame:
+    """k = 0..LAYOUT_N-1, one file per ``_b`` bucket of the ``mode`` layout."""
+    return (
+        spark.range(LAYOUT_N)
+        .select(F.col("id").alias("k"))
+        .withColumn("_b", _bucket(mode))
+        .repartition(LAYOUT_FILES, "_b")
+    )
+
+
+def layout_corpus(
+    spark: SparkSession, synth: Callable[[SparkSession, str], DataFrame], mode: str
 ) -> tuple[DataFrame, str]:
-    """Materialize (once, atomically) the 2-D grid in the ``mode`` layout."""
-    path = layout2d_path(mode)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        side = LAYOUT2D_SIDE
-        df = (
-            spark.range(side * side)
-            .select(
-                (F.col("id") % side).cast("long").alias("k1"),
-                (F.col("id") / side).cast("long").alias("k2"),
-            )
-            .withColumn("_b", _bucket2d(mode))
-            .repartition(LAYOUT2D_FILES, "_b")
-        )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy("_b").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path), path
-
-
-def materialized_layout(spark: SparkSession, mode: str) -> tuple[DataFrame, str]:
-    """Materialize (once, atomically) and read back the ``mode`` layout."""
-    path = layout_path(mode)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df = (
-            spark.range(LAYOUT_N)
-            .select(F.col("id").alias("k"))
-            .withColumn("_b", _bucket(mode))
-            .repartition(LAYOUT_FILES, "_b")
-        )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy("_b").parquet(tmp)
-        # partitionBy writes no root _SUCCESS marker readers can rely on
-        # post-rename race-free; Spark does create one — keep the same
-        # publish contract as sources.clips.publish_once.
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+    """Publish ``synth(spark, mode)`` once, partitioned by ``_b`` (one
+    directory per file), and read it back."""
+    path = publish(
+        corpus_path(synth, mode),
+        lambda tmp: synth(spark, mode).write.partitionBy("_b").parquet(tmp),
+    )
     return spark.read.parquet(path), path

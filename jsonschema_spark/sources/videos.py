@@ -16,13 +16,12 @@ count — the torn-upload signature. Complete frames = n_frames - 1 for
 those rows, so the expected ``decode_ok`` of every sampled index is pure
 ledger arithmetic.
 
-Oracle-cache protocol: materialized once under /tmp/jss_oracle_cache
-(atomic rename); bump ``_VIDEOS_VER`` when generator arithmetic changes.
+Each corpus here is published once through ``sources.clips.corpus``,
+keyed by the package source and its parameters (no version to bump).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 import numpy as np
@@ -30,13 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from jsonschema_spark.functions.multimodal import encode_y4m
-from jsonschema_spark.sources.clips import (
-    _hash,
-    oracle_cache_path,
-    publish_once,
-)
+from jsonschema_spark.sources.clips import _hash
 
-_VIDEOS_VER = "v1"
 VID_W = VID_H = 8
 Y4M_HEADER_LEN = 39
 Y4M_FRAME_LEN = 6 + VID_W * VID_H + 2 * ((VID_H // 2) * (VID_W // 2))  # 102
@@ -94,19 +88,6 @@ def synth_videos(
     )
 
 
-def videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_{_VIDEOS_VER}_{n}")
-
-
-def materialized_videos(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
-    """Video ledger table materialized once (oracle-cache protocol); the
-    DuckDB oracle reads the SAME files and re-slices the Y planes."""
-    path = videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_videos(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- Motion-JPEG AVI ledger corpus -------------------------------------------
 # REAL compressed video (functions/avi.py: RIFF/AVI container around
 # our own baseline-JPEG frames — closes the "compressed video
@@ -118,7 +99,6 @@ def materialized_videos(spark: SparkSession, n: int) -> tuple[DataFrame, str]:
 #   else valid. The per-frame ledger (_ysums) holds decoded Y sums
 # computed at synth by the SAME decoder — certifying encode -> store
 # -> walk -> JPEG decode end to end; oracle reads the ledger.
-_MJPEG_VER = "v1"
 MJPEG_CLS_MOD = 9
 MJPEG_TORN_CLS = 6
 MJPEG_OVER_CLS = 7
@@ -206,19 +186,6 @@ def synth_mjpeg_videos(
     )
 
 
-def mjpeg_videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_mjpeg_{_MJPEG_VER}_{n}")
-
-
-def materialized_mjpeg_videos(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = mjpeg_videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_mjpeg_videos(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- A/V (MJPEG video + interleaved PCM audio) ledger corpus -----------------
 # The multimodal demux story: audio arrives INSIDE the video container
 # ('01wb' chunks) and must reach the audio-validation chain byte-exact.
@@ -227,7 +194,6 @@ def materialized_mjpeg_videos(
 # stream at all), else valid at a cycling sample rate. Ledger truth
 # for audio is computed AT SYNTH by the same demux (then pinned by
 # independent arithmetic in tests).
-_AV_VER = "v1"
 AV_CLS_MOD = 5
 AV_TORN_CLS = 3
 AV_SILENT_CLS = 4
@@ -303,19 +269,6 @@ def synth_av_videos(
     )
 
 
-def av_videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_av_{_AV_VER}_{n}")
-
-
-def materialized_av_videos(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = av_videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_av_videos(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- H.264 Annex B ledger corpus (VERDICT r3 item 7) -------------------------
 # Structural-walk certification for the web's dominant video codec: NAL
 # discipline, SPS/PPS parse, slice-header frame counting. Six VALID
@@ -323,7 +276,6 @@ def materialized_av_videos(
 # six planted-failure classes cover the NAL error taxonomy with exact
 # error@index strings. Ledger truth is generator arithmetic — the
 # walker never runs at synth time.
-_H264_VER = "v1"
 H264_CLASS_MOD = 12
 
 H264_VIDEOS_SCHEMA = T.StructType(
@@ -431,19 +383,6 @@ def synth_h264_videos(
     )
 
 
-def h264_videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_h264_{_H264_VER}_{n}")
-
-
-def materialized_h264_videos(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = h264_videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_h264_videos(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- ISO-BMFF / MP4 ledger corpus (round 4) ----------------------------------
 # Box-discipline + sample-table certification for the container that
 # carries most real-web video. Five VALID classes (video-only baseline,
@@ -451,7 +390,6 @@ def materialized_h264_videos(
 # planted failures (torn tail, stts/stsz count disagreement, corrupt
 # avcC profile, missing ftyp, chunk offset outside mdat). Ledger truth
 # is generator arithmetic.
-_MP4_VER = "v1"
 MP4_CLASS_MOD = 10
 
 MP4_VIDEOS_SCHEMA = T.StructType(
@@ -550,19 +488,6 @@ def synth_mp4_videos(
     )
 
 
-def mp4_videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_mp4_{_MP4_VER}_{n}")
-
-
-def materialized_mp4_videos(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = mp4_videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_mp4_videos(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- WebM / Matroska (EBML) ledger corpus (round 4) --------------------------
 # EBML element discipline + track/cluster certification for the second
 # dominant web video container. Five VALID classes (VP9-only, VP9+Opus,
@@ -570,7 +495,6 @@ def materialized_mp4_videos(
 # failures (torn element, non-EBML magic, unknown DocType, stray
 # SimpleBlock track, duplicate track numbers). Ledger truth is
 # generator arithmetic.
-_WEBM_VER = "v3"  # v2: lacing classes; v3: streamed Clusters, BlockGroups
 WEBM_CLASS_MOD = 16
 
 WEBM_VIDEOS_SCHEMA = T.StructType(
@@ -740,21 +664,7 @@ def synth_webm_videos(
     )
 
 
-def webm_videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_webm_{_WEBM_VER}_{n}")
-
-
-def materialized_webm_videos(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = webm_videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_webm_videos(spark, n), path)
-    return spark.read.parquet(path), path
-
-
 # --- fragmented-MP4 (DASH/CMAF) ledger corpus (round 4) ----------------------
-_FMP4_VER = "v1"
 FMP4_CLASS_MOD = 6
 
 FMP4_VIDEOS_SCHEMA = T.StructType(
@@ -817,14 +727,3 @@ def synth_fmp4_videos(
     )
 
 
-def fmp4_videos_path(n: int) -> str:
-    return oracle_cache_path(f"videos_fmp4_{_FMP4_VER}_{n}")
-
-
-def materialized_fmp4_videos(
-    spark: SparkSession, n: int
-) -> tuple[DataFrame, str]:
-    path = fmp4_videos_path(n)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        publish_once(synth_fmp4_videos(spark, n), path)
-    return spark.read.parquet(path), path

@@ -65,9 +65,9 @@ def test_ledger_corpus_matches_walker(spark):
     """Every materialized ledger row equals the walker verdict — the
     generator-arithmetic contract the oracle serves."""
     from jsonschema_spark.functions.aac import audio_adts_profile
-    from jsonschema_spark.sources.clips import materialized_adts_clips
+    from jsonschema_spark.sources.clips import corpus, synth_adts_clips
 
-    clips, _ = materialized_adts_clips(spark, 54)
+    clips, _ = corpus(spark, synth_adts_clips, 54)
     got = clips.select(
         "_row_idx", "_ok", "_err", "_n_frames", "_profile", "_sr", "_ch",
         "_crc_frames", "_blocks", "_dur",

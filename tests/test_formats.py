@@ -5,17 +5,16 @@ materialized artifacts must be deterministic."""
 
 import gzip
 import os
+import shutil
 
-from jsonschema_spark.sources.jsonl import (
-    materialized_jsonl,
-    materialized_jsonl_gz,
-)
+from jsonschema_spark.sources.jsonl import jsonl_gz, materialized_jsonl
 
 from .conftest import SF_DIR
 
 
 def test_gz_twin_is_deterministic_and_line_identical():
-    p = materialized_jsonl_gz(123)
+    d = jsonl_gz(123)
+    p = os.path.join(d, "docs.jsonl.gz")
     q = materialized_jsonl(123)
     with gzip.open(p, "rb") as f:
         gz_bytes = f.read()
@@ -25,8 +24,8 @@ def test_gz_twin_is_deterministic_and_line_identical():
     # mtime pinned to 0 -> artifact bytes stable across sessions
     with open(p, "rb") as f:
         raw1 = f.read()
-    os.remove(p)
-    materialized_jsonl_gz(123)
+    shutil.rmtree(d)
+    jsonl_gz(123)
     with open(p, "rb") as f:
         raw2 = f.read()
     assert raw1 == raw2
@@ -35,18 +34,14 @@ def test_gz_twin_is_deterministic_and_line_identical():
 def test_orc_and_csv_twins_round_trip_exactly(spark):
     from pyspark.sql import functions as F
 
-    from jsonschema_spark.sources.formats import (
-        materialized_csv_twin,
-        materialized_orc_twin,
-        read_csv_twin,
-    )
+    from jsonschema_spark.sources.formats import format_twin, read_csv_twin
     from jsonschema_spark.sources.tables import load_table
 
     base = load_table(spark, SF_DIR, "orders")
-    orc = spark.read.orc(materialized_orc_twin(spark, SF_DIR, "orders"))
+    orc = spark.read.orc(format_twin(spark, "orc", SF_DIR, "orders"))
     csv = read_csv_twin(
         spark, SF_DIR, "orders",
-        materialized_csv_twin(spark, SF_DIR, "orders"),
+        format_twin(spark, "csv", SF_DIR, "orders"),
     )
     assert orc.schema == base.schema
     assert csv.schema == base.schema

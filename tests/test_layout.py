@@ -16,8 +16,9 @@ from jsonschema_spark.sources.layouts import (
     LAYOUT_FILES,
     LAYOUT_N,
     LAYOUT2D_FILES,
-    materialized_layout,
-    materialized_layout_2d,
+    layout_corpus,
+    synth_layout,
+    synth_layout_2d,
 )
 
 
@@ -74,8 +75,8 @@ def test_zorder_key_validates_args(spark):
 def test_zorder_layout_prunes_both_dims(spark):
     """The remediation story: sort prunes only k1; z-order gives tight
     ranges on BOTH dims (4x4 tiling -> only same-row/col tiles overlap)."""
-    srt, _ = materialized_layout_2d(spark, "sort")
-    zo, _ = materialized_layout_2d(spark, "zorder")
+    srt, _ = layout_corpus(spark, synth_layout_2d, "sort")
+    zo, _ = layout_corpus(spark, synth_layout_2d, "zorder")
     pairs = LAYOUT2D_FILES * (LAYOUT2D_FILES - 1) // 2  # 120
     expect = {
         ("sort", "k1"): 0,
@@ -95,8 +96,8 @@ def test_zorder_layout_prunes_both_dims(spark):
 def test_layout_report_range_vs_hash(spark):
     """The whole point: a range-clustered layout prunes (overlap 0), a
     hash-interleaved one doesn't (overlap 1) — same logical table."""
-    rng, _ = materialized_layout(spark, "range")
-    hsh, _ = materialized_layout(spark, "hash")
+    rng, _ = layout_corpus(spark, synth_layout, "range")
+    hsh, _ = layout_corpus(spark, synth_layout, "hash")
     r = layout_report(rng, "k").collect()[0]
     h = layout_report(hsh, "k").collect()[0]
     for rep in (r, h):
@@ -138,7 +139,7 @@ def _py_rolling_pack(sizes, target):
 
 
 def test_compaction_plan_matches_python_replay(spark):
-    geo, _ = materialized_layout(spark, "geo")
+    geo, _ = layout_corpus(spark, synth_layout, "geo")
     plan = compaction_plan(geo, 1000).collect()
     sizes = [r["n_rows"] for r in plan]
     assert sorted(sizes, reverse=True)[:4] == [8192, 4096, 3617, 2048]
@@ -152,7 +153,7 @@ def test_compaction_plan_matches_python_replay(spark):
 
 
 def test_compaction_report_geo(spark):
-    geo, _ = materialized_layout(spark, "geo")
+    geo, _ = layout_corpus(spark, synth_layout, "geo")
     rep = compaction_report(geo, 1000).collect()[0]
     # bucket b holds [2^b - 1, 2^(b+1) - 1): sizes 1..8192, tail 3617
     sizes = [2**b for b in range(14)] + [20_000 - (2**14 - 1)]
@@ -187,7 +188,7 @@ def test_cluster_zordered_rewrite_improves_layout(spark, tmp_path):
     """The full advisor -> action loop: an unclustered (hash-interleaved)
     table diagnosed at overlap 1.0 on both dims is rewritten with
     cluster_zordered and re-diagnosed with tight per-file ranges."""
-    hsh, _ = materialized_layout_2d(spark, "zorder")  # rows, any layout
+    hsh, _ = layout_corpus(spark, synth_layout_2d, "zorder")  # rows, any layout
     src = str(tmp_path / "unclustered")
     # hash-interleave rows across files: worst-case layout on both dims
     (
@@ -269,21 +270,3 @@ def test_bucketed_groupby_elides_exchange(spark, tmp_path):
         assert agg.count() == 97
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_agg")
-
-
-def test_corpus_paths_live_under_the_versioned_cache():
-    """Layout and image corpora resolve through oracle_cache_path, so a
-    _MATERIALIZE_VERSION bump re-materializes them with every other
-    cached table."""
-    from jsonschema_spark.sources.clips import oracle_cache_path
-    from jsonschema_spark.sources.images import (
-        images_path,
-        jpeg_images_path,
-        progressive_jpeg_images_path,
-    )
-    from jsonschema_spark.sources.layouts import layout2d_path, layout_path
-
-    root = oracle_cache_path("")
-    for path in (layout_path("geo"), layout2d_path("zorder"), images_path(8),
-                 jpeg_images_path(8), progressive_jpeg_images_path(8)):
-        assert path.startswith(root), path

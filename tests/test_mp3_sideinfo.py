@@ -155,11 +155,12 @@ def test_ledger_corpus_matches_walker(spark):
     )
     from jsonschema_spark.sources.clips import (
         MP3SI_CLASS_MOD,
-        materialized_mp3si_clips,
+        corpus,
+        synth_mp3si_clips,
     )
 
     n = 4 * MP3SI_CLASS_MOD
-    clips, _ = materialized_mp3si_clips(spark, n)
+    clips, _ = corpus(spark, synth_mp3si_clips, n)
     got = clips.select(
         "_row_idx", "_ok", "_err", "_n_frames", "_n_granules",
         "_part23_bits", "_max_mdb", "_short_blocks", "_reservoir_frames",

@@ -157,11 +157,12 @@ def test_tagged_ledger_corpus_matches_parser(spark):
     from jsonschema_spark.functions.tags import audio_tags_profile
     from jsonschema_spark.sources.clips import (
         TAGS_CLASS_MOD,
-        materialized_tagged_clips,
+        corpus,
+        synth_tagged_clips,
     )
 
     n = 4 * TAGS_CLASS_MOD
-    clips, _ = materialized_tagged_clips(spark, n)
+    clips, _ = corpus(spark, synth_tagged_clips, n)
     got = clips.select(
         "_row_idx", "_ok", "_err", "_fmt", "_n_tags", "_title",
         "_artist", "_album", "_vendor",
@@ -205,26 +206,18 @@ def test_id3v22_compression_bit_rejected():
     assert t["error"] == "v22_compression_unsupported"
 
 
-def _first_frame_patched(version, fmt, prefix=b"", title="Title"):
-    """ID3v2.3/2.4 tag whose first frame (TIT2) carries format-flag byte
-    ``fmt`` and ``prefix`` ahead of its text body; the frame and tag
-    sizes are rewritten to match."""
-    tag = build_id3v2(title, "A", None, version, 3)
-    frames = tag[10:]
-    fsize = (syncsafe(frames[4:8]) if version == 4
-             else int.from_bytes(frames[4:8], "big"))
-    body = prefix + frames[10 : 10 + fsize]
-    size = (_syncsafe_bytes(len(body)) if version == 4
-            else len(body).to_bytes(4, "big"))
-    frames = frames[:4] + size + bytes((0, fmt)) + body + frames[10 + fsize :]
-    return tag[:6] + _syncsafe_bytes(len(frames)) + frames + _mp3()
+def _frames_patched(version, fmt, prefix=b"", title="Title"):
+    """ID3v2.3/2.4 tag whose frames carry format-flag byte ``fmt`` and
+    ``prefix`` ahead of their text bodies."""
+    return build_id3v2(title, "A", None, version, 3, frame_flags=fmt,
+                       frame_prefix=prefix) + _mp3()
 
 
 def test_v24_data_length_indicator_skipped():
     # the DLI is syncsafe "\x00\x00\x00\x06": read as the encoding byte,
     # its first byte would make the title latin-1 garbage
     dli = _syncsafe_bytes(len("Title") + 1)
-    t = parse_audio_tags(_first_frame_patched(4, 0x01, dli))
+    t = parse_audio_tags(_frames_patched(4, 0x01, dli))
     assert t["ok"], t["error"]
     assert t["title"] == "Title" and t["artist"] == "A" and t["n_tags"] == 2
 
@@ -234,7 +227,7 @@ def test_v24_data_length_indicator_skipped():
     (3, 0x20, b"\x07"),  # v2.3 grouping byte
 ])
 def test_grouping_byte_skipped(version, fmt, prefix):
-    t = parse_audio_tags(_first_frame_patched(version, fmt, prefix))
+    t = parse_audio_tags(_frames_patched(version, fmt, prefix))
     assert t["ok"], t["error"]
     assert t["title"] == "Title"
 
@@ -247,11 +240,11 @@ def test_grouping_byte_skipped(version, fmt, prefix):
     (4, 0x02, "frame_unsync_unsupported"),
 ])
 def test_frame_format_flags_rejected_loudly(version, fmt, error):
-    t = parse_audio_tags(_first_frame_patched(version, fmt))
+    t = parse_audio_tags(_frames_patched(version, fmt))
     assert t["ok"] is False and t["error"] == error
 
 
 def test_frame_prefix_must_fit_in_frame():
     # an empty UTF-8 title is a 1-byte body: no room for a 4-byte DLI
-    t = parse_audio_tags(_first_frame_patched(4, 0x01, title=""))
+    t = parse_audio_tags(_frames_patched(4, 0x01, title=""))
     assert t["ok"] is False and t["error"] == "bad_frame_prefix"
