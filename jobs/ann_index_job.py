@@ -47,6 +47,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from jsonschema_spark.functions.grid import grid_round
 
 from jsonschema_spark.operators import similarity  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 
 SIDECAR = "_ann_meta.json"
 
@@ -195,11 +196,7 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-ann-index")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-ann-index", args.master)
     if args.mode == "build":
         if not args.input:
             p.error("build requires --input")

@@ -57,6 +57,8 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from jsonschema_spark.session import job_session  # noqa: E402
+
 
 def _parse_speed_set(text: str) -> list[tuple[int, int]]:
     """'9/10,11/10' -> [(9, 10), (11, 10)] (validated, normalized)."""
@@ -210,18 +212,7 @@ def main(argv=None) -> int:
         p.error("--input or --synthesize required")
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-augment")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        # payload-scan GC discipline (see CLAUDE.md / BASELINE.md)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-augment", args.master)
 
     if args.input:
         clips = spark.read.parquet(args.input)

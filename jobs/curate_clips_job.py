@@ -38,12 +38,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.functions.audio import audio_snr_ok, transcript_ok  # noqa: E402
 from jsonschema_spark.operators.validate import validate  # noqa: E402
 from jsonschema_spark.plans.compile import CompileOptions  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, synth_clips  # noqa: E402
 
 
@@ -435,19 +435,7 @@ def main(argv=None) -> int:
     if not args.input and not args.synthesize:
         p.error("--input or --synthesize required")
 
-    builder = SparkSession.builder.appName("jsonschema-spark-curate-clips")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # payload-scan GC discipline (see CLAUDE.md / BASELINE.md)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-curate-clips", args.master)
 
     clips = (
         spark.read.parquet(args.input)

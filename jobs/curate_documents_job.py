@@ -46,11 +46,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.operators import dedup, text as text_ops  # noqa: E402
 from jsonschema_spark.operators.validate import validate  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 
 # The corpus contract: what a row must look like to enter curation at all.
 DOCUMENTS_JSON_SCHEMA = {
@@ -364,15 +364,7 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    builder = SparkSession.builder.appName("jsonschema-spark-curate-documents")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-curate-documents", args.master)
 
     docs = spark.read.parquet(args.input)
     schema = None

@@ -46,6 +46,8 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from jsonschema_spark.session import job_session  # noqa: E402
+
 
 def demux_table(
     videos: DataFrame,
@@ -206,17 +208,7 @@ def main(argv=None) -> int:
         p.error("--input or --synthesize required")
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-av-demux")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-av-demux", args.master)
 
     if args.input:
         videos = spark.read.parquet(args.input)

@@ -37,6 +37,8 @@ import json
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from jsonschema_spark.session import job_session
+
 
 def extract_features(
     clips,
@@ -286,19 +288,7 @@ def main(argv=None) -> int:
         p.error("--input, --shards or --synthesize required")
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-features")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.extraJavaOptions",
-                "-XX:G1HeapRegionSize=32m")
-        .config("spark.executor.extraJavaOptions",
-                "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-features", args.master)
 
     if args.shards:
         from jsonschema_spark.sources.shards import read_tar_shards

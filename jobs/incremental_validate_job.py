@@ -46,6 +46,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.operators.incremental import incremental_violations  # noqa: E402
 from jsonschema_spark.operators.validate import validate  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 
 
 def main(argv=None) -> int:
@@ -71,15 +72,7 @@ def main(argv=None) -> int:
     )
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-incremental")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-incremental", args.master)
 
     new = spark.read.parquet(args.new)
     if args.old and args.prior_violations:

@@ -41,6 +41,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from jsonschema_spark.session import job_session
+
 DEFAULT_FRACTIONS = {"train": 0.9, "valid": 0.05, "test": 0.05}
 
 
@@ -250,18 +252,7 @@ def main(argv=None) -> int:
             fractions[k.strip()] = float(v)
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-dataset")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .config("spark.executor.extraJavaOptions",
-                "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-dataset", args.master)
 
     if args.shards:
         from jsonschema_spark.sources.shards import read_tar_shards

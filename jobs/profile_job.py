@@ -34,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 from jsonschema_spark.operators import stats  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -319,11 +320,7 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-profile")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-profile", args.master)
 
     df = spark.read.parquet(args.input)
     cands = (

@@ -43,10 +43,11 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
 from pyspark import StorageLevel  # noqa: E402
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.operators.validate import validate  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 
 
 def split_quarantine(
@@ -87,14 +88,7 @@ def main(argv=None) -> int:
     with open(args.schema) as f:
         schema = json.load(f)
 
-    builder = SparkSession.builder.appName("jsonschema-spark-quarantine")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-quarantine", args.master)
 
     from pyspark.sql import Observation
 

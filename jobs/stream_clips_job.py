@@ -1,8 +1,10 @@
 """spark-submit entry point: STREAMING clips validation (Structured Streaming).
 
-The same compiled constraint plan used by the batch job — including the
-vectorized audio decode+SNR content check — applied to a ``readStream`` file
-source (the Iceberg/parquet landing dir of the north rule). Two sinks:
+The batch job's ``validate()`` call — the same compiled constraint plan,
+including the vectorized audio decode+SNR content check — applied to a
+``readStream`` file source (the Iceberg/parquet landing dir of the north
+rule); ``annotated`` and ``violations`` are stateless projections, so no
+streaming-specific API is needed. Two sinks:
 
 - ``<out>/violations``     — stateless append stream of violation rows
   (clip_id, keyword_path, keyword, column, message): exactly-once via the
@@ -38,22 +40,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.functions.audio import audio_snr_ok  # noqa: E402
+from jsonschema_spark.operators.validate import validate  # noqa: E402
 from jsonschema_spark.plans.compile import CompileOptions  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, CLIPS_SCHEMA, synth_clips  # noqa: E402
-from jsonschema_spark.streaming.validate import annotate_stream, stream_violations  # noqa: E402
 
 
 def violation_sink(stream, out: str, checkpoint: str, opts: CompileOptions):
     """The append-mode parquet writer of violation rows (clip_id,
     keyword_path, keyword, column, message), not yet started. Built with
-    ``stream_violations``, whose explode infers no filter below it, so the
-    decode UDF runs once per row."""
+    the batch ``validate(...).violations``, whose explode infers no filter
+    below it, so the decode UDF runs once per row."""
     return (
-        stream_violations(stream, CLIPS_JSON_SCHEMA, ["clip_id"], opts)
+        validate(stream, CLIPS_JSON_SCHEMA, opts).violations(["clip_id"])
         .writeStream.format("parquet")
         .option("path", os.path.join(out, "violations"))
         .option("checkpointLocation", os.path.join(checkpoint, "violations"))
@@ -74,17 +76,7 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    builder = SparkSession.builder.appName("jsonschema-spark-stream-clips")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        # payload-scan GC discipline (see bench.py build_spark)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-stream-clips", args.master)
 
     if args.synthesize:
         synth_clips(spark, args.synthesize, partitions=4).write.mode(
@@ -93,7 +85,7 @@ def main(argv=None) -> int:
 
     opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
     stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(args.input)
-    ann = annotate_stream(stream, CLIPS_JSON_SCHEMA, opts)
+    ann = validate(stream, CLIPS_JSON_SCHEMA, opts).annotated
 
     q_viol = violation_sink(stream, args.out, args.checkpoint, opts)
 

@@ -37,6 +37,7 @@ from jsonschema_spark.operators.suggest import (  # noqa: E402
     as_suite_config,
     column_suggestions,
 )
+from jsonschema_spark.session import job_session  # noqa: E402
 
 
 def main(argv=None) -> int:
@@ -53,11 +54,7 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-suggest")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = job_session("jsonschema-spark-suggest", args.master)
 
     df = spark.read.parquet(args.input)
     cols = (

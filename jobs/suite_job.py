@@ -43,6 +43,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.operators.suite import run_suite, suite_summary  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 
 
 def main(argv=None) -> int:
@@ -71,15 +72,7 @@ def main(argv=None) -> int:
                 spec["schema"] = json.load(f)
 
     preexisting = SparkSession.getActiveSession() is not None
-    builder = SparkSession.builder.appName("jsonschema-spark-suite")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-suite", args.master)
 
     tables = {
         name: spark.read.parquet(path)

@@ -33,11 +33,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from jsonschema_spark.functions.audio import audio_snr_ok  # noqa: E402
 from jsonschema_spark.operators.checkpoint import validate_resumable, with_bucket  # noqa: E402
 from jsonschema_spark.plans.compile import CompileOptions  # noqa: E402
+from jsonschema_spark.session import job_session  # noqa: E402
 from jsonschema_spark.sources.clips import CLIPS_JSON_SCHEMA, synth_clips  # noqa: E402
 
 
@@ -64,22 +63,7 @@ def main(argv=None) -> int:
                    help="override master (default: from spark-submit)")
     args = p.parse_args(argv)
 
-    builder = SparkSession.builder.appName("jsonschema-spark-validate-clips")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # payload-scan GC discipline (see bench.py): sub-humongous reader
-        # batches bound scan state AND avoid G1 humongous-allocation storms
-        # (measured multi-second whole-JVM stalls with 42KB payloads at the
-        # 4096-row default); 32m regions raise the humongous threshold for
-        # the Arrow transfer buffers on every executor
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.executor.extraJavaOptions", "-XX:G1HeapRegionSize=32m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-validate-clips", args.master)
 
     if args.synthesize:
         df = synth_clips(spark, args.synthesize)

@@ -42,12 +42,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 # validate stays importable from here: perfbench's traced run wraps
 # jobs.validate_jsonl_job.validate by name
 from jsonschema_spark.operators.validate import validate  # noqa: E402,F401
+from jsonschema_spark.session import job_session  # noqa: E402
 from jsonschema_spark.sources import jsonl as J  # noqa: E402
 from jsonschema_spark.sources.jsonl import violation_rows  # noqa: E402
 
@@ -75,11 +75,7 @@ def main(argv=None) -> int:
         with open(args.schema) as f:
             schema = json.load(f)
 
-    builder = SparkSession.builder.appName("jsonschema-spark-validate-jsonl")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_session("jsonschema-spark-validate-jsonl", args.master)
 
     path = args.input
     if args.synthesize:

@@ -24,7 +24,9 @@ Layout
 - ``operators``    — validation/stat/dedup/similarity operators over DataFrames
 - ``functions``    — column-expression helpers + the audio pandas UDF
 - ``sources``      — table loaders + deterministic synthetic clips source
-- ``streaming``    — Structured Streaming variants of the validators
+- ``session``      — ``job_session``: the SparkSession every job runs on
+- ``streaming``    — test-only streaming operators; a ``readStream`` frame
+                     validates through ``operators.validate.validate``
 """
 
 from jsonschema_spark.schema import Schema, TRUE, FALSE

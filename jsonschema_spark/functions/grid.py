@@ -94,25 +94,10 @@ def fixed_q(col: Column | str) -> Column:
     return F.floor(c * F.lit(FIXED_BIN_SCALE) + F.lit(0.5)).cast("decimal(38,0)")
 
 
-def fixed_q_total(sum_col: Column | str) -> Column:
-    """Exact-sum DECIMAL(38,0) of :func:`fixed_q` values → double. The
-    BIGINT hop makes the conversion a single correctly-rounded op in both
-    engines; ·2^-30 is an exact power-of-two multiply."""
-    c = F.col(sum_col) if isinstance(sum_col, str) else sum_col
-    return c.cast("long").cast("double") * F.lit(FIXED_BIN_INV)
-
-
 def fixed_q_sql(expr: str) -> str:
     """Oracle spelling of ``SUM(fixed_q(x))`` (wrap in SUM(...) yourself
     when composing): the per-row quantized BIGINT."""
     return f"CAST(floor(({expr}) * 1073741824e0 + 5e-1) AS BIGINT)"
-
-
-def fixed_q_total_sql(sum_expr: str) -> str:
-    """Oracle reconstruction of a summed fixed_q column (DuckDB SUM of
-    BIGINT is HUGEINT — hop through BIGINT for the one-rounding
-    conversion, then the exact 2^-30 multiply)."""
-    return f"(CAST(CAST({sum_expr} AS BIGINT) AS DOUBLE) / 1073741824e0)"
 
 
 def fixed_parts(col: Column | str) -> tuple[Column, Column]:

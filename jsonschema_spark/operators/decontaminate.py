@@ -8,7 +8,7 @@ the document contaminated.  Reference parity note: the reference engine
 the training-data-pipeline surface layered on top of the validation engine.
 
 Spark shape (scale-first):
-  * Per-document distinct n-gram sets reuse ``dedup.word_shingles`` — a
+  * Per-document distinct n-gram sets reuse ``dedup.word_shingles_from_tokens`` — a
     codegen'd slice/array_join composition, no Python.
   * The benchmark gram set is DISTINCT-ed once.  Benchmarks are tiny next
     to the corpus (10^4–10^6 grams vs 10^12 docs), so the left join against

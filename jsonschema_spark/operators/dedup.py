@@ -93,24 +93,14 @@ def distinct_by_content(df: DataFrame, text_col: str = "text", id_col: str = "do
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of the normalized text.
-
-    HOT-PATH WARNING: interpreted HOF evaluation has no subexpression
-    cache, so the slice lambda re-evaluates its array input PER ELEMENT.
-    When ``col`` is raw text, that re-runs split(normalize(text)) once per
-    shingle — O(tokens^2) per document (measured 4x on decontaminate).
-    Corpus-scale callers must materialize the token array as its own
-    projected column and use ``word_shingles_from_tokens`` instead.
-    """
-    return word_shingles_from_tokens(tokens(col), n)
-
-
 def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Distinct word n-grams from an (ideally materialized-attribute) token
     array column. Documents shorter than ``n`` tokens yield an empty
     shingle set (guarded: ``sequence(1, 0)`` would descend and feed
-    ``slice`` an invalid start)."""
+    ``slice`` an invalid start). Interpreted HOF evaluation re-evaluates
+    the slice lambda's array input per element, so tokenizing inline costs
+    O(tokens^2) per document (measured 4x on decontaminate): project the
+    token array as its own column first."""
     k = F.size(toks) - (n - 1)
     grams = F.when(k < 1, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -205,14 +195,6 @@ def minhash_signature_from(
             F.lit(2**63 - 1),
         ),
     )
-
-
-def minhash_signature(
-    col: Column, num_hashes: int = 32, n: int = 3, hash_family: str = "xxhash64"
-) -> Column:
-    """Inline variant (shingles rebuilt per slot — prefer the two-step
-    ``word_shingles`` + ``minhash_signature_from`` in hot paths)."""
-    return minhash_signature_from(word_shingles(col, n), num_hashes, hash_family)
 
 
 def minhash_lsh_pairs(

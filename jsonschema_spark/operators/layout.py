@@ -279,13 +279,3 @@ def write_bucketed(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table_name)
-
-
-def exchange_count(df) -> int:
-    """Number of shuffle exchanges in the executed plan (AQE prints the
-    plan twice — final + initial — so count on the final section only)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    return final.count("Exchange hashpartitioning") + final.count(
-        "Exchange rangepartitioning"
-    )

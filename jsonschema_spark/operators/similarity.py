@@ -111,14 +111,6 @@ def _hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
     return (dot(_to_double(vec), weights) > 0).cast("int")
 
 
-def lsh_signature(vec: Column, n_planes: int, dim: int) -> Column:
-    """int bucket id: sign bits of ``n_planes`` random hyperplanes."""
-    sig = F.lit(0)
-    for p in range(n_planes):
-        sig = sig * 2 + _hyperplane_sign(vec, p, dim)
-    return sig
-
-
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,

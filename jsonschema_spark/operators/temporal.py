@@ -6,9 +6,8 @@ events feed (and any ``clip_id``-sharded ingest log):
 - :func:`sessionize` — split each key's timeline into sessions separated
   by idle gaps ``>= gap_s`` and report per-session activity metrics. Built
   on Spark's native ``F.session_window`` aggregation (the same operator
-  Structured Streaming uses with watermarks — see
-  ``jsonschema_spark/streaming/sessions.py``), so batch and streaming
-  share merge semantics: an event extends the current session iff it
+  Structured Streaming runs under a watermark), so a streaming run would
+  share its merge semantics: an event extends the current session iff it
   arrives AT MOST ``gap_s`` after the previous event (the session window
   [t, t+gap) merges with a next window whose start equals its end — an
   exactly-gap-spaced event still merges; pinned by test).

@@ -167,12 +167,6 @@ def fingerprint(col: Column) -> Column:
     return F.md5(normalize(col))
 
 
-def prefix_fingerprint(col: Column, n_tokens: int = 5) -> Column:
-    """Fingerprint of the first N tokens — a blocking key for near-dup
-    candidate generation (hot alternative to full-text hashing)."""
-    return F.md5(F.array_join(F.slice(tokens(col), 1, n_tokens), " "))
-
-
 def lang_id(col: Column) -> Column:
     """Marker-word language heuristic; 'und' when nothing matches.
 

@@ -579,7 +579,9 @@ def validate(
     resolve_config: Optional[ResolveConfig] = None,
 ) -> ValidationResult:
     """Compile ``schema`` against ``df.schema`` and annotate ``df`` with
-    validity + violations. Lazily evaluated; compose freely."""
+    validity + violations. Lazily evaluated; compose freely. ``df`` may be
+    a ``readStream`` frame: ``annotated`` and ``violations`` are stateless
+    per-row projections, so they run under any streaming sink."""
     if isinstance(schema, str):
         schema = Schema.from_json(schema)
     elif isinstance(schema, dict):

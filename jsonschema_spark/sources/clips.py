@@ -603,14 +603,6 @@ def synth_containment_clips(
     return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
 
 
-def codecs_dim(spark: SparkSession) -> DataFrame:
-    """Tiny codec dimension for referential checks (broadcast side)."""
-    return spark.createDataFrame(
-        [("pcm_s16le", "wav"), ("flac", "flac"), ("opus", "ogg")],
-        ["codec", "container"],
-    )
-
-
 # ---------------------------------------------------------------------------
 # WAV-header ledger corpus (container-integrity ground truth)
 # ---------------------------------------------------------------------------
@@ -4402,5 +4394,3 @@ def synth_mp3si_clips(
     return spark.range(0, n, 1, parts).mapInPandas(
         gen, schema=MP3SI_CLIPS_SCHEMA
     )
-
-

@@ -1,15 +1,3 @@
-"""Structured Streaming variants of the validation executor."""
-
-from jsonschema_spark.streaming.stateful import running_validation_totals
-from jsonschema_spark.streaming.validate import (
-    annotate_stream,
-    stream_violations,
-    windowed_summary,
-)
-
-__all__ = [
-    "annotate_stream",
-    "stream_violations",
-    "windowed_summary",
-    "running_validation_totals",
-]
+"""Structured Streaming operators that no job runs yet (see
+``tests/test_reachability.py``). A ``readStream`` frame validates through
+``operators.validate.validate`` like any other DataFrame."""

@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from jsonschema_spark.operators.validate import validate
 from jsonschema_spark.plans.compile import CompileOptions
-from jsonschema_spark.streaming.validate import annotate_stream
 
 _OUTPUT = T.StructType(
     [
@@ -49,7 +49,7 @@ def running_validation_totals(
 ) -> DataFrame:
     """Streaming DataFrame of (key, rows, failed, violation_count) running
     totals, updated per micro-batch via per-key state."""
-    ann = annotate_stream(stream, schema, options).select(
+    ann = validate(stream, schema, options).annotated.select(
         F.col(key_col).cast("string").alias("key"),
         (~F.col("_valid")).cast("long").alias("_f"),
         F.size("_violations").cast("long").alias("_v"),

@@ -1,56 +1,24 @@
-"""Streaming validation: the SAME compiled constraint plan, applied to a
-``readStream`` DataFrame.
+"""Windowed pass/fail rollup over a validated stream.
 
 The compiled checks are pure Column expressions referencing columns by
-name (plans/compile.py), so they are execution-plan-agnostic: batch and
-streaming share one compile. The reference has no streaming concept at
-all — this is the Spark-native extension the north rule's "same DAG under
-readStream + watermarks" line asks for (SURVEY §2C).
-
-Scale notes:
-- ``annotate_stream`` is stateless (per-row projection): no state store,
-  no watermark needed, arbitrary sinks.
-- ``windowed_summary`` is a windowed aggregation with a watermark: late
-  rows beyond the watermark are dropped deterministically; output mode
-  "append" emits each window once finalized, "update" emits running
-  counts. State size is O(open windows), not O(rows).
+name (plans/compile.py), so ``validate(stream, ...)`` serves a
+``readStream`` frame with the batch compile. ``windowed_summary`` is a
+windowed aggregation with a watermark: late rows beyond the watermark are
+dropped deterministically; output mode "append" emits each window once
+finalized, "update" emits running counts. State size is O(open windows),
+not O(rows).
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jsonschema_spark.operators.validate import validate
 from jsonschema_spark.plans.compile import CompileOptions
-from jsonschema_spark.resolve import ResolveConfig
 from jsonschema_spark.schema import Schema
-
-
-def annotate_stream(
-    stream: DataFrame,
-    schema: Schema | str | dict,
-    options: Optional[CompileOptions] = None,
-    resolve_config: Optional[ResolveConfig] = None,
-) -> DataFrame:
-    """Streaming DataFrame + ``_valid`` boolean + ``_violations`` array.
-
-    The batch ``validate(...).annotated``: checks reference columns by
-    name, so the same compile serves a ``readStream`` plan."""
-    return validate(stream, schema, options, resolve_config).annotated
-
-
-def stream_violations(
-    stream: DataFrame,
-    schema: Schema | str | dict,
-    key_cols: Sequence[str],
-    options: Optional[CompileOptions] = None,
-) -> DataFrame:
-    """Streaming violation rows (key..., keyword_path, keyword, column,
-    message) — stateless explode, safe for append-mode sinks."""
-    return validate(stream, schema, options).violations(key_cols)
 
 
 def windowed_summary(
@@ -66,7 +34,7 @@ def windowed_summary(
     (window_start, window_end, rows, passed, failed, violation_count) —
     the streaming analogue of ``ValidationResult.summary()``.
     """
-    ann = annotate_stream(stream, schema, options)
+    ann = validate(stream, schema, options).annotated
     # watermarks require TIMESTAMP (not NTZ); cast is a no-op when already tz
     ann = ann.withColumn("_event_ts", F.col(ts_col).cast("timestamp"))
     return (

@@ -37,3 +37,15 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """A skipped test is a named gap, never a pass: one ``GAP:`` line per
+    distinct skip reason."""
+    reasons: dict[str, int] = {}
+    for rep in terminalreporter.stats.get("skipped", []):
+        reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else str(rep.longrepr)
+        reason = reason.removeprefix("Skipped: ")
+        reasons[reason] = reasons.get(reason, 0) + 1
+    for reason, n in sorted(reasons.items(), key=lambda kv: (-kv[1], kv[0])):
+        terminalreporter.write_line(f"GAP: {n} skipped: {reason}")

@@ -22,6 +22,16 @@ from jsonschema_spark.sources.layouts import (
 )
 
 
+def exchange_count(df) -> int:
+    """Number of shuffle exchanges in the executed plan (AQE prints the
+    plan twice — final + initial — so count on the final section only)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return final.count("Exchange hashpartitioning") + final.count(
+        "Exchange rangepartitioning"
+    )
+
+
 def _py_zorder(vals, bits):
     z = 0
     m = len(vals)
@@ -228,7 +238,7 @@ def test_layout_report_single_file(spark, tmp_path):
 
 
 def test_bucketed_join_elides_exchanges(spark, tmp_path):
-    from jsonschema_spark.operators.layout import exchange_count, write_bucketed
+    from jsonschema_spark.operators.layout import write_bucketed
 
     left = spark.range(0, 5000).selectExpr("id AS k", "id * 2 AS a")
     right = spark.range(0, 5000).selectExpr("id AS k", "id * 3 AS b")
@@ -257,7 +267,7 @@ def test_bucketed_join_elides_exchanges(spark, tmp_path):
 
 
 def test_bucketed_groupby_elides_exchange(spark, tmp_path):
-    from jsonschema_spark.operators.layout import exchange_count, write_bucketed
+    from jsonschema_spark.operators.layout import write_bucketed
     from pyspark.sql import functions as F
 
     df = spark.range(0, 4000).selectExpr("id % 97 AS k", "id AS v")

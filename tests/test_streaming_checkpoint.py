@@ -13,7 +13,7 @@ from jsonschema_spark.operators.checkpoint import (
 )
 from jsonschema_spark.operators.validate import validate
 from jsonschema_spark.sources.tables import load_table
-from jsonschema_spark.streaming import stream_violations, windowed_summary
+from jsonschema_spark.streaming.validate import windowed_summary
 
 from .conftest import SF_DIR
 
@@ -48,7 +48,7 @@ def test_stream_matches_batch(spark, events_dir, tmp_path):
     )
 
     stream = spark.readStream.schema(batch_df.schema).parquet(events_dir)
-    out = stream_violations(stream, EVENTS_SCHEMA, ["event_id"]).select(
+    out = validate(stream, EVENTS_SCHEMA).violations(["event_id"]).select(
         "event_id", "keyword"
     )
     q = (
@@ -321,7 +321,7 @@ def test_stream_clips_with_audio_udf(spark, tmp_path):
     assert any(kw == "contentMediaType" for _, kw in want)  # UDF check fires
 
     stream = spark.readStream.schema(batch_df.schema).parquet(d)
-    out = stream_violations(stream, CLIPS_JSON_SCHEMA, ["clip_id"], options=opts).select(
+    out = validate(stream, CLIPS_JSON_SCHEMA, opts).violations(["clip_id"]).select(
         "clip_id", "keyword"
     )
     q = (
