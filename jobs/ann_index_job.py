@@ -195,28 +195,25 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-ann-index", args.master)
-    if args.mode == "build":
-        if not args.input:
-            p.error("build requires --input")
-        stats = build(
-            spark, args.input, args.index, m=args.m,
-            k_per_space=args.k_per_space, n_cells=args.n_cells,
-            sample_size=args.sample_size, iters=args.iters,
-            id_col=args.id_col, vec_col=args.vec_col,
-        )
-    else:
-        if not args.queries:
-            p.error("query requires --queries")
-        stats = query(
-            spark, args.index, args.queries, args.output, k=args.k,
-            n_probe=args.n_probe, query_limit=args.query_limit,
-        )
-    print(json.dumps(stats))
-    if not preexisting:  # embedded callers (tests) keep their session
-        spark.stop()
-    return 0
+    with job_session("jsonschema-spark-ann-index", args.master) as spark:
+        if args.mode == "build":
+            if not args.input:
+                p.error("build requires --input")
+            stats = build(
+                spark, args.input, args.index, m=args.m,
+                k_per_space=args.k_per_space, n_cells=args.n_cells,
+                sample_size=args.sample_size, iters=args.iters,
+                id_col=args.id_col, vec_col=args.vec_col,
+            )
+        else:
+            if not args.queries:
+                p.error("query requires --queries")
+            stats = query(
+                spark, args.index, args.queries, args.output, k=args.k,
+                n_probe=args.n_probe, query_limit=args.query_limit,
+            )
+        print(json.dumps(stats))
+        return 0
 
 
 if __name__ == "__main__":

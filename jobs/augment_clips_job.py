@@ -54,7 +54,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.session import job_session  # noqa: E402
@@ -211,41 +211,37 @@ def main(argv=None) -> int:
     if not args.input and not args.synthesize:
         p.error("--input or --synthesize required")
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-augment", args.master)
+    with job_session("jsonschema-spark-augment", args.master) as spark:
+        if args.input:
+            clips = spark.read.parquet(args.input)
+        else:
+            from jsonschema_spark.sources.clips import synth_clips
 
-    if args.input:
-        clips = spark.read.parquet(args.input)
-    else:
-        from jsonschema_spark.sources.clips import synth_clips
+            clips = synth_clips(spark, args.synthesize)
+        meta_cols = [c for c in clips.columns if c.startswith("_")]
+        if meta_cols:
+            clips = clips.drop(*meta_cols)
 
-        clips = synth_clips(spark, args.synthesize)
-    meta_cols = [c for c in clips.columns if c.startswith("_")]
-    if meta_cols:
-        clips = clips.drop(*meta_cols)
+        noise = None
+        if args.mix_noise:
+            noise = (
+                clips if args.mix_noise == "self"
+                else spark.read.parquet(args.mix_noise)
+            )
 
-    noise = None
-    if args.mix_noise:
-        noise = (
-            clips if args.mix_noise == "self"
-            else spark.read.parquet(args.mix_noise)
+        _out, stats = augment_clips(
+            clips,
+            downmix=args.downmix,
+            n_time_masks=args.time_masks,
+            mask_ms=args.mask_ms,
+            noise=noise,
+            mix_gain=args.mix_gain,
+            mix_snr_lin=args.mix_snr,
+            speed_set=_parse_speed_set(args.speed_set) if args.speed_set else None,
+            output=args.output,
         )
-
-    _out, stats = augment_clips(
-        clips,
-        downmix=args.downmix,
-        n_time_masks=args.time_masks,
-        mask_ms=args.mask_ms,
-        noise=noise,
-        mix_gain=args.mix_gain,
-        mix_snr_lin=args.mix_snr,
-        speed_set=_parse_speed_set(args.speed_set) if args.speed_set else None,
-        output=args.output,
-    )
-    print(json.dumps(stats))
-    if not preexisting:
-        spark.stop()
-    return 0
+        print(json.dumps(stats))
+        return 0
 
 
 if __name__ == "__main__":

@@ -435,45 +435,43 @@ def main(argv=None) -> int:
     if not args.input and not args.synthesize:
         p.error("--input or --synthesize required")
 
-    spark = job_session("jsonschema-spark-curate-clips", args.master)
-
-    clips = (
-        spark.read.parquet(args.input)
-        if args.input
-        else synth_clips(spark, args.synthesize)
-    )
-    # underscore-prefixed columns are pipeline metadata (planted-violation
-    # ledgers, bucket keys) — not part of the closed-world document
-    meta_cols = [c for c in clips.columns if c.startswith("_")]
-    if meta_cols:
-        clips = clips.drop(*meta_cols)
-    _curated, stats = curate_clips(
-        clips,
-        snr_threshold_db=None if args.no_snr else args.snr_db,
-        output=args.output,
-        near_dedup=args.near_dedup,
-        fp_threshold=args.fp_threshold,
-        quality_gate=args.quality_gate,
-        max_silence_frac=args.max_silence,
-        max_clipping_frac=args.max_clipping,
-        min_rms_dbfs=args.min_rms,
-        bandwidth_gate=args.bandwidth_gate,
-        upsample_frac=args.upsample_frac,
-        crowd_frac=args.crowd_frac,
-        tonality_gate=args.tonality_gate,
-        artifact_gate=args.artifact_gate,
-        snr_est_gate=args.snr_est_gate,
-        min_snr_est_db=args.min_snr_est,
-        trim=args.trim_silence,
-        resample_sr=args.resample,
-        target_rms=args.target_rms,
-        target_lufs=args.target_lufs,
-        transcode=args.transcode_flac,
-        lpc_order=args.lpc_order,
-    )
-    print(json.dumps(stats))
-    spark.stop()
-    return 0
+    with job_session("jsonschema-spark-curate-clips", args.master) as spark:
+        clips = (
+            spark.read.parquet(args.input)
+            if args.input
+            else synth_clips(spark, args.synthesize)
+        )
+        # underscore-prefixed columns are pipeline metadata (planted-violation
+        # ledgers, bucket keys) — not part of the closed-world document
+        meta_cols = [c for c in clips.columns if c.startswith("_")]
+        if meta_cols:
+            clips = clips.drop(*meta_cols)
+        _curated, stats = curate_clips(
+            clips,
+            snr_threshold_db=None if args.no_snr else args.snr_db,
+            output=args.output,
+            near_dedup=args.near_dedup,
+            fp_threshold=args.fp_threshold,
+            quality_gate=args.quality_gate,
+            max_silence_frac=args.max_silence,
+            max_clipping_frac=args.max_clipping,
+            min_rms_dbfs=args.min_rms,
+            bandwidth_gate=args.bandwidth_gate,
+            upsample_frac=args.upsample_frac,
+            crowd_frac=args.crowd_frac,
+            tonality_gate=args.tonality_gate,
+            artifact_gate=args.artifact_gate,
+            snr_est_gate=args.snr_est_gate,
+            min_snr_est_db=args.min_snr_est,
+            trim=args.trim_silence,
+            resample_sr=args.resample,
+            target_rms=args.target_rms,
+            target_lufs=args.target_lufs,
+            transcode=args.transcode_flac,
+            lpc_order=args.lpc_order,
+        )
+        print(json.dumps(stats))
+        return 0
 
 
 if __name__ == "__main__":

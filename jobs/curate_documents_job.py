@@ -364,37 +364,35 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    spark = job_session("jsonschema-spark-curate-documents", args.master)
+    with job_session("jsonschema-spark-curate-documents", args.master) as spark:
+        docs = spark.read.parquet(args.input)
+        schema = None
+        if args.schema:
+            with open(args.schema) as f:
+                schema = json.load(f)
 
-    docs = spark.read.parquet(args.input)
-    schema = None
-    if args.schema:
-        with open(args.schema) as f:
-            schema = json.load(f)
-
-    _curated, stats = curate(
-        docs,
-        quality_min=args.quality_min,
-        min_tokens=args.min_tokens,
-        jaccard_threshold=args.jaccard_threshold,
-        schema=schema,
-        output=args.output,
-        near_dedup_policy=args.near_dedup_policy,
-        near_dup_method=args.near_dup_method,
-        boilerplate_min_doc_freq=args.boilerplate_min_doc_freq,
-        mix_budget=args.mix_budget,
-        mix_alpha=args.mix_alpha,
-        mix_strata=args.mix_strata,
-        model_threshold=args.model_threshold,
-        extract_html=args.extract_html,
-        encoding_gate=args.encoding_gate,
-        span_dedup_min_doc_freq=args.span_dedup_min_doc_freq,
-        span_n=args.span_n,
-        span_max_dup_fraction=args.span_max_dup_fraction,
-    )
-    print(json.dumps(stats))
-    spark.stop()
-    return 0
+        _curated, stats = curate(
+            docs,
+            quality_min=args.quality_min,
+            min_tokens=args.min_tokens,
+            jaccard_threshold=args.jaccard_threshold,
+            schema=schema,
+            output=args.output,
+            near_dedup_policy=args.near_dedup_policy,
+            near_dup_method=args.near_dup_method,
+            boilerplate_min_doc_freq=args.boilerplate_min_doc_freq,
+            mix_budget=args.mix_budget,
+            mix_alpha=args.mix_alpha,
+            mix_strata=args.mix_strata,
+            model_threshold=args.model_threshold,
+            extract_html=args.extract_html,
+            encoding_gate=args.encoding_gate,
+            span_dedup_min_doc_freq=args.span_dedup_min_doc_freq,
+            span_n=args.span_n,
+            span_max_dup_fraction=args.span_max_dup_fraction,
+        )
+        print(json.dumps(stats))
+        return 0
 
 
 if __name__ == "__main__":

@@ -207,26 +207,22 @@ def main(argv=None) -> int:
     if not args.input and not args.synthesize:
         p.error("--input or --synthesize required")
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-av-demux", args.master)
+    with job_session("jsonschema-spark-av-demux", args.master) as spark:
+        if args.input:
+            videos = spark.read.parquet(args.input)
+        else:
+            from jsonschema_spark.sources.videos import synth_av_videos
 
-    if args.input:
-        videos = spark.read.parquet(args.input)
-    else:
-        from jsonschema_spark.sources.videos import synth_av_videos
+            videos = synth_av_videos(spark, args.synthesize)
 
-        videos = synth_av_videos(spark, args.synthesize)
-
-    report = demux_table(
-        videos,
-        audio_out=args.audio,
-        frames_out=args.frames,
-        every_n=args.every_n,
-    )
-    print(json.dumps(report))
-    if not preexisting:
-        spark.stop()
-    return 0
+        report = demux_table(
+            videos,
+            audio_out=args.audio,
+            frames_out=args.frames,
+            every_n=args.every_n,
+        )
+        print(json.dumps(report))
+        return 0
 
 
 if __name__ == "__main__":

@@ -34,7 +34,6 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from jsonschema_spark.session import job_session
@@ -287,43 +286,39 @@ def main(argv=None) -> int:
     if not (args.input or args.shards or args.synthesize):
         p.error("--input, --shards or --synthesize required")
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-features", args.master)
+    with job_session("jsonschema-spark-features", args.master) as spark:
+        if args.shards:
+            from jsonschema_spark.sources.shards import read_tar_shards
 
-    if args.shards:
-        from jsonschema_spark.sources.shards import read_tar_shards
+            clips = read_tar_shards(spark, args.shards)
+        elif args.input:
+            clips = spark.read.parquet(args.input)
+        else:
+            from jsonschema_spark.sources.clips import synth_fbank_clips
 
-        clips = read_tar_shards(spark, args.shards)
-    elif args.input:
-        clips = spark.read.parquet(args.input)
-    else:
-        from jsonschema_spark.sources.clips import synth_fbank_clips
-
-        clips = synth_fbank_clips(spark, args.synthesize)
-    meta = [c for c in clips.columns if c.startswith("_")]
-    if meta:
-        clips = clips.drop(*meta)
-    if (
-        args.deltas or args.specaugment is not None or args.labels
-    ) and not (args.matrix or args.tensor_shards):
-        p.error("--deltas/--specaugment/--labels require --matrix or "
-                "--tensor-shards")
-    _f, _c, stats = extract_features(
-        clips,
-        gate=args.gate,
-        min_snr_est_db=args.min_snr_est,
-        features=args.features,
-        cmvn=args.cmvn,
-        matrix=args.matrix,
-        deltas=args.deltas,
-        specaugment=args.specaugment,
-        tensor_shards=args.tensor_shards,
-        labels=args.labels,
-    )
-    print(json.dumps(stats))
-    if not preexisting:
-        spark.stop()
-    return 0
+            clips = synth_fbank_clips(spark, args.synthesize)
+        meta = [c for c in clips.columns if c.startswith("_")]
+        if meta:
+            clips = clips.drop(*meta)
+        if (
+            args.deltas or args.specaugment is not None or args.labels
+        ) and not (args.matrix or args.tensor_shards):
+            p.error("--deltas/--specaugment/--labels require --matrix or "
+                    "--tensor-shards")
+        _f, _c, stats = extract_features(
+            clips,
+            gate=args.gate,
+            min_snr_est_db=args.min_snr_est,
+            features=args.features,
+            cmvn=args.cmvn,
+            matrix=args.matrix,
+            deltas=args.deltas,
+            specaugment=args.specaugment,
+            tensor_shards=args.tensor_shards,
+            labels=args.labels,
+        )
+        print(json.dumps(stats))
+        return 0
 
 
 if __name__ == "__main__":

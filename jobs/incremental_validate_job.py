@@ -41,9 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
 from jsonschema_spark.operators.incremental import incremental_violations  # noqa: E402
 from jsonschema_spark.operators.validate import validate  # noqa: E402
 from jsonschema_spark.session import job_session  # noqa: E402
@@ -71,34 +68,30 @@ def main(argv=None) -> int:
         else None
     )
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-incremental", args.master)
+    with job_session("jsonschema-spark-incremental", args.master) as spark:
+        new = spark.read.parquet(args.new)
+        if args.old and args.prior_violations:
+            old = spark.read.parquet(args.old)
+            prior = spark.read.parquet(args.prior_violations)
+            viols = incremental_violations(
+                old, new, keys, schema, prior, compare_cols=compare_cols
+            )
+            mode = "incremental"
+        else:
+            viols = validate(new, schema).violations(keys)
+            mode = "full"
+        viols.write.mode("overwrite").parquet(args.violations)
 
-    new = spark.read.parquet(args.new)
-    if args.old and args.prior_violations:
-        old = spark.read.parquet(args.old)
-        prior = spark.read.parquet(args.prior_violations)
-        viols = incremental_violations(
-            old, new, keys, schema, prior, compare_cols=compare_cols
-        )
-        mode = "incremental"
-    else:
-        viols = validate(new, schema).violations(keys)
-        mode = "full"
-    viols.write.mode("overwrite").parquet(args.violations)
-
-    written = spark.read.parquet(args.violations)
-    report = {
-        "mode": mode,
-        "new_rows": new.count(),
-        "violation_rows": written.count(),
-        "violated_keys": written.select(*keys).distinct().count(),
-        "output": args.violations,
-    }
-    print(json.dumps(report))
-    if not preexisting:
-        spark.stop()
-    return 0
+        written = spark.read.parquet(args.violations)
+        report = {
+            "mode": mode,
+            "new_rows": new.count(),
+            "violation_rows": written.count(),
+            "violated_keys": written.select(*keys).distinct().count(),
+            "output": args.violations,
+        }
+        print(json.dumps(report))
+        return 0
 
 
 if __name__ == "__main__":

@@ -38,7 +38,6 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from jsonschema_spark.session import job_session
@@ -251,37 +250,33 @@ def main(argv=None) -> int:
             k, _, v = part.partition(":")
             fractions[k.strip()] = float(v)
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-dataset", args.master)
+    with job_session("jsonschema-spark-dataset", args.master) as spark:
+        if args.shards:
+            from jsonschema_spark.sources.shards import read_tar_shards
 
-    if args.shards:
-        from jsonschema_spark.sources.shards import read_tar_shards
+            clips = read_tar_shards(spark, args.shards)
+        elif args.input:
+            clips = spark.read.parquet(args.input)
+        else:
+            from jsonschema_spark.sources.clips import synth_fbank_clips
 
-        clips = read_tar_shards(spark, args.shards)
-    elif args.input:
-        clips = spark.read.parquet(args.input)
-    else:
-        from jsonschema_spark.sources.clips import synth_fbank_clips
-
-        clips = synth_fbank_clips(spark, args.synthesize)
-    meta = [c for c in clips.columns if c.startswith("_")]
-    if meta:
-        clips = clips.drop(*meta)
-    report = make_dataset(
-        clips,
-        args.output,
-        fractions=fractions,
-        seed=args.seed,
-        gate=args.gate,
-        min_snr_est_db=args.min_snr_est,
-        deltas=args.deltas,
-        specaugment=args.specaugment,
-        labels=not args.no_labels,
-    )
-    print(json.dumps(report))
-    if not preexisting:
-        spark.stop()
-    return 0
+            clips = synth_fbank_clips(spark, args.synthesize)
+        meta = [c for c in clips.columns if c.startswith("_")]
+        if meta:
+            clips = clips.drop(*meta)
+        report = make_dataset(
+            clips,
+            args.output,
+            fractions=fractions,
+            seed=args.seed,
+            gate=args.gate,
+            min_snr_est_db=args.min_snr_est,
+            deltas=args.deltas,
+            specaugment=args.specaugment,
+            labels=not args.no_labels,
+        )
+        print(json.dumps(report))
+        return 0
 
 
 if __name__ == "__main__":

@@ -29,7 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
@@ -319,29 +318,25 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-profile", args.master)
-
-    df = spark.read.parquet(args.input)
-    cands = (
-        [c.strip() for c in args.skew_candidates.split(",") if c.strip()]
-        if args.skew_candidates
-        else []
-    )
-    report = profile_table(df, cands)
-    if args.output:
-        report.write.mode("overwrite").parquet(args.output)
-        report = spark.read.parquet(args.output)
-    rows = report.count()
-    print(json.dumps({
-        "columns": len(df.columns),
-        "report_rows": rows,
-        "sections": [r.section for r in report.select("section").distinct().collect()],
-        "output": args.output,
-    }))
-    if not preexisting:
-        spark.stop()
-    return 0
+    with job_session("jsonschema-spark-profile", args.master) as spark:
+        df = spark.read.parquet(args.input)
+        cands = (
+            [c.strip() for c in args.skew_candidates.split(",") if c.strip()]
+            if args.skew_candidates
+            else []
+        )
+        report = profile_table(df, cands)
+        if args.output:
+            report.write.mode("overwrite").parquet(args.output)
+            report = spark.read.parquet(args.output)
+        rows = report.count()
+        print(json.dumps({
+            "columns": len(df.columns),
+            "report_rows": rows,
+            "sections": [r.section for r in report.select("section").distinct().collect()],
+            "output": args.output,
+        }))
+        return 0
 
 
 if __name__ == "__main__":

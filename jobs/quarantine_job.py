@@ -88,33 +88,32 @@ def main(argv=None) -> int:
     with open(args.schema) as f:
         schema = json.load(f)
 
-    spark = job_session("jsonschema-spark-quarantine", args.master)
+    with job_session("jsonschema-spark-quarantine", args.master) as spark:
+        from pyspark.sql import Observation
 
-    from pyspark.sql import Observation
+        df = spark.read.parquet(args.input)
+        obs = Observation("validate_totals")
+        valid, quarantine, annotated = split_quarantine(df, schema, observation=obs)
+        valid.write.mode("overwrite").parquet(args.valid)
+        quarantine.write.mode("overwrite").parquet(args.quarantine)
 
-    df = spark.read.parquet(args.input)
-    obs = Observation("validate_totals")
-    valid, quarantine, annotated = split_quarantine(df, schema, observation=obs)
-    valid.write.mode("overwrite").parquet(args.valid)
-    quarantine.write.mode("overwrite").parquet(args.quarantine)
+        # totals accumulated during the first write (Observation API) —
+        # zero extra jobs, zero extra scans
+        tot = obs.get
+        annotated.unpersist()
 
-    # totals accumulated during the first write (Observation API) —
-    # zero extra jobs, zero extra scans
-    tot = obs.get
-    annotated.unpersist()
-
-    rate = (tot["failed"] / tot["rows"]) if tot["rows"] else 0.0
-    report = {
-        "rows": tot["rows"],
-        "valid": tot["rows"] - tot["failed"],
-        "quarantined": tot["failed"],
-        "violation_count": tot["violation_count"],
-        "violation_rate": round(rate, 6),
-        "max_violation_rate": args.max_violation_rate,
-        "ok": rate <= args.max_violation_rate,
-    }
-    print(json.dumps(report))
-    return 0 if report["ok"] else 1
+        rate = (tot["failed"] / tot["rows"]) if tot["rows"] else 0.0
+        report = {
+            "rows": tot["rows"],
+            "valid": tot["rows"] - tot["failed"],
+            "quarantined": tot["failed"],
+            "violation_count": tot["violation_count"],
+            "violation_rate": round(rate, 6),
+            "max_violation_rate": args.max_violation_rate,
+            "ok": rate <= args.max_violation_rate,
+        }
+        print(json.dumps(report))
+        return 0 if report["ok"] else 1
 
 
 if __name__ == "__main__":

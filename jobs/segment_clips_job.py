@@ -41,7 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.session import job_session  # noqa: E402
@@ -169,33 +169,29 @@ def main(argv=None) -> int:
     if not args.input and not args.synthesize:
         p.error("--input or --synthesize required")
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-segments", args.master)
+    with job_session("jsonschema-spark-segments", args.master) as spark:
+        if args.input:
+            clips = spark.read.parquet(args.input)
+        else:
+            from jsonschema_spark.sources.clips import synth_segment_clips
 
-    if args.input:
-        clips = spark.read.parquet(args.input)
-    else:
-        from jsonschema_spark.sources.clips import synth_segment_clips
+            clips = synth_segment_clips(spark, args.synthesize)
+        meta_cols = [c for c in clips.columns if c.startswith("_")]
+        if meta_cols:
+            clips = clips.drop(*meta_cols)
 
-        clips = synth_segment_clips(spark, args.synthesize)
-    meta_cols = [c for c in clips.columns if c.startswith("_")]
-    if meta_cols:
-        clips = clips.drop(*meta_cols)
-
-    segs, stats = segment_table(
-        clips,
-        segment_ms=args.segment_ms,
-        min_tail_ms=args.min_tail_ms,
-        output=args.output,
-        energy=args.energy,
-        msq_floor=args.msq_floor,
-        partition_by=args.partition_by,
-    )
-    print(json.dumps(stats))
-    segs.unpersist()
-    if not preexisting:
-        spark.stop()
-    return 0
+        segs, stats = segment_table(
+            clips,
+            segment_ms=args.segment_ms,
+            min_tail_ms=args.min_tail_ms,
+            output=args.output,
+            energy=args.energy,
+            msq_floor=args.msq_floor,
+            partition_by=args.partition_by,
+        )
+        print(json.dumps(stats))
+        segs.unpersist()
+        return 0
 
 
 if __name__ == "__main__":

@@ -44,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.session import job_session  # noqa: E402
@@ -129,31 +129,27 @@ def main(argv=None) -> int:
     if not args.input and not args.synthesize:
         p.error("--input or --synthesize required")
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-snippets", args.master)
+    with job_session("jsonschema-spark-snippets", args.master) as spark:
+        if args.input:
+            clips = spark.read.parquet(args.input)
+        else:
+            from jsonschema_spark.sources.clips import synth_clips
 
-    if args.input:
-        clips = spark.read.parquet(args.input)
-    else:
-        from jsonschema_spark.sources.clips import synth_clips
+            clips = synth_clips(spark, args.synthesize)
+        meta_cols = [c for c in clips.columns if c.startswith("_")]
+        if meta_cols:
+            clips = clips.drop(*meta_cols)
 
-        clips = synth_clips(spark, args.synthesize)
-    meta_cols = [c for c in clips.columns if c.startswith("_")]
-    if meta_cols:
-        clips = clips.drop(*meta_cols)
-
-    snips, stats = snippet_clips(
-        clips,
-        off_ms=args.off_ms,
-        off_frac=args.off_frac,
-        win_ms=args.win_ms,
-        output=args.output,
-    )
-    print(json.dumps(stats))
-    snips.unpersist()
-    if not preexisting:
-        spark.stop()
-    return 0
+        snips, stats = snippet_clips(
+            clips,
+            off_ms=args.off_ms,
+            off_frac=args.off_frac,
+            win_ms=args.win_ms,
+            output=args.output,
+        )
+        print(json.dumps(stats))
+        snips.unpersist()
+        return 0
 
 
 if __name__ == "__main__":

@@ -76,84 +76,82 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    spark = job_session("jsonschema-spark-stream-clips", args.master)
+    with job_session("jsonschema-spark-stream-clips", args.master) as spark:
+        if args.synthesize:
+            synth_clips(spark, args.synthesize, partitions=4).write.mode(
+                "overwrite"
+            ).parquet(args.input)
 
-    if args.synthesize:
-        synth_clips(spark, args.synthesize, partitions=4).write.mode(
-            "overwrite"
-        ).parquet(args.input)
+        opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
+        stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(args.input)
+        ann = validate(stream, CLIPS_JSON_SCHEMA, opts).annotated
 
-    opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
-    stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(args.input)
-    ann = validate(stream, CLIPS_JSON_SCHEMA, opts).annotated
+        q_viol = violation_sink(stream, args.out, args.checkpoint, opts)
 
-    q_viol = violation_sink(stream, args.out, args.checkpoint, opts)
+        summary_path = os.path.join(args.out, "batch_summary")
 
-    summary_path = os.path.join(args.out, "batch_summary")
-
-    def write_summary(batch_df, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a replayed batch must overwrite its
-        # OWN partition, not append a duplicate summary row — batch_id is
-        # stable across retries, so dynamic partition overwrite is idempotent
-        (
-            batch_df.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("_valid").cast("long")).alias("passed"),
-                F.sum((~F.col("_valid")).cast("long")).alias("failed"),
-                F.sum(F.size("_violations").cast("long")).alias("violation_count"),
+        def write_summary(batch_df, batch_id: int) -> None:
+            # foreachBatch is at-least-once: a replayed batch must overwrite its
+            # OWN partition, not append a duplicate summary row — batch_id is
+            # stable across retries, so dynamic partition overwrite is idempotent
+            (
+                batch_df.agg(
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum(F.col("_valid").cast("long")).alias("passed"),
+                    F.sum((~F.col("_valid")).cast("long")).alias("failed"),
+                    F.sum(F.size("_violations").cast("long")).alias("violation_count"),
+                )
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(summary_path)
             )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(summary_path)
+
+        q_sum = (
+            ann.writeStream.foreachBatch(write_summary)
+            .option("checkpointLocation", os.path.join(args.checkpoint, "summary"))
         )
 
-    q_sum = (
-        ann.writeStream.foreachBatch(write_summary)
-        .option("checkpointLocation", os.path.join(args.checkpoint, "summary"))
-    )
+        if args.available_now:
+            q1 = q_viol.trigger(availableNow=True).start()
+            q2 = q_sum.trigger(availableNow=True).start()
+            q1.awaitTermination()
+            q2.awaitTermination()
+            # totals are CUMULATIVE over every run sharing this output dir —
+            # that is the point of the checkpoint: a resumed run adds only new
+            # batches, so cumulative totals stay stable across restarts
+            out = {"cumulative_rows": 0, "cumulative_passed": 0,
+                   "cumulative_failed": 0, "cumulative_violation_count": 0,
+                   "violation_rows_written": 0}
+            if os.path.isdir(summary_path):
+                totals = spark.read.parquet(summary_path).agg(
+                    F.sum("rows").alias("rows"),
+                    F.sum("passed").alias("passed"),
+                    F.sum("failed").alias("failed"),
+                    F.sum("violation_count").alias("violation_count"),
+                ).collect()[0]
+                out.update({
+                    "cumulative_rows": totals["rows"] or 0,
+                    "cumulative_passed": totals["passed"] or 0,
+                    "cumulative_failed": totals["failed"] or 0,
+                    "cumulative_violation_count": totals["violation_count"] or 0,
+                })
+            viol_path = os.path.join(args.out, "violations")
+            if os.path.isdir(viol_path) and any(
+                f.endswith(".parquet") for f in os.listdir(viol_path)
+            ):
+                out["violation_rows_written"] = spark.read.parquet(viol_path).count()
+            print(json.dumps(out))
+            return 0
 
-    if args.available_now:
-        q1 = q_viol.trigger(availableNow=True).start()
-        q2 = q_sum.trigger(availableNow=True).start()
-        q1.awaitTermination()
-        q2.awaitTermination()
-        # totals are CUMULATIVE over every run sharing this output dir —
-        # that is the point of the checkpoint: a resumed run adds only new
-        # batches, so cumulative totals stay stable across restarts
-        out = {"cumulative_rows": 0, "cumulative_passed": 0,
-               "cumulative_failed": 0, "cumulative_violation_count": 0,
-               "violation_rows_written": 0}
-        if os.path.isdir(summary_path):
-            totals = spark.read.parquet(summary_path).agg(
-                F.sum("rows").alias("rows"),
-                F.sum("passed").alias("passed"),
-                F.sum("failed").alias("failed"),
-                F.sum("violation_count").alias("violation_count"),
-            ).collect()[0]
-            out.update({
-                "cumulative_rows": totals["rows"] or 0,
-                "cumulative_passed": totals["passed"] or 0,
-                "cumulative_failed": totals["failed"] or 0,
-                "cumulative_violation_count": totals["violation_count"] or 0,
-            })
-        viol_path = os.path.join(args.out, "violations")
-        if os.path.isdir(viol_path) and any(
-            f.endswith(".parquet") for f in os.listdir(viol_path)
-        ):
-            out["violation_rows_written"] = spark.read.parquet(viol_path).count()
-        print(json.dumps(out))
-        spark.stop()
+        trig = {"processingTime": f"{args.trigger_seconds} seconds"}
+        q_viol.trigger(**trig).start()
+        q_sum.trigger(**trig).start()
+        # surfaces whichever stream fails first (awaiting only one would let the
+        # other die silently while the job keeps running)
+        spark.streams.awaitAnyTermination()
         return 0
-
-    trig = {"processingTime": f"{args.trigger_seconds} seconds"}
-    q_viol.trigger(**trig).start()
-    q_sum.trigger(**trig).start()
-    # surfaces whichever stream fails first (awaiting only one would let the
-    # other die silently while the job keeps running)
-    spark.streams.awaitAnyTermination()
-    return 0
 
 
 if __name__ == "__main__":

@@ -30,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 
 from jsonschema_spark.operators.suggest import (  # noqa: E402
     DEFAULT_CATEGORY_MAX,
@@ -53,33 +52,29 @@ def main(argv=None) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-suggest", args.master)
-
-    df = spark.read.parquet(args.input)
-    cols = (
-        [c.strip() for c in args.columns.split(",") if c.strip()]
-        if args.columns
-        else list(df.columns)
-    )
-    sugg = column_suggestions(df, cols, category_max=args.category_max)
-    cfg = as_suite_config(df, sugg, table=args.table,
-                          category_max=args.category_max)
-    cfg["tables"] = {args.table: args.input}
-    with open(args.output, "w") as f:
-        json.dump(cfg, f, indent=2)
-    print(json.dumps({
-        "columns_profiled": len(cols),
-        "checks_suggested": len(cfg["checks"]),
-        "by_type": {
-            t: sum(1 for c in cfg["checks"] if c["type"] == t)
-            for t in sorted({c["type"] for c in cfg["checks"]})
-        },
-        "output": args.output,
-    }))
-    if not preexisting:
-        spark.stop()
-    return 0
+    with job_session("jsonschema-spark-suggest", args.master) as spark:
+        df = spark.read.parquet(args.input)
+        cols = (
+            [c.strip() for c in args.columns.split(",") if c.strip()]
+            if args.columns
+            else list(df.columns)
+        )
+        sugg = column_suggestions(df, cols, category_max=args.category_max)
+        cfg = as_suite_config(df, sugg, table=args.table,
+                              category_max=args.category_max)
+        cfg["tables"] = {args.table: args.input}
+        with open(args.output, "w") as f:
+            json.dump(cfg, f, indent=2)
+        print(json.dumps({
+            "columns_profiled": len(cols),
+            "checks_suggested": len(cfg["checks"]),
+            "by_type": {
+                t: sum(1 for c in cfg["checks"] if c["type"] == t)
+                for t in sorted({c["type"] for c in cfg["checks"]})
+            },
+            "output": args.output,
+        }))
+        return 0
 
 
 if __name__ == "__main__":

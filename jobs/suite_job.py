@@ -39,7 +39,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from jsonschema_spark.operators.suite import run_suite, suite_summary  # noqa: E402
@@ -71,57 +70,53 @@ def main(argv=None) -> int:
             with open(path) as f:
                 spec["schema"] = json.load(f)
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = job_session("jsonschema-spark-suite", args.master)
+    with job_session("jsonschema-spark-suite", args.master) as spark:
+        tables = {
+            name: spark.read.parquet(path)
+            for name, path in config.get("tables", {}).items()
+        }
+        report = run_suite(tables, config)
+        if args.report:
+            report.write.mode("overwrite").parquet(args.report)
+            report = spark.read.parquet(args.report)  # reuse the written result
+        rows = report.collect()
+        summ = suite_summary(report).collect()[0]
+        out = {
+            "checks": [r.asDict() for r in rows],
+            "n_checks": summ["n_checks"],
+            "n_passed": summ["n_passed"],
+            "n_failed": summ["n_failed"],
+        }
 
-    tables = {
-        name: spark.read.parquet(path)
-        for name, path in config.get("tables", {}).items()
-    }
-    report = run_suite(tables, config)
-    if args.report:
-        report.write.mode("overwrite").parquet(args.report)
-        report = spark.read.parquet(args.report)  # reuse the written result
-    rows = report.collect()
-    summ = suite_summary(report).collect()[0]
-    out = {
-        "checks": [r.asDict() for r in rows],
-        "n_checks": summ["n_checks"],
-        "n_passed": summ["n_passed"],
-        "n_failed": summ["n_failed"],
-    }
+        # Deequ MetricsRepository-style anomaly detection: judge this run's
+        # metrics against the TRAILING history first, then append this run.
+        n_regressed = 0
+        if args.history:
+            from jsonschema_spark.operators.history import (
+                append_run,
+                metric_regressions,
+            )
 
-    # Deequ MetricsRepository-style anomaly detection: judge this run's
-    # metrics against the TRAILING history first, then append this run.
-    n_regressed = 0
-    if args.history:
-        from jsonschema_spark.operators.history import (
-            append_run,
-            metric_regressions,
-        )
+            current = report.select(
+                F.col("check_name").alias("check"), "metric"
+            )
+            try:
+                history = spark.read.parquet(args.history)
+            except Exception:
+                history = None  # first run: nothing to judge against
+            if history is not None:
+                reg_rows = metric_regressions(history, current).collect()
+                out["regressions"] = [r.asDict() for r in reg_rows]
+                n_regressed = sum(1 for r in reg_rows if r["regressed"])
+                out["n_regressed"] = n_regressed
+            append_run(
+                report, args.run_id or "run", args.history,
+                check_col="check_name",
+            )
 
-        current = report.select(
-            F.col("check_name").alias("check"), "metric"
-        )
-        try:
-            history = spark.read.parquet(args.history)
-        except Exception:
-            history = None  # first run: nothing to judge against
-        if history is not None:
-            reg_rows = metric_regressions(history, current).collect()
-            out["regressions"] = [r.asDict() for r in reg_rows]
-            n_regressed = sum(1 for r in reg_rows if r["regressed"])
-            out["n_regressed"] = n_regressed
-        append_run(
-            report, args.run_id or "run", args.history,
-            check_col="check_name",
-        )
-
-    print(json.dumps(out, default=str))
-    if not preexisting:  # embedded callers (tests) keep their session
-        spark.stop()
-    failed = summ["n_failed"] > 0 or (args.fail_on_regression and n_regressed > 0)
-    return 1 if failed else 0
+        print(json.dumps(out, default=str))
+        failed = summ["n_failed"] > 0 or (args.fail_on_regression and n_regressed > 0)
+        return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -63,53 +63,51 @@ def main(argv=None) -> int:
                    help="override master (default: from spark-submit)")
     args = p.parse_args(argv)
 
-    spark = job_session("jsonschema-spark-validate-clips", args.master)
+    with job_session("jsonschema-spark-validate-clips", args.master) as spark:
+        if args.synthesize:
+            df = synth_clips(spark, args.synthesize)
+        elif args.input and args.format == "table":
+            df = spark.read.table(args.input)
+        elif args.input:
+            df = spark.read.format(args.format).load(args.input)
+        else:
+            p.error("one of --input / --synthesize is required")
 
-    if args.synthesize:
-        df = synth_clips(spark, args.synthesize)
-    elif args.input and args.format == "table":
-        df = spark.read.table(args.input)
-    elif args.input:
-        df = spark.read.format(args.format).load(args.input)
-    else:
-        p.error("one of --input / --synthesize is required")
+        derived = args.partition_col not in df.columns
+        if derived:
+            df = with_bucket(df, "clip_id", args.buckets, args.partition_col)
 
-    derived = args.partition_col not in df.columns
-    if derived:
-        df = with_bucket(df, "clip_id", args.buckets, args.partition_col)
+        if args.schema:
+            with open(args.schema) as f:
+                schema = json.load(f)
+        else:
+            schema = CLIPS_JSON_SCHEMA
 
-    if args.schema:
-        with open(args.schema) as f:
-            schema = json.load(f)
-    else:
-        schema = CLIPS_JSON_SCHEMA
+        opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
+        run = validate_resumable(
+            df,
+            schema,
+            manifest_dir=args.manifest,
+            partition_col=args.partition_col,
+            options=opts,
+            max_partitions=args.max_partitions,
+            violations_dir=args.violations,
+            key_cols=["clip_id"] if args.violations else (),
+            exclude_cols=[args.partition_col] if derived else (),
+        )
 
-    opts = CompileOptions(content_checks={"audio/*": lambda col: audio_snr_ok()})
-    run = validate_resumable(
-        df,
-        schema,
-        manifest_dir=args.manifest,
-        partition_col=args.partition_col,
-        options=opts,
-        max_partitions=args.max_partitions,
-        violations_dir=args.violations,
-        key_cols=["clip_id"] if args.violations else (),
-        exclude_cols=[args.partition_col] if derived else (),
-    )
-
-    totals = run.manifest.groupBy().sum("rows", "passed", "failed", "violation_count")
-    r = totals.collect()[0]
-    print(json.dumps({
-        "run_id": run.run_id,
-        "processed_partitions": len(run.processed),
-        "skipped_partitions": run.skipped,
-        "manifest_rows": r["sum(rows)"],
-        "passed": r["sum(passed)"],
-        "failed": r["sum(failed)"],
-        "violation_count": r["sum(violation_count)"],
-    }))
-    spark.stop()
-    return 0
+        totals = run.manifest.groupBy().sum("rows", "passed", "failed", "violation_count")
+        r = totals.collect()[0]
+        print(json.dumps({
+            "run_id": run.run_id,
+            "processed_partitions": len(run.processed),
+            "skipped_partitions": run.skipped,
+            "manifest_rows": r["sum(rows)"],
+            "passed": r["sum(passed)"],
+            "failed": r["sum(failed)"],
+            "violation_count": r["sum(violation_count)"],
+        }))
+        return 0
 
 
 if __name__ == "__main__":

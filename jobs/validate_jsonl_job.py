@@ -75,67 +75,64 @@ def main(argv=None) -> int:
         with open(args.schema) as f:
             schema = json.load(f)
 
-    spark = job_session("jsonschema-spark-validate-jsonl", args.master)
+    with job_session("jsonschema-spark-validate-jsonl", args.master) as spark:
+        path = args.input
+        if args.synthesize:
+            path = J.materialized_jsonl(args.synthesize)
 
-    path = args.input
-    if args.synthesize:
-        path = J.materialized_jsonl(args.synthesize)
+        if args.stream:
+            if not (args.checkpoint and args.violations):
+                p.error("--stream requires --checkpoint and --violations")
+            if path and os.path.isfile(path):
+                # FileStreamSource requires a directory; stage single files.
+                stage = path + ".streamdir"
+                os.makedirs(stage, exist_ok=True)
+                dst = os.path.join(stage, os.path.basename(path))
+                if not os.path.exists(dst):
+                    os.link(path, dst)
+                path = stage
+            raw = spark.readStream.text(path).select(
+                F.col("value").alias("raw"),
+                F.try_parse_json(F.col("value")).alias("doc"),
+            )
+            out = violation_rows(raw, schema)
+            writer = (
+                out.writeStream.format("parquet")
+                .option("path", args.violations)
+                .option("checkpointLocation", args.checkpoint)
+                .outputMode("append")
+            )
+            if args.available_now:
+                q = writer.trigger(availableNow=True).start()
+                q.awaitTermination()
+            else:
+                q = writer.start()
+                q.awaitTermination()
+            n_viol = spark.read.parquet(args.violations).count()
+            print(json.dumps({"mode": "stream", "violations": n_viol}))
+            return 0
 
-    if args.stream:
-        if not (args.checkpoint and args.violations):
-            p.error("--stream requires --checkpoint and --violations")
-        if path and os.path.isfile(path):
-            # FileStreamSource requires a directory; stage single files.
-            stage = path + ".streamdir"
-            os.makedirs(stage, exist_ok=True)
-            dst = os.path.join(stage, os.path.basename(path))
-            if not os.path.exists(dst):
-                os.link(path, dst)
-            path = stage
-        raw = spark.readStream.text(path).select(
-            F.col("value").alias("raw"),
-            F.try_parse_json(F.col("value")).alias("doc"),
-        )
-        out = violation_rows(raw, schema)
-        writer = (
-            out.writeStream.format("parquet")
-            .option("path", args.violations)
-            .option("checkpointLocation", args.checkpoint)
-            .outputMode("append")
-        )
-        if args.available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            q = writer.start()
-            q.awaitTermination()
-        n_viol = spark.read.parquet(args.violations).count()
-        print(json.dumps({"mode": "stream", "violations": n_viol}))
-        spark.stop()
+        if not path:
+            p.error("--input or --synthesize is required")
+        df = J.read_jsonl(spark, path)
+        out = violation_rows(df, schema)
+        if args.violations:
+            out.write.mode("overwrite").parquet(args.violations)
+            out = spark.read.parquet(args.violations)  # reuse the written result
+        summary = out.agg(
+            F.count(F.lit(1)).alias("violations"),
+            F.count_distinct("doc_id").alias("docs_with_violations"),
+            F.sum((F.col("keyword") == "parse").cast("long")).alias("parse_failures"),
+        ).collect()[0]
+        n_lines = df.count()
+        print(json.dumps({
+            "mode": "batch",
+            "lines": n_lines,
+            "violations": summary["violations"],
+            "docs_with_violations": summary["docs_with_violations"],
+            "parse_failures": summary["parse_failures"] or 0,
+        }))
         return 0
-
-    if not path:
-        p.error("--input or --synthesize is required")
-    df = J.read_jsonl(spark, path)
-    out = violation_rows(df, schema)
-    if args.violations:
-        out.write.mode("overwrite").parquet(args.violations)
-        out = spark.read.parquet(args.violations)  # reuse the written result
-    summary = out.agg(
-        F.count(F.lit(1)).alias("violations"),
-        F.count_distinct("doc_id").alias("docs_with_violations"),
-        F.sum((F.col("keyword") == "parse").cast("long")).alias("parse_failures"),
-    ).collect()[0]
-    n_lines = df.count()
-    print(json.dumps({
-        "mode": "batch",
-        "lines": n_lines,
-        "violations": summary["violations"],
-        "docs_with_violations": summary["docs_with_violations"],
-        "parse_failures": summary["parse_failures"] or 0,
-    }))
-    spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

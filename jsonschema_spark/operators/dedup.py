@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 from jsonschema_spark.functions.grid import grid_round
 
-from jsonschema_spark.operators.text import fingerprint, normalize, tokens
+from jsonschema_spark.operators.text import fingerprint, tokens
 
 
 def token_hash(col: Column, hash_family: str = "xxhash64") -> Column:

@@ -6,7 +6,8 @@ package, not ``jobs/``.
 
 from __future__ import annotations
 
-from typing import Optional
+from contextlib import contextmanager
+from typing import Iterator, Optional
 
 from pyspark.sql import SparkSession
 
@@ -17,11 +18,15 @@ from pyspark.sql import SparkSession
 _G1_REGIONS = "-XX:G1HeapRegionSize=32m"
 
 
-def job_session(app: str, master: Optional[str] = None) -> SparkSession:
-    """Get or create the job's session: AQE with skew-join splitting,
-    128-row parquet reader batches (sub-humongous scan buffers for payload
-    columns, harmless for narrow tables) and 32 MB G1 regions on driver and
-    executors. ``master`` overrides spark-submit's; log level WARN."""
+@contextmanager
+def job_session(app: str, master: Optional[str] = None) -> Iterator[SparkSession]:
+    """``with job_session(app, master) as spark:`` gets or creates the job's
+    session: AQE with skew-join splitting, 128-row parquet reader batches
+    (sub-humongous scan buffers for payload columns) and 32 MB G1 regions on
+    driver and executors. ``master`` overrides spark-submit's; log level
+    WARN. On exit it stops the session only if it created it, so an
+    embedding caller (a test) keeps its own."""
+    created = SparkSession.getActiveSession() is None
     builder = SparkSession.builder.appName(app)
     if master:
         builder = builder.master(master)
@@ -34,4 +39,8 @@ def job_session(app: str, master: Optional[str] = None) -> SparkSession:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    try:
+        yield spark
+    finally:
+        if created:
+            spark.stop()

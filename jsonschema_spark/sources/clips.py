@@ -269,8 +269,11 @@ def corpus(
     valid for its key."""
     # ~20-40KB binary payloads x the default 4096-row vectorized-reader
     # batch = ~100MB contiguous buffers -> reader OOM/G1-humongous stalls
-    # on modest heaps. 128-row batches keep scan buffers a few MB; harmless
-    # for the narrow tables sharing the session (see BASELINE.md finding).
+    # on modest heaps. 128-row batches keep scan buffers a few MB (see
+    # BASELINE.md finding). Narrow tables do not pay for it: profile_job on
+    # sf0.1 lineitem and a 5-check suite_job on sf0.1 orders/lineitem ran
+    # within run-to-run noise of 4096-row batches (6 alternating pairs,
+    # local[4], 4-core host).
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "128")
     path = publish(
         corpus_path(synth, *params),

@@ -6,15 +6,18 @@ Spark-free, ``ast`` only. The production roots are ``jobs/``,
 1. The static import closure of the roots (module-level and function-local
    imports, absolute and relative, through package ``__init__`` files) must
    cover every module under ``jsonschema_spark/``.
-2. Every undecorated top-level ``def``/``class`` of a package module must be
-   reached transitively from the roots through ``ast`` Name, Attribute or
-   import-alias nodes. A decorated definition is reached through its
-   decorator (the ``@W.parser`` walkers register themselves). Module-level
-   statements of an imported module run at import, so they reach what they
-   name.
+2. Every top-level ``def``/``class`` of a package module must be reached
+   transitively from the roots through ``ast`` Name, Attribute or
+   import-alias nodes. Only a registering decorator (``@W.parser``: the
+   walker enters its registry at import) makes a definition reached by
+   itself; ``pandas_udf``, ``dataclass`` or ``lru_cache`` definitions are
+   traced like undecorated ones. Module-level statements of an imported
+   module run at import, so they reach what they name.
 3. Anything else is listed in ``NOT_IN_PRODUCTION`` with the reason it stays.
-   A listed name that production reaches, or that no test references, fails
-   the test, so the list cannot go stale.
+   A listed name that production reaches, or that no test uses, fails the
+   test. "Uses" means a Name or Attribute chain that resolves through the
+   test file's imports to the listed module or definition; an import alone,
+   or the same short name bound to something else, does not count.
 
 To keep an unreached definition (a Spark-free reference a test compares a
 production path against, or a compile-half port the goldens check), add
@@ -196,11 +199,18 @@ def _top_defs(tree: ast.Module) -> dict[str, ast.AST]:
     return {n.name: n for n in tree.body if isinstance(n, _DEFS)}
 
 
+def _source(mod: str) -> tuple[str, ast.Module]:
+    return _package().get(mod) or _roots().get(mod) or _tests()[mod]
+
+
 @lru_cache(maxsize=None)
 def _bindings(mod: str) -> dict[str, set[tuple]]:
+    return _bind(mod, *_source(mod))
+
+
+def _bind(mod: str, path: str, tree: ast.Module) -> dict[str, set[tuple]]:
     """name -> targets: ``("mod", m)`` or ``("def", m, name)``. Imports
     anywhere in the file bind (function-local ones included)."""
-    path, tree = (_package().get(mod) or _roots()[mod])
     pkg = _package()
     out: dict[str, set[tuple]] = {}
     for name in _top_defs(tree):
@@ -258,7 +268,7 @@ def _through_module(m: str, attrs: list[str]) -> set[tuple[str, str]]:
 def _refs(mod: str, nodes) -> set[tuple[str, str]]:
     """Package definitions the given nodes of module ``mod`` name."""
     binds = _bindings(mod)
-    path = (_package().get(mod) or _roots()[mod])[0]
+    path = _source(mod)[0]
     out: set[tuple[str, str]] = set()
 
     def lookup(name: str, attrs: list[str]):
@@ -283,6 +293,15 @@ def _refs(mod: str, nodes) -> set[tuple[str, str]]:
     return out
 
 
+def _registers(node: ast.AST) -> bool:
+    """``@W.parser``: the decorator enters the walker into its registry at
+    import, so the definition is reached however nothing names it."""
+    return any(
+        isinstance(d, ast.Attribute) and d.attr == "parser"
+        for d in node.decorator_list
+    )
+
+
 def reached(listed=()) -> tuple[set[str], set[tuple[str, str]]]:
     """The modules and the (module, name) top-level definitions production
     reaches, counting the ``listed`` qualnames as further roots."""
@@ -297,11 +316,11 @@ def reached(listed=()) -> tuple[set[str], set[tuple[str, str]]]:
             n for n in tree.body
             if not isinstance(n, (ast.Import, ast.ImportFrom) + _DEFS)
         ]
-        decorated = [
-            n for n in tree.body if isinstance(n, _DEFS) and n.decorator_list
+        registered = [
+            n for n in tree.body if isinstance(n, _DEFS) and _registers(n)
         ]
-        todo |= _refs(mod, runs_at_import + decorated)
-        todo |= {(mod, n.name) for n in decorated}
+        todo |= _refs(mod, runs_at_import + registered)
+        todo |= {(mod, n.name) for n in registered}
     seen: set[tuple[str, str]] = set()
     while todo:
         key = todo.pop()
@@ -327,32 +346,66 @@ def unreached(listed=()) -> dict[str, int]:
                 out[mod] = sum(1 for _ in f)
             continue
         for name, node in _top_defs(tree).items():
-            if not node.decorator_list and (mod, name) not in hit:
+            if (mod, name) not in hit:
                 out[f"{mod}.{name}"] = node.end_lineno - node.lineno + 1
     return out
 
 
-def _test_names() -> set[str]:
-    """Every identifier the test modules name (Name, Attribute, import
-    alias, dotted import paths)."""
-    names: set[str] = set()
+@lru_cache(maxsize=None)
+def _tests() -> dict[str, tuple[str, ast.Module]]:
+    out = {}
     for path in _py_files(os.path.join(REPO, "tests")):
-        if os.path.basename(path) == os.path.basename(__file__):
-            continue
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
-                names.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                names.add(node.attr)
-            elif isinstance(node, ast.Import):
-                names |= {a.name for a in node.names}
-            elif isinstance(node, ast.ImportFrom):
-                names |= {a.name for a in node.names}
-                names.add(node.module or "")
-                names |= {f"{node.module}.{a.name}" for a in node.names}
-    return names
+        if os.path.basename(path) != os.path.basename(__file__):
+            with open(path) as f:
+                out["<test>" + os.path.relpath(path, REPO)] = (path, ast.parse(f.read(), path))
+    return out
+
+
+def _uses(mod: str, path: str, tree: ast.Module) -> set[str]:
+    """Qualnames of the package modules and definitions a test file uses:
+    a Name or an Attribute chain, resolved through the file's imports. An
+    import that nothing uses does not count."""
+    binds = _bind(mod, path, tree)
+    pkg = _package()
+    out: set[str] = set()
+
+    def lookup(name: str, attrs: list[str]):
+        for t in binds.get(name, ()):
+            if t[0] == "def":
+                out.update(f"{m}.{n}" for m, n in _resolve_def(t[1], t[2]))
+                continue
+            m, rest = t[1], list(attrs)
+            while rest and f"{m}.{rest[0]}" in pkg:
+                m = f"{m}.{rest.pop(0)}"
+            if m in pkg:
+                out.add(m)
+            if rest:
+                out.update(f"{d}.{n}" for d, n in _resolve_def(m, rest[0]))
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            lookup(node.id, [])
+        elif isinstance(node, ast.Attribute):
+            chain = _attr_chain(node)
+            if chain:
+                lookup(chain[0], chain[1:])
+    return out
+
+
+def stale(listed: dict[str, str], tests: dict[str, tuple[str, ast.Module]]) -> list[str]:
+    """Entries of ``listed`` that production reaches, that no longer exist,
+    or that no test in ``tests`` (key -> (path, tree)) uses."""
+    gone = unreached()
+    used: set[str] = set()
+    for mod, (path, tree) in tests.items():
+        used |= _uses(mod, path, tree)
+    out = []
+    for q in listed:
+        if q not in gone:
+            out.append(f"{q}: reached from production, or no longer exists")
+        elif not any(u == q or u.startswith(q + ".") for u in used):
+            out.append(f"{q}: no test uses it")
+    return out
 
 
 def test_roots_reach_every_module():
@@ -376,15 +429,27 @@ def test_roots_reach_every_definition():
 
 
 def test_not_in_production_is_current():
-    gone = unreached()
-    tests = _test_names()
-    stale = []
-    for q, why in NOT_IN_PRODUCTION.items():
-        assert why.strip(), q
-        if q not in gone:
-            stale.append(f"{q}: reached from production, or no longer exists")
-        elif q.rsplit(".", 1)[-1] not in tests and not any(
-            t == q or t.startswith(q + ".") for t in tests
-        ):
-            stale.append(f"{q}: no test references it")
-    assert not stale, stale
+    assert all(why.strip() for why in NOT_IN_PRODUCTION.values())
+    assert not stale(NOT_IN_PRODUCTION, _tests())
+
+
+def test_deleted_test_makes_its_entry_stale():
+    entry = {"jsonschema_spark.functions.fbank.mfcc_np": "reference"}
+    imp = "from jsonschema_spark.functions.fbank import mfcc_np\n"
+    test = "def test_mfcc():\n    assert mfcc_np(x) is not None\n"
+
+    def files(*srcs):
+        return {
+            f"<test>t{i}": ("t.py", ast.parse(src)) for i, src in enumerate(srcs)
+        }
+
+    assert stale(entry, files(imp + test)) == []
+    assert stale(entry, files(
+        "from jsonschema_spark.functions import fbank\n"
+        "def test_mfcc():\n    fbank.mfcc_np(x)\n"
+    )) == []
+    gone = ["jsonschema_spark.functions.fbank.mfcc_np: no test uses it"]
+    # the test is deleted, its import stays
+    assert stale(entry, files(imp)) == gone
+    # the same short name, bound to something else, does not count
+    assert stale(entry, files("def test_other():\n    other.mfcc_np(x)\n")) == gone
