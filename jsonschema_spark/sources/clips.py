@@ -3,11 +3,16 @@
 clips(clip_id string, bytes binary, sr_hz int, dur_ms int, codec string,
       transcript string)
 
-Generation is fully distributed: ``spark.range`` drives a ``mapInPandas``
-generator, so payload synthesis runs on executors in Arrow batches — the
-driver never materializes a row. Everything derives arithmetically from the
-row index / md5(clip_id), so regeneration is bit-identical at any scale and
-any partitioning (seed 42 convention, FIXTURES.md synthesis rules).
+Generation is fully distributed: every corpus in this package is
+``ledger_table(spark, n, schema, row)``, where ``spark.range`` drives a
+``mapInPandas`` batch loop over the generator's ``row(i)`` function, so
+payload synthesis runs on executors in Arrow batches — the driver never
+materializes a row. Everything derives arithmetically from the row index /
+md5(clip_id), so regeneration is bit-identical at any scale and any
+partitioning (seed 42 convention, FIXTURES.md synthesis rules). A new
+generator writes ``row(i)`` (starting from ``clip_base``) and a schema
+(``ledger_schema(*extra_fields)`` for CLIPS_SCHEMA + ``_row_idx`` + its
+ledger columns), nothing else.
 
 Planted violations (deterministic by index; period => known a-priori rates):
 - i % 199 == 198  -> duplicate clip_id (uniqueness check, ~0.5%)
@@ -99,15 +104,70 @@ def transcript_for(clip_id: str) -> str:
     return reference_transcript(clip_id)
 
 
-def _gen_batch(
-    ids: np.ndarray, dur_min: int, dur_max: int, violations: bool,
+def clip_base(i: int, dur_range: tuple[int, int]) -> tuple[int, int, str]:
+    """(hash, dur_ms, clip_id) of ledger row i: the row hash, a duration
+    log-uniform in ``dur_range`` drawn from hash bits 16.., and the
+    unduplicated clip id. Every generator's row starts here."""
+    h = _hash(i)
+    log_lo, log_hi = np.log(dur_range[0]), np.log(dur_range[1])
+    u = ((h >> 16) % 1_000_000) / 1_000_000.0
+    dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
+    return h, dur, f"clip-{i:012d}"
+
+
+def ledger_schema(*extra_fields: T.StructField) -> T.StructType:
+    """CLIPS_SCHEMA + the ``_row_idx`` ledger column + ``extra_fields``."""
+    return T.StructType(
+        list(CLIPS_SCHEMA.fields)
+        + [T.StructField("_row_idx", T.LongType(), False), *extra_fields]
+    )
+
+
+def ledger_table(
+    spark: SparkSession,
+    n: int,
+    schema: T.StructType,
+    row: Callable[[int], tuple],
+    partitions: Optional[int] = None,
+) -> DataFrame:
+    """The n-row table whose row i is ``row(i)``, a tuple in
+    ``schema.fieldNames()`` order. ``spark.range`` drives a ``mapInPandas``
+    batch loop, so rows are built on executors and the output depends on
+    neither ``partitions`` nor batch size."""
+    names = schema.fieldNames()
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield pd.DataFrame(
+                [row(int(i)) for i in b["id"].to_numpy()], columns=names
+            )
+
+    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+
+
+def synth_clips(
+    spark: SparkSession,
+    n: int,
+    partitions: Optional[int] = None,
+    dur_range: tuple[int, int] = (200, 2000),
+    violations: bool = True,
     with_index: bool = False,
-) -> pd.DataFrame:
-    rows = {k: [] for k in ("clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript")}
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    for i in ids.tolist():
-        h = _hash(i)
-        cid = _clip_id(i) if violations else f"clip-{i:012d}"
+) -> DataFrame:
+    """Distributed deterministic clips table. ``dur_range`` bounds the
+    *generated* durations (payload size control); the schema's legal range
+    stays [200, 30000] and planted violations fall outside it.
+
+    ``with_index`` appends the generator row index as ``_row_idx`` — the
+    planted-violation LEDGER column: every corruption is a pure function of
+    the index (module docstring), so an external oracle can recompute the
+    expected outcome of any check from ``_row_idx`` arithmetic alone.
+    Exclude it before closed-world validation."""
+
+    def row(i: int) -> tuple:
+        h, dur, cid = clip_base(i, dur_range)
+        if violations:
+            cid = _clip_id(i)
 
         # sr: 70% hot at 16000 (deliberate skew for salting/AQE paths)
         r = h % 100
@@ -115,9 +175,6 @@ def _gen_batch(
             sr = 16000
         else:
             sr = SR_CHOICES[(h >> 8) % len(SR_CHOICES)]
-
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
 
         c = (h >> 24) % 100
         codec = "pcm_s16le" if c < 80 else ("flac" if c < 90 else "opus")
@@ -143,53 +200,11 @@ def _gen_batch(
             t = np.arange(n_samples, dtype=np.float64)
             sig = sig + 0.6 * np.sin(2 * np.pi * 1234.5 * t / 16000.0 + 0.7)
         payload = encode_payload(pcm16_from_float(sig), codec)
+        out = (cid, payload, sr, dur, codec, transcript)
+        return out + (i,) if with_index else out
 
-        rows["clip_id"].append(cid)
-        rows["bytes"].append(payload)
-        rows["sr_hz"].append(sr)
-        rows["dur_ms"].append(dur)
-        rows["codec"].append(codec)
-        rows["transcript"].append(transcript)
-    df = pd.DataFrame(rows)
-    if with_index:
-        df["_row_idx"] = ids.astype("int64")
-    return df
-
-
-def synth_clips(
-    spark: SparkSession,
-    n: int,
-    partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
-    violations: bool = True,
-    with_index: bool = False,
-) -> DataFrame:
-    """Distributed deterministic clips table. ``dur_range`` bounds the
-    *generated* durations (payload size control); the schema's legal range
-    stays [200, 30000] and planted violations fall outside it.
-
-    ``with_index`` appends the generator row index as ``_row_idx`` — the
-    planted-violation LEDGER column: every corruption is a pure function of
-    the index (module docstring), so an external oracle can recompute the
-    expected outcome of any check from ``_row_idx`` arithmetic alone.
-    Exclude it before closed-world validation."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    schema = CLIPS_SCHEMA
-    if with_index:
-        schema = T.StructType(
-            list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids = b["id"].to_numpy()
-            yield _gen_batch(ids, dur_min, dur_max, violations, with_index)
-
-    return (
-        spark.range(0, n, 1, parts)
-        .mapInPandas(gen, schema=schema)
-    )
+    schema = ledger_schema() if with_index else CLIPS_SCHEMA
+    return ledger_table(spark, n, schema, row, partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -335,7 +350,6 @@ def synth_near_dup_clips(
     n: int,
     dup_period: int = 4,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """Clips table with planted audio near-duplicates (the fingerprint-dedup
     ledger table): row i with ``i % dup_period == dup_period - 1`` is a
@@ -349,19 +363,11 @@ def synth_near_dup_clips(
     that the two-tone grid wraps and "unique" rows would collide."""
     if n > ND_MAX_UNIQUE:
         raise ValueError(f"n={n} exceeds ND_MAX_UNIQUE={ND_MAX_UNIQUE}")
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
 
     def _row(i: int) -> tuple:
         is_dup = dup_period > 1 and i % dup_period == dup_period - 1 and i > 0
         base = i - 1 if is_dup else i
-        h = _hash(base)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
+        h, dur, _ = clip_base(base, (200, 2000))
         sig = _neardup_signal(base, 16000 * dur // 1000)
         if is_dup:
             codec = "opus"
@@ -372,14 +378,7 @@ def synth_near_dup_clips(
         return (cid, encode_payload(pcm16_from_float(sig), codec), 16000,
                 dur, codec, transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # Planted quality-defect classes (disjoint by construction, _row_idx % 12):
@@ -400,25 +399,15 @@ def synth_quality_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """Clips table with planted audio-quality defects (the quality-gate
     ledger table). All payloads are raw pcm_s16le so clipping detection is
     exact (the synthetic opus container quantizes away the +-32767 pins).
     The expected gate outcome of every row is pure ``_row_idx`` arithmetic
     — see QUALITY_CLS_* above — so an external oracle needs no decoder."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 2000))
         n_samples = 16000 * dur // 1000
         sig = reference_signal(cid, n_samples).astype(np.float64)
         cls = i % QUALITY_CLASS_MOD
@@ -431,14 +420,7 @@ def synth_quality_clips(
         return (cid, encode_payload(pcm16_from_float(sig), "pcm_s16le"),
                 16000, dur, "pcm_s16le", transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # Bandwidth-consistency clips (the upsample-detection ledger table): every
@@ -471,24 +453,14 @@ def synth_bandwidth_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """Clips table with planted bandwidth defects (see BW_CLS_* above).
     All payloads are raw pcm_s16le pure tones at amplitude 0.7; the claimed
     rate is always 16 kHz, so the zero-crossing estimate exposes exactly
     the planted content-vs-metadata inconsistencies."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 2000))
         n_samples = BW_SR * dur // 1000
         f = bw_tone_freq(i)
         t = np.arange(n_samples, dtype=np.float64)
@@ -496,14 +468,7 @@ def synth_bandwidth_clips(
         return (cid, encode_payload(pcm16_from_float(sig), "pcm_s16le"),
                 BW_SR, dur, "pcm_s16le", transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # Silence-padded clips (the trim/resample ledger table): every row is a
@@ -527,10 +492,6 @@ def synth_padded_clips(
 ) -> DataFrame:
     """Clips table with planted leading/trailing silence pads (see the
     ledger comment above). All payloads raw pcm_s16le at 16 kHz."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
 
     def _row(i: int) -> tuple:
         h = _hash(i)
@@ -552,14 +513,7 @@ def synth_padded_clips(
         return (cid, encode_payload(pcm16_from_float(sig), "pcm_s16le"),
                 16000, dur, "pcm_s16le", transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 def synth_containment_clips(
@@ -577,10 +531,6 @@ def synth_containment_clips(
     pure ``_row_idx`` arithmetic."""
     if n > ND_MAX_UNIQUE:
         raise ValueError(f"n={n} exceeds ND_MAX_UNIQUE={ND_MAX_UNIQUE}")
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
     base_samples = 32000  # 2 s at 16 kHz
 
     def _row(i: int) -> tuple:
@@ -596,14 +546,7 @@ def synth_containment_clips(
         return (cid, encode_payload(pcm16_from_float(sig), codec), 16000,
                 dur, codec, transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -631,7 +574,6 @@ def synth_wav_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """Clips table whose payloads are REAL canonical RIFF/WAVE PCM16 mono
     containers (functions/audio.encode_wav_pcm16) with planted header /
@@ -641,19 +583,9 @@ def synth_wav_clips(
     the parquet blob hex."""
     from jsonschema_spark.functions.audio import encode_wav_pcm16
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
+        _, dur, cid = clip_base(i, (200, 2000))
         sr = 16000
-        cid = f"clip-{i:012d}"
         pcm = pcm16_from_float(reference_signal(cid, sr * dur // 1000))
         cls = i % WAV_CLASS_MOD
         col_dur = dur
@@ -672,14 +604,7 @@ def synth_wav_clips(
             payload = encode_wav_pcm16(pcm, sr)
         return (cid, payload, sr, col_dur, "wav", transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -707,24 +632,13 @@ def synth_ulaw_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """Mu-law clips table with planted payload corruption — the ledger
     table for the real-lossy-codec decode/SNR contract query."""
     from jsonschema_spark.functions.audio import encode_wav_ulaw
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 2000))
         n_samples = ULAW_SR_HZ * dur // 1000
         pcm = pcm16_from_float(reference_signal(cid, n_samples))
         payload = encode_wav_ulaw(pcm, ULAW_SR_HZ)
@@ -736,14 +650,7 @@ def synth_ulaw_clips(
         return (cid, payload, ULAW_SR_HZ, dur, "pcm_mulaw",
                 transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -771,24 +678,13 @@ def synth_alaw_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """A-law clips table with planted payload corruption — the ledger
     table for the second real-lossy-codec decode/SNR contract query."""
     from jsonschema_spark.functions.audio import encode_wav_alaw
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 2000))
         n_samples = ALAW_SR_HZ * dur // 1000
         pcm = pcm16_from_float(reference_signal(cid, n_samples))
         payload = encode_wav_alaw(pcm, ALAW_SR_HZ)
@@ -800,14 +696,7 @@ def synth_alaw_clips(
         return (cid, payload, ALAW_SR_HZ, dur, "pcm_alaw",
                 transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -830,7 +719,6 @@ def synth_stereo_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 2000),
 ) -> DataFrame:
     """Stereo clips table with planted already-mono rows — the ledger
     table for the channel-downmix contract query."""
@@ -839,18 +727,8 @@ def synth_stereo_clips(
         encode_wav_pcm16_stereo,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields) + [T.StructField("_row_idx", T.LongType(), False)]
-    )
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 2000))
         n_samples = STEREO_SR_HZ * dur // 1000
         left = pcm16_from_float(reference_signal(cid, n_samples))
         if i % STEREO_MONO_MOD == STEREO_CLS_MONO:
@@ -861,14 +739,7 @@ def synth_stereo_clips(
         return (cid, payload, STEREO_SR_HZ, dur, "wav",
                 transcript_for(cid), i)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, ledger_schema(), _row, partitions)
 
 
 # --- REAL-ADPCM ledger corpus (IMA/DVI 4-bit WAV, functions/audio.py) ----
@@ -884,13 +755,9 @@ ADPCM_TRUNC_CLS = 7
 ADPCM_BLOCK_ALIGN = 256
 ADPCM_SR_HZ = 16000
 
-ADPCM_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_n_dec", T.LongType(), True),
-        T.StructField("_dec_md5", T.StringType(), True),
-    ]
+ADPCM_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_n_dec", T.LongType(), True),
+    T.StructField("_dec_md5", T.StringType(), True),
 )
 
 
@@ -898,27 +765,17 @@ def synth_adpcm_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 900),
 ) -> DataFrame:
     """Clips whose payloads are REAL compressed audio: mono IMA ADPCM
     (WAVE_FORMAT_IMA_ADPCM = 0x11) in a standard WAV container with the
     extended fmt + fact chunks — 4 bits/sample, ~4:1 over PCM16."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import (
         decode_payload,
         encode_wav_adpcm,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 900))
         n_samples = ADPCM_SR_HZ * dur // 1000
         pcm = pcm16_from_float(reference_signal(cid, n_samples))
         raw = encode_wav_adpcm(pcm, ADPCM_SR_HZ, ADPCM_BLOCK_ALIGN)
@@ -938,22 +795,13 @@ def synth_adpcm_clips(
             dec = decode_payload(raw)
             d16 = np.clip(dec, -32768, 32767).astype("<i2")
             n_dec = len(dec)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 d16.tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), ADPCM_SR_HZ, dur, "adpcm",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- MS-ADPCM ledger corpus (WAVE_FORMAT_ADPCM = 0x0002) ------------------
@@ -971,25 +819,15 @@ def synth_msadpcm_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 900),
 ) -> DataFrame:
     """Clips whose payloads are REAL MS ADPCM (format 0x0002) WAVs."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import (
         decode_payload,
         encode_wav_msadpcm,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 900))
         n_samples = ADPCM_SR_HZ * dur // 1000
         pcm = pcm16_from_float(reference_signal(cid, n_samples))
         raw = encode_wav_msadpcm(pcm, ADPCM_SR_HZ, ADPCM_BLOCK_ALIGN)
@@ -1009,22 +847,13 @@ def synth_msadpcm_clips(
             dec = decode_payload(raw)
             d16 = np.clip(dec, -32768, 32767).astype("<i2")
             n_dec = len(dec)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 d16.tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), ADPCM_SR_HZ, dur, "adpcm_ms",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- REAL-FLAC ledger corpus (functions/flac.py subset codec) ------------
@@ -1046,24 +875,14 @@ def synth_flac_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 900),
 ) -> DataFrame:
     """Clips whose payloads are REAL FLAC streams (RFC 9639 subset: fixed
     predictors + partitioned Rice, CRC-8/CRC-16/MD5-verified decode)."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import decode_payload
     from jsonschema_spark.functions.flac import encode_flac
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 900))
         n_samples = FLAC_SR_HZ * dur // 1000
         pcm = pcm16_from_float(reference_signal(cid, n_samples))
         raw = encode_flac(pcm, FLAC_SR_HZ)
@@ -1094,22 +913,13 @@ def synth_flac_clips(
         else:
             # ledger truth from the SOURCE samples, not through the codec
             n_dec = len(pcm)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 pcm.astype("<i2").tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), FLAC_SR_HZ, dur, "flac",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- REAL-FLAC STEREO ledger corpus (channel decorrelation) ---------------
@@ -1128,24 +938,14 @@ def synth_flac_stereo_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 900),
 ) -> DataFrame:
     """Clips whose payloads are REAL STEREO FLAC streams; ledger truth is
     the exact-integer mono downmix of the pre-encode channels."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import decode_payload
     from jsonschema_spark.functions.flac import encode_flac
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 900))
         n_samples = FLAC_SR_HZ * dur // 1000
         left = pcm16_from_float(reference_signal(cid + "#L", n_samples))
         right = pcm16_from_float(reference_signal(cid + "#R", n_samples))
@@ -1182,22 +982,13 @@ def synth_flac_stereo_clips(
             # ledger truth: exact-integer downmix of the SOURCE channels
             mono = (stereo[:, 0] + stereo[:, 1]) >> 1
             n_dec = int(len(mono))
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 mono.astype("<i2").tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), FLAC_SR_HZ, dur, "flac",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- WAV bit-depth/channel ledger corpus (8/16/24-bit, mono/stereo) -------
@@ -1218,23 +1009,13 @@ def synth_wav_depth_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 900),
 ) -> DataFrame:
     """Clips whose payloads are REAL RIFF/WAVE PCM at cycled bit depths
     and channel counts; ledger truth from the source samples."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import encode_wav_pcm
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 900))
         n_samples = WAVD_SR_HZ * dur // 1000
         bits, chans = WAVD_LAYOUTS[i % len(WAVD_LAYOUTS)]
         sigs = []
@@ -1280,22 +1061,13 @@ def synth_wav_depth_clips(
             k = (cut - 44) // frame
             mono = mono[:k]
         n_dec = int(len(mono))
-        dec_md5 = _hashlib.md5(
+        dec_md5 = hashlib.md5(
             mono.astype("<i2").tobytes().hex().upper().encode()
         ).hexdigest()
         return (cid, bytearray(raw), WAVD_SR_HZ, dur, f"pcm_s{bits}",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- FLAC seek/window ledger corpus (SEEKTABLE random access) -------------
@@ -1320,11 +1092,8 @@ def synth_flac_seek_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (3000, 8000),
 ) -> DataFrame:
     """Long seekable-FLAC clips with a certified window fingerprint."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.flac import (
         decode_flac,
         decode_flac_range,
@@ -1332,15 +1101,8 @@ def synth_flac_seek_clips(
         flac_seek_points,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (3000, 8000))
         n_samples = SEEK_SR_HZ * dur // 1000
         stereo = i % 2 == 1
         if stereo:
@@ -1360,7 +1122,7 @@ def synth_flac_seek_clips(
         start = SEEK_SR_HZ * off_ms // 1000
         cnt = SEEK_SR_HZ * win_ms // 1000
         win = mono[start : start + cnt]
-        win_md5 = _hashlib.md5(
+        win_md5 = hashlib.md5(
             win.astype("<i2").tobytes().hex().upper().encode()
         ).hexdigest()
         if i % SEEK_CLASS_MOD == SEEK_CLS_EARLY_CORRUPT:
@@ -1381,23 +1143,11 @@ def synth_flac_seek_clips(
         return (cid, bytearray(raw), SEEK_SR_HZ, dur, "flac",
                 transcript_for(cid), i, int(len(win)), win_md5)
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_win_n", T.LongType(), True),
-            T.StructField("_win_md5", T.StringType(), True),
-        ]
+    schema = ledger_schema(
+        T.StructField("_win_n", T.LongType(), True),
+        T.StructField("_win_md5", T.StringType(), True),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_win_n", "_win_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- decode-then-segment ledger corpus -------------------------------------
@@ -1420,17 +1170,13 @@ SEGD_CLS_RAW = 4
 SEGD_CLS_TORN = 5
 SEGD_SEG_MS = 250
 
-SEGD_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_n_dec", T.LongType(), False),
-        T.StructField("_seg_idxs", T.ArrayType(T.LongType(), True), True),
-        T.StructField("_seg_ns", T.ArrayType(T.LongType(), True), True),
-        T.StructField("_seg_md5s", T.ArrayType(T.StringType(), True), True),
-        T.StructField("_seg_sumsqs", T.ArrayType(T.LongType(), True), True),
-        T.StructField("_seg_peaks", T.ArrayType(T.LongType(), True), True),
-    ]
+SEGD_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_n_dec", T.LongType(), False),
+    T.StructField("_seg_idxs", T.ArrayType(T.LongType(), True), True),
+    T.StructField("_seg_ns", T.ArrayType(T.LongType(), True), True),
+    T.StructField("_seg_md5s", T.ArrayType(T.StringType(), True), True),
+    T.StructField("_seg_sumsqs", T.ArrayType(T.LongType(), True), True),
+    T.StructField("_seg_peaks", T.ArrayType(T.LongType(), True), True),
 )
 
 
@@ -1438,13 +1184,10 @@ def synth_segment_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (600, 1800),
 ) -> DataFrame:
     """Mixed-container clips with a per-segment certified ledger: each
     non-torn row carries the expected (idx, n_samples, md5) of every
     SEGD_SEG_MS window of its decoded mono PCM16 stream."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import (
         decode_payload,
         encode_wav_adpcm,
@@ -1453,9 +1196,6 @@ def synth_segment_clips(
     )
     from jsonschema_spark.functions.flac import encode_flac
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
 
     def _segment_ledger(dec16: np.ndarray, sr: int) -> tuple:
         sps = sr * SEGD_SEG_MS // 1000
@@ -1468,7 +1208,7 @@ def synth_segment_clips(
             idxs.append(k)
             ns.append(len(seg) // 2)
             md5s.append(
-                _hashlib.md5(seg.hex().upper().encode()).hexdigest()
+                hashlib.md5(seg.hex().upper().encode()).hexdigest()
             )
             # integer-exact energy ledger: sum of squares and peak |x|
             # of the int16 window (fits int64: 4000 * 32768^2 < 2^43)
@@ -1477,10 +1217,7 @@ def synth_segment_clips(
         return idxs, ns, md5s, sumsqs, peaks
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (600, 1800))
         cls = i % SEGD_CLASS_MOD
         sr = 16000 if (h >> 8) % 2 == 0 else 8000
         n_samples = sr * dur // 1000
@@ -1537,17 +1274,7 @@ def synth_segment_clips(
         return (cid, bytearray(raw), sr, dur, codec, transcript_for(cid),
                 i, n_dec, idxs, ns, md5s, sumsqs, peaks)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_seg_idxs",
-                "_seg_ns", "_seg_md5s", "_seg_sumsqs", "_seg_peaks"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=SEGD_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, SEGD_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- REAL-FLAC LPC ledger corpus (RFC 9639 §9.2.4) -------------------------
@@ -1593,23 +1320,13 @@ def synth_flac_lpc_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 900),
 ) -> DataFrame:
     """Clips whose payloads are REAL FLAC streams with LPC subframes."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import decode_payload
     from jsonschema_spark.functions.flac import encode_flac
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 900))
         n_samples = FLACL_SR_HZ * dur // 1000
         stereo = i % 2 == 1
         if stereo:
@@ -1652,22 +1369,13 @@ def synth_flac_lpc_clips(
         else:
             # ledger truth from the SOURCE samples, not through the codec
             n_dec = len(mono)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 mono.astype("<i2").tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), FLACL_SR_HZ, dur, "flac",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- FLAC bit-depth ledger corpus (8/16/24-bit, mono/stereo, LPC on) -------
@@ -1686,27 +1394,17 @@ def synth_flac_depth_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 700),
 ) -> DataFrame:
     """Multi-depth FLAC clips with a source-certified ledger: the full
     RFC 9639 depth matrix (8/12/16/20/24/32-bit, mono + stereo, noisy
     low bits on the deep classes) plus a torn class. The ledger
     certifies the engine-convention int16 stream from the SOURCE
     samples (stereo downmixes before depth conversion)."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import decode_payload
     from jsonschema_spark.functions.flac import encode_flac
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (150, 700))
         n_samples = FLACD_SR_HZ * dur // 1000
         cls = i % FLACD_CLASS_MOD
         base = _smoothed_signal(cid, n_samples)
@@ -1764,22 +1462,13 @@ def synth_flac_depth_clips(
                     break
         else:
             n_dec = len(mono16)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 mono16.astype("<i2").tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), FLACD_SR_HZ, dur, "flac",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- FLAC multichannel ledger corpus (3-8 channels, independent) ----------
@@ -1796,23 +1485,13 @@ def synth_flac_multichannel_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 600),
 ) -> DataFrame:
     """Multichannel FLAC clips with a source-certified downmix ledger."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import decode_payload
     from jsonschema_spark.functions.flac import encode_flac
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (150, 600))
         n_samples = FLACM_SR_HZ * dur // 1000
         cls = i % FLACM_CLASS_MOD
         nch = FLACM_CHANNELS[cls % len(FLACM_CHANNELS)]
@@ -1836,22 +1515,13 @@ def synth_flac_multichannel_clips(
                     break
         else:
             n_dec = len(mono16)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 mono16.astype("<i2").tobytes().hex().upper().encode()
             ).hexdigest()
         return (cid, bytearray(raw), FLACM_SR_HZ, dur, "flac",
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- AIFF / AIFF-C / Sun AU container ledger corpus ------------------------
@@ -1872,12 +1542,9 @@ def synth_container_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (150, 700),
 ) -> DataFrame:
     """AIFF/AIFC/AU clips with a source-certified ledger (see the class
     roster above; class 8 is torn AIFF that must fail loudly)."""
-    import hashlib as _hashlib
-
     from jsonschema_spark.functions.audio import (
         alaw_decode,
         alaw_encode,
@@ -1887,15 +1554,8 @@ def synth_container_clips(
         ulaw_encode,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (150, 700))
         n_samples = CONT_SR_HZ * dur // 1000
         cls = i % CONT_CLASS_MOD
         base = _smoothed_signal(cid, n_samples)
@@ -1948,7 +1608,7 @@ def synth_container_clips(
         dec_md5 = None
         if cls != CONT_CLS_TORN:
             n_dec = len(mono16)
-            dec_md5 = _hashlib.md5(
+            dec_md5 = hashlib.md5(
                 np.asarray(mono16)
                 .astype("<i2")
                 .tobytes()
@@ -1959,16 +1619,7 @@ def synth_container_clips(
         return (cid, bytearray(raw), CONT_SR_HZ, dur, codec,
                 transcript_for(cid), i, n_dec, dec_md5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_n_dec", "_dec_md5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADPCM_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADPCM_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- BS.1770 / EBU R128 loudness ledger corpus ------------------------------
@@ -1992,7 +1643,6 @@ def synth_loudness_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (500, 1500),
 ) -> DataFrame:
     """Loudness ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import (
@@ -2001,15 +1651,8 @@ def synth_loudness_clips(
     from jsonschema_spark.functions.flac import encode_flac
     from jsonschema_spark.functions.loudness import loudness_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (500, 1500))
         cls = i % LOUD_CLASS_MOD
         if cls == LOUD_CLS_SHORT:
             dur = 200  # < one 400 ms gating block
@@ -2075,16 +1718,7 @@ def synth_loudness_clips(
             T.StructField("_nmd5", T.StringType()),
         ]
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_lufs_i", "_lufs_mm", "_tp",
-                "_n_blocks", "_ngain", "_nmd5"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- MP3 frame-header-walk ledger corpus -------------------------------------
@@ -2105,21 +1739,17 @@ MP3_ERR_CLASSES = {MP3_CLS_TORN: "truncated",
                    MP3_CLS_CRC_BAD: "crc_mismatch",
                    MP3_CLS_SYNC_LOST: "sync_lost"}
 
-MP3_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_n_frames", T.IntegerType(), True),
-        T.StructField("_parsed_dur_ms", T.IntegerType(), True),
-        T.StructField("_br_min", T.IntegerType(), True),
-        T.StructField("_br_max", T.IntegerType(), True),
-        T.StructField("_vbr", T.BooleanType(), True),
-        T.StructField("_info_frames", T.IntegerType(), True),
-        T.StructField("_info_ok", T.BooleanType(), True),
-        T.StructField("_crc_frames", T.IntegerType(), True),
-    ]
+MP3_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_n_frames", T.IntegerType(), True),
+    T.StructField("_parsed_dur_ms", T.IntegerType(), True),
+    T.StructField("_br_min", T.IntegerType(), True),
+    T.StructField("_br_max", T.IntegerType(), True),
+    T.StructField("_vbr", T.BooleanType(), True),
+    T.StructField("_info_frames", T.IntegerType(), True),
+    T.StructField("_info_ok", T.BooleanType(), True),
+    T.StructField("_crc_frames", T.IntegerType(), True),
 )
 
 
@@ -2127,7 +1757,6 @@ def synth_mp3_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (300, 1500),
 ) -> DataFrame:
     """MP3 ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.mp3 import (
@@ -2135,15 +1764,8 @@ def synth_mp3_clips(
         samples_per_frame,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (300, 1500))
         cls = i % MP3_CLASS_MOD
         # (version_id, layer, sr, mode, bitrate schedule) per class
         if cls in (0, 7, 8, 9, 11):
@@ -2216,18 +1838,7 @@ def synth_mp3_clips(
         return (cid, bytearray(raw), sr, dur, "mp3",
                 transcript_for(cid), i) + led
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_n_frames",
-                "_parsed_dur_ms", "_br_min", "_br_max", "_vbr",
-                "_info_frames", "_info_ok", "_crc_frames"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=MP3_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, MP3_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- mains-hum / DC-offset ledger corpus -------------------------------------
@@ -2271,7 +1882,6 @@ def synth_hum_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (400, 1200),
 ) -> DataFrame:
     """Hum/DC ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import (
@@ -2279,16 +1889,10 @@ def synth_hum_clips(
         hum_profile_batch,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = HUM_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (400, 1200))
         cls = i % HUM_CLASS_MOD
         if cls == HUM_CLS_SHORT:
             dur = 100  # < 200 ms hum-resolution window
@@ -2315,28 +1919,15 @@ def synth_hum_clips(
                 float(led["hum_dbr_60"]), float(led["hum_prom_50"]),
                 float(led["hum_prom_60"]), int(led["n_samples"]))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_dc", T.DoubleType(), True),
-            T.StructField("_h50", T.DoubleType(), True),
-            T.StructField("_h60", T.DoubleType(), True),
-            T.StructField("_p50", T.DoubleType(), True),
-            T.StructField("_p60", T.DoubleType(), True),
-            T.StructField("_n", T.LongType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_dc", T.DoubleType(), True),
+        T.StructField("_h50", T.DoubleType(), True),
+        T.StructField("_h60", T.DoubleType(), True),
+        T.StructField("_p50", T.DoubleType(), True),
+        T.StructField("_p60", T.DoubleType(), True),
+        T.StructField("_n", T.LongType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_dc", "_h50", "_h60",
-                "_p50", "_p60", "_n"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- Ogg container-walk ledger corpus ----------------------------------------
@@ -2351,21 +1942,17 @@ OGG_CLASS_MOD = 10
 OGG_ERR_CLASSES = {5: "truncated", 6: "crc_mismatch", 7: "seq_gap",
                    8: "bad_flags", 9: "multiplexed"}
 
-OGG_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_codec", T.StringType(), True),
-        T.StructField("_channels", T.IntegerType(), True),
-        T.StructField("_rate", T.IntegerType(), True),
-        T.StructField("_pre_skip", T.IntegerType(), True),
-        T.StructField("_n_pages", T.IntegerType(), True),
-        T.StructField("_n_packets", T.IntegerType(), True),
-        T.StructField("_granule", T.LongType(), True),
-        T.StructField("_dur", T.LongType(), True),
-    ]
+OGG_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_codec", T.StringType(), True),
+    T.StructField("_channels", T.IntegerType(), True),
+    T.StructField("_rate", T.IntegerType(), True),
+    T.StructField("_pre_skip", T.IntegerType(), True),
+    T.StructField("_n_pages", T.IntegerType(), True),
+    T.StructField("_n_packets", T.IntegerType(), True),
+    T.StructField("_granule", T.LongType(), True),
+    T.StructField("_dur", T.LongType(), True),
 )
 
 
@@ -2373,7 +1960,6 @@ def synth_ogg_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (300, 1200),
 ) -> DataFrame:
     """Ogg ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.ogg import (
@@ -2384,15 +1970,8 @@ def synth_ogg_clips(
         opus_tags_packet,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (300, 1200))
         cls = i % OGG_CLASS_MOD
         led = None
         if cls == 0:   # Opus mono 16 k, 20 ms packets, 3/page
@@ -2486,18 +2065,7 @@ def synth_ogg_clips(
         return (cid, bytearray(raw), sr, dur, codec,
                 transcript_for(cid), i) + out
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_codec",
-                "_channels", "_rate", "_pre_skip", "_n_pages",
-                "_n_packets", "_granule", "_dur"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=OGG_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, OGG_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- mixed-container dispatch ledger corpus ----------------------------------
@@ -2519,7 +2087,6 @@ def synth_mixed_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (300, 900),
 ) -> DataFrame:
     """Mixed-container ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import (
@@ -2534,15 +2101,8 @@ def synth_mixed_clips(
         encode_ogg_vorbis,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (300, 900))
         cls = i % MIXED_CLASS_MOD
         sr_col = 16000
         dur_col = dur
@@ -2628,32 +2188,18 @@ def synth_mixed_clips(
                 out[0] if out[0] else "flac",
                 transcript_for(cid), i) + out
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_container", T.StringType(), True),
-            T.StructField("_ok", T.BooleanType(), False),
-            T.StructField("_rate", T.IntegerType(), True),
-            T.StructField("_channels", T.IntegerType(), True),
-            T.StructField("_n", T.LongType(), True),
-            T.StructField("_pdur", T.LongType(), True),
-            T.StructField("_rate_ok", T.BooleanType(), False),
-            T.StructField("_dur_ok", T.BooleanType(), False),
-            T.StructField("_meta_ok", T.BooleanType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_container", T.StringType(), True),
+        T.StructField("_ok", T.BooleanType(), False),
+        T.StructField("_rate", T.IntegerType(), True),
+        T.StructField("_channels", T.IntegerType(), True),
+        T.StructField("_n", T.LongType(), True),
+        T.StructField("_pdur", T.LongType(), True),
+        T.StructField("_rate_ok", T.BooleanType(), False),
+        T.StructField("_dur_ok", T.BooleanType(), False),
+        T.StructField("_meta_ok", T.BooleanType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_container", "_ok", "_rate",
-                "_channels", "_n", "_pdur", "_rate_ok", "_dur_ok",
-                "_meta_ok"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- pitch / voicing ledger corpus -------------------------------------------
@@ -2702,7 +2248,6 @@ def synth_pitch_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (400, 1200),
 ) -> DataFrame:
     """Pitch/voicing ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import encode_wav_pcm16
@@ -2712,16 +2257,10 @@ def synth_pitch_clips(
         pitch_profile_batch,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = PITCH_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (400, 1200))
         cls = i % PITCH_CLASS_MOD
         if cls == PITCH_CLS_SHORT:
             dur = 30  # shorter than one 40 ms analysis window
@@ -2759,29 +2298,16 @@ def synth_pitch_clips(
                 int(led["n_frames"]), int(led["n_samples"]),
                 speech, unvoiced, bool(meas))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_f0", T.DoubleType(), True),
-            T.StructField("_vf", T.DoubleType(), True),
-            T.StructField("_nfr", T.IntegerType(), False),
-            T.StructField("_n", T.LongType(), False),
-            T.StructField("_speech", T.BooleanType(), False),
-            T.StructField("_unvoiced", T.BooleanType(), False),
-            T.StructField("_meas", T.BooleanType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_f0", T.DoubleType(), True),
+        T.StructField("_vf", T.DoubleType(), True),
+        T.StructField("_nfr", T.IntegerType(), False),
+        T.StructField("_n", T.LongType(), False),
+        T.StructField("_speech", T.BooleanType(), False),
+        T.StructField("_unvoiced", T.BooleanType(), False),
+        T.StructField("_meas", T.BooleanType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_f0", "_vf", "_nfr", "_n",
-                "_speech", "_unvoiced", "_meas"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- stereo-integrity ledger corpus (functions/stereo.py) ------------------
@@ -2811,7 +2337,6 @@ def synth_stereo_screen_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (300, 900),
 ) -> DataFrame:
     """Stereo-integrity ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import (
@@ -2823,16 +2348,10 @@ def synth_stereo_screen_clips(
     from jsonschema_spark.functions.flac import encode_flac
     from jsonschema_spark.functions.stereo import stereo_profile_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = STEREO_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (300, 900))
         cls = i % STEREO_CLASS_MOD
         m = sr * dur // 1000
         # disjoint splitmix64 seed windows (>= 2^31 apart, m << 2^31)
@@ -2888,36 +2407,22 @@ def synth_stereo_screen_clips(
                 rmss, n_samp, bool(stereo), dual, phase, imb, ok,
                 bool(meas))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_nch", T.IntegerType(), False),
-            T.StructField("_corr", T.DoubleType(), True),
-            T.StructField("_rmsl", T.DoubleType(), True),
-            T.StructField("_rmsr", T.DoubleType(), True),
-            T.StructField("_rmsm", T.DoubleType(), True),
-            T.StructField("_rmss", T.DoubleType(), True),
-            T.StructField("_n", T.LongType(), False),
-            T.StructField("_stereo", T.BooleanType(), False),
-            T.StructField("_dual", T.BooleanType(), False),
-            T.StructField("_phase", T.BooleanType(), False),
-            T.StructField("_imb", T.BooleanType(), False),
-            T.StructField("_ok", T.BooleanType(), False),
-            T.StructField("_meas", T.BooleanType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_nch", T.IntegerType(), False),
+        T.StructField("_corr", T.DoubleType(), True),
+        T.StructField("_rmsl", T.DoubleType(), True),
+        T.StructField("_rmsr", T.DoubleType(), True),
+        T.StructField("_rmsm", T.DoubleType(), True),
+        T.StructField("_rmss", T.DoubleType(), True),
+        T.StructField("_n", T.LongType(), False),
+        T.StructField("_stereo", T.BooleanType(), False),
+        T.StructField("_dual", T.BooleanType(), False),
+        T.StructField("_phase", T.BooleanType(), False),
+        T.StructField("_imb", T.BooleanType(), False),
+        T.StructField("_ok", T.BooleanType(), False),
+        T.StructField("_meas", T.BooleanType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_nch", "_corr", "_rmsl",
-                "_rmsr", "_rmsm", "_rmss", "_n", "_stereo", "_dual",
-                "_phase", "_imb", "_ok", "_meas"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- tonality / spectral-flatness ledger corpus (functions/tonality.py) -----
@@ -2976,22 +2481,15 @@ def synth_tonality_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (400, 1200),
 ) -> DataFrame:
     """Tonality ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import encode_wav_pcm16
     from jsonschema_spark.functions.tonality import tonality_profile_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = TONALITY_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (400, 1200))
         cls = i % TONALITY_CLASS_MOD
         m = sr * dur // 1000
         t = np.arange(m, dtype=np.float64) / sr
@@ -3043,34 +2541,20 @@ def synth_tonality_clips(
                 transcript_for(cid), i, fl, ln, st, ef, nfr, nsp,
                 tonal, steady, noiselike, ok, bool(meas))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_flat", T.DoubleType(), True),
-            T.StructField("_line", T.DoubleType(), True),
-            T.StructField("_stab", T.DoubleType(), True),
-            T.StructField("_efrac", T.DoubleType(), True),
-            T.StructField("_nfr", T.IntegerType(), False),
-            T.StructField("_n", T.LongType(), False),
-            T.StructField("_tonal", T.BooleanType(), False),
-            T.StructField("_steady", T.BooleanType(), False),
-            T.StructField("_noise", T.BooleanType(), False),
-            T.StructField("_ok", T.BooleanType(), False),
-            T.StructField("_meas", T.BooleanType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_flat", T.DoubleType(), True),
+        T.StructField("_line", T.DoubleType(), True),
+        T.StructField("_stab", T.DoubleType(), True),
+        T.StructField("_efrac", T.DoubleType(), True),
+        T.StructField("_nfr", T.IntegerType(), False),
+        T.StructField("_n", T.LongType(), False),
+        T.StructField("_tonal", T.BooleanType(), False),
+        T.StructField("_steady", T.BooleanType(), False),
+        T.StructField("_noise", T.BooleanType(), False),
+        T.StructField("_ok", T.BooleanType(), False),
+        T.StructField("_meas", T.BooleanType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_flat", "_line", "_stab",
-                "_efrac", "_nfr", "_n", "_tonal", "_steady", "_noise",
-                "_ok", "_meas"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- codec-label ledger corpus (containers.codec_match_gate) ----------------
@@ -3158,22 +2642,15 @@ def synth_snr_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (500, 1500),
 ) -> DataFrame:
     """Reference-free-SNR ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import encode_wav_pcm16
     from jsonschema_spark.functions.snrest import snr_profile_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = SNR_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (500, 1500))
         cls = i % SNR_CLASS_MOD
         m = sr * dur // 1000
         planted = None
@@ -3219,32 +2696,19 @@ def synth_snr_clips(
                 transcript_for(cid), i, planted, est, p10, p90, act,
                 nfr, nsp, noisy, ok, bool(meas))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_planted_db", T.DoubleType(), True),
-            T.StructField("_est", T.DoubleType(), True),
-            T.StructField("_p10", T.DoubleType(), True),
-            T.StructField("_p90", T.DoubleType(), True),
-            T.StructField("_act", T.DoubleType(), True),
-            T.StructField("_nfr", T.IntegerType(), False),
-            T.StructField("_n", T.LongType(), False),
-            T.StructField("_noisy", T.BooleanType(), False),
-            T.StructField("_ok", T.BooleanType(), False),
-            T.StructField("_meas", T.BooleanType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_planted_db", T.DoubleType(), True),
+        T.StructField("_est", T.DoubleType(), True),
+        T.StructField("_p10", T.DoubleType(), True),
+        T.StructField("_p90", T.DoubleType(), True),
+        T.StructField("_act", T.DoubleType(), True),
+        T.StructField("_nfr", T.IntegerType(), False),
+        T.StructField("_n", T.LongType(), False),
+        T.StructField("_noisy", T.BooleanType(), False),
+        T.StructField("_ok", T.BooleanType(), False),
+        T.StructField("_meas", T.BooleanType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_planted_db", "_est", "_p10",
-                "_p90", "_act", "_nfr", "_n", "_noisy", "_ok", "_meas"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- dropout / click ledger corpus (functions/dropouts.py) ------------------
@@ -3329,22 +2793,15 @@ def synth_dropout_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (600, 1400),
 ) -> DataFrame:
     """Dropout/click ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import encode_wav_pcm16
     from jsonschema_spark.functions.dropouts import artifact_profile_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = DROPOUT_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (600, 1400))
         cls = i % DROPOUT_CLASS_MOD
         m = sr * dur // 1000
         noise_amp = 600 + ((h >> 8) % 601)
@@ -3383,33 +2840,20 @@ def synth_dropout_clips(
                 transcript_for(cid), i, nd, dms, mdms, nc, thr, itn,
                 nsp, has_d, clk, ok, bool(meas))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_nd", T.IntegerType(), False),
-            T.StructField("_dms", T.LongType(), False),
-            T.StructField("_mdms", T.LongType(), False),
-            T.StructField("_nc", T.IntegerType(), False),
-            T.StructField("_thr", T.DoubleType(), True),
-            T.StructField("_int", T.LongType(), False),
-            T.StructField("_n", T.LongType(), False),
-            T.StructField("_drop", T.BooleanType(), False),
-            T.StructField("_click", T.BooleanType(), False),
-            T.StructField("_ok", T.BooleanType(), False),
-            T.StructField("_meas", T.BooleanType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_nd", T.IntegerType(), False),
+        T.StructField("_dms", T.LongType(), False),
+        T.StructField("_mdms", T.LongType(), False),
+        T.StructField("_nc", T.IntegerType(), False),
+        T.StructField("_thr", T.DoubleType(), True),
+        T.StructField("_int", T.LongType(), False),
+        T.StructField("_n", T.LongType(), False),
+        T.StructField("_drop", T.BooleanType(), False),
+        T.StructField("_click", T.BooleanType(), False),
+        T.StructField("_ok", T.BooleanType(), False),
+        T.StructField("_meas", T.BooleanType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_nd", "_dms", "_mdms", "_nc",
-                "_thr", "_int", "_n", "_drop", "_click", "_ok", "_meas"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- log-mel / CMVN ledger corpus (functions/fbank.py) ----------------------
@@ -3428,22 +2872,15 @@ def synth_fbank_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (400, 1100),
 ) -> DataFrame:
     """Log-mel ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.audio import encode_wav_pcm16
     from jsonschema_spark.functions.fbank import fbank_stats_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = FBANK_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (400, 1100))
         cls = i % FBANK_CLASS_MOD
         m = sr * dur // 1000
         if cls == 0:
@@ -3471,26 +2908,13 @@ def synth_fbank_clips(
                 list(led["sumsq_q"]), int(led["n_frames"]),
                 int(led["n_samples"]))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_sumq", T.ArrayType(T.LongType()), False),
-            T.StructField("_sumsqq", T.ArrayType(T.LongType()), False),
-            T.StructField("_nfr", T.IntegerType(), False),
-            T.StructField("_n", T.LongType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_sumq", T.ArrayType(T.LongType()), False),
+        T.StructField("_sumsqq", T.ArrayType(T.LongType()), False),
+        T.StructField("_nfr", T.IntegerType(), False),
+        T.StructField("_n", T.LongType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_sumq", "_sumsqq", "_nfr",
-                "_n"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 # --- WebDataset tar-shard cache (sources/shards.py round-trip oracle) -------
@@ -3529,7 +2953,6 @@ def synth_fbank_mat_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (300, 700),
 ) -> DataFrame:
     """Same class roster as the fbank stats corpus, but the ledger
     stores the FULL flattened per-frame quantized matrix — the actual
@@ -3537,16 +2960,10 @@ def synth_fbank_mat_clips(
     from jsonschema_spark.functions.audio import encode_wav_pcm16
     from jsonschema_spark.functions.fbank import fbank_matrix_batch
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     sr = FBANK_SR_HZ
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        h, dur, cid = clip_base(i, (300, 700))
         cls = i % FBANK_CLASS_MOD
         m = sr * dur // 1000
         if cls == 0:
@@ -3573,24 +2990,12 @@ def synth_fbank_mat_clips(
                 transcript_for(cid), i, list(led["mat_q"]),
                 int(led["n_frames"]), int(led["n_samples"]))
 
-    schema = T.StructType(
-        list(CLIPS_SCHEMA.fields)
-        + [
-            T.StructField("_row_idx", T.LongType(), False),
-            T.StructField("_mat", T.ArrayType(T.LongType()), False),
-            T.StructField("_nfr", T.IntegerType(), False),
-            T.StructField("_n", T.LongType(), False),
-        ]
+    schema = ledger_schema(
+        T.StructField("_mat", T.ArrayType(T.LongType()), False),
+        T.StructField("_nfr", T.IntegerType(), False),
+        T.StructField("_n", T.LongType(), False),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_mat", "_nfr", "_n"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema=schema)
+    return ledger_table(spark, n, schema, _row, partitions)
 
 
 def tensor_shards(spark: SparkSession, n: int) -> str:
@@ -3644,18 +3049,14 @@ def tensor_shards(spark: SparkSession, n: int) -> str:
 # walker never runs at synth time.
 OPUS_PKT_CLASS_MOD = 8
 
-OPUS_PKT_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_n_audio", T.IntegerType(), True),
-        T.StructField("_n_frames", T.IntegerType(), True),
-        T.StructField("_sum_samples", T.LongType(), True),
-        T.StructField("_end_trim", T.LongType(), True),
-        T.StructField("_dur48", T.LongType(), True),
-    ]
+OPUS_PKT_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_n_audio", T.IntegerType(), True),
+    T.StructField("_n_frames", T.IntegerType(), True),
+    T.StructField("_sum_samples", T.LongType(), True),
+    T.StructField("_end_trim", T.LongType(), True),
+    T.StructField("_dur48", T.LongType(), True),
 )
 
 
@@ -3663,7 +3064,6 @@ def synth_opus_packet_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 900),
 ) -> DataFrame:
     """Opus packet-framing ledger corpus (see the class roster above)."""
     from jsonschema_spark.functions.ogg import (
@@ -3671,16 +3071,10 @@ def synth_opus_packet_clips(
         encode_ogg_opus_framed,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
     pre = 312
 
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 900))
         cls = i % OPUS_PKT_CLASS_MOD
         if cls == 0:    # code 0, WB 20 ms, end-trim 120
             k = max(1, dur // 20)
@@ -3752,17 +3146,7 @@ def synth_opus_packet_clips(
         return (cid, bytearray(raw), 48000, dur, "opus",
                 transcript_for(cid), i) + led
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_n_audio",
-                "_n_frames", "_sum_samples", "_end_trim", "_dur48"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=OPUS_PKT_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, OPUS_PKT_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- Vorbis packet-discipline ledger corpus ----------------------------------
@@ -3772,16 +3156,12 @@ def synth_opus_packet_clips(
 # clear). Two VALID classes + four planted header/type violations.
 VORBIS_PKT_CLASS_MOD = 6
 
-VORBIS_PKT_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_n_audio", T.IntegerType(), True),
-        T.StructField("_bs0", T.IntegerType(), True),
-        T.StructField("_bs1", T.IntegerType(), True),
-    ]
+VORBIS_PKT_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_n_audio", T.IntegerType(), True),
+    T.StructField("_bs0", T.IntegerType(), True),
+    T.StructField("_bs1", T.IntegerType(), True),
 )
 
 
@@ -3789,7 +3169,6 @@ def synth_vorbis_packet_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 900),
 ) -> DataFrame:
     """Vorbis packet-discipline ledger corpus (class roster above)."""
     from jsonschema_spark.functions.ogg import (
@@ -3798,15 +3177,8 @@ def synth_vorbis_packet_clips(
         vorbis_header_packets,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 900))
         cls = i % VORBIS_PKT_CLASS_MOD
         k = max(2, dur * 44100 // (1024 * 1000))
         pk = [vorbis_audio_packet(120 + (i + j) % 80, i + j)
@@ -3846,17 +3218,7 @@ def synth_vorbis_packet_clips(
         return (cid, bytearray(raw), sr, dur, "vorbis",
                 transcript_for(cid), i) + led
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_n_audio",
-                "_bs0", "_bs1"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=VORBIS_PKT_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, VORBIS_PKT_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- REAL Vorbis decoded-PCM ledger corpus (VERDICT r3 item 5) ---------------
@@ -3877,17 +3239,13 @@ VORBIS_DEC_CLASS_MOD = 10
 VORBIS_DEC_SNR_GATE_DB = 30.0
 _VORBIS_DEC_SYNTH_MARGIN_DB = 33.0  # synth-time floor for clean rows
 
-VORBIS_DEC_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_n_samples", T.LongType(), True),
-        T.StructField("_channels", T.IntegerType(), True),
-        T.StructField("_dec_md5", T.StringType(), True),
-        T.StructField("_snr_db", T.DoubleType(), True),
-    ]
+VORBIS_DEC_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_n_samples", T.LongType(), True),
+    T.StructField("_channels", T.IntegerType(), True),
+    T.StructField("_dec_md5", T.StringType(), True),
+    T.StructField("_snr_db", T.DoubleType(), True),
 )
 
 
@@ -3895,11 +3253,8 @@ def synth_vorbis_decode_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (250, 700),
 ) -> DataFrame:
     """Real-Vorbis ledger corpus (class roster above)."""
-    import pandas as _pd
-
     from jsonschema_spark.functions.vorbis import (
         encode_vorbis_clip,
         encode_vorbis_packets,
@@ -3908,15 +3263,8 @@ def synth_vorbis_decode_clips(
         vorbis_reference,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (250, 700))
         cls = i % VORBIS_DEC_CLASS_MOD
         base_cls = cls if cls < 7 else (cls - 7)  # failures reuse shapes
         sr, ch, kw = [
@@ -3955,8 +3303,8 @@ def synth_vorbis_decode_clips(
             err = "crc_mismatch"
         # ledger = the synth-time decode of the exact stored payload
         prof = vorbis_decode_profile_batch(
-            _pd.Series([bytearray(raw)]), _pd.Series([cid]),
-            _pd.Series([sr]), _pd.Series([dur]),
+            pd.Series([bytearray(raw)]), pd.Series([cid]),
+            pd.Series([sr]), pd.Series([dur]),
         ).iloc[0]
         if err is None:
             if not bool(prof["ok"]):
@@ -3981,17 +3329,7 @@ def synth_vorbis_decode_clips(
         return (cid, bytearray(raw), sr, dur, "vorbis",
                 transcript_for(cid), i) + led
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_n_samples",
-                "_channels", "_dec_md5", "_snr_db"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=VORBIS_DEC_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, VORBIS_DEC_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- AAC ADTS ledger corpus (round 4) ----------------------------------------
@@ -4002,20 +3340,16 @@ def synth_vorbis_decode_clips(
 # is generator arithmetic.
 ADTS_CLASS_MOD = 9
 
-ADTS_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_n_frames", T.IntegerType(), True),
-        T.StructField("_profile", T.StringType(), True),
-        T.StructField("_sr", T.IntegerType(), True),
-        T.StructField("_ch", T.IntegerType(), True),
-        T.StructField("_crc_frames", T.IntegerType(), True),
-        T.StructField("_blocks", T.IntegerType(), True),
-        T.StructField("_dur", T.LongType(), True),
-    ]
+ADTS_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_n_frames", T.IntegerType(), True),
+    T.StructField("_profile", T.StringType(), True),
+    T.StructField("_sr", T.IntegerType(), True),
+    T.StructField("_ch", T.IntegerType(), True),
+    T.StructField("_crc_frames", T.IntegerType(), True),
+    T.StructField("_blocks", T.IntegerType(), True),
+    T.StructField("_dur", T.LongType(), True),
 )
 
 
@@ -4023,7 +3357,6 @@ def synth_adts_clips(
     spark: SparkSession,
     n: int,
     partitions: Optional[int] = None,
-    dur_range: tuple[int, int] = (200, 900),
 ) -> DataFrame:
     """ADTS ledger corpus (class roster above)."""
     from jsonschema_spark.functions.aac import (
@@ -4033,15 +3366,8 @@ def synth_adts_clips(
         encode_adts_stream,
     )
 
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    dur_min, dur_max = dur_range
-    log_lo, log_hi = np.log(dur_min), np.log(dur_max)
-
     def _row(i: int) -> tuple:
-        h = _hash(i)
-        u = ((h >> 16) % 1_000_000) / 1_000_000.0
-        dur = int(np.exp(log_lo + u * (log_hi - log_lo)))
-        cid = f"clip-{i:012d}"
+        _, dur, cid = clip_base(i, (200, 900))
         cls = i % ADTS_CLASS_MOD
         k = max(3, dur // 30)
         base_cls = cls if cls < 5 else (cls - 5) % 5
@@ -4092,18 +3418,7 @@ def synth_adts_clips(
         return (cid, bytearray(raw), sr, dur, "aac",
                 transcript_for(cid), i) + out
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_n_frames",
-                "_profile", "_sr", "_ch", "_crc_frames", "_blocks",
-                "_dur"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=ADTS_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, ADTS_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- tagged-metadata ledger corpus (round 4; widened round 5) ----------------
@@ -4120,19 +3435,15 @@ def synth_adts_clips(
 # Ledger truth is generator strings.
 TAGS_CLASS_MOD = 14
 
-TAGS_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_fmt", T.StringType(), True),
-        T.StructField("_n_tags", T.IntegerType(), True),
-        T.StructField("_title", T.StringType(), True),
-        T.StructField("_artist", T.StringType(), True),
-        T.StructField("_album", T.StringType(), True),
-        T.StructField("_vendor", T.StringType(), True),
-    ]
+TAGS_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_fmt", T.StringType(), True),
+    T.StructField("_n_tags", T.IntegerType(), True),
+    T.StructField("_title", T.StringType(), True),
+    T.StructField("_artist", T.StringType(), True),
+    T.StructField("_album", T.StringType(), True),
+    T.StructField("_vendor", T.StringType(), True),
 )
 
 
@@ -4154,8 +3465,6 @@ def synth_tagged_clips(
         build_comment_fields,
         build_id3v2,
     )
-
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
 
     def _row(i: int) -> tuple:
         cid = f"clip-{i:012d}"
@@ -4270,17 +3579,7 @@ def synth_tagged_clips(
         return (cid, bytearray(raw), 16000, 200 + i % 400, codec,
                 transcript_for(cid), i) + out
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_fmt",
-                "_n_tags", "_title", "_artist", "_album", "_vendor"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=TAGS_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, TAGS_CLIPS_SCHEMA, _row, partitions)
 
 
 # --- MP3 Layer III side-info ledger corpus (round 5) -------------------------
@@ -4292,19 +3591,15 @@ def synth_tagged_clips(
 # truth is generator arithmetic (the writer's own reservoir schedule).
 MP3SI_CLASS_MOD = 13
 
-MP3SI_CLIPS_SCHEMA = T.StructType(
-    list(CLIPS_SCHEMA.fields)
-    + [
-        T.StructField("_row_idx", T.LongType(), False),
-        T.StructField("_ok", T.BooleanType(), False),
-        T.StructField("_err", T.StringType(), True),
-        T.StructField("_n_frames", T.IntegerType(), True),
-        T.StructField("_n_granules", T.IntegerType(), True),
-        T.StructField("_part23_bits", T.LongType(), True),
-        T.StructField("_max_mdb", T.IntegerType(), True),
-        T.StructField("_short_blocks", T.IntegerType(), True),
-        T.StructField("_reservoir_frames", T.IntegerType(), True),
-    ]
+MP3SI_CLIPS_SCHEMA = ledger_schema(
+    T.StructField("_ok", T.BooleanType(), False),
+    T.StructField("_err", T.StringType(), True),
+    T.StructField("_n_frames", T.IntegerType(), True),
+    T.StructField("_n_granules", T.IntegerType(), True),
+    T.StructField("_part23_bits", T.LongType(), True),
+    T.StructField("_max_mdb", T.IntegerType(), True),
+    T.StructField("_short_blocks", T.IntegerType(), True),
+    T.StructField("_reservoir_frames", T.IntegerType(), True),
 )
 
 
@@ -4318,8 +3613,6 @@ def synth_mp3si_clips(
     from jsonschema_spark.functions.mp3_sideinfo import (
         encode_sideinfo_stream,
     )
-
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
 
     def _row(i: int) -> tuple:
         h = _hash(i)
@@ -4385,15 +3678,4 @@ def synth_mp3si_clips(
         return (cid, bytearray(raw), sr, dur, "mp3",
                 transcript_for(cid), i) + out
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec",
-                "transcript", "_row_idx", "_ok", "_err", "_n_frames",
-                "_n_granules", "_part23_bits", "_max_mdb",
-                "_short_blocks", "_reservoir_frames"]
-        for b in batches:
-            rows = [_row(int(i)) for i in b["id"].to_numpy()]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(0, n, 1, parts).mapInPandas(
-        gen, schema=MP3SI_CLIPS_SCHEMA
-    )
+    return ledger_table(spark, n, MP3SI_CLIPS_SCHEMA, _row, partitions)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from jsonschema_spark.functions.multimodal import dhash_from_pixels, encode_png
+from jsonschema_spark.sources.clips import ledger_table
 
 IMG_W, IMG_H = 48, 32
 MEMBERS_PER_FAMILY = 3
@@ -86,11 +87,7 @@ def synth_images(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
     """Deterministic PNG image table with the planted _dhash ledger."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_row),
-        IMAGES_SCHEMA,
-    )
+    return ledger_table(spark, n, IMAGES_SCHEMA, _row, partitions)
 
 
 # --- REAL-JPEG ledger corpus (baseline grayscale, functions/jpeg.py) ----
@@ -149,11 +146,7 @@ def synth_jpeg_images(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
     """Deterministic REAL-JPEG image table with the decoded-sum ledger."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_jpeg_row),
-        JPEG_IMAGES_SCHEMA,
-    )
+    return ledger_table(spark, n, JPEG_IMAGES_SCHEMA, _jpeg_row, partitions)
 
 
 # --- PROGRESSIVE-JPEG ledger corpus (SOF2, T.81 Annex G) ----------------
@@ -238,10 +231,6 @@ def synth_progressive_jpeg_images(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
     """Deterministic PROGRESSIVE-JPEG table with the decoded-sum ledger."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_pjpeg_row),
-        JPEG_IMAGES_SCHEMA,
-    )
+    return ledger_table(spark, n, JPEG_IMAGES_SCHEMA, _pjpeg_row, partitions)
 
 

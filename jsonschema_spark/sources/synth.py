@@ -3,10 +3,10 @@ JSON schema (or violates it at a controlled rate) — the generator half of
 the compile-then-validate loop, useful for validator testing at any scale
 and for producing fixture tables from schema documents.
 
-Generation is distributed and deterministic: ``spark.range`` drives a
-``mapInPandas`` kernel; every value derives from md5(seed, row, column), so
-regeneration is bit-identical under any partitioning — the same convention
-as the clips source.
+Generation is distributed and deterministic: rows are built on executors
+by ``sources.clips.ledger_table``; every value derives from md5(seed, row,
+column), so regeneration is bit-identical under any partitioning — the same
+convention as the clips source.
 
 ``pattern`` support uses a small regex sampler covering the dialect the
 reference's fixtures use (literals, classes incl. negation and ranges,
@@ -18,15 +18,15 @@ from __future__ import annotations
 
 import hashlib
 import string
-from typing import Any, Iterator, Optional
+from typing import Any, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from jsonschema_spark.plans.compile import inline_refs
 from jsonschema_spark.plans.typemap import spark_type_from_schema
 from jsonschema_spark.resolve import ResolveConfig
 from jsonschema_spark.schema import Schema
+from jsonschema_spark.sources.clips import ledger_table
 
 _PRINTABLE = string.ascii_letters + string.digits + " _-.,'"
 
@@ -285,21 +285,19 @@ def dataframe_for_schema(
     required = set(resolved.required or [])
     names = list(props)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"].tolist():
-                rnd = _Rand(f"synth|{seed}|{i}")
-                corrupt = rnd.uniform() < violation_rate
-                corrupt_col = names[rnd.next(len(names))] if corrupt else None
-                row = {}
-                for name, sub in props.items():
-                    if name not in required and rnd.next(10) == 0 and name != corrupt_col:
-                        row[name] = None  # absent optional property
-                        continue
-                    row[name] = _gen_value(sub, rnd, violate=(name == corrupt_col))
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=names)
+    def row(i: int) -> tuple:
+        rnd = _Rand(f"synth|{seed}|{i}")
+        corrupt = rnd.uniform() < violation_rate
+        corrupt_col = names[rnd.next(len(names))] if corrupt else None
+        out = []
+        for name, sub in props.items():
+            if name not in required and rnd.next(10) == 0 and name != corrupt_col:
+                out.append(None)  # absent optional property
+                continue
+            out.append(_gen_value(sub, rnd, violate=(name == corrupt_col)))
+        return tuple(out)
 
+    # its own partition floor (4, not ledger_table's 8): the published
+    # corpus keeps its file count
     parts = max(4, spark.sparkContext.defaultParallelism)
-    return spark.range(0, n, 1, parts).mapInPandas(kernel, struct)
+    return ledger_table(spark, n, struct, row, parts)

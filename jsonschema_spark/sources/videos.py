@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from jsonschema_spark.functions.multimodal import encode_y4m
-from jsonschema_spark.sources.clips import _hash
+from jsonschema_spark.sources.clips import _hash, ledger_table
 
 VID_W = VID_H = 8
 Y4M_HEADER_LEN = 39
@@ -81,11 +81,7 @@ def synth_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
     """Deterministic Y4M video table with the planted truncation ledger."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_row),
-        VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, VIDEOS_SCHEMA, _row, partitions)
 
 
 # --- Motion-JPEG AVI ledger corpus -------------------------------------------
@@ -179,11 +175,7 @@ def _mjpeg_row(i: int) -> tuple:
 def synth_mjpeg_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_mjpeg_row),
-        MJPEG_VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, MJPEG_VIDEOS_SCHEMA, _mjpeg_row, partitions)
 
 
 # --- A/V (MJPEG video + interleaved PCM audio) ledger corpus -----------------
@@ -262,11 +254,7 @@ def _av_row(i: int) -> tuple:
 def synth_av_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_av_row),
-        AV_VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, AV_VIDEOS_SCHEMA, _av_row, partitions)
 
 
 # --- H.264 Annex B ledger corpus (VERDICT r3 item 7) -------------------------
@@ -376,11 +364,7 @@ def _h264_row(i: int) -> tuple:
 def synth_h264_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_h264_row),
-        H264_VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, H264_VIDEOS_SCHEMA, _h264_row, partitions)
 
 
 # --- ISO-BMFF / MP4 ledger corpus (round 4) ----------------------------------
@@ -481,11 +465,7 @@ def _mp4_row(i: int) -> tuple:
 def synth_mp4_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_mp4_row),
-        MP4_VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, MP4_VIDEOS_SCHEMA, _mp4_row, partitions)
 
 
 # --- WebM / Matroska (EBML) ledger corpus (round 4) --------------------------
@@ -657,11 +637,7 @@ def _webm_row(i: int) -> tuple:
 def synth_webm_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_webm_row),
-        WEBM_VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, WEBM_VIDEOS_SCHEMA, _webm_row, partitions)
 
 
 # --- fragmented-MP4 (DASH/CMAF) ledger corpus (round 4) ----------------------
@@ -720,10 +696,6 @@ def _fmp4_row(i: int) -> tuple:
 def synth_fmp4_videos(
     spark: SparkSession, n: int, partitions: Optional[int] = None
 ) -> DataFrame:
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(range(n), parts).map(_fmp4_row),
-        FMP4_VIDEOS_SCHEMA,
-    )
+    return ledger_table(spark, n, FMP4_VIDEOS_SCHEMA, _fmp4_row, partitions)
 
 

@@ -1,7 +1,8 @@
 """Content-keyed corpus cache (sources/clips.py: corpus_path, publish):
 a corpus path is a pure function of the package source, the numpy
-version and the generator's parameters, and publishing is atomic.
-Spark-free."""
+version and the generator's parameters, and publishing is atomic; every
+synthetic corpus is built by the one ``ledger_table`` kernel. Spark-free
+except ``test_ledger_table_rows_equal_row_function``."""
 
 import ast
 import collections
@@ -177,3 +178,56 @@ def test_sources_modules_bind_each_top_level_name_once():
             names = collections.Counter(_top_level_names(ast.parse(f.read())))
         dup = sorted(k for k, v in names.items() if v > 1)
         assert not dup, (os.path.basename(path), dup)
+
+
+def _range_map_in_pandas_owners(tree: ast.Module):
+    """(top-level def, line) of every ``<x>.range(...).mapInPandas(...)``
+    call and every ``parallelize(...)`` call, tagged by kind."""
+    for top in tree.body:
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            owner = getattr(top, "name", "<module>")
+            if node.func.attr == "parallelize":
+                yield "parallelize", owner, node.lineno
+            inner = node.func.value
+            if (
+                node.func.attr == "mapInPandas"
+                and isinstance(inner, ast.Call)
+                and isinstance(inner.func, ast.Attribute)
+                and inner.func.attr == "range"
+            ):
+                yield "range.mapInPandas", owner, node.lineno
+
+
+def test_only_ledger_table_maps_a_range():
+    """Every synthetic corpus goes through ``clips.ledger_table``: no
+    generator under sources/ builds rows with row-at-a-time RDD code
+    (``parallelize``) or restates the ``spark.range -> mapInPandas``
+    skeleton."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(PKG, "sources", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for kind, owner, line in _range_map_in_pandas_owners(tree):
+            where = (os.path.basename(path), owner)
+            if kind == "range.mapInPandas" and where == ("clips.py", "ledger_table"):
+                continue
+            found.append((kind, *where, line))
+    assert not found, found
+
+
+def test_ledger_table_rows_equal_row_function(spark):
+    """The Arrow batch path keeps every value a row function returns:
+    bytes, ints, booleans, lists and NULLs, in row order."""
+    from jsonschema_spark.sources import images, videos
+
+    cases = [
+        (videos._row, videos.VIDEOS_SCHEMA, videos.TRUNC_MOD),
+        (videos._mp4_row, videos.MP4_VIDEOS_SCHEMA, videos.MP4_CLASS_MOD),
+        (videos._webm_row, videos.WEBM_VIDEOS_SCHEMA, videos.WEBM_CLASS_MOD),
+        (images._jpeg_row, images.JPEG_IMAGES_SCHEMA, images.JPEG_TRUNC_MOD),
+    ]
+    for row, schema, n in cases:
+        got = [tuple(r) for r in clips.ledger_table(spark, n, schema, row).collect()]
+        assert got == [row(i) for i in range(n)], row.__name__

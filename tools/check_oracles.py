@@ -2,6 +2,9 @@
 entry on Spark at sf0.01 and compare against oracle_sql() via DuckDB with
 an order-insensitive value comparison (columns sorted by name, rows sorted).
 
+Each query's line ends with its Spark seconds (build + collect) and its
+DuckDB oracle seconds.
+
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
 
@@ -11,6 +14,7 @@ import decimal
 import math
 import os
 import sys
+import time
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -71,42 +75,47 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
             spark_cols = df.columns
             spark_rows = [tuple(r) for r in df.collect()]
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
+            print(f"FAIL {name}: spark error {type(e).__name__}: {e} "
+                  f"(spark {time.perf_counter() - t0:.1f} s)")
             continue
+        secs = f"spark {time.perf_counter() - t0:.1f} s"
         if name not in oracles:
-            print(f"ok(rows-only) {name}: {len(spark_rows)} rows")
+            print(f"ok(rows-only) {name}: {len(spark_rows)} rows ({secs})")
             continue
+        t0 = time.perf_counter()
         try:
             res = con.execute(oracles[name])
             duck_cols = [d[0] for d in res.description]
             duck_rows = res.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL {name}: duckdb error {e}")
+            print(f"FAIL {name}: duckdb error {e} ({secs})")
             continue
+        secs += f", duckdb {time.perf_counter() - t0:.1f} s"
         sc, sd = frame_key(spark_cols, spark_rows)
         dc, dd = frame_key(duck_cols, duck_rows)
         if sc != dc:
             failures.append(name)
-            print(f"FAIL {name}: column mismatch spark={sc} duck={dc}")
+            print(f"FAIL {name}: column mismatch spark={sc} duck={dc} ({secs})")
             continue
         if len(sd) != len(dd):
             failures.append(name)
-            print(f"FAIL {name}: row count spark={len(sd)} duck={len(dd)}")
+            print(f"FAIL {name}: row count spark={len(sd)} duck={len(dd)} ({secs})")
             continue
         diffs = [(a, b) for a, b in zip(sd, dd) if a != b]
         if diffs:
             failures.append(name)
             print(f"FAIL {name}: {len(diffs)}/{len(sd)} differing rows; first: "
-                  f"spark={diffs[0][0]} duck={diffs[0][1]}")
+                  f"spark={diffs[0][0]} duck={diffs[0][1]} ({secs})")
             continue
-        print(f"ok {name}: {len(sd)} rows match")
+        print(f"ok {name}: {len(sd)} rows match ({secs})")
 
     print(f"\n{'FAILURES: ' + ', '.join(failures) if failures else 'ALL OK'}")
     spark.stop()
